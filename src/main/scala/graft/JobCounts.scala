@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftListenerBridge, SparkSession}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /** Diagnostic main (guide §1/§7): counts Spark JOBS, STAGES, TASKS and
@@ -48,7 +48,7 @@ object JobCounts {
       try Bench.exec(SparkEntry.queries(n)(spark, sfDir))
       catch { case _: Throwable => }
       spark.catalog.clearCache()
-      Thread.sleep(300) // let the async listener bus drain
+      GraftListenerBridge.waitUntilEmpty(spark.sparkContext)
       jobs.set(0); stages.set(0); tasks.set(0)
       shufWrite.set(0L); spillDisk.set(0L)
       val t0 = System.nanoTime()
@@ -56,7 +56,7 @@ object JobCounts {
         catch { case e: Throwable =>
           System.err.println(s"$n FAILED: ${e.getMessage}"); false }
       val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300) // let the async listener bus drain
+      GraftListenerBridge.waitUntilEmpty(spark.sparkContext)
       if (ok) println(f"$n%-28s $sec%8.2f ${jobs.get}%5d ${stages.get}%6d ${tasks.get}%6d ${shufWrite.get / 1e6}%8.1f ${spillDisk.get / 1e6}%8.1f")
       spark.catalog.clearCache()
     }

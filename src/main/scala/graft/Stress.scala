@@ -788,9 +788,10 @@ object Stress {
       // jaccard shapes are already held to. Same generator as cc_star
       // (node ids grow with the edge count, so degree stays bounded at
       // both endpoints); iters match the registered queries (5 / 3),
-      // and 6M nodes sit far under hits' 50M broadcastNodeLimit, so
-      // both endpoints run the SAME join strategy (the gated shuffle
-      // fallback's equality is GraphSpec-pinned separately).
+      // and 6M nodes of 16-byte score rows pass the broadcast gate
+      // (2 × 96 MB ≤ the default 1 GiB maxResultSize), so both
+      // endpoints run the SAME join strategy (the shuffled fallback's
+      // equality is GraphSpec-pinned separately).
       guarded("graph_pagerank_synth") {
         def prRun(n: Long, m: Long): Double = minOf2 {
           graft.pipeline.Graph.pageRank(

@@ -206,7 +206,7 @@ object Curation {
         // the bad-id set is one id column of contaminated docs — tiny
         // next to the corpus; materializing it here is what lets the
         // bloom broadcast and the bench-gram cache be dropped
-        corpus.join(bad.localCheckpoint(true), Seq(idCol), "left_anti")
+        corpus.join(Fixpoint.materialize(bad), Seq(idCol), "left_anti")
       finally {
         bg.unpersist()
         // unpersist (not destroy): frees executor copies now, but keeps

@@ -1128,96 +1128,57 @@ object Dedup {
     * representative (the minimum id, like [[exactCanonical]]).
     *
     * Min-label propagation: each node repeatedly takes the minimum
-    * label in its neighborhood until fixpoint — a driver-side loop of
-    * keyed joins/aggregations (each iteration shuffles on the id, with
-    * `localCheckpoint` truncating the growing lineage). Near-dup
+    * label in its neighborhood until fixpoint — a [[Fixpoint.converge]]
+    * loop of keyed joins/aggregations, every round staged. Near-dup
     * graphs have tiny diameter (dup chains, not paths), so this
     * converges in a handful of rounds; `maxIters` bounds the
     * pathological case and throws rather than return half-converged
     * labels.
     *
+    * Scale shape: the pair table is symmetrized in one scan
+    * ([[Graph.symmetrized]]) and repartitioned on the iteration join
+    * key BEFORE the distinct — hash(dst) clusters (src,dst) groups, so
+    * the distinct adds no exchange and the staged edges keep the
+    * layout. The node-sized label table is broadcast
+    * while [[Fixpoint.broadcastIfFits]] allows, so each round scans the
+    * staged edges once and exchanges only node-sized partial mins;
+    * min() is order-exact, so the join strategy never changes a value.
+    * Convergence costs no extra job: labels only ever decrease, so a
+    * round changed something iff some neighborhood min undercut the
+    * old label, counted by an observed metric on the staging job.
+    *
     * @return (id, cluster) — one row per node appearing in `pairs`,
-    *         cluster = min id of its component.
+    *         cluster = min id of its component (a self-pair's node
+    *         labels itself); lazy, its last round stays with it.
     */
-  def nearDupClusters(
-      pairs: DataFrame, maxIters: Int = 25,
-      broadcastNodeLimit: Long = 50L * 1000 * 1000): DataFrame = {
-    // Input scanned once + pinned layout (the Graph.pageRank pattern):
-    // the narrow pair base is persisted so the symmetrizing union
-    // doesn't run the (possibly expensive) upstream pair derivation
-    // twice, and the edge table is repartitioned on the iteration
-    // join key BEFORE the distinct — hash(dst) clusters (src,dst)
-    // groups, so the distinct adds no exchange, the checkpoint
-    // preserves the layout, and every iteration's edges⋈labels
-    // shuffles only the node-sized label side instead of the full
-    // edge set.
-    val base = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .persist()
-    val (edges, releaseEdges) = Graph.stageRowBlocks(base
-      .unionByName(base.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(col("dst"))
-      .distinct())
-    base.unpersist()
-    try {
-      var (labels, releaseLabels) = Graph.stageRowBlocks(
-        edges.select(col("src").as("id")).distinct()
-          .withColumn("cluster", col("id")))
-      // node count for the broadcast gate: a cheap scan of the
-      // just-staged label blocks (driver-sized result: one long)
-      val n = labels.count()
-      // The label table is node-sized and BROADCAST while it credibly
-      // fits (the pageRank/hits gate, r16): label tables descend from
-      // checkpoint leaves whose missing stats made Spark sort-merge-
-      // join them — re-exchanging AND re-sorting the full edge set
-      // every round. With the hint each round scans the cached edge
-      // blocks once and the only exchange carries node-sized partial
-      // mins. min() is order-exact, so values are identical either way.
-      def hinted(t: DataFrame): DataFrame =
-        if (n <= broadcastNodeLimit) broadcast(t) else t
-      var iters = 0
-      var converged = false
-      while (!converged && iters < maxIters) {
+  def nearDupClusters(pairs: DataFrame, maxIters: Int = 25): DataFrame =
+    Fixpoint.scoped { blocks =>
+      val (edges, _) = blocks.stage(Graph.symmetrized(pairs, "id_a", "id_b")
+        .repartition(col("dst"))
+        .distinct())
+      val (init, _) = blocks.stage(edges.select(col("src").as("id")).distinct()
+        .withColumn("cluster", col("id")))
+      // broadcast-gate row count: a cheap scan of the just-staged label
+      // blocks (driver-sized result: one long)
+      val n = init.count()
+      val labels = Fixpoint.converge(blocks, init, maxIters,
+          sum(when(col("__chg"), 1L).otherwise(0L))) { labels =>
         val nbrMin = edges
-          .join(hinted(labels.select(col("id").as("dst"),
-            col("cluster").as("__nc"))), Seq("dst"))
+          .join(Fixpoint.broadcastIfFits(labels.select(col("id").as("dst"),
+            col("cluster").as("__nc")), n), Seq("dst"))
           .groupBy(col("src").as("id")).agg(min(col("__nc")).as("__nbr_min"))
-        // Convergence test FUSED into the round's materializing job via
-        // an OBSERVED metric (the hits L1 pattern): labels only ever
-        // decrease (least), so the round changed something iff some
-        // neighborhood min undercut the old label. The eager checkpoint
-        // materializes the round AND delivers the changed-count in the
-        // SAME job — the previous `filter(__chg).isEmpty` over a lazy
-        // checkpoint ran a take-style probe job (with its incremental
-        // partition rounds) plus the checkpoint backfill job, i.e. two
-        // driver syncs per iteration where one suffices; each sync is a
-        // scheduling barrier whose latency multiplies on a contended
-        // host (r15 verdict item 1). Superseded label blocks release as
-        // soon as the new round materializes (the pageRank pattern) —
-        // GC-deferred cleanup would pin one node-sized copy per round.
-        val updated = labels.join(nbrMin, Seq("id"), "left")
+        labels.join(nbrMin, Seq("id"), "left")
           .select(col("id"),
             least(col("cluster"), coalesce(col("__nbr_min"), col("cluster")))
               .as("cluster"),
             (coalesce(col("__nbr_min"), col("cluster")) < col("cluster"))
               .as("__chg"))
-          .observe(s"graft_cc_round_$iters",
-            sum(when(col("__chg"), 1L).otherwise(0L)).as("n_chg"))
-        val (staged, rel) = Graph.stageRowBlocks(updated)
-        val m = updated.queryExecution.observedMetrics(s"graft_cc_round_$iters")
-        converged = m.isNullAt(0) || m.getLong(0) == 0L
-        releaseLabels(); labels = staged.select(col("id"), col("cluster"))
-        releaseLabels = rel
-        iters += 1
       }
-      require(converged,
+      require(labels.isDefined,
         s"nearDupClusters: no fixpoint after $maxIters iterations " +
           "(component diameter exceeds maxIters)")
-      // the final round's blocks back the returned labels and stay
-      // alive for the caller (GC lifecycle, as before); only the edge
-      // table and superseded rounds release deterministically
-      labels
-    } finally releaseEdges()
-  }
+      labels.get
+    }
 
   /** Entity-resolution matching (record linkage): candidate pairs by
     * BLOCKING, confirmed by exact edit distance — the standard

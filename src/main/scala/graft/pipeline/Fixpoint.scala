@@ -1,0 +1,200 @@
+package graft.pipeline
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.{broadcast, col}
+
+/** The superstep driver of the iterative operators (Pregel over
+  * DataFrames; GraphX's `Pregel` is the RDD precedent). It owns the
+  * decisions every loop would otherwise make for itself:
+  *  - row-block staging: an eager `localCheckpoint` (deserialized
+  *    MEMORY_AND_DISK row blocks) plus a handle on its backing RDD —
+  *    `Dataset.unpersist` only talks to the CacheManager, so that
+  *    handle is the only way to free the blocks before driver GC;
+  *  - lineage-cap cadence: [[LineageCap]] rounds between cuts, or
+  *    every round for a step that re-reads its state;
+  *  - block release: a superseded cut is released as soon as its
+  *    successor has materialized, and everything a call staged is
+  *    released when it returns or throws, except the blocks its
+  *    lazily returned plan reads;
+  *  - the broadcast gate for node-sized state tables
+  *    ([[broadcastIfFits]]).
+  * Per-round metrics (change counts, L1 totals, row counts) ride the
+  * staging job as `observe` metrics, so they cost no extra job. */
+private[pipeline] object Fixpoint {
+
+  /** Rounds between lineage cuts for a step that reads its state once
+    * per round. Each uncut round nests one more join+aggregate, so
+    * analysis cost grows superlinearly with the gap, and
+    * [[Graph.bfsHops]] reads its state twice per round, so its uncut
+    * plan doubles per round. A cut never changes a value. */
+  val LineageCap = 5
+
+  /** An eager row-block cut whose blocks stay with the returned plan
+    * (the ContextCleaner frees them once the plan is unreachable):
+    * for results, so that everything they were built from can be
+    * released before the caller runs an action. */
+  def materialize(df: DataFrame): DataFrame = df.localCheckpoint(true)
+
+  private def backing(staged: DataFrame): Option[RDD[_]] = {
+    val leaf = staged.queryExecution.analyzed.collectFirst {
+      case l: LogicalRDD => l.rdd
+    }
+    // a missing leaf silently degrades every release to the GC-deferred
+    // lifecycle: surface a Spark-upgrade plan-shape change once
+    if (leaf.isEmpty && leafWarned.compareAndSet(false, true))
+      System.err.println(
+        "[graft] Fixpoint: no LogicalRDD leaf under localCheckpoint — " +
+          "deterministic block release is DISABLED (GC-freed lifecycle); " +
+          "a Spark upgrade likely changed the checkpoint plan shape")
+    leaf
+  }
+
+  private val leafWarned = new java.util.concurrent.atomic.AtomicBoolean(false)
+
+  private def free(staged: DataFrame): Unit =
+    backing(staged).foreach(_.unpersist(blocking = false))
+
+  /** Eager row-block staging: `df` materialized once, plus the handle
+    * that frees its blocks. */
+  def stageRowBlocks(df: DataFrame): (DataFrame, () => Unit) = {
+    val staged = materialize(df)
+    (staged, () => free(staged))
+  }
+
+  private val observations = new java.util.concurrent.atomic.AtomicLong
+
+  /** The blocks staged by one operator call (see [[scoped]]). */
+  final class Blocks private[Fixpoint] () {
+    private var owned = List.empty[DataFrame]
+
+    /** Stage `df` eagerly. `metrics` (aggregates over `df`'s rows) are
+      * observed on the staging job itself and returned as one row;
+      * without metrics the row is empty. */
+    def stage(df: DataFrame, metrics: Column*): (DataFrame, Row) = {
+      val name = s"graft_fixpoint_${observations.incrementAndGet()}"
+      val run =
+        if (metrics.isEmpty) df else df.observe(name, metrics.head, metrics.tail: _*)
+      val staged = materialize(run)
+      owned ::= staged
+      (staged,
+        if (metrics.isEmpty) Row.empty else run.queryExecution.observedMetrics(name))
+    }
+
+    /** Stage `df` lazily: the blocks fill during the first action that
+      * reads the result, so that action can double as a test. */
+    def stageLazy(df: DataFrame): DataFrame = {
+      val staged = df.localCheckpoint(false)
+      owned ::= staged
+      staged
+    }
+
+    /** Free the blocks of `staged` if this call staged it (reference
+      * identity; any other plan is a no-op). Only safe once everything
+      * that reads `staged` has materialized. */
+    def release(staged: DataFrame): Unit = drop(_ eq staged)
+
+    private[Fixpoint] def drop(which: DataFrame => Boolean): Unit = {
+      val (gone, kept) = owned.partition(which)
+      owned = kept
+      gone.foreach(free)
+    }
+  }
+
+  /** One operator call: `body` stages through the given [[Blocks]].
+    * When it throws, every staged block is released; when it returns,
+    * every staged block the returned plan does not read is released.
+    * A lazily returned plan thus keeps exactly its own blocks (freed
+    * by the ContextCleaner with the plan), and an eager result from
+    * [[materialize]] keeps none of the call's. */
+  def scoped(body: Blocks => DataFrame): DataFrame = {
+    val blocks = new Blocks
+    val out =
+      try body(blocks)
+      catch {
+        case scala.util.control.NonFatal(e) => blocks.drop(_ => true); throw e
+      }
+    val read = out.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd }
+    blocks.drop(staged => !backing(staged).exists(r => read.exists(_ eq r)))
+    out
+  }
+
+  /** Run `rounds` supersteps of `step` from `init` and return the
+    * final state. `everyRound` cuts every round, the last included: for
+    * a step that re-reads its state (an unmaterialized chain re-runs
+    * each round once per read) or whose rounds are corpus-sized to
+    * recompute. Otherwise a cut lands every [[LineageCap]] rounds,
+    * never after the last (the caller consumes the final state once).
+    * Each cut releases the one it supersedes (`init` included, when
+    * `blocks` staged it). */
+  def iterate(
+      blocks: Blocks, init: DataFrame, rounds: Int, everyRound: Boolean = false)(
+      step: DataFrame => DataFrame): DataFrame =
+    loop(blocks, init, rounds, everyRound, Nil)(step)._1
+
+  /** Fixpoint loop: every round is cut, with `changed` (an aggregate
+    * over the step's output counting the rows the round changed)
+    * observed on the staging job; the loop stops after the first round
+    * that changed nothing. The state keeps `init`'s columns, so a step
+    * may emit helper columns for `changed`. `None` when `maxRounds` ran
+    * out first. */
+  def converge(
+      blocks: Blocks, init: DataFrame, maxRounds: Int, changed: Column)(
+      step: DataFrame => DataFrame): Option[DataFrame] = {
+    val (state, converged) =
+      loop(blocks, init, maxRounds, everyRound = true, Seq(changed))(step)
+    if (converged) Some(state) else None
+  }
+
+  private def loop(
+      blocks: Blocks, init: DataFrame, rounds: Int, everyRound: Boolean,
+      metrics: Seq[Column])(step: DataFrame => DataFrame): (DataFrame, Boolean) = {
+    val columns = init.columns.toSeq.map(c => col(s"`$c`"))
+    var state = init
+    var lastCut = init
+    var round = 0
+    var converged = false
+    while (!converged && round < rounds) {
+      round += 1
+      state = step(state)
+      if (everyRound || (round % LineageCap == 0 && round < rounds)) {
+        val (staged, m) = blocks.stage(state, metrics: _*)
+        blocks.release(lastCut)
+        lastCut = staged
+        state = if (metrics.isEmpty) staged else staged.select(columns: _*)
+        converged = metrics.nonEmpty && (m.isNullAt(0) || m.getLong(0) == 0L)
+      }
+    }
+    (state, converged)
+  }
+
+  /** Whether a state table of `rows` rows of `rowBytes` each may be
+    * broadcast: never when the session disabled broadcast joins
+    * (`spark.sql.autoBroadcastJoinThreshold` = -1); otherwise only
+    * while the estimate fits in half of `spark.driver.maxResultSize`
+    * (0 = unlimited). A BroadcastExchange collects the table to the
+    * driver every round under that limit; the factor 2 absorbs
+    * estimate slop (row headers, the hashed relation). Above the gate
+    * the join falls back to a shuffled one: slower, never a driver
+    * failure. */
+  def broadcastFits(
+      rows: Long, rowBytes: Long, broadcastEnabled: Boolean,
+      maxResultSize: Long): Boolean =
+    broadcastEnabled &&
+      (maxResultSize <= 0 || BigInt(rows) * rowBytes * 2 <= maxResultSize)
+
+  /** `t` with a broadcast hint when [[broadcastFits]] allows it for
+    * `rows` rows of `t`'s schema under `t`'s session configuration.
+    * Without the hint a state table descending from checkpoint leaves
+    * has no usable size statistics, so Spark sort-merge-joins it and
+    * re-exchanges the edge side every round. */
+  def broadcastIfFits(t: DataFrame, rows: Long): DataFrame = {
+    val s = t.sparkSession
+    if (broadcastFits(rows, t.schema.defaultSize,
+        !s.conf.get("spark.sql.autoBroadcastJoinThreshold").trim.startsWith("-"),
+        s.sparkContext.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")))
+      broadcast(t)
+    else t
+  }
+}

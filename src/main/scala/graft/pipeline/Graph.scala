@@ -14,177 +14,56 @@ object Graph {
 
   /** PageRank over an undirected edge list, fully deterministic
     * (cross-engine replayable, like [[Vec.kmeansCentroids]]):
-    *  - edges are symmetrized with UNION ALL (callers pass each
-    *    undirected edge once; parallel edges act as weights);
+    *  - edges are symmetrized (callers pass each undirected edge once;
+    *    parallel edges act as weights);
     *  - init: every node gets `round(1/N, roundDp)`;
     *  - step: `r' = round(teleport/N + damping · Σ_{u→v} r(u)/deg(u),
     *    roundDp)` — the per-iteration rounding kills cross-engine ulp
-    *    drift in the sums (the k-means recipe);
+    *    drift in the sums (the k-means recipe), and makes every
+    *    lineage cut bit-exact;
     *  - no dangling mass: in a symmetrized graph every node has
     *    degree ≥ 1.
     * `teleport` is a separate EXACT literal (not computed as
     * `1 − damping`, whose double differs from the SQL literal `0.15`
-    * an oracle would write).
+    * an oracle would write). An empty edge list gives an empty result;
+    * a lone self-loop gives its node rank 1.0.
     *
-    * Scale shape: degree table and rank table are node-keyed; each
-    * iteration is one co-partitioned join (edges ⋈ ranks on src, both
-    * hashed the same way, so the edge exchange is reused across
-    * iterations) + one dst-keyed sum with map-side combine + a
-    * broadcast one-row N. Work per iteration is O(|edges|) shuffled
-    * bytes; nothing node-quadratic, nothing driver-sized. */
+    * Scale shape: the degree-annotated edge table is staged once as
+    * row blocks (every iteration re-reads all three of its columns);
+    * each iteration is one join against the node-sized rank table —
+    * broadcast while [[Fixpoint.broadcastIfFits]] allows — plus one
+    * dst-keyed sum with map-side combine. Work per iteration is
+    * O(|edges|); nothing node-quadratic, nothing driver-sized. The
+    * result is eager, so every staged block is released on return. */
   def pageRank(
       edges: DataFrame, srcCol: String, dstCol: String, iters: Int,
       damping: Double = 0.85, teleport: Double = 0.15,
-      roundDp: Int = 6, checkpointEvery: Int = 10,
-      broadcastNodeLimit: Long = 50L * 1000 * 1000): DataFrame = {
+      roundDp: Int = 6): DataFrame = {
     require(iters >= 1, "pageRank: iters >= 1")
-    require(checkpointEvery >= 1, "pageRank: checkpointEvery >= 1")
-    // The INPUT derivation runs exactly once, in ONE job: both
-    // orientations come out of a single generator (explode of two
-    // structs) instead of `base ∪ base.swap` — the union form
-    // references the (possibly expensive) upstream projection twice,
-    // which forced an extra persist+count pass on a narrow base copy —
-    // and the degree rides the symmetrized table's one exchange as a
-    // whole-partition window count instead of a separate aggregate +
-    // join (two more exchanges). Measured 2.03 s → 1.51 s warm at
-    // sf0.1 for the materialized degree-annotated edge table, with
-    // bit-identical rows. An adjacency-list aggregate (collect_list
-    // per node, re-exploded lazily) measured another 0.3 s faster but
-    // materializes each hub's full neighbor array in one row — a
-    // skewed-graph OOM at scale — where the window sort spills; the
-    // window form keeps rows narrow and is what ships.
-    // Staged EAGERLY as row blocks (localCheckpoint), not the columnar
-    // cache: every iteration's lineage re-reads the degree-annotated
-    // edge table (unstaged, the edge derivation would re-execute once
-    // per iteration — measured 5.5 s → 1.5 s on the orders⋈lineitem
-    // bipartite at sf0.1), all three long columns are read by the
-    // iteration join so pruning buys nothing, and the columnar build's
-    // compression over near-random longs was pure cost — A/B at sf0.1:
-    // 4.99 → 3.22 s warm for the whole call (10.6 → 4.7 cold), the
-    // same result as hits' edge staging. Eager staging also means the
-    // multi-iteration job can't race its own stages into an
-    // unpopulated cache. The checkpoint preserves the repartition(src)
-    // layout (LogicalRDD carries outputPartitioning), so iteration
-    // joins still see the pinned hash layout. Scoped: the final ranks
-    // are eagerly materialized below, so the blocks are released
-    // before returning instead of leaking for the life of the session.
-    val (edged, releaseEdged) =
-      Graph.stageRowBlocks(Graph.symmetrizedWithDegree(edges, srcCol, dstCol))
-    try {
-      // driver-sized by construction: one long. Counted from the STAGED
-      // edge table and folded into the plan as a literal — as an in-plan
-      // broadcast subquery it would re-derive the (possibly expensive)
-      // edge source once per iteration, because the degree window sits
-      // above the cache boundary. `1.0 / n` and `teleport / n` are the
-      // same IEEE divisions the subquery produced, so ranks are
-      // bit-identical.
-      val n = edged.select(col("src")).distinct().count().toDouble
-      var ranks = edged.select(col("src").as("node")).distinct()
-        .select(col("node"), round(lit(1.0) / lit(n), roundDp).as("r"))
-      // The rank table is node-sized and BROADCAST while it credibly
-      // fits (the hits gate, r16): the iteration plans here descend
-      // from checkpoint/aggregate subtrees whose estimates do not
-      // qualify for auto-broadcast, so Spark sort-merge-joined them —
-      // which re-exchanges AND re-sorts the FULL edge table every
-      // iteration (plan-verified: Exchange hashpartitioning(src) +
-      // Sort above the edge blocks per iteration; the checkpoint's
-      // repartition(src) layout does not survive into the join under
-      // AQE). With the hint each iteration is a scan of the cached
-      // edge blocks + broadcast hash join + map-side-combined sum —
-      // the one remaining exchange per iteration carries node-sized
-      // partial sums. Measured 3.40 → 1.70 s at sf0.1 (min-of-5,
-      // matched controls). Above `broadcastNodeLimit` nodes the hint
-      // is dropped and the join falls back to the shuffled form
-      // (≥10^8-node graphs bind broadcast memory first); values are
-      // identical either way — the per-iteration 6-dp round sits on
-      // per-group double sums whose order the engines already do not
-      // share (the k-means recipe), which the oracle hash confirms.
-      def hinted(t: DataFrame): DataFrame =
-        if (n <= broadcastNodeLimit) broadcast(t) else t
-      // released in the finally: on success the final ranks are eager
-      // by then, on a mid-loop failure the in-flight cap releases too
-      // (not just the GC-deferred ContextCleaner backstop)
-      var releaseRanks: () => Unit = () => ()
-      try {
-        for (i <- 1 to iters) {
-          ranks = edged.join(hinted(ranks), edged("src") === ranks("node"))
-            .groupBy(col("dst"))
-            .agg(sum(col("r") / col("__deg")).as("__s"))
-            .select(col("dst").as("node"),
-              round(lit(teleport) / lit(n) +
-                lit(damping) * col("__s"), roundDp).as("r"))
-          // lineage cap: each iteration nests one more join+agg under
-          // the previous plan, so at tens of iterations
-          // analysis/optimization cost grows superlinearly and can
-          // dwarf execution. A periodic eager localCheckpoint truncates
-          // the plan to a block-backed leaf without changing any value
-          // — values are already 6-dp rounded, so the cut is bit-exact.
-          // The SUPERSEDED checkpoint's blocks are released as soon as
-          // the new one materializes (eager → safe: nothing references
-          // the old leaf afterwards): waiting for the ContextCleaner's
-          // GC pins one node-sized copy per cap in executor storage — a
-          // real footprint on a 10^9-node run with a 128 GiB heap that
-          // may not GC for the whole job.
-          if (i % checkpointEvery == 0 && i < iters) {
-            val (staged, rel) = stageRowBlocks(ranks)
-            releaseRanks(); ranks = staged; releaseRanks = rel
-          }
-        }
-        // eager: materializes the node-sized rank table so the edge
-        // blocks (and the last in-loop checkpoint) can be released
-        // before the caller ever runs an action
-        ranks.localCheckpoint(true)
-      } finally releaseRanks()
-    } finally releaseEdged()
-  }
-
-  /** Eager row-block staging for iteration-scoped edge tables
-    * (localCheckpoint + the backing-RDD release handle): the graph
-    * loops re-read their edge table once per iteration side with NO
-    * column pruning opportunity, where the columnar cache's build
-    * (compression over near-random longs) was measured pure cost —
-    * hits 3.04 → 2.05 s, pageRank 4.99 → 3.22 s warm at sf0.1.
-    * Dataset.unpersist only talks to the CacheManager, so release
-    * goes through the checkpointed plan's LogicalRDD leaf. */
-  private[pipeline] def stageRowBlocks(df: DataFrame): (DataFrame, () => Unit) = {
-    // Storage level deliberately the default (MEMORY_AND_DISK,
-    // deserialized): the r15 verdict suggested MEMORY_AND_DISK_SER for
-    // these iteration blocks (§5), but the A/B is decisive the other
-    // way — every iteration re-reads the staged edge table, so the
-    // per-read deserialize copy is paid iters× per query: pagerank
-    // 3.40 → 5.52 s, ppr 3.51 → 5.38 s, kcore 2.83 → 3.60 s at sf0.1
-    // (min-of-6, quiet control). UnsafeRow blocks are already compact
-    // binary; SER only shaves the per-row object headers while adding
-    // a copy to every scan. Rejected r16.
-    val staged = df.localCheckpoint(true)
-    val backing = staged.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+    Fixpoint.scoped { blocks =>
+      val (edged, _) = blocks.stage(symmetrizedWithDegree(edges, srcCol, dstCol))
+      // driver-sized by construction: one long, folded into the plan as
+      // a literal (an in-plan subquery would re-derive the edge source
+      // every iteration); the Scala divisions are the same IEEE ones
+      val n = edged.select(col("src")).distinct().count()
+      val init = edged.select(col("src").as("node")).distinct()
+        .select(col("node"), round(lit(1.0 / n), roundDp).as("r"))
+      val ranks = Fixpoint.iterate(blocks, init, iters) { ranks =>
+        edged.join(Fixpoint.broadcastIfFits(ranks, n), edged("src") === ranks("node"))
+          .groupBy(col("dst"))
+          .agg(sum(col("r") / col("__deg")).as("__s"))
+          .select(col("dst").as("node"),
+            round(lit(teleport / n) + lit(damping) * col("__s"), roundDp).as("r"))
+      }
+      Fixpoint.materialize(ranks)
     }
-    // a missing leaf silently degrades EVERY release below to the
-    // GC-deferred lifecycle this staging exists to replace — surface
-    // a Spark-upgrade plan-shape change once instead of hiding it
-    if (backing.isEmpty && leafWarned.compareAndSet(false, true))
-      System.err.println(
-        "[graft] Graph.stageRowBlocks: no LogicalRDD leaf under " +
-          "localCheckpoint — deterministic block release is DISABLED " +
-          "(GC-freed lifecycle); a Spark upgrade likely changed the " +
-          "checkpoint plan shape")
-    (staged, () => backing.foreach(_.unpersist(blocking = false)))
   }
-
-  private val leafWarned = new java.util.concurrent.atomic.AtomicBoolean(false)
 
   /** Both orientations of `edges` in ONE pass over the input: the
     * two-struct explode emits (src,dst) and (dst,src) from a single
-    * evaluation of the upstream plan. The `base ∪ base.swap` union
-    * form references the (possibly expensive) upstream projection
-    * TWICE; ReuseExchange dedupes the copies only when the plan
-    * happens to funnel both into one identical exchange (lpa's
-    * distinct does, bfs's join+agg loop does not — measured 3.17 →
-    * 2.69 s warm, 5.8 → 3.5 s cold for graph_bfs at sf0.1). The
-    * explode form is one-scan by CONSTRUCTION, so it doesn't depend
-    * on the optimizer spotting the reuse — the property that matters
-    * at 100 TB, where the upstream scan dominates. */
+    * evaluation of the upstream plan, where a `base ∪ base.swap` union
+    * references the (possibly expensive) upstream projection twice
+    * and relies on exchange reuse to dedupe it. */
   private[graft] def symmetrized(
       edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
     edges
@@ -193,23 +72,18 @@ object Graph {
         struct(col(dstCol).as("src"), col(srcCol).as("dst")))).as("__e"))
       .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
 
-  /** Both orientations of `edges` with each row's source degree
-    * attached, in ONE pass over the input: a two-struct explode emits
-    * (src,dst) and (dst,src) from a single evaluation of the upstream
-    * plan, and `count() OVER (PARTITION BY src)` attaches the degree
-    * on the repartition exchange the iteration joins want anyway —
-    * no persisted base copy, no degree aggregate, no degree join.
-    * The explicit `repartition(src)` (not the window's implicit
-    * exchange) pins the layout so AQE cannot coalesce a small cached
-    * table to 1-2 partitions (measured: near-serial iteration joins
-    * otherwise, ~0.6 s over 4 iterations at sf0.1). */
+  /** [[symmetrized]] with each row's source degree attached:
+    * `count() OVER (PARTITION BY src)` rides the repartition exchange
+    * the iteration joins want anyway — no degree aggregate, no degree
+    * join. The explicit `repartition(src)` (not the window's implicit
+    * exchange) pins the layout so AQE cannot coalesce a small staged
+    * table to 1-2 partitions (near-serial iteration joins otherwise).
+    * A window over narrow rows, not an adjacency-list aggregate: a
+    * hub's neighbor array in one row is a skewed-graph OOM, where the
+    * window sort spills. */
   private[graft] def symmetrizedWithDegree(
       edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
-    edges
-      .select(explode(array(
-        struct(col(srcCol).as("src"), col(dstCol).as("dst")),
-        struct(col(dstCol).as("src"), col(srcCol).as("dst")))).as("__e"))
-      .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
+    symmetrized(edges, srcCol, dstCol)
       .repartition(col("src"))
       .withColumn("__deg", count(lit(1))
         .over(org.apache.spark.sql.expressions.Window
@@ -228,92 +102,49 @@ object Graph {
     *
     * init: `round(1/|S|, dp)` on each seed; step:
     * `r'(v) = round(teleport/|S|·[v ∈ S] + damping·Σ_{u→v} r(u)/deg(u), dp)`.
-    * Returns `(node, r)` for every reached node. */
+    * Returns `(node, r)` for every reached node: with no edges, the
+    * seeds alone at `round(teleport/|S|, dp)`. No seeds is an error. */
   def personalizedPageRank(
       edges: DataFrame, srcCol: String, dstCol: String,
       seeds: DataFrame, seedCol: String, iters: Int,
       damping: Double = 0.85, teleport: Double = 0.15,
-      roundDp: Int = 6, checkpointEvery: Int = 10): DataFrame = {
+      roundDp: Int = 6): DataFrame = {
     require(iters >= 1, "personalizedPageRank: iters >= 1")
-    require(checkpointEvery >= 1, "personalizedPageRank: checkpointEvery >= 1")
-    // The INPUT derivation runs exactly once, in ONE job — see
-    // [[symmetrizedWithDegree]] (the union-of-two-reads form this
-    // replaces needed a persisted narrow base copy plus a degree
-    // aggregate + join: 2.03 s → 1.51 s warm at sf0.1, bit-identical
-    // rows). The pinned hash layout on the iteration join key means
-    // every iteration's edged⋈ranks shuffles only the (seed-sparse)
-    // rank side.
-    // COLUMNAR persist here, unlike [[pageRank]]'s row-block staging:
-    // A/B at sf0.1 is scale-split (row blocks 4.7 vs 7.9 s cold,
-    // columnar 3.9 vs 5.0 warm) because the seed-sparse workload runs
-    // on the ~10× smaller co-supplier projection, where the columnar
-    // build is cheap and — more important — the InMemoryRelation's
-    // accurate size stats let the planner pick join strategy from the
-    // real table size instead of LogicalRDD's no-stats default. The
-    // 12M-row bipartite in pageRank is past broadcast range either
-    // way, so only the build cost matters there.
+    // COLUMNAR persist, unlike pageRank's row blocks: the seed-sparse
+    // workload runs on small projections, where the InMemoryRelation's
+    // real size statistics let the planner pick the join strategy
+    // (LogicalRDD has none). Materialized before the loop, so the
+    // multi-iteration job cannot race its own stages into an
+    // unpopulated cache.
     val edged = symmetrizedWithDegree(edges, srcCol, dstCol).persist()
-    try {
-      // inside the try: a failure during materialization must still
-      // release the cache (finally) rather than leak it until GC.
-      // Materialized BEFORE the iteration chain runs: left lazy, the
-      // final multi-iteration job races its own stages into the
-      // unpopulated cache and block locks serialize the fills.
+    try Fixpoint.scoped { blocks =>
       edged.count()
-      // One materialization pass for the seed set instead of three
-      // small jobs (count, teleport checkpoint, init scan): the
-      // checkpointed blocks back the count, the per-iteration teleport
-      // re-reads, and the rank init alike (measured ~0.2 s at sf0.1 —
-      // these are driver-latency jobs, not data).
-      val (seedSet, releaseSeeds) =
-        stageRowBlocks(seeds.select(col(seedCol).as("node")).distinct())
+      // one staged seed set backs the count, the teleport rows and the
+      // rank init alike
+      val (seedSet, _) =
+        blocks.stage(seeds.select(col(seedCol).as("node")).distinct())
       val m = seedSet.count() // driver-sized by construction: one long
       require(m >= 1, "personalizedPageRank: at least one seed")
-      // Teleport rows carry (__s=0, __t=teleport/m); propagated rows
-      // carry (__s=r/deg, __t=0). Lazy over the checkpointed seed
-      // blocks: every iteration's union re-reads block-backed rows,
-      // never the seeds input plan.
+      // Teleport mass folds into each round's aggregate as union rows
+      // (__s=0, __t=teleport/m) instead of a full outer join against a
+      // teleport table, which cannot broadcast. Value-exact: sum(__t)
+      // is teleport/m for seeds and 0.0 otherwise, sum(__s) gains only
+      // exact zeros, and `damping` multiplies outside the sum, as the
+      // oracle's FULL JOIN form does.
       val tele = seedSet
-        .select(col("node"), lit(0.0).as("__s"),
-          lit(teleport / m).as("__t"))
-      var ranks = seedSet
-        .select(col("node"),
-          round(lit(1.0) / m, roundDp).as("r"))
-      // superseded lineage-cap checkpoints release on replacement —
-      // the pageRank pattern (GC-deferred cleanup pins one node-sized
-      // copy per cap for the life of the driver heap)
-      var releaseRanks: () => Unit = () => ()
-      try {
-      for (i <- 1 to iters) {
-        // Teleport mass FOLDED INTO the aggregate as union rows: the
-        // previous full_outer join against the teleport table cost a
-        // second node-keyed exchange + sort of the rank side every
-        // iteration (full outer cannot broadcast), where the union
-        // rides the aggregate's one exchange for free. Value-exact:
-        // sum(__t) is teleport/m for seeds (zeros add exactly) and 0.0
-        // otherwise, sum(__s) gains only exact-zero terms from the
-        // teleport rows, and `damping` still multiplies OUTSIDE the
-        // sum — round(sum(__t) + damping·sum(__s), dp) is bit-for-bit
-        // the old coalesce(__t,0) + damping·coalesce(__s,0) form the
-        // oracle replays with FULL JOIN.
-        val contrib = edged.join(ranks, edged("src") === ranks("node"))
+        .select(col("node"), lit(0.0).as("__s"), lit(teleport / m).as("__t"))
+      val init = seedSet
+        .select(col("node"), round(lit(1.0) / m, roundDp).as("r"))
+      Fixpoint.materialize(Fixpoint.iterate(blocks, init, iters) { ranks =>
+        edged.join(ranks, edged("src") === ranks("node"))
           .select(col("dst").as("node"),
             (col("r") / col("__deg")).as("__s"), lit(0.0).as("__t"))
           .unionByName(tele)
-        ranks = contrib.groupBy(col("node"))
+          .groupBy(col("node"))
           .agg(round(sum(col("__t")) +
             lit(damping) * sum(col("__s")), roundDp).as("r"))
-        if (i % checkpointEvery == 0 && i < iters) {
-          val (staged, rel) = stageRowBlocks(ranks)
-          releaseRanks(); ranks = staged; releaseRanks = rel
-        }
-      }
-      // eager result, then BOTH the last in-loop cap and the seed set
-      // release — in a finally, so a mid-loop failure frees the
-      // in-flight blocks too instead of waiting on the ContextCleaner
-      ranks.localCheckpoint(true)
-      } finally { releaseRanks(); releaseSeeds() }
-    } finally { edged.unpersist() }
+      })
+    } finally edged.unpersist()
   }
 
   /** Per-node triangle counts over an undirected edge list, exact.
@@ -379,53 +210,32 @@ object Graph {
 
   /** Minimum hop distance from a seed set, breadth-first, capped at
     * `maxHops`. Returns `(node, hops)` for every node reached within
-    * the cap (seeds at 0); unreached nodes are absent.
+    * the cap (seeds at 0); unreached nodes are absent, so an empty edge
+    * list returns the seeds alone.
     *
     * Scale shape: per hop one frontier⋈edges keyed join + one
     * min-aggregate over (known ∪ expanded) — O(|edges touched|)
-    * shuffled bytes per hop, nothing driver-sized, lineage capped
-    * with a periodic eager localCheckpoint exactly like [[pageRank]].
-    * The min-agg formulation (rather than anti-join frontiers) keeps
-    * the plan a pure join+agg pipeline Catalyst can pick hash
-    * strategies for; results are identical. */
+    * shuffled bytes per hop, nothing driver-sized, lineage cut every
+    * [[Fixpoint.LineageCap]] hops. The min-agg formulation (rather
+    * than anti-join frontiers) keeps the plan a pure join+agg pipeline
+    * Catalyst can pick hash strategies for; results are identical.
+    * The edge table is NOT staged: the frontier side is node-sized
+    * every hop, so AQE broadcast-joins it and the edges never shuffle.
+    * The result is lazy; its last cut stays with it. */
   def bfsHops(
       edges: DataFrame, srcCol: String, dstCol: String,
-      seeds: DataFrame, seedCol: String, maxHops: Int,
-      checkpointEvery: Int = 5): DataFrame = {
+      seeds: DataFrame, seedCol: String, maxHops: Int): DataFrame = {
     require(maxHops >= 0, "bfsHops: maxHops >= 0")
-    // NOT persisted: the frontier side is node-sized every hop, so
-    // AQE broadcast-joins it and the edge table never shuffles (an
-    // explicit persist+materialize pass was MEASURED as pure overhead
-    // here, ~+1 s at sf0.1). Symmetrized via the one-pass explode
-    // head — the union form re-executed the upstream projection per
-    // orientation because nothing in this loop funnels the copies
-    // into a reusable exchange (see [[symmetrized]]; 3.17 → 2.69 s
-    // warm at sf0.1 on the co-supplier graph).
     val und = symmetrized(edges, srcCol, dstCol)
-    var known = seeds.select(col(seedCol).as("node")).distinct()
+    val init = seeds.select(col(seedCol).as("node")).distinct()
       .select(col("node"), lit(0L).as("hops"))
-    // superseded lineage-cap checkpoints are released as soon as the
-    // next one materializes (eager → nothing reads the old leaf);
-    // the FINAL checkpoint backs the lazily-returned frontier, so it
-    // stays for the caller and the ContextCleaner retires it.
-    var releaseKnown: () => Unit = () => ()
-    try {
-      for (i <- 1 to maxHops) {
+    Fixpoint.scoped { blocks =>
+      Fixpoint.iterate(blocks, init, maxHops) { known =>
         val expanded = und.join(known, und("src") === known("node"))
           .select(und("dst").as("node"), (col("hops") + 1L).as("hops"))
-        known = known.union(expanded)
+        known.union(expanded)
           .groupBy(col("node")).agg(min(col("hops")).as("hops"))
-        if (i % checkpointEvery == 0 && i < maxHops) {
-          val (staged, rel) = stageRowBlocks(known)
-          releaseKnown(); known = staged; releaseKnown = rel
-        }
       }
-      known
-    } catch {
-      // the final cap backs the RETURNED plan, so success must NOT
-      // release it (the ContextCleaner retires it with the plan) — but
-      // a mid-loop failure returns nothing, so the in-flight cap frees
-      case scala.util.control.NonFatal(e) => releaseKnown(); throw e
     }
   }
 
@@ -443,17 +253,12 @@ object Graph {
     * Scale shape: each round is one keyed degree count + two
     * left-semi joins against the (only ever shrinking) edge set —
     * O(|edges|) shuffled bytes per round, no windows, nothing
-    * driver-sized. The surviving edge set is EAGERLY materialized
-    * (`localCheckpoint`) every round, Pregel-superstep style: each
-    * round's plan references the previous edge set three times (the
-    * degree count plus two semi joins), so an unmaterialized chain
-    * re-executes the whole upstream derivation ~3^rounds times —
-    * measured 49 s → ~2 s at sf0.1 on the orders⋈lineitem bipartite.
-    * There is deliberately NO `checkpointEvery` knob (unlike
-    * [[pageRank]], whose per-iteration state is node-sized and cheap
-    * to carry): the per-round write here IS the edge set a peel round
-    * fundamentally produces, so skipping it buys nothing but the
-    * exponential recompute back.
+    * driver-sized. The surviving edge set is staged every round,
+    * Pregel-superstep style, because each round reads the previous
+    * edge set three times (the degree count plus two semi joins): an
+    * unmaterialized chain re-executes the upstream derivation
+    * ~3^rounds times. Self-loops are dropped, so a lone self-loop (or
+    * an empty edge list) yields an empty core.
     *
     * Returns `(node, deg)`: the surviving nodes with their degree
     * inside the surviving subgraph (≥ k at fixpoint). */
@@ -462,39 +267,28 @@ object Graph {
       rounds: Int): DataFrame = {
     require(k >= 1, "kCore: k >= 1")
     require(rounds >= 1, "kCore: rounds >= 1")
-    // canonical undirected simple edges: unordered pair once, no loops.
-    // Each round's surviving edge set is EDGE-sized, so the superseded
-    // round's blocks are released the moment the new round's eager
-    // checkpoint materializes — left to the ContextCleaner, a
-    // `rounds`-round peel would pin up to `rounds` copies of the edge
-    // set in executor storage (spilling the lot to disk at scale).
-    var (canon, releaseCanon) = stageRowBlocks(edges
-      .select(least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct())
     def und(e: DataFrame): DataFrame =
       e.union(e.select(col("b").as("a"), col("a").as("b")))
-    try {
-      for (_ <- 1 to rounds) {
+    Fixpoint.scoped { blocks =>
+      // canonical undirected simple edges: unordered pair once, no loops
+      val (canon, _) = blocks.stage(edges
+        .select(least(col(srcCol), col(dstCol)).as("a"),
+          greatest(col(srcCol), col(dstCol)).as("b"))
+        .filter(col("a") =!= col("b"))
+        .distinct())
+      val core = Fixpoint.iterate(blocks, canon, rounds, everyRound = true) { canon =>
         val keep = und(canon).groupBy(col("a").as("node"))
           .agg(count(lit(1)).as("__deg"))
           .filter(col("__deg") >= k)
           .select(col("node"))
-        val (next, rel) = stageRowBlocks(canon
+        canon
           .join(keep.select(col("node").as("a")), Seq("a"), "left_semi")
           .join(keep.select(col("node").as("b")), Seq("b"), "left_semi")
-          .select(col("a"), col("b")))
-        releaseCanon(); canon = next; releaseCanon = rel
+          .select(col("a"), col("b"))
       }
-      // eager node-sized result so the final edge-set copy is released
-      // before the caller ever runs an action (the pageRank/hits
-      // pattern); release sits in the finally so a mid-peel failure
-      // frees the in-flight round's edge set too
-      und(canon).groupBy(col("a").as("node"))
-        .agg(count(lit(1)).as("deg"))
-        .localCheckpoint(true)
-    } finally releaseCanon()
+      Fixpoint.materialize(und(core).groupBy(col("a").as("node"))
+        .agg(count(lit(1)).as("deg")))
+    }
   }
 
   /** HITS hubs & authorities over a DIRECTED edge list (Kleinberg),
@@ -521,134 +315,69 @@ object Graph {
     * |edges|·10^roundDp < 2^63.
     *
     * Scale shape: per iteration two join+sum passes over the
-    * row-block-staged edge list — below `broadcastNodeLimit` nodes the score table
-    * broadcasts, so the edge list never shuffles and partial sums
-    * combine map-side; ABOVE it (≥10^8-node graphs, where the
-    * broadcast would bind driver/executor memory first) the hint is
-    * dropped and Spark shuffles both sides into a sort-merge/shuffled
-    * hash join — more wire traffic, no OOM cliff. Each raw score
-    * table is eagerly materialized before normalizing (the L1 step
-    * reads it twice: total + divide), and the L1 total + node count
-    * ride that SAME materialization job as observed metrics
-    * (`Dataset.observe`) — exact integer sums, ZERO extra driver
-    * round-trips: one job per half-iteration, where a separate scalar
-    * collect used to double the driver syncs and latency-bind the
-    * loop as iterations grow (GraphSpec pins the job count). The
-    * per-iteration write is node-sized, the cheapest thing in the
-    * loop — which is why there is deliberately no `checkpointEvery`
-    * knob here.
+    * row-block-staged edge list; the node-sized score table is
+    * broadcast while [[Fixpoint.broadcastIfFits]] allows, so the edge
+    * list never shuffles and partial sums combine map-side, and above
+    * the gate both sides shuffle into a sort-merge join — more wire
+    * traffic, same integers. Each raw score table is staged before
+    * normalizing (the L1 step reads it twice: total + divide), and the
+    * L1 total + node count ride that same staging job as observed
+    * metrics — exact integer sums, no extra driver round-trip
+    * (GraphSpec pins the job count). The per-half-iteration write is
+    * node-sized, so every one is staged.
     *
-    * Returns `(node, side, score)` with side ∈ {'hub','auth'}. */
+    * Returns `(node, side, score)` with side ∈ {'hub','auth'}; empty
+    * for an empty edge list. */
   def hits(
       edges: DataFrame, srcCol: String, dstCol: String, iters: Int,
-      roundDp: Int = 6,
-      broadcastNodeLimit: Long = 50L * 1000 * 1000): DataFrame = {
+      roundDp: Int = 6): DataFrame = {
     require(iters >= 1, "hits: iters >= 1")
     require(roundDp >= 1 && roundDp <= 15, "hits: roundDp in [1,15]")
-    // Scores are INTEGER micro-units (×10^roundDp, carried as longs):
-    // integer adds are exact in any summation order, so the raw sums
-    // — and with them every normalization quotient — are bit-identical
-    // across engines and partitionings; the only quantization is the
-    // explicit HALF_UP `floor(q·scale + 0.5)`, which both engines
-    // compute on the SAME double. This retires the round(double, dp)
-    // half-ulp tie class outright (the ts_gap_stats integer-space
-    // recipe). Overflow headroom under ANSI: Σ ≤ |edges|·10^roundDp,
-    // so dp=6 is safe to ~9×10^12 edges — lower roundDp past that.
+    // Overflow headroom under ANSI: Σ ≤ |edges|·10^roundDp, so dp=6 is
+    // safe to ~9×10^12 edges — lower roundDp past that.
     val scale = math.pow(10, roundDp).toLong
-    // plain distinct, deliberately NOT pre-repartitioned by dst: the
-    // map-side partial dedup inside distinct shuffles only deduped
-    // rows, whereas a repartition(dst) head would move every raw edge
-    // (A/B-measured equal at sf0.1, strictly worse at higher dup rates).
-    // Staged as ROW blocks (eager localCheckpoint), not the columnar
-    // cache: both iteration sides read both columns, so pruning buys
-    // nothing, and compression over near-random long pairs costs far
-    // more than it saves — A/B at sf0.1: 3.04 → 2.05 s warm for the
-    // whole call (7.7 → 3.1 cold). Blocks spill to disk like the cache
-    // and are released in the finally below.
-    val (e, releaseE) = stageRowBlocks(
-      edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct())
-    try {
-      // (materialized score table, its node count, block release
-      // handle) per half-iteration
-      def l1(df: DataFrame, c: String): (DataFrame, Long, () => Unit) = {
-        // driver-sized by construction: ONE long (the L1 total) plus
-        // the node count, OBSERVED on the materialization job itself —
-        // a separate `mat.agg(...).head` scalar collect doubled the
-        // driver round-trips per half-iteration (latency-bound as
-        // iterations grow), and an in-plan broadcast subquery added a
-        // broadcast exchange + an extra job (the pageRank N pattern).
-        // Integer sums observe exactly; the total folds back in as a
-        // literal — the same exact integer either way.
-        val obs = df.observe("graft_hits_l1",
-          sum(col(c)).as("tot"), count(lit(1)).as("n"))
-        // node-sized eager cut BEFORE the double read (total + divide)
-        val (mat, rel) = stageRowBlocks(obs)
-        val m = obs.queryExecution.observedMetrics("graft_hits_l1")
+    Fixpoint.scoped { blocks =>
+      // plain distinct, deliberately NOT pre-repartitioned by dst: the
+      // map-side partial dedup inside distinct shuffles only deduped
+      // rows, where a repartition(dst) head would move every raw edge
+      val (e, _) = blocks.stage(
+        edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct())
+      // one half-iteration: the staged raw sums, their L1-normalized
+      // scores and the node count
+      case class Side(raw: DataFrame, scores: DataFrame, n: Long)
+      def half(agg: DataFrame, c: String, superseded: Option[Side]): Side = {
+        val (raw, m) = blocks.stage(agg, sum(col(c)), count(lit(1)))
+        // the superseded table's last reader has materialized by now
+        superseded.foreach(s => blocks.release(s.raw))
         val tot = if (m.isNullAt(0)) 0L else m.getLong(0)
-        val scored =
-          if (tot == 0L) mat
-          else mat.select(col("node"),
-            floor(col(c) / lit(tot) * scale + 0.5).as(c))
-        (scored, m.getLong(1), rel)
+        Side(raw,
+          if (tot == 0L) raw
+          else raw.select(col("node"), floor(col(c) / lit(tot) * scale + 0.5).as(c)),
+          m.getLong(1))
       }
-      // The score table is node-sized (≤ a few bytes per node) and
-      // BROADCAST while it credibly fits: each half-iteration is then
-      // a scan of the cached edge list + broadcast hash join +
-      // map-side-combined sum — no edge shuffle at all. Without the
-      // hint the checkpointed score table has no stats and Spark
-      // sort-merge-joins the full edge list twice per iteration
-      // (measured 10.3 s → ~5 s on the 6M-edge bipartite at sf0.1).
-      // At ≥10^8-node graphs the broadcast binds memory first — the
-      // observed node count gates the hint, falling back to the
-      // shuffled join above `broadcastNodeLimit` (GraphSpec pins
-      // result equality across the two shapes).
-      def hinted(t: DataFrame, n: Long): DataFrame =
-        if (n <= broadcastNodeLimit) broadcast(t) else t
-      var hubs: DataFrame = null
-      var hubsN = 0L
-      var auths: DataFrame = null
-      var authsN = 0L
-      // superseded half-iteration score tables are released the moment
-      // their replacement materializes: auths(i-1)'s last reader is
-      // hubs(i-1) (already eager), so by the time auths(i) exists the
-      // old blocks are dead — GC-deferred cleanup would pin 2·iters
-      // node-sized copies in executor storage.
-      var relHubs: () => Unit = () => ()
-      var relAuths: () => Unit = () => ()
-      try {
-      for (i <- 1 to iters) {
-        val (a, an, ra) = l1(
-          if (i == 1)
-            // first pass: Σ over a CONSTANT init score is exactly
-            // scale·indegree in integer space — a plain count agg, no
-            // init table, no join, bit-identical to the join form
-            e.groupBy(col("dst").as("node"))
-              .agg((count(lit(1)) * scale).as("a"))
-          else
-            e.join(hinted(hubs, hubsN), e("src") === hubs("node"))
-              .groupBy(col("dst").as("node")).agg(sum(col("h")).as("a")),
-          "a")
-        relAuths(); auths = a; authsN = an; relAuths = ra
-        val (h, hn, rh) = l1(
-          e.join(hinted(auths, authsN), e("dst") === auths("node"))
-            .groupBy(col("src").as("node")).agg(sum(col("a")).as("h")),
-          "h")
-        relHubs(); hubs = h; hubsN = hn; relHubs = rh
+      def joined(s: Side, key: String): DataFrame =
+        e.join(Fixpoint.broadcastIfFits(s.scores, s.n), e(key) === s.scores("node"))
+      def hubsOf(auths: Side, superseded: Option[Side]): Side =
+        half(joined(auths, "dst").groupBy(col("src").as("node"))
+          .agg(sum(col("a")).as("h")), "h", superseded)
+      // first pass: Σ over a CONSTANT init score is exactly
+      // scale·indegree in integer space — a plain count agg, no init
+      // table, no join, bit-identical to the join form
+      val auths1 = half(e.groupBy(col("dst").as("node"))
+        .agg((count(lit(1)) * scale).as("a")), "a", None)
+      val (hubs, auths) = (2 to iters).foldLeft((hubsOf(auths1, None), auths1)) {
+        case ((hubs, auths), _) =>
+          val next = half(joined(hubs, "src").groupBy(col("dst").as("node"))
+            .agg(sum(col("h")).as("a")), "a", Some(auths))
+          (hubsOf(next, Some(hubs)), next)
       }
       // micro-units → score doubles only at the edge of the loop
-      // eager: materializes the node-sized result so the edge cache
-      // and the final score tables can be released before the caller
-      // ever runs an action
-      // release sits in the finally: on success the result is eager by
-      // then; a mid-loop failure frees the in-flight half-iteration
-      // score tables instead of pinning them until driver GC
-      hubs.select(col("node"), lit("hub").as("side"),
-          (col("h") / scale.toDouble).as("score"))
-        .union(auths.select(col("node"), lit("auth").as("side"),
-          (col("a") / scale.toDouble).as("score")))
-        .localCheckpoint(true)
-      } finally { relHubs(); relAuths() }
-    } finally releaseE()
+      Fixpoint.materialize(
+        hubs.scores.select(col("node"), lit("hub").as("side"),
+            (col("h") / scale.toDouble).as("score"))
+          .union(auths.scores.select(col("node"), lit("auth").as("side"),
+            (col("a") / scale.toDouble).as("score"))))
+    }
   }
 
   /** Connected components by alternating LARGE-STAR / SMALL-STAR
@@ -672,148 +401,113 @@ object Graph {
     * deterministic: set-valued rounds, no RNG, no order dependence.
     *
     * Convergence is detected by an EXACT structural test, not a
-    * hash signature: the algorithm's invariant (both star operations
-    * preserve components and each component's minimum) means the
-    * state is final exactly when the edge set is a star forest whose
-    * roots are never children — i.e. no head id repeats and no id
-    * appears as both head and tail. That test is one keyed aggregate
-    * FUSED into the round's checkpoint-materializing job (each edge
-    * explodes into a head row and a tail row, group by id, look for a
-    * violation — one scan both caches the round and decides
-    * convergence), it is
-    * deterministic with NO collision probability (the previous
-    * xxhash64 multiset signature carried a 2^-64 caveat and cost a
-    * verification round: the fixpoint was only detectable by
-    * observing that a round changed nothing — the structural test
-    * recognizes the star forest at the END of the round that builds
-    * it, saving one full large-star+small-star round every call).
-    * Lineage is cut per round like every
-    * iterative op here; `maxRounds` bounds the pathological case and
-    * throws rather than return half-contracted labels. Note the
-    * PROVEN worst-case round bound for alternating large-star/small-
-    * star is O(log² n), not O(log n) — typical graphs converge in
-    * ~log n rounds (default 30 covers n ≈ 2³⁰ of those), but an
-    * adversarial long-chain graph can need the superlogarithmic
-    * bound: raise `maxRounds` there, and treat the throw as the
-    * designed failure mode rather than silently wrong labels.
+    * hash signature: both star operations preserve components and
+    * each component's minimum, so the state is final exactly when the
+    * edge set is a star forest whose roots are never children — no
+    * head id repeats and no id appears as both head and tail. The test
+    * is one keyed aggregate whose scan of the round's edges also fills
+    * the round's lazily staged blocks (one job both caches the round
+    * and decides convergence), with no collision probability, and it
+    * recognizes the star forest at the end of the round that builds
+    * it. Each round is cut and releases the round it supersedes;
+    * `maxRounds` bounds the pathological case and throws rather than
+    * return half-contracted labels. The PROVEN worst-case round bound
+    * for alternating large-star/small-star is O(log² n), not
+    * O(log n) — typical graphs converge in ~log n rounds (default 30
+    * covers n ≈ 2³⁰ of those), but an adversarial long-chain graph can
+    * need the superlogarithmic bound: raise `maxRounds` there.
     *
     * @return (id, cluster) — one row per node in `edges`, cluster =
-    *         min id of its component. */
+    *         min id of its component (a self-loop's node labels
+    *         itself); lazy, its node catalog and last round stay with
+    *         it. */
   def connectedComponentsStar(
       edges: DataFrame, srcCol: String, dstCol: String,
       maxRounds: Int = 30): DataFrame = {
     require(maxRounds >= 1, "connectedComponentsStar: maxRounds >= 1")
     // The INPUT is scanned exactly once: `pairs` is persisted, the
-    // node catalog materializes it (one pass over the possibly
-    // expensive upstream projection — at sf0.1 the co-supplier
-    // projection costs ~2 s per materialization and the previous
-    // code ran it twice), round 0 reads the SAME cache directly —
-    // the initial canonical edge set is never separately
-    // materialized (its distinct would be a full extra shuffle;
-    // round 0's own `distinct`s already dedup) — and the cache is
-    // released as soon as the first contracted round exists.
+    // node catalog materializes it, round 0 reads the SAME cache
+    // directly (the initial canonical edge set is never separately
+    // materialized: round 0's own `distinct`s already dedup), and the
+    // cache is released as soon as the first contracted round exists.
     val pairs = edges.select(col(srcCol).cast("long").as("a"),
       col(dstCol).cast("long").as("b")).persist()
-    val nodes = pairs.select(col("a").as("id"))
-      .unionByName(pairs.select(col("b").as("id"))).distinct()
-      .localCheckpoint(false)
-    nodes.count()
-    // Rounds materialize via a LAZY localCheckpoint whose
-    // materializing action IS the fixpoint test: one job caches the
-    // blocks, truncates lineage AND decides convergence (previously a
-    // count() job materialized and a SECOND job ran the star-forest
-    // aggregate — two full passes over every round's edges).
-    //
-    // EXACT fixpoint test (see docstring): e is a min-rooted star
-    // forest iff no head repeats and no id is both head and tail.
-    // Emitted as explode(array(head-row, tail-row)) — ONE scan of the
-    // round's edges (the union-both-orientations form read the
-    // not-yet-cached checkpoint TWICE, re-executing the round's plan
-    // twice on the materializing pass) — then a keyed aggregate
-    // looking for a violation. Deterministic, no hash, no collision
-    // probability, no verification round. Sound AND complete: star
-    // ops preserve components and minima, so a star forest state IS
-    // the answer.
-    def ckptAndTest(df: DataFrame): (DataFrame, Boolean) = {
-      val out = df.localCheckpoint(false)
-      val converged = out
-        .select(explode(array(
+    // e is a min-rooted star forest iff no head repeats and no id is
+    // both head and tail: explode(head-row, tail-row) is ONE scan of
+    // the round's edges (a union of both orientations would scan the
+    // not-yet-filled cut twice), then a keyed aggregate looking for a
+    // violation
+    def isStarForest(e: DataFrame): Boolean =
+      e.select(explode(array(
           struct(col("u").as("id"), lit(1).as("__h")),
           struct(col("v").as("id"), lit(0).as("__h")))).as("__x"))
         .groupBy(col("__x.id").as("id"))
         .agg(sum(col("__x.__h")).as("__nh"), min(col("__x.__h")).as("__mn"))
         .filter(col("__nh") > 1 || (col("__nh") >= 1 && col("__mn") === 0))
         .isEmpty
-      (out, converged)
+    Fixpoint.scoped { blocks =>
+      val nodes = blocks.stageLazy(pairs.select(col("a").as("id"))
+        .unionByName(pairs.select(col("b").as("id"))).distinct())
+      nodes.count()
+      // canonical directed form: (u, v) with u > v — a lazy view over
+      // the cached pairs for round 0; contracted rounds replace it
+      var e = pairs.filter(col("a") =!= col("b"))
+        .select(greatest(col("a"), col("b")).as("u"),
+          least(col("a"), col("b")).as("v"))
+      var converged = false
+      var r = 0
+      while (!converged && r < maxRounds) {
+        // LARGE-STAR: m(u) = min(Γ(u) ∪ {u}); every neighbor v > u
+        // re-points at m(u). Output stays canonical: v > u ≥ m.
+        val nb = e.select(col("u"), col("v"))
+          .unionByName(e.select(col("v").as("u"), col("u").as("v")))
+        val lsMin = nb.groupBy(col("u")).agg(min(col("v")).as("mv"))
+          .select(col("u"), least(col("mv"), col("u")).as("m"))
+        // ls feeds both the small-star min and its re-point join. A
+        // LAZY persist is safe: ssMin's aggregate must complete before
+        // the re-point probe stage starts (its result is the join's
+        // build side), so the aggregate fills the blocks and the probe
+        // reads them cached. Released as soon as the round's edges
+        // materialize.
+        //
+        // Pinned hash layout on the NEW head key before the dedup: the
+        // re-point select renames v→u, and every small-star consumer
+        // keys on the new u, so one explicit exchange here makes the
+        // distinct, the small-star min AND the re-point join
+        // exchange-free (the cut preserves the layout).
+        val ls = nb.join(lsMin, Seq("u"))
+          .filter(col("v") > col("u"))
+          .select(col("v").as("u"), col("m").as("v"))
+          .filter(col("u") =!= col("v"))
+          .repartition(col("u"))
+          .distinct()
+          .persist()
+        // SMALL-STAR on the directed result: m = min of u's smaller
+        // neighbors; they and u re-point at m. Outputs stay canonical.
+        val ssMin = ls.groupBy(col("u")).agg(min(col("v")).as("m"))
+        val next = blocks.stageLazy(ls.join(ssMin, Seq("u"))
+          .filter(col("v") =!= col("m"))
+          .select(col("v").as("u"), col("m").as("v"))
+          .unionByName(ssMin.select(col("u"), col("m").as("v")))
+          .filter(col("u") =!= col("v"))
+          .distinct())
+        converged = isStarForest(next)
+        ls.unpersist()
+        if (r == 0) pairs.unpersist()
+        blocks.release(e)
+        e = next
+        r += 1
+      }
+      if (!converged) throw new IllegalStateException(
+        s"connectedComponentsStar: not converged after $maxRounds rounds")
+      // fixpoint = star forest rooted at component minima: each non-root
+      // carries exactly one out-edge to its root; roots/isolated nodes
+      // label themselves (groupBy-min is belt over the uniqueness)
+      val roots = e.groupBy(col("u")).agg(min(col("v")).as("cluster"))
+        .select(col("u").as("id"), col("cluster"))
+      nodes.join(roots, Seq("id"), "left")
+        .select(col("id"), coalesce(col("cluster"), col("id")).as("cluster"))
     }
-    // canonical directed form: (u, v) with u > v — a lazy view over
-    // the cached pairs for round 0; contracted rounds replace it
-    var e = pairs.filter(col("a") =!= col("b"))
-      .select(greatest(col("a"), col("b")).as("u"),
-        least(col("a"), col("b")).as("v"))
-    var converged = false
-    var r = 0
-    while (!converged && r < maxRounds) {
-      // LARGE-STAR: m(u) = min(Γ(u) ∪ {u}); every neighbor v > u
-      // re-points at m(u). Output stays canonical: v > u ≥ m.
-      val nb = e.select(col("u"), col("v"))
-        .unionByName(e.select(col("v").as("u"), col("u").as("v")))
-      val lsMin = nb.groupBy(col("u")).agg(min(col("v")).as("mv"))
-        .select(col("u"), least(col("mv"), col("u")).as("m"))
-      // ls feeds BOTH the small-star min and its re-point join. A
-      // LAZY persist (no separate materializing count) is safe here
-      // because the consumers' stages are SEQUENTIAL, not racing:
-      // ssMin's aggregate must complete before the re-point probe
-      // stage starts (its result is the join's build side), so the
-      // aggregate's partial stage populates the blocks and the probe
-      // stage reads them cached. (The r8 persist+eager-count
-      // protected against concurrent first-scan stages serializing
-      // on block locks; with the aggregate dependency ordering the
-      // stages, the extra materialization job was re-measured as
-      // pure overhead: ~0.7 s/call at sf0.1.) Unlike checkpoint
-      // blocks the cache is RELEASED deterministically as soon as
-      // the round's edges materialize, so executor storage holds one
-      // round of edges, not one per round.
-      //
-      // Pinned hash layout on the NEW head key before the dedup: the
-      // re-point select renames v→u, so the join's hash(old u) layout
-      // is useless downstream, and every small-star consumer keys on
-      // the new u. One explicit exchange here makes the distinct, the
-      // small-star min AND the re-point join all exchange-free
-      // (HashPartitioning(u) clusters (u,v) groups, the checkpoint
-      // preserves it, and both join sides inherit it) — three
-      // exchanges of the round's edge set fused into one.
-      val ls = nb.join(lsMin, Seq("u"))
-        .filter(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .filter(col("u") =!= col("v"))
-        .repartition(col("u"))
-        .distinct()
-        .persist()
-      // SMALL-STAR on the directed result: m = min of u's smaller
-      // neighbors; they and u re-point at m. Outputs stay canonical.
-      val ssMin = ls.groupBy(col("u")).agg(min(col("v")).as("m"))
-      val (eNew, conv) = ckptAndTest(ls.join(ssMin, Seq("u"))
-        .filter(col("v") =!= col("m"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .unionByName(ssMin.select(col("u"), col("m").as("v")))
-        .filter(col("u") =!= col("v"))
-        .distinct())
-      ls.unpersist()
-      if (r == 0) pairs.unpersist()
-      e = eNew
-      converged = conv
-      r += 1
-    }
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponentsStar: not converged after $maxRounds rounds")
-    // fixpoint = star forest rooted at component minima: each non-root
-    // carries exactly one out-edge to its root; roots/isolated nodes
-    // label themselves (groupBy-min is belt over the uniqueness)
-    val roots = e.groupBy(col("u")).agg(min(col("v")).as("cluster"))
-      .select(col("u").as("id"), col("cluster"))
-    nodes.join(roots, Seq("id"), "left")
-      .select(col("id"), coalesce(col("cluster"), col("id")).as("cluster"))
   }
 
   /** Synchronous label propagation (community detection), fully
@@ -825,50 +519,32 @@ object Graph {
     * Scale shape: per iteration one edges⋈labels keyed join, one
     * (node, label) count with map-side combine, and one per-node
     * arg-max via `max_by`-style struct max — no window, no sort, all
-    * keyed aggregates. Lineage capped like [[pageRank]]. */
+    * keyed aggregates, lineage cut every [[Fixpoint.LineageCap]]
+    * iterations. The edge table is NOT staged: the label side is
+    * node-sized, so AQE broadcast-joins it and the edges never
+    * shuffle. Returns `(node, label)`, lazily (its last cut stays with
+    * it); empty for an empty edge list. */
   def labelPropagation(
-      edges: DataFrame, srcCol: String, dstCol: String, iters: Int,
-      checkpointEvery: Int = 5): DataFrame = {
+      edges: DataFrame, srcCol: String, dstCol: String,
+      iters: Int): DataFrame = {
     require(iters >= 1, "labelPropagation: iters >= 1")
-    // NOT persisted: the label side is node-sized every iteration, so
-    // AQE broadcast-joins it and the edge table never shuffles (an
-    // explicit persist+pin+materialize pass was MEASURED as pure
-    // overhead here, 2.7 → 4.0 s at sf0.1). Symmetrized via the
-    // one-pass explode head: A/B-equal at sf0.1 (the distinct below
-    // funnels the union form's two upstream copies into one reusable
-    // exchange), but one-scan by construction rather than by optimizer
-    // courtesy — see [[symmetrized]].
     val und = symmetrized(edges, srcCol, dstCol).distinct()
-    var labels = und.select(col("src").as("node")).distinct()
+    val init = und.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("label"))
-    // superseded lineage-cap checkpoints release on replacement (the
-    // bfsHops pattern); the final one backs the lazily-returned labels
-    var releaseLabels: () => Unit = () => ()
-    try {
-    for (i <- 1 to iters) {
-      // modal neighbor label; tie → smallest label. max of
-      // (cnt, NEGATED rank of label) picks highest count then smallest
-      // label without a window sort — max_by over a struct is a plain
-      // keyed aggregate with partial merge.
-      val counted = und
-        .join(labels, und("dst") === labels("node"))
-        .select(col("src"), col("label"))
-        .groupBy(col("src"), col("label")).agg(count(lit(1)).as("cnt"))
-      labels = counted
-        .groupBy(col("src"))
-        .agg(min_by(col("label"),
-          struct((-col("cnt")).as("neg"), col("label"))).as("label"))
-        .select(col("src").as("node"), col("label"))
-      if (i % checkpointEvery == 0 && i < iters) {
-        val (staged, rel) = stageRowBlocks(labels)
-        releaseLabels(); labels = staged; releaseLabels = rel
+    Fixpoint.scoped { blocks =>
+      Fixpoint.iterate(blocks, init, iters) { labels =>
+        // modal neighbor label; tie → smallest label. max of
+        // (cnt, NEGATED rank of label) picks highest count then smallest
+        // label without a window sort — max_by over a struct is a plain
+        // keyed aggregate with partial merge.
+        und.join(labels, und("dst") === labels("node"))
+          .select(col("src"), col("label"))
+          .groupBy(col("src"), col("label")).agg(count(lit(1)).as("cnt"))
+          .groupBy(col("src"))
+          .agg(min_by(col("label"),
+            struct((-col("cnt")).as("neg"), col("label"))).as("label"))
+          .select(col("src").as("node"), col("label"))
       }
-    }
-    labels
-    } catch {
-      // final cap backs the returned plan (keep on success); a
-      // mid-loop failure returns nothing, so free the in-flight cap
-      case scala.util.control.NonFatal(e) => releaseLabels(); throw e
     }
   }
 }

@@ -27,8 +27,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * sets across all threads immediately for sessions done deduping.
   *
   * Storage format is PER TABLE SHAPE AND SCALE — all A/B-measured:
-  *  - [[stageRows]] (`localCheckpoint(true)` row blocks, backing-RDD
-  *    handle kept for release): the collapse's text-carrying tables.
+  *  - [[stageRows]] ([[Fixpoint.stageRowBlocks]] row blocks, release
+  *    handle kept): the collapse's text-carrying tables.
   *    The columnar cache's write + per-consumer read conversion
   *    measured +0.7 s/call at sf0.1 on them (min-of-4 A/B) — full
   *    rows are what every consumer reads anyway.
@@ -108,34 +108,12 @@ object PrefixBlocks {
     * (rebuilt via `LogicalRDD.fromDataset`, the constructor
     * `Dataset.checkpoint` itself uses). */
   private[pipeline] def stageRows(df: DataFrame): DataFrame = {
-    val c = df.localCheckpoint(true)
-    // the checkpointed Dataset's plan is a LogicalRDD leaf over the
-    // persisted InternalRow RDD — THAT handle is what unpersists the
-    // blocks (Dataset.unpersist only talks to the CacheManager). A
-    // plan shape without the leaf would silently degrade every staged
-    // table to the old GC-freed lifecycle, so it's surfaced once (a
-    // Spark upgrade changing the checkpoint plan shape must show up
-    // in a test run, not hide as quiet re-pinning).
-    val backing = c.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }
-    if (backing.isEmpty && leafWarned.compareAndSet(false, true))
-      System.err.println(
-        "[graft] PrefixBlocks.stageRows: no LogicalRDD leaf under " +
-          "localCheckpoint — deterministic block release is DISABLED " +
-          "(GC-freed lifecycle); a Spark upgrade likely changed the " +
-          "checkpoint plan shape")
+    val (c, release) = Fixpoint.stageRowBlocks(df)
     val retired = new java.util.concurrent.atomic.AtomicBoolean(false)
-    track(c.sparkSession,
-      backing.map(r => () => {
-        retired.set(true); r.unpersist(blocking = false); ()
-      }).toList)
-    if (backing.isEmpty) c
-    else org.apache.spark.sql.GraftColumnBridge.mapCheckpointRdd(
+    track(c.sparkSession, List(() => { retired.set(true); release() }))
+    org.apache.spark.sql.GraftColumnBridge.mapCheckpointRdd(
       c, r => new RetiredStageGuardRDD(r, retired))
   }
-
-  private val leafWarned = new java.util.concurrent.atomic.AtomicBoolean(false)
 
   /** Materialize `df` once in the COLUMNAR cache (persist + count) and
     * track it for release at the next top-level prefix-dedup call.

@@ -213,11 +213,13 @@ object Similarity {
     else sampled
   }
 
-  /** Corpus with its IVF `cell` assignment (nearest centroid). */
+  /** Corpus with its IVF `cell` assignment (nearest centroid); a null
+    * cell when there are no centroids (an empty sampled corpus). */
   def ivfAssign(
       corpus: DataFrame, vecCol: String,
       cents: Array[(Int, Array[Double])]): DataFrame =
-    corpus
+    if (cents.isEmpty) corpus.withColumn("cell", lit(null).cast("int"))
+    else corpus
       .withColumn("__nv", Vec.norm(col(vecCol)))
       .withColumn("cell",
         array_min(centDists(cents)(col(vecCol), col("__nv"))).getField("cid"))
@@ -324,7 +326,7 @@ object Similarity {
       // so the cache is dropped before returning rather than leaking
       // into the block manager on every probe call.
       val probeCells = ivfProbeCells(probes, vecCol, cents, nprobe).persist()
-      try scored(probeCells).localCheckpoint(true)
+      try Fixpoint.materialize(scored(probeCells))
       finally probeCells.unpersist()
     } else
       // eager = false keeps the plan lazy and inspectable (the spec

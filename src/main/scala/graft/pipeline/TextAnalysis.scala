@@ -164,40 +164,39 @@ object TextAnalysis {
       docs: org.apache.spark.sql.DataFrame,
       idCol: String, textCol: String, langCol: String,
       n: Int = 3, topK: Int = 300): org.apache.spark.sql.DataFrame = {
-    val (shared, releaseShared) = Graph.stageRowBlocks(
-      docs.select(col(idCol), col(langCol),
-        explode(charNgrams(col(textCol), n)).as("__g")))
-    try {
-    val profiles = profilesFromGrams(
-      shared.select(col(langCol).as("__lang"), col("__g")), topK)
-    require(profiles.nonEmpty, "langIdNgramProfile: no labeled languages")
-    val scores = profiles.zipWithIndex.map { case ((_, grams), i) =>
-      sum(when(col("__g").isInCollection(grams), 1L).otherwise(0L))
-        .as(s"__s_$i")
+    Fixpoint.scoped { blocks =>
+      val (shared, _) = blocks.stage(
+        docs.select(col(idCol), col(langCol),
+          explode(charNgrams(col(textCol), n)).as("__g")))
+      val profiles = profilesFromGrams(
+        shared.select(col(langCol).as("__lang"), col("__g")), topK)
+      require(profiles.nonEmpty, "langIdNgramProfile: no labeled languages")
+      val scores = profiles.zipWithIndex.map { case ((_, grams), i) =>
+        sum(when(col("__g").isInCollection(grams), 1L).otherwise(0L))
+          .as(s"__s_$i")
+      }
+      // max (score, -index): ties resolve to the SMALLEST language index
+      // = lexicographically first language (profiles are sorted)
+      val structs = profiles.zipWithIndex.map { case ((lang, _), i) =>
+        struct(col(s"__s_$i").as("s"), lit(-i).as("p"), lit(lang).as("l"))
+      }
+      val best =
+        if (structs.length == 1) structs.head
+        else greatest(structs: _*)
+      // doc-sized eager cut so the gram blocks release before the caller
+      // ever runs an action (the pageRank result pattern); the final
+      // left join reads these blocks plus one id projection of the input
+      // — the corpus text is never scanned again
+      val scored = Fixpoint.materialize(shared
+        .select(col(idCol), col("__g"))
+        .groupBy(col(idCol))
+        .agg(scores.head, scores.tail: _*)
+        .select(col(idCol),
+          when(best.getField("s") > 0, best.getField("l"))
+            .otherwise(lit("und")).as("lang_pred")))
+      docs.select(col(idCol)).join(scored, Seq(idCol), "left")
+        .withColumn("lang_pred", coalesce(col("lang_pred"), lit("und")))
     }
-    // max (score, -index): ties resolve to the SMALLEST language index
-    // = lexicographically first language (profiles are sorted)
-    val structs = profiles.zipWithIndex.map { case ((lang, _), i) =>
-      struct(col(s"__s_$i").as("s"), lit(-i).as("p"), lit(lang).as("l"))
-    }
-    val best =
-      if (structs.length == 1) structs.head
-      else greatest(structs: _*)
-    // doc-sized eager cut so the gram blocks release before the caller
-    // ever runs an action (the pageRank result pattern); the final
-    // left join reads these blocks plus one id projection of the input
-    // — the corpus text is never scanned again
-    val scored = shared
-      .select(col(idCol), col("__g"))
-      .groupBy(col(idCol))
-      .agg(scores.head, scores.tail: _*)
-      .select(col(idCol),
-        when(best.getField("s") > 0, best.getField("l"))
-          .otherwise(lit("und")).as("lang_pred"))
-      .localCheckpoint(true)
-    docs.select(col(idCol)).join(scored, Seq(idCol), "left")
-      .withColumn("lang_pred", coalesce(col("lang_pred"), lit("und")))
-    } finally releaseShared()
   }
 
   /** GPT-2-style pre-tokenizer pattern, lookahead-free so the same
@@ -883,11 +882,10 @@ object TextAnalysis {
         explode(tokens(col(textCol))).as("__t"))
       .select(col(idCol),
         pmod(graft.functions.fnv64(col("__t")), lit(buckets.toLong)).as("__b"))
-    val tc = tb.join(lab, Seq(idCol))
+    val tc = Fixpoint.materialize(tb.join(lab, Seq(idCol))
       .groupBy(col("__b"))
       .agg(sum(col("__y")).cast("long").as("__c1"),
-        sum(lit(1) - col("__y")).cast("long").as("__c0"))
-      .localCheckpoint(true)
+        sum(lit(1) - col("__y")).cast("long").as("__c0")))
     val tot = tc.agg(sum(col("__c1")), sum(col("__c0"))).head
     val (n1, n0) = (tot.getLong(0), tot.getLong(1))
     // model-sized collect: <= `buckets` rows — this IS the export

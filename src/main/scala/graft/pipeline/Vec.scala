@@ -607,8 +607,9 @@ object Vec {
     * Lloyd (k from the shard count, capped at `kMax`), oversized-cell
     * subdivision, within-cell cosine pairs. Input: (`__sh`, `__id`,
     * `__v`). The centroid table lives in a DataFrame keyed by shard —
-    * never collected; each round's update is localCheckpoint'd
-    * (aggregate-sized: ≤ corpus/targetCellSize rows). The subdivision
+    * never collected; each round's update is staged and releases the
+    * one it supersedes (aggregate-sized: ≤ corpus/targetCellSize rows;
+    * the last backs the lazily returned pairs). The subdivision
     * guard mirrors [[semDedupPairs]]': cells beyond 16× the target
     * (an identical-vector flood Lloyd cannot split, or a kMax-capped
     * dense shard) split deterministically by id hash into target-sized
@@ -621,86 +622,86 @@ object Vec {
       iters: Int, threshold: Double,
       targetCellSize: Int, kMin: Int,
       kMax: Int = Int.MaxValue,
-      probe: StageProbe = StageProbe.off): org.apache.spark.sql.DataFrame = {
-    val W = org.apache.spark.sql.expressions.Window
-    // per-shard k and seed ranks — both windows share one hash
-    // partitioning on the shard key (a single exchange)
-    val xs = probe.stage("shard_k_window", sharded
-      .withColumn("__k", expr(
-        s"least($kMax, greatest($kMin, " +
-          s"CAST((count(1) OVER (PARTITION BY __sh) + " +
-          s"${targetCellSize - 1}) DIV $targetCellSize AS INT)))"))
-      .withColumn("__rn",
-        row_number().over(W.partitionBy("__sh").orderBy("__id"))))
-    // joined assignment: x ⋈ centroids on shard, lexicographic
-    // (dist, cl) min per row via a map-side-combining struct-min agg
-    def assign(cs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-      xs.select(col("__sh"), col("__id"), col("__v"))
-        .join(cs, Seq("__sh"))
-        .withColumn("__dist", graft.functions.l2Sq(col("__v"), col("__cv")))
-        .groupBy(col("__sh"), col("__id"))
-        .agg(min(struct(col("__dist"), col("__cl"))).as("__m"),
-          // deterministic: __v is functionally dependent on the group key
-          first(col("__v")).as("__v"))
-        .select(col("__sh"), col("__id"), col("__v"),
-          col("__m.__cl").as("__cl"))
-    var cents: org.apache.spark.sql.DataFrame = xs
-      .filter(col("__rn") <= col("__k"))
-      .select(col("__sh"), (col("__rn") - 1).cast("int").as("__cl"),
-        col("__v").as("__cv"))
-    for (i <- 0 until iters - 1) {
+      probe: StageProbe = StageProbe.off): org.apache.spark.sql.DataFrame =
+    Fixpoint.scoped { blocks =>
+      val W = org.apache.spark.sql.expressions.Window
+      // per-shard k and seed ranks — both windows share one hash
+      // partitioning on the shard key (a single exchange)
+      val xs = probe.stage("shard_k_window", sharded
+        .withColumn("__k", expr(
+          s"least($kMax, greatest($kMin, " +
+            s"CAST((count(1) OVER (PARTITION BY __sh) + " +
+            s"${targetCellSize - 1}) DIV $targetCellSize AS INT)))"))
+        .withColumn("__rn",
+          row_number().over(W.partitionBy("__sh").orderBy("__id"))))
+      // joined assignment: x ⋈ centroids on shard, lexicographic
+      // (dist, cl) min per row via a map-side-combining struct-min agg
+      def assign(cs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+        xs.select(col("__sh"), col("__id"), col("__v"))
+          .join(cs, Seq("__sh"))
+          .withColumn("__dist", graft.functions.l2Sq(col("__v"), col("__cv")))
+          .groupBy(col("__sh"), col("__id"))
+          .agg(min(struct(col("__dist"), col("__cl"))).as("__m"),
+            // deterministic: __v is functionally dependent on the group key
+            first(col("__v")).as("__v"))
+          .select(col("__sh"), col("__id"), col("__v"),
+            col("__m.__cl").as("__cl"))
+      val seeds = xs
+        .filter(col("__rn") <= col("__k"))
+        .select(col("__sh"), (col("__rn") - 1).cast("int").as("__cl"),
+          col("__v").as("__cv"))
+      // the centroid table is aggregate-sized (Σk rows) but each round
+      // reads the whole corpus, so every round is cut; the cuts are
+      // eager, so this wall-clock is the real assign+update work
       val t0 = System.nanoTime()
-      cents = assign(cents)
-        .select(col("__sh"), col("__cl"),
-          posexplode(col("__v")).as(Seq("__i", "__x")))
-        .groupBy(col("__sh"), col("__cl"), col("__i"))
-        .agg(round(avg(col("__x")), 6).as("__c"))
-        .groupBy(col("__sh"), col("__cl"))
-        .agg(transform(
-          sort_array(collect_list(struct(col("__i"), col("__c")))),
-          _.getField("__c")).as("__cv"))
-        // aggregate-sized (Σk rows): lineage cap, not a data spill
-        .localCheckpoint(true)
-      // the checkpoint is eager, so this wall-clock is the real
-      // assign+update round (probe-off: two nanoTime calls, nothing else)
-      probe.metric(s"lloyd_round_$i", (System.nanoTime() - t0) / 1e9)
+      val cents = Fixpoint.iterate(blocks, seeds, iters - 1, everyRound = true) { cents =>
+        assign(cents)
+          .select(col("__sh"), col("__cl"),
+            posexplode(col("__v")).as(Seq("__i", "__x")))
+          .groupBy(col("__sh"), col("__cl"), col("__i"))
+          .agg(round(avg(col("__x")), 6).as("__c"))
+          .groupBy(col("__sh"), col("__cl"))
+          .agg(transform(
+            sort_array(collect_list(struct(col("__i"), col("__c")))),
+            _.getField("__c")).as("__cv"))
+      }
+      probe.metric("lloyd_sec", (System.nanoTime() - t0) / 1e9)
+      // oversized-cell subdivision (the semDedupPairs guard, one tier
+      // down): sub-cell id spacing 2^40 is collision-free below 2^40
+      // rows per cell; cells ≤ the 16× cap keep sub-key 0
+      val cap = 16L * targetCellSize
+      val fin = probe.stage("final_assign_subdivide", assign(cents)
+        .withColumn("__cn", count(lit(1)).over(
+          W.partitionBy(col("__sh"), col("__cl"))))
+        .withColumn("__cl",
+          when(col("__cn") <= cap, col("__cl").cast("long") * (1L << 40))
+            .otherwise(col("__cl").cast("long") * (1L << 40) +
+              pmod(xxhash64(col("__id")),
+                ceil(col("__cn") / targetCellSize).cast("long"))))
+        .drop("__cn"))
+      if (probe.active) {
+        // candidate volume Σ c² over final cells — the number that says
+        // whether the within-cell pair join (output-bound) or an
+        // upstream stage is what moved between scales
+        val t0 = System.nanoTime()
+        val st = fin.groupBy(col("__sh"), col("__cl"))
+          .agg(count(lit(1)).as("__c"))
+          .agg(count(lit(1)), sum(col("__c").cast("double") * col("__c"))).head
+        probe.metric("cells", if (st.isNullAt(0)) 0.0 else st.getLong(0).toDouble)
+        probe.metric("cand_pairs_sum_c2",
+          if (st.isNullAt(1)) 0.0 else st.getDouble(1))
+        probe.metric("cand_scan_sec", (System.nanoTime() - t0) / 1e9)
+      }
+      val a = fin.select(col("__sh"), col("__cl"), col("__id").as("id_a"),
+        col("__v").as("__va"))
+      val b = fin.select(col("__sh"), col("__cl"), col("__id").as("id_b"),
+        col("__v").as("__vb"))
+      a.join(b, Seq("__sh", "__cl"))
+        .filter(col("id_a") < col("id_b"))
+        .withColumn("cosine", cosine(col("__va"), col("__vb")))
+        .filter(col("cosine") >= threshold)
+        .select(col("id_a"), col("id_b"), col("cosine"))
     }
-    // oversized-cell subdivision (the semDedupPairs guard, one tier
-    // down): sub-cell id spacing 2^40 is collision-free below 2^40
-    // rows per cell; cells ≤ the 16× cap keep sub-key 0
-    val cap = 16L * targetCellSize
-    val fin = probe.stage("final_assign_subdivide", assign(cents)
-      .withColumn("__cn", count(lit(1)).over(
-        W.partitionBy(col("__sh"), col("__cl"))))
-      .withColumn("__cl",
-        when(col("__cn") <= cap, col("__cl").cast("long") * (1L << 40))
-          .otherwise(col("__cl").cast("long") * (1L << 40) +
-            pmod(xxhash64(col("__id")),
-              ceil(col("__cn") / targetCellSize).cast("long"))))
-      .drop("__cn"))
-    if (probe.active) {
-      // candidate volume Σ c² over final cells — the number that says
-      // whether the within-cell pair join (output-bound) or an
-      // upstream stage is what moved between scales
-      val t0 = System.nanoTime()
-      val st = fin.groupBy(col("__sh"), col("__cl"))
-        .agg(count(lit(1)).as("__c"))
-        .agg(count(lit(1)), sum(col("__c").cast("double") * col("__c"))).head
-      probe.metric("cells", if (st.isNullAt(0)) 0.0 else st.getLong(0).toDouble)
-      probe.metric("cand_pairs_sum_c2",
-        if (st.isNullAt(1)) 0.0 else st.getDouble(1))
-      probe.metric("cand_scan_sec", (System.nanoTime() - t0) / 1e9)
-    }
-    val a = fin.select(col("__sh"), col("__cl"), col("__id").as("id_a"),
-      col("__v").as("__va"))
-    val b = fin.select(col("__sh"), col("__cl"), col("__id").as("id_b"),
-      col("__v").as("__vb"))
-    a.join(b, Seq("__sh", "__cl"))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("cosine", cosine(col("__va"), col("__vb")))
-      .filter(col("cosine") >= threshold)
-      .select(col("id_a"), col("id_b"), col("cosine"))
-  }
 
   /** Cosine of every vector to its OWN label's centroid — the
     * intra-class cohesion signal (low/negative cosines flag mislabeled

@@ -53,4 +53,20 @@ class SourceLintSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       s"persist() without unpersist():\n${offenders.map(_.getPath).mkString("\n")}")
   }
+
+  test("localCheckpoint is called only by the pipeline's Fixpoint module") {
+    // row-block staging has one owner, which also owns its release:
+    // an eager cut anywhere else in the pipeline package is a block
+    // lifecycle nobody releases deterministically
+    val offenders = scalaFiles(new java.io.File(mainRoot, "graft/pipeline"))
+      .filter(_.getName != "Fixpoint.scala")
+      .flatMap { f =>
+        scala.io.Source.fromFile(f, "UTF-8").getLines().zipWithIndex.collect {
+          case (l, i) if l.contains("localCheckpoint(") => s"${f.getPath}:${i + 1}"
+        }
+      }
+    assert(offenders.isEmpty,
+      s"localCheckpoint outside Fixpoint — stage through it:\n" +
+        offenders.mkString("\n"))
+  }
 }

@@ -1,0 +1,67 @@
+package graft.pipeline
+
+import graft.SparkSpec
+import org.apache.spark.sql.types.{DoubleType, LongType, StructType}
+
+class FixpointSpec extends SparkSpec {
+  import spark.implicits._
+
+  test("broadcast gate: a 10M-node state table broadcasts, 50M does not") {
+    // pageRank's (node, r) row; the default 1 GiB spark.driver.maxResultSize
+    val row = new StructType().add("node", LongType).add("r", DoubleType)
+      .defaultSize.toLong
+    val gib = 1L << 30
+    assert(Fixpoint.broadcastFits(10L * 1000 * 1000, row, true, gib))
+    assert(!Fixpoint.broadcastFits(50L * 1000 * 1000, row, true, gib),
+      "50M rows would be collected to the driver every round past its limit")
+    assert(!Fixpoint.broadcastFits(1L, row, false, gib),
+      "autoBroadcastJoinThreshold = -1 disables the hint at any size")
+    assert(Fixpoint.broadcastFits(50L * 1000 * 1000, row, true, 0L),
+      "maxResultSize = 0 is unlimited")
+  }
+
+  test("iterative operators on an empty edge list and a lone self-loop") {
+    val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
+    val loop = Seq((1L, 1L)).toDF("src", "dst")
+    val seed = Seq(1L).toDF("node")
+    def pairs(e: org.apache.spark.sql.DataFrame) = e.toDF("id_a", "id_b")
+    def labels(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, Long)].collect().toMap
+    def ranks(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, Double)].collect().toMap
+    val vecs = Seq((1L, Array(1.0, 0.0))).toDF("id", "v")
+
+    // no edges: nothing to rank, peel, score or cluster; the seeded
+    // operators return their seeds
+    assert(Graph.pageRank(empty, "src", "dst", 3).isEmpty)
+    assert(ranks(Graph.personalizedPageRank(empty, "src", "dst", seed, "node", 3)) ==
+      Map(1L -> 0.15))
+    assert(labels(Graph.bfsHops(empty, "src", "dst", seed, "node", 3)) == Map(1L -> 0L))
+    assert(Graph.labelPropagation(empty, "src", "dst", 3).isEmpty)
+    assert(Graph.kCore(empty, "src", "dst", 1, 2).isEmpty)
+    assert(Graph.hits(empty, "src", "dst", 2).isEmpty)
+    assert(Graph.connectedComponentsStar(empty, "src", "dst").isEmpty)
+    assert(Dedup.nearDupClusters(pairs(empty)).isEmpty)
+    assert(Vec.semDedupSharded(vecs.limit(0), "id", "v", nlist = 2, iters = 3,
+      threshold = 0.9).isEmpty)
+
+    // a lone self-loop: one node holding all the mass, labelling
+    // itself; no k-core (self-loops are dropped) and no vector pair
+    assert(ranks(Graph.pageRank(loop, "src", "dst", 3)) == Map(1L -> 1.0))
+    assert(ranks(Graph.personalizedPageRank(loop, "src", "dst", seed, "node", 3)) ==
+      Map(1L -> 1.0))
+    assert(labels(Graph.bfsHops(loop, "src", "dst", seed, "node", 3)) == Map(1L -> 0L))
+    assert(labels(Graph.labelPropagation(loop, "src", "dst", 3)) == Map(1L -> 1L))
+    assert(Graph.kCore(loop, "src", "dst", 1, 2).isEmpty)
+    assert(Graph.hits(loop, "src", "dst", 2).as[(Long, String, Double)].collect()
+      .toSet == Set((1L, "hub", 1.0), (1L, "auth", 1.0)))
+    assert(labels(Graph.connectedComponentsStar(loop, "src", "dst")) == Map(1L -> 1L))
+    assert(labels(Dedup.nearDupClusters(pairs(loop))) == Map(1L -> 1L))
+    assert(Vec.semDedupSharded(vecs, "id", "v", nlist = 2, iters = 3,
+      threshold = 0.9).isEmpty)
+
+    intercept[IllegalArgumentException] {
+      Graph.personalizedPageRank(loop, "src", "dst", seed.limit(0), "node", 3)
+    }
+  }
+}

@@ -39,8 +39,7 @@ class GraphSpec extends SparkSpec {
     // with the cap this completes quickly and values are unchanged
     // (per-iteration rounding makes the cut bit-exact)
     val edges = Seq(("a", "b"), ("b", "c"), ("c", "d"), ("b", "d"))
-    val df = Graph.pageRank(edges.toDF("src", "dst"), "src", "dst", 50,
-      checkpointEvery = 10)
+    val df = Graph.pageRank(edges.toDF("src", "dst"), "src", "dst", 50)
     // the returned plan must be a checkpoint leaf, not 50 nested joins
     val depth = df.queryExecution.optimizedPlan.toString
       .linesIterator.size
@@ -221,19 +220,48 @@ class GraphSpec extends SparkSpec {
     assert(math.abs(auths.values.sum - 1.0) < 1e-3)
   }
 
-  test("hits above the broadcast node limit falls back to a shuffled join, same result") {
-    // limit 0 forces the fallback every iteration — the 100 TB shape
-    // for ≥10^8-node graphs where broadcasting the score table would
-    // OOM. Integer micro-unit arithmetic is order-exact, so the two
-    // join strategies must agree BIT-identically, not approximately.
+  test("session-disabled broadcast: shuffled joins, same values") {
+    // autoBroadcastJoinThreshold = -1 must also drop the operators' own
+    // hints on their node-sized state tables — the shape for a session
+    // whose driver cannot take a broadcast. Integer micro-units (hits),
+    // min() (nearDupClusters) and per-iteration 6-dp rounding
+    // (pageRank) are order-exact, so the shuffled joins must agree BIT
+    // for bit with the default session's broadcast plans.
     val edges = Seq(("u1", "x"), ("u1", "y"), ("u2", "y"),
-      ("u3", "y"), ("u3", "z"), ("u4", "x"), ("u4", "z"))
-    val df = edges.toDF("src", "dst")
-    def run(limit: Long) =
-      Graph.hits(df, "src", "dst", 3, broadcastNodeLimit = limit)
-        .as[(String, String, Double)].collect().toSet
-    assert(run(0L) == run(Long.MaxValue),
-      "join strategy must not change HITS scores")
+      ("u3", "y"), ("u3", "z"), ("u4", "x"), ("u4", "z")).toDF("src", "dst")
+    val pairs = (Seq((1L, 2L), (2L, 3L), (10L, 11L)) ++
+      (20L until 26L).map(i => (i, i + 1))).toDF("id_a", "id_b")
+    def run(): (Seq[Set[org.apache.spark.sql.Row]], Seq[String]) = {
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+        def onSuccess(f: String,
+            qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+          plans.add(qe.executedPlan.toString)
+        def onFailure(f: String,
+            qe: org.apache.spark.sql.execution.QueryExecution,
+            e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try {
+        val out = Seq(Graph.pageRank(edges, "src", "dst", 4),
+            Graph.hits(edges, "src", "dst", 3), Dedup.nearDupClusters(pairs))
+          .map(_.collect().toSet)
+        org.apache.spark.sql.GraftListenerBridge.waitUntilEmpty(spark.sparkContext)
+        (out, plans.toArray(Array.empty[String]).toSeq)
+      } finally spark.listenerManager.unregister(listener)
+    }
+    val (hinted, hintedPlans) = run()
+    assert(hintedPlans.exists(_.contains("BroadcastHashJoin")),
+      "the default session should broadcast the state tables")
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    val (shuffled, shuffledPlans) =
+      try { spark.conf.set(key, "-1"); run() } finally spark.conf.set(key, prev)
+    assert(shuffled == hinted, "join strategy must not change any value")
+    assert(shuffledPlans.nonEmpty &&
+      !shuffledPlans.exists(_.contains("BroadcastHashJoin")),
+      "broadcast disabled by the session, yet a plan broadcasts:\n" +
+        shuffledPlans.filter(_.contains("BroadcastHashJoin")).mkString("\n"))
   }
 
   test("hits runs ONE driver sync per half-iteration (no scalar L1 job)") {
@@ -266,6 +294,31 @@ class GraphSpec extends SparkSpec {
       s"expected <=6 jobs per iteration (broadcast build + AQE stage + " +
         s"materialization per half-iteration), got $perIteration " +
         s"(j2=$j2, j4=$j4) - a per-half-iteration scalar collect is back")
+  }
+
+  test("nearDupClusters: convergence rides the round's staging job") {
+    // A path of k edges takes k+1 rounds (k to carry the minimum to the
+    // far end, one that changes nothing), so path(k+2) - path(k) is two
+    // rounds. Measured composition per round: broadcast-relation build
+    // + AQE shuffle stages + staging = 5 jobs; a separate convergence
+    // probe (the pre-observe form) adds at least one more. (Path sizes
+    // where AQE splits one more stage off cost 6; 6 → 8 is not one.)
+    def countJobs(k: Int): Int = {
+      // the hits pin's status-tracker count
+      val group = s"graft_cc_jobcount_$k"
+      spark.sparkContext.setJobGroup(group, "nearDupClusters job-count pin")
+      try {
+        Dedup.nearDupClusters((0L until k.toLong).map(i => (i, i + 1))
+          .toDF("id_a", "id_b")).collect()
+        spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
+      } finally spark.sparkContext.clearJobGroup()
+    }
+    val j6 = countJobs(6)
+    val j8 = countJobs(8)
+    val perRound = (j8 - j6) / 2.0
+    assert(perRound <= 5.0,
+      s"expected <=5 jobs per round, got $perRound (j6=$j6, j8=$j8) - " +
+        "the convergence test left the staging job")
   }
 
   test("kCore/hits argument guards reject degenerate parameters") {
@@ -329,7 +382,7 @@ class GraphSpec extends SparkSpec {
     val base = cached()
     val edges = (0L until 500L).map(i => (i, (i * 7 + 1) % 500)).toDF("src", "dst")
     // enough iterations/rounds that GC-deferred cleanup WOULD pile up:
-    // pageRank takes 2 in-loop caps (25/10), hits 10 half-iteration
+    // pageRank takes 4 in-loop caps (25 iterations), hits 10 half-iteration
     // tables, kCore 6 edge-set rounds — each op may leave ONLY its
     // eagerly-materialized result behind.
     Graph.pageRank(edges, "src", "dst", iters = 25).count()
@@ -341,7 +394,7 @@ class GraphSpec extends SparkSpec {
     Graph.kCore(edges, "src", "dst", k = 2, rounds = 6).count()
     val afterKc = awaitAtMost(base + 3)
     assert(afterKc <= base + 3, s"kCore leaked blocks: now=$afterKc")
-    // ppr: seed-set blocks + 2 in-loop caps (25/10) must all retire
+    // ppr: seed-set blocks + 4 in-loop caps (25 iterations) must all retire
     val seeds = Seq(0L, 7L).toDF("node")
     Graph.personalizedPageRank(edges, "src", "dst", seeds, "node", iters = 25)
       .count()
@@ -352,5 +405,26 @@ class GraphSpec extends SparkSpec {
     Graph.labelPropagation(edges, "src", "dst", iters = 12).count()
     val afterLpa = awaitAtMost(base + 5)
     assert(afterLpa <= base + 5, s"lpa leaked blocks: now=$afterLpa")
+    // the other lazily returned results keep exactly the blocks they
+    // read: bfs its final cap (12 hops → caps at 5 and 10), nearDup
+    // its last round (its edge table and ~12 superseded rounds
+    // retire), cc_star its node catalog and last round, and the
+    // sharded SemDeDup its last of 4 centroid tables
+    Graph.bfsHops(edges, "src", "dst", seeds, "node", maxHops = 12).count()
+    val afterBfs = awaitAtMost(base + 6)
+    assert(afterBfs <= base + 6, s"bfs leaked blocks: now=$afterBfs")
+    Dedup.nearDupClusters(edges.toDF("id_a", "id_b")).count()
+    val afterNd = awaitAtMost(base + 7)
+    assert(afterNd <= base + 7, s"nearDupClusters leaked blocks: now=$afterNd")
+    Graph.connectedComponentsStar(edges, "src", "dst").count()
+    val afterCc = awaitAtMost(base + 9)
+    assert(afterCc <= base + 9, s"cc_star leaked blocks: now=$afterCc")
+    val vecs = (0 until 300).map(i =>
+      (i.toLong, Array.tabulate(4)(j => math.sin(i * 0.37 + j * 1.3))))
+      .toDF("id", "v")
+    Vec.semDedupSharded(vecs, "id", "v", nlist = 3, iters = 5, threshold = 0.99)
+      .count()
+    val afterSem = awaitAtMost(base + 10)
+    assert(afterSem <= base + 10, s"semDedupSharded leaked blocks: now=$afterSem")
   }
 }
