@@ -12,12 +12,14 @@ import org.apache.spark.storage.StorageLevel
   * for the UI layer.
   *
   * Scale: the main df is ingested once (explicit time sort → row ids →
-  * window ids) and cached; the catalog is tiny and collected lazily.
-  * Each render is a filter on `win_dense` — partition-prunable when the
-  * underlying layout is time-bucketed. Each action is a narrow
-  * projection; `checkpointEvery` taming of the `when`-fold plan depth
-  * mirrors the reference's periodic save advice
-  * (overall_workflow.Rmd:144-165).
+  * window ids) and cached. The catalog is tiny: `open` and `rewindow`
+  * collect it once into a local relation and keep its row count as
+  * `windowCount`, so navigation (`next`, `prev`, `goto`) and the
+  * actions themselves submit no Spark job. Each render is a filter on
+  * `win_dense` — partition-prunable when the underlying layout is
+  * time-bucketed. Each action is a narrow projection; [[compact]]
+  * truncates the resulting `when`-fold plan depth, mirroring the
+  * reference's periodic save advice (overall_workflow.Rmd:144-165).
   */
 final case class QcSession(
     df: DataFrame,
@@ -26,6 +28,7 @@ final case class QcSession(
     winHrs: Double,
     t0: java.sql.Timestamp,
     catalog: DataFrame,
+    windowCount: Long,
     cursor: Long = 0L,
     suffix: String = FlagSchema.AutoSuffix,
     appliedActions: Int = 0) {
@@ -40,11 +43,13 @@ final case class QcSession(
     if (hideBadRows) QcPlotFeed.hideBad(slice, y, suffix) else slice
   }
 
-  def windowCount: Long = QcWindows.windowCount(catalog)
+  /** Navigation clamps into [0, last kept window]; a session with no
+    * kept windows stays at 0 and renders no rows. */
+  private def lastWindow: Long = math.max(0L, windowCount - 1)
 
-  def next: QcSession = copy(cursor = math.min(cursor + 1, windowCount - 1))
-  def prev: QcSession = copy(cursor = math.max(cursor - 1, 0L))
-  def goto(k: Long): QcSession = copy(cursor = k)
+  def next: QcSession = goto(cursor + 1)
+  def prev: QcSession = goto(cursor - 1)
+  def goto(k: Long): QcSession = copy(cursor = math.max(0L, math.min(k, lastWindow)))
 
   private def withDf(d: DataFrame): QcSession =
     copy(df = d, appliedActions = appliedActions + 1)
@@ -78,9 +83,9 @@ final case class QcSession(
   def rewindow(newWinHrs: Double, include: Seq[Int] = Nil): QcSession = {
     val base = df.drop(QcWindows.WinIdCol, QcWindows.WinDenseCol)
     val wdf = QcWindows.withWinId(base, t, newWinHrs, Some(t0))
-    val cat = QcWindows.windowCatalog(wdf, t, y, include, suffix)
+    val (cat, n) = QcWindows.collectCatalog(wdf, t, y, include, suffix)
     copy(df = QcWindows.withDenseId(wdf, cat), winHrs = newWinHrs,
-      catalog = cat, cursor = 0L)
+      catalog = cat, windowCount = n, cursor = 0L)
   }
 
   /** Long interactive sessions fold many `when`-projections onto the
@@ -240,7 +245,8 @@ object QcSession {
     open(QcExport.readCheckpoint(spark, path), y, t, winHrs, include, tiebreakers)
 
   /** Ingest (R/qc_window_app.R:42-85): validate, explicit time sort with
-    * row ids, window ids from the global min time, window catalog, cache. */
+    * row ids, window ids from the global min time, window catalog
+    * (collected once), cache. */
   def open(
       data: DataFrame,
       y: String,
@@ -258,12 +264,15 @@ object QcSession {
     require(data.schema.fieldNames.contains(FlagSchema.flagCol(y, sfx)),
       s"open: run QcFlags.addFlags first — no flag column for $y (R/qc_window_app.R:59-62)")
     val t0 = QcWindows.minTime(data, t)
+    // the catalog reads only t, y, the flag and win_id, and withRowId
+    // keeps every row, so it skips the row-id branch
+    val (cat, n) = QcWindows.collectCatalog(
+      QcWindows.withWinId(data, t, winHrs, Some(t0)), t, y, include, sfx)
     val withIds = QcWindows.withRowId(data, t +: tiebreakers)
     val wdf = QcWindows.withWinId(withIds, t, winHrs, Some(t0))
-    val cat = QcWindows.windowCatalog(wdf, t, y, include, sfx)
     val full = QcWindows.withDenseId(wdf, cat)
     val cached =
       if (cache) full.persist(StorageLevel.MEMORY_AND_DISK) else full
-    QcSession(cached, y, t, winHrs, t0, cat, 0L, sfx)
+    QcSession(cached, y, t, winHrs, t0, cat, n, 0L, sfx)
   }
 }

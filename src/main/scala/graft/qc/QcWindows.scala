@@ -254,6 +254,26 @@ object QcWindows {
         col("n_rows"))
   }
 
+  /** [[windowCatalog]] evaluated once: its rows collected by one action
+    * and returned as a local relation, with the kept-window count. The
+    * session navigates on the count without touching Spark, and the
+    * local relation keeps the catalog's aggregate out of every plan that
+    * broadcasts it. */
+  def collectCatalog(
+      df: DataFrame,
+      t: String,
+      y: String,
+      include: Seq[Int] = Nil,
+      suffix: String = AutoSuffix): (DataFrame, Long) = {
+    val cat = windowCatalog(df, t, y, include, suffix)
+    // driver-sized: one row per kept window (thousands over years of
+    // hours-wide windows), the same bound that lets withDenseId
+    // broadcast it
+    val rows = cat.collect()
+    (df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), cat.schema),
+      rows.length.toLong)
+  }
+
   /** W3 applied to the data: broadcast-join the catalog's dense ids back
     * onto the main table (inner join = rows of dropped windows are
     * filtered out, mirroring the reference's navigation which can only

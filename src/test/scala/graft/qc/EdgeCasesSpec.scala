@@ -91,4 +91,18 @@ class EdgeCasesSpec extends SparkSpec {
     assert(r.df.filter(col("temp_qcflag") === FlagSchema.Approved).count() == 25,
       "window 0's approvals survive the round-trip")
   }
+
+  test("session over an all-missing series: no kept windows, cursor stays 0") {
+    val t0 = Timestamp.valueOf("2024-01-01 00:00:00").getTime
+    val series = (0 until 50).map(i =>
+      (new Timestamp(t0 + i * 3600L * 1000), Option.empty[Double]))
+      .toDF("DateTime", "temp")
+    val s = QcSession.open(QcFlags.addFlags(series, Seq("temp")),
+      "temp", "DateTime", winHrs = 25.0)
+    assert(s.windowCount == 0)
+    for (m <- Seq(s.next, s.goto(5), s.next.next.prev, s.goto(-3))) {
+      assert(m.cursor == 0)
+      assert(m.render().count() == 0)
+    }
+  }
 }
