@@ -91,16 +91,16 @@ object QcFlagLog {
       suffix: String = AutoSuffix,
       broadcastEventLimit: Long = 5L * 1000 * 1000): DataFrame = {
     val sfx = resolveSuffix(base, suffix)
-    // driver-sized by construction: distinct flagged-variable NAMES —
-    // schema-sized, not data-sized (each must resolve to a flag column
-    // of `base`, so the require below bounds it by base's width)
-    val vars = log.select("variable").distinct().collect().map(_.getString(0))
-    // driver-sized by construction: ≤ |vars| × 3 scope rows. One tiny
-    // aggregate decides every broadcast hint below — the grouped event
-    // tables are at most event-count-sized, so the per-(variable,
-    // scope) event count is a sound upper bound for the hint decision.
+    // One tiny aggregate gives the variables to fold (its keys, sorted
+    // so the fold order is deterministic) and decides every broadcast
+    // hint below: the grouped event tables are at most event-count-sized,
+    // so the per-(variable, scope) event count is a sound upper bound.
+    // driver-sized by construction: ≤ |vars| × 3 scope rows, and each
+    // variable must resolve to a flag column of `base` (the require
+    // below), so |vars| is bounded by base's width.
     val eventCounts = log.groupBy(col("variable"), col("scope")).count()
       .collect().map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap
+    val vars = eventCounts.keys.map(_._1).toSeq.distinct.sorted
 
     vars.foldLeft(base) { (df, v) =>
       val f = flagCol(v, sfx)

@@ -6,23 +6,35 @@ import org.apache.spark.storage.StorageLevel
 
 /** The qc_window_app server loop minus the pixels
   * (R/qc_window_app.R:194-448): an immutable session value holding the
-  * current table version, the window catalog, and the navigation
-  * cursor. Every mutation returns a NEW session (Spark dfs are
-  * immutable — SURVEY §7.3); `render` returns the current window's rows
-  * for the UI layer.
+  * table, the window catalog, and the navigation cursor. Every mutation
+  * returns a NEW session (Spark dfs are immutable — SURVEY §7.3);
+  * `render` returns the current window's rows for the UI layer.
   *
   * Scale: the main df is ingested once (explicit time sort → row ids →
   * window ids) and cached. The catalog is tiny: `open` and `rewindow`
   * collect it once into a local relation and keep its row count as
   * `windowCount`, so navigation (`next`, `prev`, `goto`) and the
-  * actions themselves submit no Spark job. Each render is a filter on
-  * `win_dense` — partition-prunable when the underlying layout is
-  * time-bucketed. Each action is a narrow projection; [[compact]]
-  * truncates the resulting `when`-fold plan depth, mirroring the
-  * reference's periodic save advice (overall_workflow.Rmd:144-165).
+  * actions themselves submit no Spark job.
+  *
+  * State is `base` (the opened table, or the checkpoint after
+  * [[compact]], or the re-windowed table after [[rewindow]]) plus a
+  * driver-side `pending` list of actions, each tagged with the dense
+  * window it was applied in, or global (M8 `resetAll`). [[df]] folds
+  * every pending action onto `base`; [[render]] folds onto the current
+  * window's slice only that window's actions and the global ones, so a
+  * render costs the same at every step however long the session runs.
+  * The two agree because every action is row-local and every
+  * non-global action is confined to its window: the brushed selection
+  * of M1-M3 and M7 is intersected with the current window, as in the
+  * reference, where a brush can only select the points plotted in the
+  * current window (`brushed_ids`, R/qc_window_app.R:211-213). A new
+  * action that is not window-scoped must be tagged global, or render
+  * pruning drops it. [[compact]] folds the pending actions into a
+  * checkpoint, mirroring the reference's periodic save advice
+  * (overall_workflow.Rmd:144-165).
   */
 final case class QcSession(
-    df: DataFrame,
+    base: DataFrame,
     y: String,
     t: String,
     winHrs: Double,
@@ -31,15 +43,22 @@ final case class QcSession(
     windowCount: Long,
     cursor: Long = 0L,
     suffix: String = FlagSchema.AutoSuffix,
+    pending: Vector[QcSession.Pending] = Vector.empty,
     appliedActions: Int = 0) {
 
-  import FlagSchema._
+  import QcSession.{Pending, foldOnto}
+
+  /** The whole table with every pending action applied. */
+  lazy val df: DataFrame = foldOnto(base, pending)
 
   private def winScope: Column = col(QcWindows.WinDenseCol) === cursor
 
-  /** Rows of the current window (navigation slice). */
+  /** Rows of the current window (navigation slice): exactly
+    * `df.filter(win_dense === cursor)`, folding only the actions that
+    * can touch this window. */
   def render(hideBadRows: Boolean = false): DataFrame = {
-    val slice = QcWindows.slice(df, cursor)
+    val slice = foldOnto(QcWindows.slice(base, cursor),
+      pending.filter(_.window.forall(_ == cursor)))
     if (hideBadRows) QcPlotFeed.hideBad(slice, y, suffix) else slice
   }
 
@@ -51,48 +70,60 @@ final case class QcSession(
   def prev: QcSession = goto(cursor - 1)
   def goto(k: Long): QcSession = copy(cursor = math.max(0L, math.min(k, lastWindow)))
 
-  private def withDf(d: DataFrame): QcSession =
-    copy(df = d, appliedActions = appliedActions + 1)
+  private def pend(window: Option[Long], act: DataFrame => DataFrame): QcSession =
+    copy(pending = pending :+ Pending(window, act), appliedActions = appliedActions + 1)
 
-  /** M1-M3 on a brushed id selection within the current window. */
-  def flagSelected(ids: Seq[Long]): QcSession =
-    withDf(QcActions.flagSelected(df, y, QcPlotFeed.selScope(ids), suffix))
-  def approveSelected(ids: Seq[Long]): QcSession =
-    withDf(QcActions.approveSelected(df, y, QcPlotFeed.selScope(ids), suffix))
-  def unflagSelected(ids: Seq[Long]): QcSession =
-    withDf(QcActions.unflagSelected(df, y, QcPlotFeed.selScope(ids), suffix))
-
-  /** M4-M6 on the whole current window. */
-  def flagWindow(): QcSession =
-    withDf(QcActions.flagWindow(df, y, winScope, suffix))
-  def approveUnflagged(): QcSession =
-    withDf(QcActions.approveUnflagged(df, y, winScope, suffix))
-  def resetWindow(): QcSession =
-    withDf(QcActions.resetWindow(df, y, winScope, suffix))
-
-  /** M7 workhorse: flag selection, approve the window's rest, advance. */
-  def flagAndNext(ids: Seq[Long]): QcSession =
-    withDf(QcActions.flagAndApproveRest(
-      df, y, QcPlotFeed.selScope(ids), winScope, suffix)).next
-
-  /** M8. */
-  def resetAll(): QcSession = withDf(QcActions.resetAll(df, y, suffix))
-
-  /** Restructure path (R/qc_window_app.R:426-439): recompute window ids
-    * at a new width / include-filter — narrow recompute, no shuffle. */
-  def rewindow(newWinHrs: Double, include: Seq[Int] = Nil): QcSession = {
-    val base = df.drop(QcWindows.WinIdCol, QcWindows.WinDenseCol)
-    val wdf = QcWindows.withWinId(base, t, newWinHrs, Some(t0))
-    val (cat, n) = QcWindows.collectCatalog(wdf, t, y, include, suffix)
-    copy(df = QcWindows.withDenseId(wdf, cat), winHrs = newWinHrs,
-      catalog = cat, windowCount = n, cursor = 0L)
+  /** Queue an action confined to the current window; `act` gets the
+    * window predicate. */
+  private def inWindow(act: (DataFrame, Column) => DataFrame): QcSession = {
+    val w = winScope
+    pend(Some(cursor), act(_, w))
   }
 
-  /** Long interactive sessions fold many `when`-projections onto the
-    * plan; localCheckpoint truncates the lineage (the engine analogue of
-    * the reference's periodic re-save). */
-  def compact(): QcSession =
-    copy(df = df.localCheckpoint(eager = true))
+  /** M1-M3 on a brushed id selection, intersected with the current
+    * window (ids of other windows are ignored). */
+  def flagSelected(ids: Seq[Long]): QcSession =
+    inWindow((d, w) => QcActions.flagSelected(d, y, QcPlotFeed.selScope(ids) && w, suffix))
+  def approveSelected(ids: Seq[Long]): QcSession =
+    inWindow((d, w) => QcActions.approveSelected(d, y, QcPlotFeed.selScope(ids) && w, suffix))
+  def unflagSelected(ids: Seq[Long]): QcSession =
+    inWindow((d, w) => QcActions.unflagSelected(d, y, QcPlotFeed.selScope(ids) && w, suffix))
+
+  /** M4-M6 on the whole current window. */
+  def flagWindow(): QcSession = inWindow(QcActions.flagWindow(_, y, _, suffix))
+  def approveUnflagged(): QcSession = inWindow(QcActions.approveUnflagged(_, y, _, suffix))
+  def resetWindow(): QcSession = inWindow(QcActions.resetWindow(_, y, _, suffix))
+
+  /** M7 workhorse: flag the selection (intersected with the current
+    * window), approve the window's rest, advance. */
+  def flagAndNext(ids: Seq[Long]): QcSession =
+    inWindow((d, w) =>
+      QcActions.flagAndApproveRest(d, y, QcPlotFeed.selScope(ids) && w, w, suffix)).next
+
+  /** M8, the one global action. */
+  def resetAll(): QcSession = pend(None, QcActions.resetAll(_, y, suffix))
+
+  /** Restructure path (R/qc_window_app.R:426-439): recompute window ids
+    * at a new width / include-filter — narrow recompute, no shuffle.
+    * Dense window ids change, so the pending actions fold into the new
+    * base. */
+  def rewindow(newWinHrs: Double, include: Seq[Int] = Nil): QcSession = {
+    val stripped = df.drop(QcWindows.WinIdCol, QcWindows.WinDenseCol)
+    val wdf = QcWindows.withWinId(stripped, t, newWinHrs, Some(t0))
+    val (cat, n) = QcWindows.collectCatalog(wdf, t, y, include, suffix)
+    copy(base = QcWindows.withDenseId(wdf, cat), winHrs = newWinHrs,
+      catalog = cat, windowCount = n, cursor = 0L, pending = Vector.empty)
+  }
+
+  /** Fold the pending actions into an eager localCheckpoint (the engine
+    * analogue of the reference's periodic re-save) and release the
+    * superseded base's cache. Older session values stay valid: they
+    * recompute from lineage, which `withRowId` keeps value-deterministic. */
+  def compact(): QcSession = {
+    val cut = df.localCheckpoint(eager = true)
+    if (base.storageLevel != StorageLevel.NONE) base.unpersist(blocking = false)
+    copy(base = cut, pending = Vector.empty)
+  }
 
   /** Exit path (R/qc_window_app.R:442-447): strip synthetic columns and
     * return the flagged table. */
@@ -224,6 +255,13 @@ object LoggedQcSession {
 }
 
 object QcSession {
+
+  /** An action not yet folded onto the session's base: `window` is the
+    * dense window its scopes are confined to, None for a global one. */
+  final case class Pending(window: Option[Long], act: DataFrame => DataFrame)
+
+  private def foldOnto(d: DataFrame, actions: Seq[Pending]): DataFrame =
+    actions.foldLeft(d)((acc, p) => p.act(acc))
 
   /** Persist the session's table to parquet (the engine's analogue of
     * the reference's save-workspace-and-resume loop,

@@ -207,6 +207,21 @@ class QcFlagLogSpec extends SparkSpec {
       "failed sink must leave the un-persisted audit trail in place")
   }
 
+  test("building a fold runs the jobs of one per-(variable, scope) count") {
+    val b = base
+    val log = toLogDf(
+      pointEvents(1L, "v", Seq(3L, 4L), ManualFlag, GuardNone) :+
+        windowEvent(2L, "v", 0L, Approved, GuardApproveUnchecked) :+
+        globalEvent(3L, "v", Unchecked))
+    val (_, countJobs) = jobsOf("graft_qc_fold_count_jobcount") {
+      log.groupBy(col("variable"), col("scope")).count().collect()
+    }
+    val (_, foldJobs) = jobsOf("graft_qc_fold_jobcount")(QcFlagLog.fold(b, log))
+    assert(countJobs > 0)
+    assert(foldJobs == countJobs,
+      s"building the fold ran $foldJobs jobs, one count collect runs $countJobs")
+  }
+
   test("empty log is identity; rows without events untouched") {
     val folded = QcFlagLog.fold(base, emptyLog(spark))
     assert(folded.orderBy(FlagSchema.qcol(".rowid")).select("v_qcflag").collect().toSeq ==

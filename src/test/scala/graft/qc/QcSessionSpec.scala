@@ -1,7 +1,10 @@
 package graft.qc
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import java.sql.Timestamp
 
 /** End-to-end session replay of the vignette workflow
@@ -20,18 +23,18 @@ class QcSessionSpec extends SparkSpec {
     }.toDF("DateTime", "temp")
   }
 
-  /** Jobs submitted by `body` on this thread: the job-group
-    * status-tracker count of GraphSpec's job-count pins. */
-  private def jobsOf[A](group: String)(body: => A): (A, Int) = {
-    spark.sparkContext.setJobGroup(group, "QcSession job-count pin")
-    try {
-      val a = body
-      (a, spark.sparkContext.statusTracker.getJobIdsForGroup(group).length)
-    } finally spark.sparkContext.clearJobGroup()
-  }
-
-  private def sortedRows(df: org.apache.spark.sql.DataFrame) =
+  private def sortedRows(df: DataFrame) =
     df.orderBy(QcWindows.WinIdCol).collect().toSeq
+
+  private def byRowId(df: DataFrame) =
+    df.orderBy(FlagSchema.qcol(QcWindows.RowIdCol)).collect().toSeq
+
+  /** Row ids of each dense window, non-missing rows first. */
+  private def idsByWindow(s: QcSession): Map[Long, Seq[Long]] =
+    s.df.select(col(QcWindows.WinDenseCol), FlagSchema.qcol(QcWindows.RowIdCol),
+        col("temp").isNull.as("na"))
+      .as[(Long, Long, Boolean)].collect().toSeq
+      .groupBy(_._1).map { case (k, rs) => k -> rs.sortBy(r => (r._3, r._2)).map(_._2) }
 
   test("open validates inputs") {
     intercept[IllegalArgumentException] {
@@ -140,5 +143,113 @@ class QcSessionSpec extends SparkSpec {
     assert(sortedRows(r.catalog) == sortedRows(lazyRe))
     assert(r.windowCount == 2, "windows 0 and 1 have no unchecked flags left")
     assert(r.catalog.select(QcWindows.WinIdCol).as[Long].collect().sorted.toSeq == Seq(2L, 3L))
+  }
+
+  test("a brush reaches only the current window's rows") {
+    // R/qc_window_app.R:211-213: a brush can only select points plotted
+    // in the current window, so ids of other windows are ignored
+    val flagged = QcFlags.addFlags(mkSeries, Seq("temp"))
+    val s0 = QcSession.open(flagged, "temp", "DateTime", winHrs = 100.0).next
+    val byWin = idsByWindow(s0)
+    val (a, b) = (byWin(0L).head, byWin(1L).head)
+    def flagOf(df: DataFrame, id: Long): Int =
+      df.filter(FlagSchema.qcol(QcWindows.RowIdCol) === id)
+        .select("temp_qcflag").as[Int].collect().toSeq match { case Seq(f) => f }
+    def manual(df: DataFrame): Long =
+      df.filter(col("temp_qcflag") === FlagSchema.ManualFlag).count()
+
+    for ((what, s) <- Seq(
+        "flagSelected" -> s0.flagSelected(Seq(a, b)),
+        "flagAndNext" -> s0.flagAndNext(Seq(a, b)).prev)) {
+      assert(s.cursor == 1L)
+      assert(flagOf(s.render(), b) == FlagSchema.ManualFlag, what)
+      assert(manual(s.render()) == 1L, what)
+      assert(flagOf(s.df, a) == FlagSchema.Unchecked, s"$what reached window 0")
+      assert(manual(s.done()) == 1L, what)
+    }
+  }
+
+  test("render has the full fold's rows in every window (random action scripts)") {
+    val flagged = QcFlags.addFlags(mkSeries, Seq("temp"))
+    val dense = col(QcWindows.WinDenseCol)
+    val synthetic = Seq(QcWindows.RowIdCol, QcWindows.WinIdCol, QcWindows.WinDenseCol)
+    val rnd = new scala.util.Random(7)
+    val seen = scala.collection.mutable.Set.empty[Int]
+    for (trial <- 0 until 4) {
+      val s0 = QcSession.open(flagged, "temp", "DateTime", winHrs = 50.0)
+      val n = s0.windowCount
+      assert(n == 8)
+      val byWin = idsByWindow(s0)
+      val all = byWin.values.flatten.toIndexedSeq
+      var s = s0
+      var direct = s0.df
+      var cur = 0L
+      def clamp(k: Long) = math.max(0L, math.min(k, n - 1))
+      // a brush mixes ids of the current window with ids of any window
+      def brush(): Seq[Long] =
+        Seq.fill(1 + rnd.nextInt(3))(byWin(cur)(rnd.nextInt(byWin(cur).size))) ++
+          Seq.fill(rnd.nextInt(3))(all(rnd.nextInt(all.size)))
+      for (_ <- 0 until 14) {
+        val w = dense === cur
+        def sel(ids: Seq[Long]) = QcPlotFeed.selScope(ids) && w
+        val op = rnd.nextInt(12)
+        seen += op
+        op match {
+          case 0 => val ids = brush()
+            s = s.flagSelected(ids); direct = QcActions.flagSelected(direct, "temp", sel(ids))
+          case 1 => val ids = brush()
+            s = s.approveSelected(ids); direct = QcActions.approveSelected(direct, "temp", sel(ids))
+          case 2 => val ids = brush()
+            s = s.unflagSelected(ids); direct = QcActions.unflagSelected(direct, "temp", sel(ids))
+          case 3 => s = s.flagWindow(); direct = QcActions.flagWindow(direct, "temp", w)
+          case 4 => s = s.approveUnflagged(); direct = QcActions.approveUnflagged(direct, "temp", w)
+          case 5 => s = s.resetWindow(); direct = QcActions.resetWindow(direct, "temp", w)
+          case 6 => val ids = brush()
+            s = s.flagAndNext(ids)
+            direct = QcActions.flagAndApproveRest(direct, "temp", sel(ids), w)
+            cur = clamp(cur + 1)
+          case 7 => s = s.resetAll(); direct = QcActions.resetAll(direct, "temp")
+          case 8 => s = s.next; cur = clamp(cur + 1)
+          case 9 => s = s.prev; cur = clamp(cur - 1)
+          case 10 => val k = rnd.nextInt(n.toInt + 2) - 1L; s = s.goto(k); cur = clamp(k)
+          case 11 => s = s.compact()
+        }
+        assert(s.cursor == cur)
+      }
+      for (k <- 0L until n)
+        assert(byRowId(s.goto(k).render()) == byRowId(s.df.filter(dense === k)),
+          s"trial $trial: window $k renders other rows than the full fold")
+      assert(s.done().orderBy("DateTime").collect().toSeq ==
+        direct.drop(synthetic: _*).orderBy("DateTime").collect().toSeq,
+        s"trial $trial: session differs from direct action application")
+    }
+    assert(seen == (0 until 12).toSet, s"script never ran actions ${(0 until 12).toSet -- seen}")
+  }
+
+  test("render's plan does not deepen as the session goes on") {
+    val flagged = QcFlags.addFlags(mkSeries, Seq("temp"))
+    val s0 = QcSession.open(flagged, "temp", "DateTime", winHrs = 12.0)
+    assert(s0.windowCount == 34)
+    def projects(s: QcSession): Int =
+      s.render().queryExecution.optimizedPlan.collect { case p: Project => p }.size
+    val byWin = idsByWindow(s0)
+    val s = (0L until 20L).foldLeft(s0)((x, k) => x.flagAndNext(byWin(k).take(1)))
+    assert(s.cursor == 20L)
+    assert(projects(s) == projects(s0),
+      s"render after 20 steps: ${projects(s)} projects, fresh session: ${projects(s0)}")
+  }
+
+  test("compact releases the opened table's cache; older sessions still render") {
+    val flagged = QcFlags.addFlags(mkSeries, Seq("temp"))
+    val s0 = QcSession.open(flagged, "temp", "DateTime", winHrs = 100.0)
+    val s = s0.flagAndNext(idsByWindow(s0)(0L).take(2)).approveUnflagged().prev
+    val before = byRowId(s.render())
+    assert(s.base.storageLevel != StorageLevel.NONE)
+    val c = s.compact()
+    assert(s.base.storageLevel == StorageLevel.NONE, "opened table still cached after compact")
+    assert(c.pending.isEmpty)
+    assert(byRowId(s.render()) == before, "an older session recomputes the same rows")
+    assert(byRowId(c.render()) == before)
+    assert(byRowId(c.next.render()) == byRowId(s.next.render()))
   }
 }
