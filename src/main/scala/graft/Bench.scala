@@ -1,5 +1,12 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.{DataFrame, GraftListenerBridge, SparkSession}
+import java.util.concurrent.atomic.AtomicLong
+
+/** The measurement runner shared by every main (Bench, Stress, Verify,
+  * Explain): one session builder and one timed-rep loop, plus the
+  * suite bench itself in [[main]]. */
 object Bench {
   /** The timing ACTION: execute the optimized plan AS WRITTEN and count
     * rows executor-side. `df.count()` is NOT that action — Catalyst
@@ -21,33 +28,18 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
     // Untimed warmup: JIT/codegen/session init would otherwise be
     // charged to whichever query runs first.
     spark.read.parquet(s"$sfDir/lineitem.parquet").count()
-    // Two timed runs per query, report the MIN (steady-state: the first
-    // run carries plan compilation + codegen + page-cache warmup, which
-    // a long-lived cluster amortizes away). Failed queries are recorded
-    // as NEGATIVE elapsed time (error marker, distinguishable from a
-    // fast success) and excluded from the headline total.
-    val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt)
-    // optional regex filter (unanchored find) for targeted perf iteration
-    val nameFilter = sys.env.get("SPARK_GRAFT_BENCH_FILTER")
-    val selected = nameFilter match {
-      case Some(re) =>
-        val sel = SparkEntry.queries.filter(q => re.r.findFirstIn(q._1).isDefined)
-        if (sel.isEmpty)
-          System.err.println(s"[bench] WARNING: filter '$re' selects no queries")
-        sel
-      case None => SparkEntry.queries
-    }
+    // `reps` timed runs per query, report the MIN (steady-state: the
+    // first run carries plan compilation + codegen + page-cache warmup,
+    // which a long-lived cluster amortizes away). Failed queries are
+    // recorded as NEGATIVE elapsed time (error marker, distinguishable
+    // from a fast success) and excluded from the headline total.
+    val selected = SparkEntry.queries.filter(q => wanted(q._1))
+    if (selected.isEmpty) System.err.println(
+      s"[bench] WARNING: filter '${nameFilter.getOrElse("")}' selects no queries")
     def writeFile(path: String, text: String): Unit =
       try {
         java.nio.file.Files.write(java.nio.file.Paths.get(path),
@@ -55,10 +47,6 @@ object Bench {
       } catch { case e: Exception =>
         System.err.println(s"[bench] could not write $path: ${e.getMessage}")
       }
-    def readFile(path: String): Option[String] =
-      try Some(new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(path)), java.nio.charset.StandardCharsets.UTF_8))
-      catch { case _: Exception => None }
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/BENCH_local.json")
     // BENCH_DELTA.json — mechanized noise protocol, logic in
     // [[BenchDelta]] (pure, replayed in BenchDeltaSpec against the
@@ -101,13 +89,7 @@ object Bench {
       .getOrElse(Map.empty).filter(_._2 > 0)
     val preflightRuns: Map[String, Seq[Double]] =
       BenchDelta.PreflightControls.flatMap { n =>
-        SparkEntry.queries.get(n).map { fn =>
-          n -> Seq.fill(2) {
-            val t0 = System.nanoTime()
-            try { exec(fn(spark, sfDir)); (System.nanoTime() - t0) / 1e9 }
-            catch { case _: Throwable => -1.0 }
-          }
-        }
+        SparkEntry.queries.get(n).map(fn => n -> time(2)(exec(fn(spark, sfDir))).secs)
       }.toMap
     val pf = BenchDelta.preflight(preflightRuns, coldBase)
     val pfJson = s""""preflight":{"host_x_cold":${
@@ -124,57 +106,50 @@ object Bench {
         s"floor merge are decided by the post-suite ${selected.size}-query " +
         "verdict (floorSafe), which is strictly better evidence than this probe")
     val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        try { exec(fn(spark, sfDir)); (System.nanoTime() - t0) / 1e9 }
-        catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-            -math.max((System.nanoTime() - t0) / 1e9, 0.001)
-        }
-      }
-      val runs = Seq.fill(reps)(once())
-      // Isolation between queries: a query that caches/persists must
+      val t = time(reps)(exec(fn(spark, sfDir)))
+      t.failure.foreach(e =>
+        System.err.println(s"[bench] $name FAILED: ${e.getMessage}"))
+      // Isolation between queries, never between reps (a cache leaked
+      // into rep 2 stays visible): a query that caches/persists must
       // not bill its successors (a leaked cache squeezes execution
       // memory for every later query — suite numbers then overstate
       // late-alphabet queries). Library code releases its own caches;
       // this is belt-and-braces so one bad op can't poison the suite.
       spark.catalog.clearCache()
-      (name, runs,
-        if (runs.exists(_ < 0)) runs.filter(_ < 0).head else runs.min)
+      name -> t
     }
-    val qs = results.map { case (k, _, v) => "\"" + k + "\":" + v }
+    val qs = results.map { case (k, t) => "\"" + k + "\":" + t.best }
       .mkString("{", ",", "}")
     // full per-rep record: min-only artifacts made round-over-round
     // regressions undiagnosable (warm-up vs steady-state is invisible)
-    val runsJson = results.map { case (k, rs, _) =>
-      "\"" + k + "\":" + rs.mkString("[", ",", "]")
+    val runsJson = results.map { case (k, t) =>
+      "\"" + k + "\":" + t.secs.mkString("[", ",", "]")
     }.mkString("{", ",", "}")
-    val total = results.collect { case (_, _, v) if v >= 0 => v }.sum
+    // the last rep's work counters ride beside the timings, in their
+    // own object, so the flat queries/runs parsers never see them
+    val countersJson = results.map { case (k, t) =>
+      "\"" + k + "\":" + t.counters.json }.mkString("{", ",", "}")
+    val total = results.map(_._2.best).filter(_ >= 0).sum
     val env =
       s""""reps":$reps,"cpus":$cpus,"filter":${
         nameFilter.fold("null")(f => "\"" + f + "\"")}"""
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir",$env,$pfJson,"runs":$runsJson}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir",$env,$pfJson,"runs":$runsJson,"counters":$countersJson}"""
     println(line)
     val prevBench = readFile(outPath)
       .map(BenchDelta.parseFlatObject(_, "queries")).getOrElse(Map.empty)
       .filter(_._2 > 0)
     val baseline = prevBench ++ floor
     val analysis = BenchDelta.analyze(
-      results.map { case (n, rs, _) => n -> rs }.toMap, baseline)
+      results.map { case (n, t) => n -> t.secs }.toMap, baseline)
     val hostX = analysis.hostX
     // Post-suite rerun machinery, shared by candidate adjudication and
     // anomaly handling (cached so a non-suspect-host anomaly — which is
     // always also a candidate — reruns once, not twice).
     val rerunCache = scala.collection.mutable.Map.empty[String, Double]
     def rerunMin(name: String): Double = rerunCache.getOrElseUpdate(name, {
-      def rerunOnce(): Double = try {
-        val t0 = System.nanoTime()
-        exec(selected(name)(spark, sfDir))
-        (System.nanoTime() - t0) / 1e9
-      } catch { case _: Throwable => -1.0 } finally spark.catalog.clearCache()
-      val reruns = Seq.fill(BenchDelta.RerunReps)(rerunOnce())
+      val reruns = time(BenchDelta.RerunReps)(exec(selected(name)(spark, sfDir))).secs
+      spark.catalog.clearCache()
       if (reruns.exists(_ >= 0)) reruns.filter(_ >= 0).min else -1.0
     })
     def entryJson(c: BenchDelta.Candidate, rerun: Double): String = {
@@ -249,7 +224,7 @@ object Bench {
         (floorParsed.isDefined || floorText.isEmpty)) {
       val merged = (floor.keySet ++ results.map(_._1)).toSeq.sorted.flatMap { k =>
         val cur = results.collectFirst {
-          case (n, _, best) if n == k && best >= 0 => best }
+          case (n, t) if n == k && t.best >= 0 => t.best }
         (floor.get(k), cur) match {
           case (Some(f), Some(b)) => Some(k -> math.min(f, b))
           case (Some(f), None) => Some(k -> f)
@@ -324,4 +299,108 @@ object Bench {
     // which is why BENCH_r06.json landed with parsed:null.
     println(summary)
   }
+
+  /** Local task slots of every main: `SPARK_GRAFT_CPUS`, else the
+    * host's core count. Artifacts record it: scale evidence is only
+    * comparable at the same width. */
+  lazy val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  /** Timed reps per query (`SPARK_GRAFT_BENCH_REPS`, default 2). */
+  lazy val reps: Int =
+    math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt)
+
+  /** Optional regex (`SPARK_GRAFT_BENCH_FILTER`, unanchored find)
+    * selecting the queries a main runs. */
+  lazy val nameFilter: Option[String] = sys.env.get("SPARK_GRAFT_BENCH_FILTER")
+  def wanted(name: String): Boolean =
+    nameFilter.forall(_.r.findFirstIn(name).isDefined)
+
+  /** The one session builder: `local[cpus]`, as many shuffle
+    * partitions, UTC, no UI; `conf` adds main-specific settings. */
+  def session(conf: (String, String)*): SparkSession = {
+    val spark = conf.foldLeft(SparkSession.builder()
+        .master(s"local[$cpus]")
+        .config("spark.sql.shuffle.partitions", cpus.toString)
+        .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.ui.enabled", "false")) { case (b, (k, v)) => b.config(k, v) }
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Work done by one rep: Spark jobs, stages and tasks, shuffle bytes
+    * written and bytes spilled to disk. Deterministic per plan, so they
+    * are the host-independent half of a timing. */
+  final case class Counters(jobs: Long, stages: Long, tasks: Long,
+      shuffleWriteBytes: Long, spillBytes: Long) {
+    def json: String = s"""{"jobs":$jobs,"stages":$stages,"tasks":$tasks,""" +
+      s""""shuffle_write_bytes":$shuffleWriteBytes,"spill_bytes":$spillBytes}"""
+  }
+
+  /** Per-rep seconds (a failed rep is its time to failure, negated),
+    * the last successful rep's result, the first failure, and the
+    * last rep's counters. */
+  final case class Timed[A](secs: Seq[Double], result: Option[A],
+      failure: Option[Throwable], counters: Counters) {
+    /** The reported time: the min rep, or the first failed rep's
+      * negative time — any failed rep fails the query. */
+    def best: Double = secs.find(_ < 0).getOrElse(secs.min)
+  }
+
+  private final class Counting extends SparkListener {
+    private val jobs, stages, tasks, shuffle, spill = new AtomicLong
+    override def onJobStart(j: SparkListenerJobStart): Unit =
+      jobs.incrementAndGet()
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
+      stages.incrementAndGet()
+      tasks.addAndGet(s.stageInfo.numTasks)
+      shuffle.addAndGet(s.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
+      spill.addAndGet(s.stageInfo.taskMetrics.diskBytesSpilled)
+    }
+    def reset(): Unit = Seq(jobs, stages, tasks, shuffle, spill).foreach(_.set(0L))
+    def read: Counters =
+      Counters(jobs.get, stages.get, tasks.get, shuffle.get, spill.get)
+  }
+
+  // one counting listener per SparkContext, attached on first use
+  private var counting: Option[(SparkContext, Counting)] = None
+  private def countingOn(sc: SparkContext): Counting = synchronized {
+    counting.filter(_._1 eq sc).map(_._2).getOrElse {
+      val l = new Counting
+      sc.addSparkListener(l)
+      counting = Some(sc -> l)
+      l
+    }
+  }
+
+  /** The one timed-rep loop: runs `body` `reps` times on the active
+    * session, timing each rep alone. `afterRep` runs after every rep,
+    * outside the timing (cache release, GC). The listener bus is
+    * drained before the last rep and after it, so the counters are
+    * exactly that rep's work. A throwing rep is recorded, not raised. */
+  def time[A](reps: Int, afterRep: => Unit = ())(body: => A): Timed[A] = {
+    val sc = SparkSession.active.sparkContext
+    val counts = countingOn(sc)
+    var result = Option.empty[A]
+    var failure = Option.empty[Throwable]
+    val secs = (1 to reps).map { i =>
+      if (i == reps) { GraftListenerBridge.waitUntilEmpty(sc); counts.reset() }
+      val t0 = System.nanoTime()
+      val t = try { result = Some(body); (System.nanoTime() - t0) / 1e9 }
+      catch { case e: Throwable =>
+        if (failure.isEmpty) failure = Some(e)
+        -math.max((System.nanoTime() - t0) / 1e9, 0.001)
+      }
+      afterRep
+      t
+    }
+    GraftListenerBridge.waitUntilEmpty(sc)
+    Timed(secs, result, failure, counts.read)
+  }
+
+  private[graft] def readFile(path: String): Option[String] =
+    try Some(new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(path)), java.nio.charset.StandardCharsets.UTF_8))
+    catch { case _: Exception => None }
 }

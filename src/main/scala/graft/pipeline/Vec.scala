@@ -551,44 +551,18 @@ object Vec {
       iters: Int, threshold: Double,
       shardTarget: Int = 4096, targetCellSize: Int = 64,
       kMin: Int = 2, kMax: Int = 4096,
-      seed: Long = 7L): org.apache.spark.sql.DataFrame =
-    semDedupLshProbed(df, idCol, vecCol, dim, iters, threshold,
-      shardTarget, targetCellSize, kMin, kMax, seed, StageProbe.off)
-
-  /** [[semDedupLsh]] with stage-level instrumentation (stress-harness
-    * breakdown runs only; an off probe is the public path, bit-for-bit).
-    * Probe metrics: `bits`/`shards`/`occupancy` expose the ⌈log2⌉
-    * shard-space rounding — per-shard population (and with it the
-    * count-derived per-shard k, i.e. per-row assignment work) rides a
-    * SAWTOOTH in [shardTarget/2, shardTarget] as n moves between
-    * powers of two, which is the suspected (bounded, ≤2×) source of
-    * any measured super-linear per-decade point. */
-  private[graft] def semDedupLshProbed(
-      df: org.apache.spark.sql.DataFrame,
-      idCol: String, vecCol: String, dim: Int,
-      iters: Int, threshold: Double,
-      shardTarget: Int, targetCellSize: Int,
-      kMin: Int, kMax: Int, seed: Long,
-      probe: StageProbe): org.apache.spark.sql.DataFrame = {
+      seed: Long = 7L): org.apache.spark.sql.DataFrame = {
     require(iters >= 1 && shardTarget >= 1 && targetCellSize >= 1 &&
       kMin >= 1 && kMax >= kMin,
       "semDedupLsh: iters/shardTarget/targetCellSize/kMin >= 1, kMax >= kMin")
     val x0 = df.select(col(idCol).as("__id"), d(col(vecCol)).as("__v"))
     // ONE metadata-cheap count sizes the shard space; 24 bits (16M
     // shards) is far past any shardTarget-bounded need
-    val tCount = System.nanoTime()
     val n = x0.count()
-    probe.metric("size_count_sec", (System.nanoTime() - tCount) / 1e9)
     val groups = (n + shardTarget - 1) / shardTarget
     val bits = math.min(24,
       if (groups <= 1L) 0
       else 64 - java.lang.Long.numberOfLeadingZeros(groups - 1))
-    probe.metric("n_rows", n.toDouble)
-    probe.metric("bits", bits.toDouble)
-    probe.metric("occupancy_mean", n.toDouble / (1L << bits))
-    probe.metric("k_per_shard",
-      math.min(kMax, math.max(kMin,
-        (n.toDouble / (1L << bits) / targetCellSize).ceil)).toDouble)
     val sharded =
       if (bits == 0) x0.select(lit(0L).as("__sh"), col("__id"), col("__v"))
       else {
@@ -598,9 +572,7 @@ object Vec {
           .reduce(_ + _)
         x0.select(key.as("__sh"), col("__id"), col("__v"))
       }
-    shardedLloydPairs(
-      probe.stage("lsh_route", sharded),
-      iters, threshold, targetCellSize, kMin, kMax, probe)
+    shardedLloydPairs(sharded, iters, threshold, targetCellSize, kMin, kMax)
   }
 
   /** Shared tier 2+3 of the sharded SemDeDup family: per-shard joined
@@ -621,19 +593,18 @@ object Vec {
       sharded: org.apache.spark.sql.DataFrame,
       iters: Int, threshold: Double,
       targetCellSize: Int, kMin: Int,
-      kMax: Int = Int.MaxValue,
-      probe: StageProbe = StageProbe.off): org.apache.spark.sql.DataFrame =
+      kMax: Int = Int.MaxValue): org.apache.spark.sql.DataFrame =
     Fixpoint.scoped { blocks =>
       val W = org.apache.spark.sql.expressions.Window
       // per-shard k and seed ranks — both windows share one hash
       // partitioning on the shard key (a single exchange)
-      val xs = probe.stage("shard_k_window", sharded
+      val xs = sharded
         .withColumn("__k", expr(
           s"least($kMax, greatest($kMin, " +
             s"CAST((count(1) OVER (PARTITION BY __sh) + " +
             s"${targetCellSize - 1}) DIV $targetCellSize AS INT)))"))
         .withColumn("__rn",
-          row_number().over(W.partitionBy("__sh").orderBy("__id"))))
+          row_number().over(W.partitionBy("__sh").orderBy("__id")))
       // joined assignment: x ⋈ centroids on shard, lexicographic
       // (dist, cl) min per row via a map-side-combining struct-min agg
       def assign(cs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
@@ -651,9 +622,7 @@ object Vec {
         .select(col("__sh"), (col("__rn") - 1).cast("int").as("__cl"),
           col("__v").as("__cv"))
       // the centroid table is aggregate-sized (Σk rows) but each round
-      // reads the whole corpus, so every round is cut; the cuts are
-      // eager, so this wall-clock is the real assign+update work
-      val t0 = System.nanoTime()
+      // reads the whole corpus, so every round is cut
       val cents = Fixpoint.iterate(blocks, seeds, iters - 1, everyRound = true) { cents =>
         assign(cents)
           .select(col("__sh"), col("__cl"),
@@ -665,12 +634,11 @@ object Vec {
             sort_array(collect_list(struct(col("__i"), col("__c")))),
             _.getField("__c")).as("__cv"))
       }
-      probe.metric("lloyd_sec", (System.nanoTime() - t0) / 1e9)
       // oversized-cell subdivision (the semDedupPairs guard, one tier
       // down): sub-cell id spacing 2^40 is collision-free below 2^40
       // rows per cell; cells ≤ the 16× cap keep sub-key 0
       val cap = 16L * targetCellSize
-      val fin = probe.stage("final_assign_subdivide", assign(cents)
+      val fin = assign(cents)
         .withColumn("__cn", count(lit(1)).over(
           W.partitionBy(col("__sh"), col("__cl"))))
         .withColumn("__cl",
@@ -678,20 +646,7 @@ object Vec {
             .otherwise(col("__cl").cast("long") * (1L << 40) +
               pmod(xxhash64(col("__id")),
                 ceil(col("__cn") / targetCellSize).cast("long"))))
-        .drop("__cn"))
-      if (probe.active) {
-        // candidate volume Σ c² over final cells — the number that says
-        // whether the within-cell pair join (output-bound) or an
-        // upstream stage is what moved between scales
-        val t0 = System.nanoTime()
-        val st = fin.groupBy(col("__sh"), col("__cl"))
-          .agg(count(lit(1)).as("__c"))
-          .agg(count(lit(1)), sum(col("__c").cast("double") * col("__c"))).head
-        probe.metric("cells", if (st.isNullAt(0)) 0.0 else st.getLong(0).toDouble)
-        probe.metric("cand_pairs_sum_c2",
-          if (st.isNullAt(1)) 0.0 else st.getDouble(1))
-        probe.metric("cand_scan_sec", (System.nanoTime() - t0) / 1e9)
-      }
+        .drop("__cn")
       val a = fin.select(col("__sh"), col("__cl"), col("__id").as("id_a"),
         col("__v").as("__va"))
       val b = fin.select(col("__sh"), col("__cl"), col("__id").as("id_b"),

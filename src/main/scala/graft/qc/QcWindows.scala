@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Tumbling-window partitioning + window catalog — the Spark equivalent
   * of qctimeseries `make_windows` (R/qc_window_app.R:64-79,
@@ -88,8 +89,9 @@ object QcWindows {
     // Boundary literals, computed ONCE on the driver (they become plan
     // literals, so every later branch sees identical buckets no matter
     // how often it re-executes). Boundary QUALITY only affects
-    // balance, never correctness: Σ when(key > bᵢ) is monotone in the
-    // key's sort order for ANY boundary multiset.
+    // balance, never correctness: the count of boundaries below the
+    // key is monotone in the key's sort order for ANY boundary multiset
+    // (kept ascending in Spark's order for the search below).
     //
     //  - rangeable leading key (numeric/timestamp — every caller in
     //    this repo except shuffleOrder): ONE percentile_approx
@@ -117,7 +119,7 @@ object QcWindows {
             lit(probs.toArray), lit(10000)).as("__rid_q"))
           .head.getAs[scala.collection.Seq[Double]]("__rid_q")
         (lead.cast("double"),
-          Option(q).fold(Seq.empty[Any])(_.distinct.toSeq))
+          Option(q).fold(Seq.empty[Any])(_.distinct.sorted(Ordering.Double.TotalOrdering).toSeq))
       } else {
         val target = nBuckets * 100L
         val n = df.count()
@@ -146,19 +148,34 @@ object QcWindows {
           if (k > 1 && hashed.length < nBuckets)
             keysOf(df.select(lead.as("__rid_k")))
           else hashed
-        val sorted = sampleKeys.sortWith { (a, b) =>
-          a.asInstanceOf[Comparable[Any]].compareTo(b) < 0 }
+        // Spark's own order: strings compare as UTF-8 bytes, which
+        // String.compareTo (UTF-16 units) does not match
+        val sorted = sampleKeys.sortWith {
+          case (a: String, b: String) =>
+            UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0
+          case (a, b) => a.asInstanceOf[Comparable[Any]].compareTo(b) < 0
+        }
         (lead,
           if (sorted.isEmpty) Nil
           else (1 until nBuckets)
             .map(j => sorted(((j.toLong * sorted.length) / nBuckets).toInt))
             .distinct)
       }
-    // bucket = how many boundaries sit strictly below the key; null
-    // keys fall through every when() to bucket 0, matching asc
-    // nulls-first sort order
-    val bucket = bounds.foldLeft(lit(0)) { (acc, b) =>
-      acc + when(keyExpr > lit(b), 1).otherwise(0) }
+    // bucket = how many boundaries sit strictly below the key, found by
+    // binary search over the ascending boundaries: a balanced when()
+    // tree of depth ⌈log2(bounds + 1)⌉ (a flat sum of 2 × partitions
+    // terms overflowed the JVM stack converting the Column at
+    // Spark's default 200 partitions). A null key fails every test and
+    // falls to bucket 0, matching asc nulls-first sort order.
+    val bs = bounds.toIndexedSeq
+    def below(lo: Int, hi: Int): Column =
+      if (lo == hi) lit(lo)
+      else {
+        val mid = (lo + hi) / 2
+        when(keyExpr > lit(bs(mid)), below(mid + 1, hi))
+          .otherwise(below(lo, mid))
+      }
+    val bucket = below(0, bs.size)
     val bucketed = df.withColumn("__rid_b", bucket)
     // per-bucket counts and running offsets: catalog-sized (nBuckets
     // rows) — the single-partition window here is over the catalog,

@@ -1,0 +1,65 @@
+package graft
+
+import org.apache.spark.sql.functions._
+
+/** The measurement runner core: [[Bench.time]]'s failure record and
+  * its per-rep work counters. */
+class BenchSpec extends SparkSpec {
+  spark // Bench.time runs on the active session
+
+  private def twoActions(): Long = {
+    val df = spark.range(0, 20000, 1, 4)
+      .groupBy((col("id") % 7).as("k")).agg(count(lit(1)).as("n"))
+    df.collect()
+    Bench.exec(df.orderBy("k"))
+  }
+
+  test("a throwing body is recorded as negative seconds; the next query " +
+      "still runs") {
+    val bad = Bench.time(2) { throw new IllegalStateException("boom") }
+    assert(bad.secs.size == 2 && bad.secs.forall(_ < 0), bad.secs)
+    assert(bad.best < 0 && bad.result.isEmpty)
+    assert(bad.failure.exists(_.getMessage == "boom"))
+    val good = Bench.time(2)(Bench.exec(spark.range(100).toDF()))
+    assert(good.secs.forall(_ >= 0) && good.failure.isEmpty, good.secs)
+    assert(good.result.contains(100L))
+    assert(good.best == good.secs.min)
+  }
+
+  test("one failed rep fails the query, whatever the other reps did") {
+    var rep = 0
+    val t = Bench.time(3) {
+      rep += 1
+      if (rep == 2) sys.error("rep 2") else rep
+    }
+    assert(t.secs.count(_ < 0) == 1 && t.best == t.secs(1), t.secs)
+    assert(t.result.contains(3))
+  }
+
+  test("jobs of a two-action query equal the status tracker's count") {
+    val (_, want) = jobsOf("bench-two-actions")(twoActions())
+    val got = Bench.time(1)(twoActions()).counters
+    assert(want >= 2)
+    assert(got.jobs == want, s"counted ${got.jobs}, status tracker $want")
+    assert(got.stages >= got.jobs && got.tasks >= got.stages, got)
+    assert(got.shuffleWriteBytes > 0, got)
+  }
+
+  test("counters are the last rep's, and do not carry over to the next " +
+      "query") {
+    val one = Bench.time(1)(spark.range(10).collect()).counters
+    assert(one.jobs == 1, one)
+    // reps before the last run extra actions: not counted
+    var rep = 0
+    val last = Bench.time(3) {
+      rep += 1
+      if (rep < 3) (1 to 4).foreach(_ => twoActions())
+      spark.range(10).collect()
+    }.counters
+    assert(last == one, s"last rep $last vs a lone run $one")
+    // a heavy query, then a light one: the light one counts only itself
+    Bench.time(2)(twoActions())
+    val after = Bench.time(1)(spark.range(10).collect()).counters
+    assert(after == one, s"after a heavy query $after vs $one")
+  }
+}

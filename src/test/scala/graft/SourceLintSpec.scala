@@ -69,4 +69,22 @@ class SourceLintSpec extends AnyFunSuite {
       s"localCheckpoint outside Fixpoint — stage through it:\n" +
         offenders.mkString("\n"))
   }
+
+  test("SparkSession.builder() is called only by Bench's shared runner") {
+    // one session builder for every main: a harness with its own
+    // builder grows its own master, partition and timezone config, and
+    // its numbers stop being comparable with the rest
+    val offenders = scalaFiles(mainRoot)
+      .filter(_.getPath != "src/main/scala/graft/Bench.scala")
+      .flatMap { f =>
+        scala.io.Source.fromFile(f, "UTF-8").getLines().zipWithIndex.collect {
+          case (l, i) if l.contains("SparkSession.builder()") =>
+            s"${f.getPath}:${i + 1}"
+        }
+      }
+    assert(offenders.isEmpty,
+      s"SparkSession.builder() outside Bench — use Bench.session:\n" +
+        offenders.mkString("\n"))
+  }
 }
+

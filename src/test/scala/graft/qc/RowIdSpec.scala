@@ -2,6 +2,7 @@ package graft.qc
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import java.sql.Timestamp
 
 /** Regression lock for the r15 withRowId correctness find: the old
   * repartitionByRange + monotonically_increasing_id design depended on
@@ -113,5 +114,46 @@ class RowIdSpec extends SparkSpec {
     val got = QcWindows.withRowId(df, Seq("k", "tie"), idCol = "rid")
       .orderBy("rid").select(col("tie")).as[Int].collect()
     assert(got.toSeq == (0 until 1000))
+  }
+
+  private def withPartitions[A](n: Int)(body: => A): A = {
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", n.toString)
+    try body
+    finally {
+      spark.conf.set("spark.sql.shuffle.partitions", prev)
+      spark.catalog.clearCache()
+    }
+  }
+
+  test("wide shuffle widths (200 = Spark's default, and 1000): the same " +
+      "ids as at 4 partitions") {
+    // 2 × partitions buckets: the bucket expression over ~400 and ~2000
+    // boundaries must stay shallow enough to convert and plan
+    val ev = spark.range(10000).select(
+      pmod(xxhash64(col("id")), lit(1000000L)).as("k"), col("id").as("event_id"))
+    def idsAt(parts: Int): Map[Long, Long] = withPartitions(parts) {
+      QcWindows.withRowId(ev, Seq("k", "event_id"), idCol = "rid")
+        .select(col("event_id"), col("rid")).as[(Long, Long)].collect().toMap
+    }
+    val at4 = idsAt(4)
+    assert(at4.values.toSeq.sorted == (0L until at4.size.toLong))
+    Seq(200, 1000).foreach { p =>
+      assert(idsAt(p) == at4, s"ids at $p shuffle partitions differ from 4")
+    }
+  }
+
+  test("QcSession.open at Spark's default 200 shuffle partitions opens " +
+      "and renders window 0") {
+    withPartitions(200) {
+      val t0 = Timestamp.valueOf("2024-01-01 00:00:00").getTime
+      val df = (0 until 5000)
+        .map(i => (new Timestamp(t0 + i * 600000L), math.sin(i / 50.0)))
+        .toDF("DateTime", "temp")
+      val s = QcSession.open(QcFlags.addFlags(df, Seq("temp")), "temp",
+        "DateTime", winHrs = 24.0)
+      // 10-minute samples: 144 per daily window
+      assert(s.render().count() == 144)
+    }
   }
 }
