@@ -1053,50 +1053,40 @@ object SparkEntry {
       // brushed id set, then approve window 3's unflagged — as three
       // appended log events folded in seq order, proven here to equal
       // the sequential action chain the DuckDB oracle spells out.
-      import QcFlagLog._
-      import s.implicits._
+      import QcFlagLog._, QcActions.{ApproveUnflagged, Flag, Unflag}
       val ids = (0L until 1000L by 91L).toSeq
-      val ev = globalEvent(1, "value2", Unchecked, GuardNotOrigNA) +:
-        (pointEvents(2, "value2", ids, ManualFlag) :+
-          windowEvent(3, "value2", 3L, Approved, GuardApproveUnchecked))
-      val log = ev.toDF("seq", "variable", "scope", "rowid", "win_id",
-        "new_flag", "guard")
+      val log = toLog(s, globalEvent(1, "value2", Unflag) +:
+        (pointEvents(2, "value2", ids, Flag) :+
+          windowEvent(3, "value2", 3L, ApproveUnflagged)))
       QcFlagLog.fold(seededWin(s, dir), log, idCol = "event_id")
         .select(col("event_id"), col("value2_qcflag")).orderBy("event_id")
     }),
     "qc_session_e2e" -> ((s, dir) => {
-      // LoggedQcSession end-to-end (r14 verdict task 6): a scripted
-      // eight-action M1-M8 review session over row-id'd data whose
-      // event log CROSSES the auto-compaction threshold mid-script —
-      // append → onCompact audit sink → fold → new materialized base —
-      // then keeps acting on the compacted session. The oracle is the
-      // plain sequential CASE chain over the same actions: compaction
-      // firing mid-script must be semantically invisible
-      // (fold(fold(base, log₁), log₂) ≡ sequential application), and
-      // the audit sink must have received exactly the folded events.
-      // The require makes the threshold crossing load-bearing: if
-      // compaction does NOT fire (or fires twice), the query crashes
-      // rather than passing on the un-compacted path.
+      // A scripted eight-action M1-M8 review over row-id'd data as
+      // QcFlagLog events, compacted mid-script: the events of actions
+      // 1-5 fold into an eager checkpoint, those of actions 6-8 fold
+      // onto it. The oracle is the plain sequential CASE chain, so the
+      // compaction must be semantically invisible (fold(fold(base,
+      // log₁), log₂) ≡ sequential application). Its selections reach
+      // rows of any window and M7's is unguarded, which a QcSession
+      // brush cannot do. The require makes the compaction load-bearing.
+      import QcFlagLog._, QcActions._
       val base = QcWindows.withRowId(seededWin(s, dir), Seq("ts", "event_id"))
-      val audit = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val opened = LoggedQcSession(base, "value2", Seq.empty,
-        autoCompactEvents = 20,
-        onCompact = Some(log => audit += log.count()))
-      val end = opened
-        .resetAll() //                                    1 event
-        .flagSelected(0L until 1000L by 91L) //          +11 → 12
-        .approveUnflagged(3L) //                          +1 → 13
-        .flagWindow(5L) //                                +1 → 14
-        .unflagSelected(0L until 1000L by 182L) //        +6 → 20 ⇒ compact
-        .flagAndApproveRest(0L until 500L by 97L, 2L) //  +7 →  7
-        .resetWindow(5L) //                               +1 →  8
-        .approveSelected(91L until 800L by 182L) //       +4 → 12
-      require(end.compactedEvents == 20 && audit.toSeq == Seq(20L) &&
-        end.events.size == 12,
-        "qc_session_e2e: auto-compaction did not fire as scripted " +
-          s"(compacted=${end.compactedEvents}, audit=$audit, " +
-          s"log=${end.events.size})")
-      end.done()
+      val log1 = Seq(globalEvent(1, "value2", Unflag)) ++ //           M8
+        pointEvents(2, "value2", 0L until 1000L by 91L, Flag) ++ //      M1
+        Seq(windowEvent(3, "value2", 3L, ApproveUnflagged), //           M5
+          windowEvent(4, "value2", 5L, Flag)) ++ //                      M4
+        pointEvents(5, "value2", 0L until 1000L by 182L, Unflag) //      M3
+      val log2 = pointEvents(6, "value2", 0L until 500L by 97L, FlagUnguarded) ++
+        Seq(windowEvent(7, "value2", 2L, ApproveUnflagged), //           M7
+          windowEvent(8, "value2", 5L, Unflag)) ++ //                    M6
+        pointEvents(9, "value2", 91L until 800L by 182L, Approve) //     M2
+      val cut = fold(base, toLog(s, log1)).localCheckpoint(eager = true)
+      val leaf = cut.queryExecution.analyzed.collectFirst {
+        case l: org.apache.spark.sql.execution.LogicalRDD => l }
+      require(log1.size == 20 && log2.size == 12 && leaf.nonEmpty,
+        s"qc_session_e2e: compaction not as scripted (${log1.size}, ${log2.size}, $leaf)")
+      fold(cut, toLog(s, log2))
         .select(col("event_id"), col("value2_qcflag")).orderBy("event_id")
     }),
 
@@ -4477,9 +4467,9 @@ object SparkEntry {
          |            AND NOT (value2 IS NULL OR isnan(value2)) THEN 1
          |       ELSE f2 END AS value2_qcflag
          |FROM p2 ORDER BY event_id""".stripMargin,
-    // the scripted LoggedQcSession replayed as a plain sequential CASE
+    // the scripted event log replayed as a plain sequential CASE
     // chain (one CTE per action seq, guards against the RUNNING state —
-    // the mid-script auto-compaction must be semantically invisible);
+    // the mid-script compaction must be semantically invisible);
     // rid mirrors QcWindows.withRowId's (ts, event_id) row order
     "qc_session_e2e" ->
       s"""$SeededCte, $WinCte,
@@ -6689,7 +6679,8 @@ object SparkEntry {
         |FROM embeddings ORDER BY vec_id""".stripMargin,
     // replay of the power iteration: identical 6-dp rounds at every
     // step (moments, covariance, matvec, norm, normalize), 8 unrolled
-    // iteration CTEs
+    // iteration CTEs, MATERIALIZED: DuckDB inlines a chained CTE at
+    // every reference, so the inlined plan grows exponentially per round
     "embed_pca" -> {
       // exact micro-unit integer replay (see Vec.topComponent's
       // scaladoc): one float quantization at the covariance, then
@@ -6697,14 +6688,14 @@ object SparkEntry {
       // sums are exact in any order, divisions are correctly rounded
       // from identical inputs, so floor() agrees bit-for-bit
       def step(k: Int): String =
-        s"""w$k AS (
+        s"""w$k AS MATERIALIZED (
            |  SELECT c.i,
            |    floor((2.0 * sum(c.cm * v${k - 1}.vm) + 1000000.0)
            |      / 2000000.0) AS wm
            |  FROM c JOIN v${k - 1} ON c.j = v${k - 1}.i GROUP BY 1),
-           |n$k AS (
+           |n$k AS MATERIALIZED (
            |  SELECT floor(sqrt(sum(wm * wm)) + 0.5) AS nm FROM w$k),
-           |v$k AS (
+           |v$k AS MATERIALIZED (
            |  SELECT i, floor((2.0 * wm * 1000000.0 + nm) / (2.0 * nm))
            |    AS vm
            |  FROM w$k, n$k),""".stripMargin

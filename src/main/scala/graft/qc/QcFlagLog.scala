@@ -1,6 +1,6 @@
 package graft.qc
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -30,15 +30,16 @@ import org.apache.spark.sql.types._
 object QcFlagLog {
 
   import FlagSchema._
-
-  /** Guard kinds, matching the M-algebra semantics. */
-  val GuardNotOrigNA = 0 // flag != -1       (M1-M4, M6, M8)
-  val GuardApproveUnchecked = 1 // flag == 0 && !missing (M5, M7 rest)
-  val GuardNone = 2 // unguarded            (M7 selection)
+  import QcActions.{Guards, Write, admits}
 
   val ScopePoint = 0
   val ScopeWindow = 1
   val ScopeGlobal = 2
+
+  /** One event row: (seq, variable, scope, rowid, win_id, new_flag,
+    * guard). A point event with a `win_id` reaches its row only inside
+    * that window (a brush, which selects plotted points of one window). */
+  type Event = (Long, String, Int, Option[Long], Option[Long], Int, Int)
 
   val LogSchema: StructType = StructType(Seq(
     StructField("seq", LongType, nullable = false),
@@ -54,18 +55,23 @@ object QcFlagLog {
       LogSchema)
 
   /** Event constructors (driver-side row builders; append with
-    * unionByName or write to the log table). */
-  def pointEvents(seq: Long, v: String, ids: Seq[Long], newFlag: Int,
-      guard: Int = GuardNotOrigNA): Seq[(Long, String, Int, Option[Long], Option[Long], Int, Int)] =
-    ids.map(id => (seq, v, ScopePoint, Some(id), None, newFlag, guard))
+    * unionByName or write to the log table): each takes its write from
+    * [[QcActions]]' M-operation table. */
+  def pointEvents(seq: Long, v: String, ids: Seq[Long], w: Write,
+      winId: Option[Long] = None): Seq[Event] =
+    ids.map(id => (seq, v, ScopePoint, Some(id), winId, w.newFlag, w.guard))
 
-  def windowEvent(seq: Long, v: String, winId: Long, newFlag: Int,
-      guard: Int): (Long, String, Int, Option[Long], Option[Long], Int, Int) =
-    (seq, v, ScopeWindow, None, Some(winId), newFlag, guard)
+  def windowEvent(seq: Long, v: String, winId: Long, w: Write): Event =
+    (seq, v, ScopeWindow, None, Some(winId), w.newFlag, w.guard)
 
-  def globalEvent(seq: Long, v: String, newFlag: Int,
-      guard: Int = GuardNotOrigNA): (Long, String, Int, Option[Long], Option[Long], Int, Int) =
-    (seq, v, ScopeGlobal, None, None, newFlag, guard)
+  def globalEvent(seq: Long, v: String, w: Write): Event =
+    (seq, v, ScopeGlobal, None, None, w.newFlag, w.guard)
+
+  /** An event list as a log DataFrame; a local relation, so no job. */
+  def toLog(spark: SparkSession, events: Seq[Event]): DataFrame = {
+    import spark.implicits._
+    events.toDF(LogSchema.fieldNames.toSeq: _*)
+  }
 
   /** Fold the event log onto the base table: for every flagged variable
     * with events, the final flag is the base flag threaded through the
@@ -80,9 +86,9 @@ object QcFlagLog {
     * shuffle join. Above the limit the join runs un-hinted
     * (sort-merge/shuffled-hash on rowid/win_id — the scale-safe
     * shape); results are identical. (Compacting the folded state into
-    * a new base — [[LoggedQcSession.done]] + re-open — is the
-    * complementary lever when the log itself gets unwieldy; the
-    * fallback makes the fold correct either way.) */
+    * a new base — [[QcSession.compact]] — is the complementary lever
+    * when the log itself gets unwieldy; the fallback makes the fold
+    * correct either way.) */
   def fold(
       base: DataFrame,
       log: DataFrame,
@@ -111,17 +117,13 @@ object QcFlagLog {
           broadcast(t)
         else t
 
+      val ev = struct(col("seq"), col("new_flag"), col("guard"), col("win_id"))
       val pt = lv.filter(col("scope") === ScopePoint)
-        .groupBy(col("rowid").as(idCol))
-        .agg(collect_list(struct(col("seq"), col("new_flag"), col("guard")))
-          .as("__pe"))
+        .groupBy(col("rowid").as(idCol)).agg(collect_list(ev).as("__pe"))
       val wn = lv.filter(col("scope") === ScopeWindow)
-        .groupBy(col("win_id").as(winIdCol))
-        .agg(collect_list(struct(col("seq"), col("new_flag"), col("guard")))
-          .as("__we"))
+        .groupBy(col("win_id").as(winIdCol)).agg(collect_list(ev).as("__we"))
       val gl = lv.filter(col("scope") === ScopeGlobal)
-        .select(struct(col("seq"), col("new_flag"), col("guard")).as("__g"))
-        .agg(collect_list(col("__g")).as("__ge"))
+        .agg(collect_list(ev).as("__ge"))
 
       val hasWin = df.schema.fieldNames.contains(winIdCol)
       val joined0 = df.join(hinted(pt, ScopePoint), Seq(idCol), "left")
@@ -133,21 +135,22 @@ object QcFlagLog {
       // bounded by session compaction, not by this hint
       val joined = joined1.crossJoin(broadcast(gl))
 
-      val emptyEv = array().cast("array<struct<seq:bigint,new_flag:int,guard:int>>")
+      val emptyEv =
+        array().cast("array<struct<seq:bigint,new_flag:int,guard:int,win_id:bigint>>")
       val events = array_sort(concat(
         coalesce(col("__pe"), emptyEv),
         coalesce(col("__we"), emptyEv),
         coalesce(col("__ge"), emptyEv)))
       val missing = QcFlags.isMissing(df, v)
+      // without a window column, events tied to a window reach no row
+      val rowWin = if (hasWin) qcol(winIdCol) else lit(null).cast(LongType)
       val folded = aggregate(
         events,
         qcol(f),
         (acc, e) =>
-          when(e("guard") === GuardNone, e("new_flag"))
-            .when(e("guard") === GuardNotOrigNA && acc =!= OrigNA, e("new_flag"))
-            .when(e("guard") === GuardApproveUnchecked &&
-              acc === Unchecked && !missing, e("new_flag"))
-            .otherwise(acc))
+          when((e("win_id").isNull || e("win_id") === rowWin) &&
+            Guards.map(g => e("guard") === g && admits(g, acc, missing)).reduce(_ || _),
+            e("new_flag")).otherwise(acc))
       joined
         .withColumn(f, folded.cast(IntegerType))
         .drop("__pe", "__we", "__ge")

@@ -86,5 +86,30 @@ class SourceLintSpec extends AnyFunSuite {
       s"SparkSession.builder() outside Bench — use Bench.session:\n" +
         offenders.mkString("\n"))
   }
-}
 
+  test("the QC guards and flag writes are written once, in QcActions") {
+    // a new action picks its write from QcActions' M-operation table;
+    // it never grows its own guard predicate or (flag, guard) pair
+    def lines(name: String) =
+      scala.io.Source.fromFile(new java.io.File(mainRoot, s"graft/qc/$name.scala"), "UTF-8")
+        .getLines().toVector
+    val files = Seq("QcActions", "QcFlagLog", "QcSession").map(n => n -> lines(n))
+    val actions = lines("QcActions")
+    val at = actions.indexWhere(_.contains("def admits("))
+    val admits = at until actions.indexWhere(_.trim == "}", at)
+    for (guard <- Seq("""=!=\s*[\w.(]*OrigNA""".r, """===\s*[\w.(]*Unchecked""".r)) {
+      val hits = for {
+        (name, ls) <- files; (l, i) <- ls.zipWithIndex if guard.findFirstIn(l).isDefined
+      } yield (name, i)
+      assert(hits.size == 1 && hits.forall { case (n, i) => n == "QcActions" && admits.contains(i) },
+        s"guard `$guard` outside QcActions.admits: $hits")
+    }
+    val table = """(?<!class )\bWrite\(([^)]*)\)""".r
+    val writes = for {
+      (name, ls) <- files; l <- ls; m <- table.findFirstMatchIn(l)
+    } yield (name, m.group(1))
+    assert(writes.size >= 5 && writes.forall(_._1 == "QcActions"),
+      s"flag writes outside QcActions' table: $writes")
+    assert(writes.map(_._2).distinct.size == writes.size, s"a write is in the table twice: $writes")
+  }
+}

@@ -36,6 +36,11 @@ class QcSessionSpec extends SparkSpec {
       .as[(Long, Long, Boolean)].collect().toSeq
       .groupBy(_._1).map { case (k, rs) => k -> rs.sortBy(r => (r._3, r._2)).map(_._2) }
 
+  /** `log` folded onto `base` over dense windows, in `cols` order. */
+  private def replay(base: DataFrame, log: DataFrame, cols: Seq[String]) =
+    QcFlagLog.fold(base, log, winIdCol = QcWindows.WinDenseCol)
+      .select(cols.map(FlagSchema.qcol): _*)
+
   test("open validates inputs") {
     intercept[IllegalArgumentException] {
       QcSession.open(mkSeries, "temp", "DateTime") // no flags yet
@@ -147,25 +152,30 @@ class QcSessionSpec extends SparkSpec {
 
   test("a brush reaches only the current window's rows") {
     // R/qc_window_app.R:211-213: a brush can only select points plotted
-    // in the current window, so ids of other windows are ignored
+    // in the current window, so ids of other windows are ignored, and a
+    // missing row (unplottable) keeps its OrigNA flag
     val flagged = QcFlags.addFlags(mkSeries, Seq("temp"))
     val s0 = QcSession.open(flagged, "temp", "DateTime", winHrs = 100.0).next
     val byWin = idsByWindow(s0)
-    val (a, b) = (byWin(0L).head, byWin(1L).head)
+    val (a, b, na) = (byWin(0L).head, byWin(1L).head, byWin(1L).last)
     def flagOf(df: DataFrame, id: Long): Int =
       df.filter(FlagSchema.qcol(QcWindows.RowIdCol) === id)
         .select("temp_qcflag").as[Int].collect().toSeq match { case Seq(f) => f }
-    def manual(df: DataFrame): Long =
-      df.filter(col("temp_qcflag") === FlagSchema.ManualFlag).count()
+    def nFlag(df: DataFrame, flag: Int): Long =
+      df.filter(col("temp_qcflag") === flag).count()
+    assert(flagOf(s0.df, na) == FlagSchema.OrigNA)
 
     for ((what, s) <- Seq(
-        "flagSelected" -> s0.flagSelected(Seq(a, b)),
-        "flagAndNext" -> s0.flagAndNext(Seq(a, b)).prev)) {
+        "flagSelected" -> s0.flagSelected(Seq(a, b, na)),
+        "flagAndNext" -> s0.flagAndNext(Seq(a, b, na)).prev)) {
       assert(s.cursor == 1L)
       assert(flagOf(s.render(), b) == FlagSchema.ManualFlag, what)
-      assert(manual(s.render()) == 1L, what)
+      assert(nFlag(s.render(), FlagSchema.ManualFlag) == 1L, what)
       assert(flagOf(s.df, a) == FlagSchema.Unchecked, s"$what reached window 0")
-      assert(manual(s.done()) == 1L, what)
+      assert(nFlag(s.done(), FlagSchema.ManualFlag) == 1L, what)
+      assert(flagOf(s.render(), na) == FlagSchema.OrigNA, s"$what overwrote a missing row")
+      assert(flagOf(s.df, na) == FlagSchema.OrigNA, s"$what overwrote a missing row")
+      assert(nFlag(s.done(), FlagSchema.OrigNA) == 8L, s"$what overwrote a missing row")
     }
   }
 
@@ -185,10 +195,11 @@ class QcSessionSpec extends SparkSpec {
       var direct = s0.df
       var cur = 0L
       def clamp(k: Long) = math.max(0L, math.min(k, n - 1))
-      // a brush mixes ids of the current window with ids of any window
+      // a brush mixes ids of the current window, its missing row (the
+      // last id) included, with ids of any window
       def brush(): Seq[Long] =
         Seq.fill(1 + rnd.nextInt(3))(byWin(cur)(rnd.nextInt(byWin(cur).size))) ++
-          Seq.fill(rnd.nextInt(3))(all(rnd.nextInt(all.size)))
+          Seq.fill(rnd.nextInt(3))(all(rnd.nextInt(all.size))) :+ byWin(cur).last
       for (_ <- 0 until 14) {
         val w = dense === cur
         def sel(ids: Seq[Long]) = QcPlotFeed.selScope(ids) && w
@@ -204,9 +215,10 @@ class QcSessionSpec extends SparkSpec {
           case 3 => s = s.flagWindow(); direct = QcActions.flagWindow(direct, "temp", w)
           case 4 => s = s.approveUnflagged(); direct = QcActions.approveUnflagged(direct, "temp", w)
           case 5 => s = s.resetWindow(); direct = QcActions.resetWindow(direct, "temp", w)
-          case 6 => val ids = brush()
+          case 6 => val ids = brush() // a session's M7 selection is guarded
             s = s.flagAndNext(ids)
-            direct = QcActions.flagAndApproveRest(direct, "temp", sel(ids), w)
+            direct = QcActions.flagAndApproveRest(direct, "temp",
+              sel(ids) && col("temp_qcflag") =!= FlagSchema.OrigNA, w)
             cur = clamp(cur + 1)
           case 7 => s = s.resetAll(); direct = QcActions.resetAll(direct, "temp")
           case 8 => s = s.next; cur = clamp(cur + 1)
@@ -222,8 +234,46 @@ class QcSessionSpec extends SparkSpec {
       assert(s.done().orderBy("DateTime").collect().toSeq ==
         direct.drop(synthetic: _*).orderBy("DateTime").collect().toSeq,
         s"trial $trial: session differs from direct action application")
+      assert(byRowId(replay(s.base, s.log, s.df.columns)) == byRowId(s.df),
+        s"trial $trial: the folded log differs from the session's table")
     }
     assert(seen == (0 until 12).toSet, s"script never ran actions ${(0 until 12).toSet -- seen}")
+  }
+
+  test("the logs read before each compact and at the end hold every action once") {
+    val flagged = QcFlags.addFlags(mkSeries, Seq("temp"))
+    val s0 = QcSession.open(flagged, "temp", "DateTime", winHrs = 100.0)
+    val byWin = idsByWindow(s0)
+    val (a, b, c) = (byWin(0L).head, byWin(1L).head, byWin(2L).head)
+    val ((s1, log1), jobs) = jobsOf("graft_qc_log_jobcount") {
+      val s = s0.flagSelected(Seq(a)).approveUnflagged().flagAndNext(Seq(b))
+      (s, s.log)
+    }
+    assert(jobs == 0, s"actions and log submitted $jobs jobs")
+    val c1 = s1.compact()
+    assert(c1.base.queryExecution.analyzed.collectFirst {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l
+    }.nonEmpty, "the compacted base must be an eager checkpoint leaf")
+    val s2 = c1.resetAll().flagWindow().next.flagAndNext(Seq(c))
+    val log2 = s2.log
+    val s3 = s2.compact().prev.unflagSelected(Seq(b))
+    val logs = Seq(log1, log2, s3.log)
+    import QcFlagLog._, QcActions._
+    val all = logs.map(_.as[Event].collect().toSeq)
+    val expected =
+      pointEvents(1, "temp", Seq(a), Flag, Some(0L)) ++
+        Seq(windowEvent(2, "temp", 0L, ApproveUnflagged)) ++
+        pointEvents(3, "temp", Seq(b), Flag, Some(0L)) ++
+        Seq(windowEvent(4, "temp", 0L, ApproveUnflagged)) ++
+        Seq(globalEvent(5, "temp", Unflag), windowEvent(6, "temp", 1L, Flag)) ++
+        pointEvents(7, "temp", Seq(c), Flag, Some(2L)) ++
+        Seq(windowEvent(8, "temp", 2L, ApproveUnflagged)) ++
+        pointEvents(9, "temp", Seq(b), Unflag, Some(2L))
+    assert(all.flatten == expected)
+    all.sliding(2).foreach { case Seq(x, y) =>
+      assert(x.map(_._1).max < y.map(_._1).min, "seq must increase across compactions") }
+    assert(byRowId(replay(s0.base, logs.reduce(_.union(_)), s3.df.columns)) ==
+      byRowId(s3.df), "the trail folded over the opened table is the final table")
   }
 
   test("render's plan does not deepen as the session goes on") {
