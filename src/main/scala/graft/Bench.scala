@@ -136,7 +136,8 @@ object Bench {
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir",$env,$pfJson,"runs":$runsJson,"counters":$countersJson}"""
     println(line)
-    val prevBench = readFile(outPath)
+    val prevRecord = readFile(outPath)
+    val prevBench = prevRecord
       .map(BenchDelta.parseFlatObject(_, "queries")).getOrElse(Map.empty)
       .filter(_._2 > 0)
     val baseline = prevBench ++ floor
@@ -202,8 +203,15 @@ object Bench {
     // still exceeds the bound, the "host factor" IS the regression.
     val cores = Runtime.getRuntime.availableProcessors()
     val osArch = System.getProperty("os.arch")
+    // work-counter drift against the previous record at the same width:
+    // reported beside the timing flags, whatever the host verdict
+    val drift = prevRecord.filter(_.contains(s""""cpus":$cpus,""")).toSeq.flatMap(t =>
+      BenchDelta.counterDrift(BenchDelta.parseCounters(t), BenchDelta.parseCounters(line)))
+    val driftJson = drift.groupBy(_.name).toSeq.sortBy(_._1).map { case (n, ds) =>
+      "\"" + n + "\":" + ds.map(d => s""""${d.counter}":[${d.before},${d.after}]""")
+        .mkString("{", ",", "}") }.mkString("{", ",", "}")
     val deltaJson =
-      s"""{"threshold_x":${BenchDelta.ThresholdX},"rule":"all reps AND a min-of-${BenchDelta.RerunReps} post-suite rerun > max(1.5x host-normalized floor, floor+0.5s); floor = committed per-query min-of-history; no flags from a suspect host (median >1.25x off, or >5 simultaneous candidates on an elevated (>1.1x) host) — EXCEPT anomalies: min rep > ${BenchDelta.AnomalyX}x host-normalized floor forces the rerun and a named anomalies entry even on a suspect host; fast-side hosts suppress flags but may still lower the floor; preflight cold-control median > ${BenchDelta.PreflightMaxX}x the recorded cold baseline WARNS pre-suite; a slow-suspect suite verdict refuses the committed-record overwrite (recordWritable)","baseline":"floor","host_x_median":${f"$hostX%.3f"},"host":{"cores":$cores,"arch":"$osArch","cpus_env":"$cpus"},"host_x_suspect":${analysis.hostSuspect},$pfJson,"n_common":${analysis.nCommon},"n_flagged":${flagged.size},"regressions":${flagged.mkString("{", ",", "}")},"rerun_failed":${rerunFailed.mkString("{", ",", "}")},"anomalies":${anomalies.mkString("{", ",", "}")},"suppressed_candidates":${suppressed.mkString("{", ",", "}")}}"""
+      s"""{"threshold_x":${BenchDelta.ThresholdX},"rule":"all reps AND a min-of-${BenchDelta.RerunReps} post-suite rerun > max(1.5x host-normalized floor, floor+0.5s); floor = committed per-query min-of-history; no flags from a suspect host (median >1.25x off, or >5 simultaneous candidates on an elevated (>1.1x) host) — EXCEPT anomalies: min rep > ${BenchDelta.AnomalyX}x host-normalized floor forces the rerun and a named anomalies entry even on a suspect host; fast-side hosts suppress flags but may still lower the floor; preflight cold-control median > ${BenchDelta.PreflightMaxX}x the recorded cold baseline WARNS pre-suite; a slow-suspect suite verdict refuses the committed-record overwrite (recordWritable)","baseline":"floor","host_x_median":${f"$hostX%.3f"},"host":{"cores":$cores,"arch":"$osArch","cpus_env":"$cpus"},"host_x_suspect":${analysis.hostSuspect},$pfJson,"n_common":${analysis.nCommon},"n_flagged":${flagged.size},"regressions":${flagged.mkString("{", ",", "}")},"rerun_failed":${rerunFailed.mkString("{", ",", "}")},"anomalies":${anomalies.mkString("{", ",", "}")},"suppressed_candidates":${suppressed.mkString("{", ",", "}")},"counter_drift":$driftJson}"""
     // The floor is monotone: a clean-host full-suite run that beats a
     // query's recorded min lowers it (never raises — a regression must
     // not launder itself into the baseline). SLOW-suspect hosts don't

@@ -98,6 +98,35 @@ object BenchDelta {
     }
   }
 
+  /** `"counters":{"<query>":{"jobs":3,...},...}` (the Bench record's
+    * work counters) → query → counter → count. Empty on absent input. */
+  def parseCounters(txt: String): Map[String, Map[String, Long]] =
+    objectBody(txt, "counters").map { body =>
+      "\"([A-Za-z0-9_]+)\"\\s*:\\s*\\{([^{}]*)\\}".r.findAllMatchIn(body)
+        .map(m => m.group(1) -> "\"([a-z_]+)\"\\s*:\\s*(-?[0-9]+)".r
+          .findAllMatchIn(m.group(2)).map(c => c.group(1) -> c.group(2).toLong).toMap)
+        .toMap
+    }.getOrElse(Map.empty)
+
+  /** The counters compared between runs: jobs, stages and tasks follow
+    * from the plans (at a fixed core count), not from the host's speed,
+    * so any change is a change in the work done. */
+  val DriftCounters = Seq("jobs", "stages", "tasks")
+
+  final case class Drift(name: String, counter: String, before: Long, after: Long)
+
+  /** Every [[DriftCounters]] count that differs between two runs, for
+    * the queries and counters both runs recorded; sorted by query. */
+  def counterDrift(before: Map[String, Map[String, Long]],
+      after: Map[String, Map[String, Long]]): Seq[Drift] =
+    for {
+      (name, now) <- after.toSeq.sortBy(_._1)
+      was <- before.get(name).toSeq
+      c <- DriftCounters
+      x <- was.get(c).toSeq
+      y <- now.get(c).toSeq if x != y
+    } yield Drift(name, c, x, y)
+
   /** One query's candidacy evidence: floor baseline, this run's reps. */
   final case class Candidate(name: String, baseline: Double, reps: Seq[Double])
 

@@ -950,71 +950,8 @@ object SparkEntry {
       val tmp = scratch("s8")
       val manifest = QcExport.writeExports(seeded(events(s, dir)), tmp, "ev",
         formats = Seq("parquet", "csv"))
-      val base = java.nio.file.Paths.get(tmp)
-      // The DRIVER only LISTS (file-index metadata work, same class as
-      // any FileIndex); bytes are read and digested in EXECUTORS via a
-      // binaryFile scan over the exact listed paths — the r15 verdict's
-      // item 4: the previous form ran Files.readAllBytes + MessageDigest
-      // per file on the driver, O(export bytes) single-threaded inside
-      // the query. Listing exact paths (not a glob over the dir) keeps
-      // the old walk's inclusion rule byte-for-byte: everything except
-      // the manifest itself, dotfiles, and _SUCCESS — independent of
-      // the binaryFile source's own hidden-file conventions. The check
-      // stays independent of the writing plan: digests come from the
-      // bytes on disk, never from what writeExports thinks it wrote.
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
-        else if (f.isFile) Seq(f) else Nil
-      val paths = walk(base.toFile)
-        .filterNot(f => f.toPath.toString == manifest ||
-          f.getName.startsWith(".") || f.getName == "_SUCCESS")
-        .map(_.getAbsolutePath).sorted
-      val baseRe = java.util.regex.Pattern.quote(
-        base.toAbsolutePath.toString + java.io.File.separator)
-      // one line per export file: "<md5hex>  <relpath>", digest
-      // computed executor-side by the codegen'd md5 over the file bytes
-      val expLines = s.read.format("binaryFile").load(paths: _*)
-        .select(concat(md5(col("content")), lit("  "),
-          element_at(split(col("path"), baseRe, 2), 2)).as("line"))
-        .select(col("line"),
-          element_at(split(element_at(split(col("line"), "  ", 2), 2),
-            "/"), 1).as("dataset"))
-      // manifest lines with their file ORDER preserved (the text check
-      // asserts the manifest is exactly the sorted expected lines, so
-      // order is part of the contract); wholetext keeps one row per
-      // file and the trailing-newline trim mirrors linesIterator
-      val gotLines = s.read.option("wholetext", "true").text(manifest)
-        .select(posexplode(split(
-          regexp_replace(col("value"), "[\r\n]+$", ""), "\r\n|\r|\n")))
-        .select(col("pos"), col("col").as("line"),
-          element_at(split(element_at(split(col("col"), "  ", 2), 2),
-            "/"), 1).as("dataset"))
-      val emptyArr = array().cast("array<string>")
-      val expByDs = expLines.groupBy(col("dataset"))
-        .agg(sort_array(collect_list(col("line"))).as("__exp"))
-      val gotByDs = gotLines.groupBy(col("dataset"))
-        .agg(transform(sort_array(collect_list(
-          struct(col("pos"), col("line")))), x => x("line")).as("__got"))
-      val dsNames = Seq("ev_qc.csv", "ev_qc.parquet",
-        "ev_clean.csv", "ev_clean.parquet")
-      import s.implicits._
-      val perDs = dsNames.toDF("dataset")
-        .join(expByDs, Seq("dataset"), "left")
-        .join(gotByDs, Seq("dataset"), "left")
-        .select(col("dataset"),
-          (coalesce(col("__exp"), emptyArr) ===
-            coalesce(col("__got"), emptyArr)).as("md5_match"))
-      // whole-text verdict: the manifest's lines, in manifest order,
-      // equal the full sorted expected set (extra/missing/misordered
-      // lines in ANY dataset — known or not — flip this row)
-      val textRow = expLines.agg(sort_array(collect_list(col("line")))
-          .as("__exp"))
-        .crossJoin(gotLines.agg(transform(sort_array(collect_list(
-          struct(col("pos"), col("line")))), x => x("line")).as("__got")))
-        .select(lit("_manifest_text").as("dataset"),
-          (coalesce(col("__exp"), emptyArr) ===
-            coalesce(col("__got"), emptyArr)).as("md5_match"))
-      perDs.unionByName(textRow).orderBy("dataset")
+      QcExport.verifyManifest(s, tmp, manifest,
+        Seq("ev_qc.csv", "ev_qc.parquet", "ev_clean.csv", "ev_clean.parquet"))
     }),
     "s5_xlsx" -> ((s, dir) => {
       // S5: XLSX-shaped chunked export (R/qc_exports.R:92-122) — sheet

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.{broadcast, col}
 
@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions.{broadcast, col}
   *    ([[broadcastIfFits]]).
   * Per-round metrics (change counts, L1 totals, row counts) ride the
   * staging job as `observe` metrics, so they cost no extra job. */
-private[pipeline] object Fixpoint {
+private[graft] object Fixpoint {
 
   /** Rounds between lineage cuts for a step that reads its state once
     * per round. Each uncut round nests one more join+aggregate, so
@@ -169,20 +169,28 @@ private[pipeline] object Fixpoint {
     (state, converged)
   }
 
+  /** Whether `rows` rows of `rowBytes` each may be collected to the
+    * driver: while the estimate fits in half of
+    * `spark.driver.maxResultSize` (0 = unlimited). The factor 2 absorbs
+    * estimate slop (row headers, a hashed relation built on top). The
+    * broadcast gate and `QcSession`'s working window share this rule. */
+  def fitsDriver(rows: Long, rowBytes: Long, maxResultSize: Long): Boolean =
+    maxResultSize <= 0 || BigInt(rows) * rowBytes * 2 <= maxResultSize
+
+  /** The session's `spark.driver.maxResultSize` in bytes. */
+  def maxResultSize(s: SparkSession): Long =
+    s.sparkContext.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
+
   /** Whether a state table of `rows` rows of `rowBytes` each may be
     * broadcast: never when the session disabled broadcast joins
     * (`spark.sql.autoBroadcastJoinThreshold` = -1); otherwise only
-    * while the estimate fits in half of `spark.driver.maxResultSize`
-    * (0 = unlimited). A BroadcastExchange collects the table to the
-    * driver every round under that limit; the factor 2 absorbs
-    * estimate slop (row headers, the hashed relation). Above the gate
-    * the join falls back to a shuffled one: slower, never a driver
-    * failure. */
+    * while it [[fitsDriver]]. A BroadcastExchange collects the table to
+    * the driver every round under that limit. Above the gate the join
+    * falls back to a shuffled one: slower, never a driver failure. */
   def broadcastFits(
       rows: Long, rowBytes: Long, broadcastEnabled: Boolean,
       maxResultSize: Long): Boolean =
-    broadcastEnabled &&
-      (maxResultSize <= 0 || BigInt(rows) * rowBytes * 2 <= maxResultSize)
+    broadcastEnabled && fitsDriver(rows, rowBytes, maxResultSize)
 
   /** `t` with a broadcast hint when [[broadcastFits]] allows it for
     * `rows` rows of `t`'s schema under `t`'s session configuration.
@@ -193,7 +201,7 @@ private[pipeline] object Fixpoint {
     val s = t.sparkSession
     if (broadcastFits(rows, t.schema.defaultSize,
         !s.conf.get("spark.sql.autoBroadcastJoinThreshold").trim.startsWith("-"),
-        s.sparkContext.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")))
+        maxResultSize(s)))
       broadcast(t)
     else t
   }

@@ -226,19 +226,85 @@ object QcExport {
   def md5Manifest(dir: String, stem: String): String = {
     val base = Paths.get(dir)
     val manifest = base.resolve(s"${stem}_checksums.md5")
+    val root = base.toAbsolutePath
+    val lines = exportFiles(dir, manifest.toString).map { p =>
+      val f = Paths.get(p)
+      val md = MessageDigest.getInstance("MD5")
+      val hex = md.digest(Files.readAllBytes(f)).map("%02x".format(_)).mkString
+      s"$hex  ${root.relativize(f)}"
+    }.sorted
+    Files.writeString(manifest, lines.mkString("", "\n", "\n"))
+    manifest.toString
+  }
+
+  /** S8 check, independent of the writer: `manifest` (an
+    * [[md5Manifest]] over `dir`) against digests re-derived from the
+    * bytes on disk. One `(dataset, md5_match)` row per name in
+    * `datasets` — its manifest lines, in manifest order, equal the
+    * sorted expected lines of the files under `dir/<dataset>` — plus
+    * `_manifest_text`, the whole manifest against every expected line,
+    * so an extra, missing, misordered or wrong line in any dataset
+    * flips it. Every row is false when the walk finds no file.
+    *
+    * The driver only lists (the walk keeps [[md5Manifest]]'s inclusion
+    * rule: everything except the manifest itself, dotfiles and
+    * `_SUCCESS`); executors read and digest the bytes through a
+    * `binaryFile` scan over the exact listed paths. */
+  def verifyManifest(
+      spark: SparkSession, dir: String, manifest: String,
+      datasets: Seq[String]): DataFrame = {
+    import spark.implicits._
+    val paths = exportFiles(dir, manifest)
+    if (paths.isEmpty)
+      (datasets :+ "_manifest_text").toDF("dataset")
+        .withColumn("md5_match", lit(false)).orderBy("dataset")
+    else {
+      val baseRe = java.util.regex.Pattern.quote(
+        Paths.get(dir).toAbsolutePath.toString + File.separator)
+      // one line per export file: "<md5hex>  <relpath>", digest
+      // computed executor-side by the codegen'd md5 over the file bytes
+      val expLines = spark.read.format("binaryFile").load(paths: _*)
+        .select(concat(md5(col("content")), lit("  "),
+          element_at(split(col("path"), baseRe, 2), 2)).as("line"))
+        .select(col("line"),
+          element_at(split(element_at(split(col("line"), "  ", 2), 2),
+            "/"), 1).as("dataset"))
+      // manifest lines with their file ORDER preserved (the text check
+      // asserts the manifest is exactly the sorted expected lines, so
+      // order is part of the contract); wholetext keeps one row per
+      // file and the trailing-newline trim mirrors linesIterator
+      val gotLines = spark.read.option("wholetext", "true").text(manifest)
+        .select(posexplode(split(
+          regexp_replace(col("value"), "[\r\n]+$", ""), "\r\n|\r|\n")))
+        .select(col("pos"), col("col").as("line"),
+          element_at(split(element_at(split(col("col"), "  ", 2), 2),
+            "/"), 1).as("dataset"))
+      val emptyArr = array().cast("array<string>")
+      val expected = sort_array(collect_list(col("line"))).as("__exp")
+      val got = transform(sort_array(collect_list(
+        struct(col("pos"), col("line")))), x => x("line")).as("__got")
+      val verdict = (coalesce(col("__exp"), emptyArr) ===
+        coalesce(col("__got"), emptyArr)).as("md5_match")
+      val perDs = datasets.toDF("dataset")
+        .join(expLines.groupBy(col("dataset")).agg(expected), Seq("dataset"), "left")
+        .join(gotLines.groupBy(col("dataset")).agg(got), Seq("dataset"), "left")
+        .select(col("dataset"), verdict)
+      val textRow = expLines.agg(expected).crossJoin(gotLines.agg(got))
+        .select(lit("_manifest_text").as("dataset"), verdict)
+      perDs.unionByName(textRow).orderBy("dataset")
+    }
+  }
+
+  /** The files an [[md5Manifest]] over `dir` lists, as sorted absolute
+    * paths. */
+  private def exportFiles(dir: String, manifest: String): Seq[String] = {
     def walk(f: File): Seq[File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
       else if (f.isFile) Seq(f) else Nil
-    val lines = walk(base.toFile)
-      .filterNot(f => f.toPath == manifest || f.getName.startsWith(".") ||
-        f.getName == "_SUCCESS")
-      .map { f =>
-        val md = MessageDigest.getInstance("MD5")
-        val hex = md.digest(Files.readAllBytes(f.toPath))
-          .map("%02x".format(_)).mkString
-        s"$hex  ${base.relativize(f.toPath)}"
-      }.sorted
-    Files.writeString(manifest, lines.mkString("", "\n", "\n"))
-    manifest.toString
+    val skip = new File(manifest).getAbsolutePath
+    walk(new File(dir).getAbsoluteFile)
+      .filterNot(f => f.getAbsolutePath == skip ||
+        f.getName.startsWith(".") || f.getName == "_SUCCESS")
+      .map(_.getAbsolutePath).sorted
   }
 }

@@ -1,14 +1,18 @@
 package graft.qc
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.immutable.ArraySeq
+
+import graft.pipeline.Fixpoint
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 /** The qc_window_app server loop minus the pixels
-  * (R/qc_window_app.R:194-448): an immutable session value holding the
-  * table, the window catalog, and the navigation cursor. Every mutation
-  * returns a NEW session (Spark dfs are immutable — SURVEY §7.3);
-  * `render` returns the current window's rows for the UI layer.
+  * (R/qc_window_app.R:194-448): a session value holding the table, the
+  * window catalog, and the navigation cursor. Every action returns a
+  * NEW session (Spark dfs are immutable — SURVEY §7.3); `render`
+  * returns the current window's rows for the UI layer.
   *
   * Scale: the main df is ingested once (explicit time sort → row ids →
   * window ids) and cached. The catalog is tiny: `open` and `rewindow`
@@ -21,7 +25,7 @@ import org.apache.spark.storage.StorageLevel
   * driver-side `pending` list of actions as data, each tagged with the
   * dense window it was applied in, or global (M8 `resetAll`). [[df]]
   * folds every pending action onto `base`, one `when` projection per
-  * action; [[render]] folds onto the current window's slice only that
+  * action; [[render]] folds onto the current window's rows only that
   * window's actions and the global ones, so a render costs the same at
   * every step however long the session runs. The two agree because
   * every action is row-local and every non-global action is confined
@@ -29,6 +33,17 @@ import org.apache.spark.storage.StorageLevel
   * current window, as in the reference (`brushed_ids`,
   * R/qc_window_app.R:211-213) — its ids are intersected with the
   * window and guarded against OrigNA, M7's selection included.
+  *
+  * The one mutable part is the [[QcSession.Working]] window, a memo of
+  * `base` rows shared by `copy`, as a lazy val would be: when the
+  * whole `base` fits the driver budget ([[QcSession.driverBudget]]), the
+  * first render collects it once, grouped by dense window, and every
+  * render after it folds the actions onto its window's rows as a
+  * driver-local relation, which the optimizer evaluates in place — no
+  * Spark job, wherever the cursor goes. The memo remembers which
+  * `base` it holds and fetches again for a session with another one
+  * (after [[compact]] or [[rewindow]]). A `base` over the budget
+  * renders Spark-side, one filter job per render.
   *
   * [[log]] is the same list as [[QcFlagLog]] events, and
   * `QcFlagLog.fold(base, log, winIdCol = win_dense)` reproduces [[df]].
@@ -48,7 +63,8 @@ final case class QcSession(
     cursor: Long = 0L,
     suffix: String = FlagSchema.AutoSuffix,
     pending: Vector[QcSession.Action] = Vector.empty,
-    nextSeq: Long = 1L) {
+    nextSeq: Long = 1L)(
+    working: QcSession.Working = new QcSession.Working(None)) {
 
   import QcActions.{Approve, ApproveUnflagged, Flag, Unflag, Write}
   import QcSession.Action
@@ -61,12 +77,19 @@ final case class QcSession(
 
   /** Rows of the current window (navigation slice): exactly
     * `df.filter(win_dense === cursor)`, folding only the actions that
-    * can touch this window. */
+    * can touch this window onto its rows from the working window (or
+    * from `base` when the table is over the driver budget). */
   def render(hideBadRows: Boolean = false): DataFrame = {
-    val slice = foldOnto(QcWindows.slice(base, cursor),
-      pending.filter(_.window.forall(_ == cursor)))
+    val rows = working.rows(this).fold(QcWindows.slice(base, cursor))(
+      GraftColumnBridge.localRelation(base.sparkSession, base.schema, _))
+    val slice = foldOnto(rows, pending.filter(_.window.forall(_ == cursor)))
     if (hideBadRows) QcPlotFeed.hideBad(slice, y, suffix) else slice
   }
+
+  /** The same session with a fresh working window capped at `bytes` of
+    * driver budget instead of [[QcSession.driverBudget]]. */
+  private[qc] def withByteLimit(bytes: Long): QcSession =
+    copy()(new QcSession.Working(Some(bytes)))
 
   /** The pending actions as [[QcFlagLog.LogSchema]] rows (window ids are
     * dense); a local relation, so no job. */
@@ -78,12 +101,12 @@ final case class QcSession(
 
   def next: QcSession = goto(cursor + 1)
   def prev: QcSession = goto(cursor - 1)
-  def goto(k: Long): QcSession = copy(cursor = math.max(0L, math.min(k, lastWindow)))
+  def goto(k: Long): QcSession = copy(cursor = math.max(0L, math.min(k, lastWindow)))(working)
 
   private def act(window: Option[Long], ids: Option[Seq[Long]], write: Write,
       approveRest: Boolean = false): QcSession = {
     val a = Action(nextSeq, window, ids, write, approveRest)
-    copy(pending = pending :+ a, nextSeq = nextSeq + a.seqs)
+    copy(pending = pending :+ a, nextSeq = nextSeq + a.seqs)(working)
   }
 
   /** M1-M3 on a brushed id selection of the current window. */
@@ -113,7 +136,7 @@ final case class QcSession(
     val wdf = QcWindows.withWinId(stripped, t, newWinHrs, Some(t0))
     val (cat, n) = QcWindows.collectCatalog(wdf, t, y, include, suffix)
     copy(base = QcWindows.withDenseId(wdf, cat), winHrs = newWinHrs,
-      catalog = cat, windowCount = n, cursor = 0L, pending = Vector.empty)
+      catalog = cat, windowCount = n, cursor = 0L, pending = Vector.empty)(working)
   }
 
   /** Fold the pending actions into an eager localCheckpoint (the engine
@@ -123,7 +146,7 @@ final case class QcSession(
   def compact(): QcSession = {
     val cut = df.localCheckpoint(eager = true)
     if (base.storageLevel != StorageLevel.NONE) base.unpersist(blocking = false)
-    copy(base = cut, pending = Vector.empty)
+    copy(base = cut, pending = Vector.empty)(working)
   }
 
   /** Exit path (R/qc_window_app.R:442-447): strip synthetic columns and
@@ -133,6 +156,55 @@ final case class QcSession(
 }
 
 object QcSession {
+
+  /** The working window: every row of one session `base`, fetched to
+    * the driver by one collect and grouped by dense window, or None
+    * when that `base` is over the budget. Shared by the copies of a
+    * session; asked for a session with another `base`, it fetches that
+    * one instead. It sits in the session's second parameter list, so
+    * it takes no part in equality. `byteLimit` replaces [[driverBudget]]
+    * (a test seam). */
+  final class Working private[qc] (byteLimit: Option[Long]) {
+    private var from: DataFrame = _
+    private var windows: Option[Map[Long, Array[InternalRow]]] = None
+
+    /** The base rows of `s`'s current window; None when `s.base` is
+      * over budget. */
+    private[qc] def rows(s: QcSession): Option[Seq[InternalRow]] = synchronized {
+      if (from ne s.base) {
+        // driver-sized: the catalog is a local relation, one row per
+        // kept window
+        val nRows = s.catalog.select("n_rows").collect().map(_.getLong(0)).sum
+        // the broadcast gate's rule; `base` holds exactly the kept
+        // windows' rows (withDenseId is an inner join with the catalog)
+        windows =
+          if (!Fixpoint.fitsDriver(nRows, s.base.schema.defaultSize,
+              byteLimit.getOrElse(driverBudget(s.base.sparkSession)))) None
+          else {
+            val at = s.base.schema.fieldIndex(QcWindows.WinDenseCol)
+            // driver-sized: fitsDriver keeps the table within the budget
+            Some(GraftColumnBridge.collectInternal(s.base).groupBy(_.getLong(at)))
+          }
+        from = s.base
+      }
+      windows.map(w => ArraySeq.unsafeWrapArray(w.getOrElse(s.cursor, Array.empty[InternalRow])))
+    }
+  }
+
+  /** The working window's budget: `spark.driver.maxResultSize` (0 =
+    * unlimited), capped by the heap that Spark leaves to user data
+    * structures, `1 - spark.memory.fraction` of the driver's max heap,
+    * since the fetched rows stay on the driver for the session. */
+  private[qc] def driverBudget(spark: SparkSession): Long =
+    workingBudget(Fixpoint.maxResultSize(spark), Runtime.getRuntime.maxMemory,
+      spark.sparkContext.getConf.getDouble("spark.memory.fraction", 0.6))
+
+  /** [[driverBudget]] from its inputs, in bytes. */
+  private[qc] def workingBudget(
+      maxResultSize: Long, maxHeap: Long, memoryFraction: Double): Long = {
+    val user = (maxHeap * (1 - memoryFraction)).toLong
+    if (maxResultSize <= 0) user else math.min(maxResultSize, user)
+  }
 
   /** A pending action, as data: in dense window `window` (every row
     * when None), the brushed `ids` (the whole window when None) get
@@ -213,6 +285,6 @@ object QcSession {
     val full = QcWindows.withDenseId(wdf, cat)
     val cached =
       if (cache) full.persist(StorageLevel.MEMORY_AND_DISK) else full
-    QcSession(cached, y, t, winHrs, t0, cat, n, 0L, sfx)
+    QcSession(cached, y, t, winHrs, t0, cat, n, 0L, sfx)()
   }
 }

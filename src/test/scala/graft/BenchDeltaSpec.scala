@@ -269,6 +269,28 @@ class BenchDeltaSpec extends AnyFunSuite {
       .contains(Map("a" -> 1.5)))
   }
 
+  test("counter drift: jobs, stages and tasks changes are flagged per query; " +
+      "byte counters and one-sided queries are not") {
+    def record(counters: String) =
+      s"""{"queries":{"a":1.0},"counters":$counters,"x":{"jobs":99}}"""
+    val before = BenchDelta.parseCounters(record(
+      """{"a":{"jobs":3,"stages":4,"tasks":16,"shuffle_write_bytes":100,"spill_bytes":0},""" +
+        """"b":{"jobs":1,"stages":1,"tasks":4,"shuffle_write_bytes":0,"spill_bytes":0},""" +
+        """"gone":{"jobs":2,"stages":2,"tasks":8,"shuffle_write_bytes":0,"spill_bytes":0}}"""))
+    assert(before("a") == Map("jobs" -> 3L, "stages" -> 4L, "tasks" -> 16L,
+      "shuffle_write_bytes" -> 100L, "spill_bytes" -> 0L))
+    val after = BenchDelta.parseCounters(record(
+      """{"a":{"jobs":2,"stages":4,"tasks":12,"shuffle_write_bytes":90,"spill_bytes":7},""" +
+        """"b":{"jobs":1,"stages":1,"tasks":4,"shuffle_write_bytes":5,"spill_bytes":0},""" +
+        """"new":{"jobs":9,"stages":9,"tasks":9,"shuffle_write_bytes":0,"spill_bytes":0}}"""))
+    assert(BenchDelta.counterDrift(before, after) == Seq(
+      BenchDelta.Drift("a", "jobs", 3, 2), BenchDelta.Drift("a", "tasks", 16, 12)))
+    assert(BenchDelta.counterDrift(before, before).isEmpty)
+    // a record without counters (every record before they were added)
+    assert(BenchDelta.parseCounters("""{"queries":{"a":1.0}}""").isEmpty)
+    assert(BenchDelta.counterDrift(Map.empty, after).isEmpty)
+  }
+
   test("parseRunsObject reads per-rep arrays") {
     val txt = """{"runs":{"q1":[1.5,0.9],"q2":[0.3]}}"""
     assert(BenchDelta.parseRunsObject(txt, "runs") ==

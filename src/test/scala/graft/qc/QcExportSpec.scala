@@ -49,6 +49,31 @@ class QcExportSpec extends SparkSpec {
       "manifest rows must cover every data file, nothing else")
   }
 
+  test("S8 verifyManifest: true on a fresh export, flips on a changed line, " +
+      "all false on an empty directory") {
+    val names = Seq("site1_qc.csv", "site1_qc.parquet", "site1_clean.csv",
+      "site1_clean.parquet")
+    def verdict(dir: String, manifest: String) =
+      QcExport.verifyManifest(spark, dir, manifest, names)
+        .as[(String, Boolean)].collect().toSeq
+    val dir = tmpDir
+    val manifest = QcExport.writeExports(df, dir, "site1",
+      formats = Seq("csv", "parquet"), timeCol = Some("DateTime"))
+    assert(verdict(dir, manifest) == ("_manifest_text" +: names).sorted.map(_ -> true))
+    // one digest of the clean csv export rewritten: its dataset and the
+    // whole-text row flip, the others hold
+    val lines = Files.readAllLines(Paths.get(manifest))
+    val i = (0 until lines.size).find(lines.get(_).contains("site1_clean.csv/")).get
+    lines.set(i, "0" * 32 + lines.get(i).substring(32))
+    Files.write(Paths.get(manifest), lines)
+    assert(verdict(dir, manifest).filterNot(_._2).map(_._1) ==
+      Seq("_manifest_text", "site1_clean.csv"))
+    // no exported file (no manifest either): every row false, no throw
+    val empty = tmpDir
+    assert(verdict(empty, s"$empty/site1_checksums.md5") ==
+      ("_manifest_text" +: names).sorted.map(_ -> false))
+  }
+
   test("S5 xlsx-shaped chunked export: exact chunk boundaries, writexl " +
       "naming, single-sheet keeps the bare stem") {
     val dir = tmpDir

@@ -1,6 +1,7 @@
 package graft.qc
 
 import graft.SparkSpec
+import graft.pipeline.Fixpoint
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions._
@@ -180,17 +181,27 @@ class QcSessionSpec extends SparkSpec {
   }
 
   test("render has the full fold's rows in every window (random action scripts)") {
+    // even trials render from the working window, odd ones Spark-side
+    // (a one-byte budget puts the table over it); renders between
+    // actions fill the working window, so a memo that kept the old
+    // base across compact or rewindow would show stale flags
     val flagged = QcFlags.addFlags(mkSeries, Seq("temp"))
     val dense = col(QcWindows.WinDenseCol)
     val synthetic = Seq(QcWindows.RowIdCol, QcWindows.WinIdCol, QcWindows.WinDenseCol)
     val rnd = new scala.util.Random(7)
     val seen = scala.collection.mutable.Set.empty[Int]
+    def shown(s: QcSession, hide: Boolean) = byRowId(s.render(hideBadRows = hide))
+    def expected(s: QcSession, k: Long, hide: Boolean) = {
+      val w = s.df.filter(dense === k)
+      byRowId(if (hide) QcPlotFeed.hideBad(w, "temp") else w)
+    }
     for (trial <- 0 until 4) {
-      val s0 = QcSession.open(flagged, "temp", "DateTime", winHrs = 50.0)
-      val n = s0.windowCount
-      assert(n == 8)
-      val byWin = idsByWindow(s0)
-      val all = byWin.values.flatten.toIndexedSeq
+      val opened = QcSession.open(flagged, "temp", "DateTime", winHrs = 50.0)
+      val s0 = if (trial % 2 == 0) opened else opened.withByteLimit(1L)
+      assert(s0.windowCount == 8)
+      var n = s0.windowCount
+      var byWin = idsByWindow(s0)
+      var all = byWin.values.flatten.toIndexedSeq
       var s = s0
       var direct = s0.df
       var cur = 0L
@@ -203,7 +214,7 @@ class QcSessionSpec extends SparkSpec {
       for (_ <- 0 until 14) {
         val w = dense === cur
         def sel(ids: Seq[Long]) = QcPlotFeed.selScope(ids) && w
-        val op = rnd.nextInt(12)
+        val op = rnd.nextInt(13)
         seen += op
         op match {
           case 0 => val ids = brush()
@@ -225,19 +236,86 @@ class QcSessionSpec extends SparkSpec {
           case 9 => s = s.prev; cur = clamp(cur - 1)
           case 10 => val k = rnd.nextInt(n.toInt + 2) - 1L; s = s.goto(k); cur = clamp(k)
           case 11 => s = s.compact()
+          case 12 => val width = Seq(50.0, 40.0, 72.0)(rnd.nextInt(3))
+            s = s.rewindow(width)
+            direct = QcWindows.withDenseId(QcWindows.withWinId(
+              direct.drop(QcWindows.WinIdCol, QcWindows.WinDenseCol),
+              "DateTime", width, Some(s.t0)), s.catalog)
+            n = s.windowCount; cur = 0L
+            byWin = idsByWindow(s); all = byWin.values.flatten.toIndexedSeq
         }
         assert(s.cursor == cur)
+        val hide = rnd.nextBoolean()
+        assert(shown(s, hide) == expected(s, cur, hide),
+          s"trial $trial: op $op renders other rows than the full fold")
       }
-      for (k <- 0L until n)
-        assert(byRowId(s.goto(k).render()) == byRowId(s.df.filter(dense === k)),
-          s"trial $trial: window $k renders other rows than the full fold")
+      for (k <- 0L until n; hide <- Seq(false, true))
+        assert(shown(s.goto(k), hide) == expected(s, k, hide),
+          s"trial $trial: window $k (hideBadRows = $hide) renders other rows than the full fold")
       assert(s.done().orderBy("DateTime").collect().toSeq ==
         direct.drop(synthetic: _*).orderBy("DateTime").collect().toSeq,
         s"trial $trial: session differs from direct action application")
       assert(byRowId(replay(s.base, s.log, s.df.columns)) == byRowId(s.df),
         s"trial $trial: the folded log differs from the session's table")
     }
-    assert(seen == (0 until 12).toSet, s"script never ran actions ${(0 until 12).toSet -- seen}")
+    assert(seen == (0 until 13).toSet, s"script never ran actions ${(0 until 13).toSet -- seen}")
+  }
+
+  test("render runs no job once the table is fetched; after compact it fetches once") {
+    val flagged = QcFlags.addFlags(mkSeries, Seq("temp"))
+    val s0 = QcSession.open(flagged, "temp", "DateTime", winHrs = 24.0)
+    val first = s0.render().select(FlagSchema.qcol(QcWindows.RowIdCol)).as[Long]
+      .collect().sorted.take(1).toSeq
+    def steps(from: QcSession, k: Int) = (1 to k).foldLeft(from) { (s, _) =>
+      val next = s.flagAndNext(first)
+      assert(next.render().collect().nonEmpty)
+      next
+    }
+    val (s, jobs) = jobsOf("graft_qc_render_jobcount")(steps(s0, 30))
+    assert(jobs == 0, s"30 steps after the fetch submitted $jobs jobs")
+    assert(s.cursor == 16L)
+    assert(s.render().queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
+      "the optimizer must evaluate the folded window on the driver")
+    val (_, backJobs) = jobsOf("graft_qc_render_back_jobcount") {
+      Seq(s.goto(0), s.prev, s.prev.prev, s0).foreach(b => assert(b.render().collect().nonEmpty))
+    }
+    assert(backJobs == 0, s"renders behind the cursor and of the opened session ran $backJobs jobs")
+    val c = s.compact().goto(3)
+    val (_, fetchJobs) = jobsOf("graft_qc_refetch_jobcount")(c.render().collect())
+    assert(fetchJobs == 1, s"the first render after compact ran $fetchJobs jobs")
+    val (_, afterJobs) = jobsOf("graft_qc_after_refetch_jobcount")(steps(c.goto(0), 10))
+    assert(afterJobs == 0, s"renders after the re-fetch submitted $afterJobs jobs")
+  }
+
+  test("the working window is fetched only while the whole table fits the driver budget") {
+    // 8-byte rows, doubled: a table of r rows needs 16·r bytes
+    val rows = Seq(10L, 20L, 30L, 40L).sum
+    assert(Fixpoint.fitsDriver(rows, 8L, 16L * 100), "100 rows fit 1600 bytes")
+    assert(!Fixpoint.fitsDriver(rows + 1, 8L, 16L * 100), "one row more does not")
+    assert(!Fixpoint.fitsDriver(40L, 8L, 16L * 39), "a lone window over budget is not fetched")
+    assert(Fixpoint.fitsDriver(rows, 8L, 0L), "a limit of 0 is unlimited")
+    assert(!Fixpoint.fitsDriver(Long.MaxValue / 4, 1L << 20, 1L << 30),
+      "the byte estimate must not overflow")
+    val gib = 1L << 30
+    assert(QcSession.workingBudget(gib, 8 * gib, 0.6) == gib, "a large heap: maxResultSize")
+    assert(QcSession.workingBudget(gib, gib, 0.6) == (gib * 0.4).toLong,
+      "a 1 GiB driver: the heap Spark leaves to user data")
+    assert(QcSession.workingBudget(0L, 2 * gib, 0.6) == (2 * gib * 0.4).toLong,
+      "an unlimited maxResultSize is still capped by the heap")
+    val s = QcSession.open(QcFlags.addFlags(mkSeries, Seq("temp")), "temp", "DateTime",
+      winHrs = 100.0)
+    val budget = 400L * s.base.schema.defaultSize * 2
+    val (_, fitJobs) = jobsOf("graft_qc_fits_jobcount") {
+      val fits = s.withByteLimit(budget)
+      (fits.render().collect(), fits.next.render().collect())
+    }
+    assert(fitJobs == 1, s"a table at the budget ran $fitJobs jobs for two renders")
+    val (_, overJobs) = jobsOf("graft_qc_over_jobcount") {
+      val over = s.withByteLimit(budget - 1)
+      (over.render().collect(), over.next.render().collect())
+    }
+    assert(overJobs == 2, s"a table one byte over the budget ran $overJobs jobs for two renders")
   }
 
   test("the logs read before each compact and at the end hold every action once") {
@@ -278,7 +356,9 @@ class QcSessionSpec extends SparkSpec {
 
   test("render's plan does not deepen as the session goes on") {
     val flagged = QcFlags.addFlags(mkSeries, Seq("temp"))
-    val s0 = QcSession.open(flagged, "temp", "DateTime", winHrs = 12.0)
+    // Spark-side render (a one-byte budget): a working-window render
+    // folds every projection into its local relation
+    val s0 = QcSession.open(flagged, "temp", "DateTime", winHrs = 12.0).withByteLimit(1L)
     assert(s0.windowCount == 34)
     def projects(s: QcSession): Int =
       s.render().queryExecution.optimizedPlan.collect { case p: Project => p }.size
@@ -287,6 +367,11 @@ class QcSessionSpec extends SparkSpec {
     assert(s.cursor == 20L)
     assert(projects(s) == projects(s0),
       s"render after 20 steps: ${projects(s)} projects, fresh session: ${projects(s0)}")
+    // one action in the shown window: one projection either way
+    val (acted, fresh) = (projects(s.flagWindow()), projects(s0.flagWindow()))
+    assert(fresh > projects(s0), "a window action must show in the render plan")
+    assert(acted == fresh,
+      s"render after 20 steps and an action: $acted projects, fresh session: $fresh")
   }
 
   test("compact releases the opened table's cache; older sessions still render") {
