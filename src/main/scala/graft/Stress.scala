@@ -99,22 +99,22 @@ object Stress {
         SparkEntry.exactTriangles(s, d)))
     // Bench's query filter; a filtered run writes STRESS_partial.json
     val stressNames = StressQueries.filter(Bench.wanted)
-    // stageAdaptive gate audit (r13 verdict task 6): record which
+    // staging-format audit (Dedup.stagesColumnar): record which
     // staging format the prefix pipeline actually CHOSE at each scale,
     // so "the gate picked columnar at 100×" is a recorded artifact
-    // fact, not a probed claim. Deltas of PrefixBlocks' JVM counters
+    // fact, not a probed claim. Deltas of Dedup's staging counters
     // around the measured reps.
     val stagingChoice =
       scala.collection.mutable.Map.empty[String, (Long, Long)]
     def withStagingAudit[A](name: String, scaleKey: String)(body: => A): A =
       if (name != "dedup_prefix") body
       else {
-        val c0 = graft.pipeline.PrefixBlocks.columnarStagings.get()
-        val r0 = graft.pipeline.PrefixBlocks.rowStagings.get()
+        val c0 = graft.pipeline.Dedup.columnarStagings.get()
+        val r0 = graft.pipeline.Dedup.rowStagings.get()
         val out = body
         stagingChoice(scaleKey) = (
-          graft.pipeline.PrefixBlocks.columnarStagings.get() - c0,
-          graft.pipeline.PrefixBlocks.rowStagings.get() - r0)
+          graft.pipeline.Dedup.columnarStagings.get() - c0,
+          graft.pipeline.Dedup.rowStagings.get() - r0)
         out
       }
     def stagingJson(scaleKey: String): String =
@@ -268,7 +268,7 @@ object Stress {
       // ZERO mid-window-sort (r12: UNABLE_TO_ACQUIRE_MEMORY in the 600K
       // semdedup point on a 32 GiB heap, AFTER the 6M warmup passed —
       // pressure, not working set). Production code releases its own
-      // staged blocks deterministically (Graph/PrefixBlocks handles);
+      // staged blocks deterministically (Fixpoint's call scopes);
       // this reclaims what the HARNESS retains: measurement hygiene at
       // a timing boundary, outside every timed region.
       def reclaim(): Unit = {
@@ -461,7 +461,7 @@ object Stress {
         if (name == "dedup_prefix")
           stagingChoice.get("100x").foreach { case (c, r) =>
             if (c == 0 && r > 0) System.err.println(
-              "[stress100] WARNING: stageAdaptive chose ROW staging at " +
+              "[stress100] WARNING: Dedup.stagesColumnar chose ROW staging at " +
                 s"the 100x corpus (columnar=$c row=$r) — gate misfire")
           }
         println(f"[stress100] $name%-22s $sec%8.2f s  ($n%d rows)" +

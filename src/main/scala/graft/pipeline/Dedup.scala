@@ -128,30 +128,88 @@ object Dedup {
     * sorted-merge Jaccard per surviving pair. Three keyed shuffles,
     * nothing quadratic.
     *
-    * ==Result-lifetime contract (CHANGED in r13 — read at SMALL scale
-    * too)==
-    * Internal tables stage scale-adaptively
-    * ([[PrefixBlocks.stageAdaptive]]): columnar above the scale
-    * thresholds, eager row blocks below them. Row blocks are
-    * NON-REPLAYABLE and released when the NEXT prefix-dedup call on
-    * the same session/thread begins — so CONSUME (collect/write/count)
-    * each result before issuing another prefix-dedup call. A plan
-    * retained across calls used to silently RECOMPUTE under the old
-    * unconditional-columnar staging; at small scale it now throws the
-    * named `RetiredStageGuardRDD` error instead. The failure mode is
-    * deliberately small-scale-only (big corpora stage columnar, which
-    * recomputes), i.e. the opposite of where staging changes usually
-    * get tested — hence this banner. Contract is test-locked in
-    * ShuffleBudgetSpec.
+    * Eager, like every prefix-family entry point: the call runs its
+    * jobs and returns its result materialized ([[Fixpoint.materialize]]);
+    * every table it staged is released before it returns.
     *
     * @return (id_a, id_b, jaccard) with id_a < id_b, jaccard ≥ t
     */
   def prefixJaccardPairs(
       docs: DataFrame, idCol: String, textCol: String,
       threshold: Double, groupFloor: Double = DefaultGroupFloor): DataFrame =
-    PrefixBlocks.scoped(docs.sparkSession) {
-    val cand =
-      prefixJaccardCandidatePairs(docs, idCol, textCol, threshold, groupFloor)
+    Fixpoint.scoped { blocks =>
+      Fixpoint.materialize(
+        prefixPairs(blocks, docs, idCol, textCol, threshold, groupFloor))
+    }
+
+  /** Absolute candidate-inflation floor below which the near-identical-
+    * prefix grouping is bypassed (see the decision comment inside
+    * [[candidates]]). Tests pass 0 to force the grouped path on small
+    * fixtures. */
+  val DefaultGroupFloor: Double = 5e5
+
+  /** The candidate stage of [[prefixJaccardPairs]], exposed on its own
+    * so candidate volume is AUDITABLE (the stress harness records
+    * candidate counts next to pair counts — the number that says
+    * whether the join, or the irreducible output, is the cost) and
+    * usable as a recall-free blocking stage in its own right.
+    * Returns (id_a, id_b) with id_a < id_b — a superset of the
+    * qualifying pairs by the pigeonhole/PPJoin theorems. Eager like
+    * [[prefixJaccardPairs]].
+    *
+    * `groupFloor = Double.PositiveInfinity` DISABLES the
+    * near-identical-prefix grouping entirely: no signature table is
+    * built and no decision aggregate runs — the candidate join goes
+    * direct. Exactness is unaffected (both strategies emit candidate
+    * supersets); callers that have already collapsed identical-set
+    * floods ([[prefixJaccardPairsCollapsed]]) use this to skip a
+    * doc-count-sized aggregate + stage whose only purpose is flood
+    * detection. */
+  def prefixJaccardCandidatePairs(
+      docs: DataFrame, idCol: String, textCol: String,
+      threshold: Double, groupFloor: Double = DefaultGroupFloor): DataFrame =
+    Fixpoint.scoped { blocks =>
+      Fixpoint.materialize(
+        candidates(blocks, docs, idCol, textCol, threshold, groupFloor))
+    }
+
+  /** Incremental (batch-vs-corpus) exact jaccard-threshold join: every
+    * (corpus doc, batch doc) pair with token-set jaccard ≥ `threshold`
+    * — the operational dedup mode at 100 TB, where a daily increment
+    * is checked against the standing corpus WITHOUT re-pairing the
+    * corpus against itself. The candidate join and verify stage of
+    * [[prefixJaccardPairs]] (token df computed over the union gives
+    * both sides one consistent total order, so the prefix bound stays
+    * a theorem); only cross-side candidates are generated — corpus ×
+    * corpus and batch × batch prefixes never pair. Ids must be unique
+    * across both inputs. Eager like [[prefixJaccardPairs]]. Output:
+    * (id_a = corpus id, id_b = batch id, jaccard). */
+  def incrementalJaccardPairs(
+      corpus: DataFrame, batch: DataFrame, idCol: String, textCol: String,
+      threshold: Double): DataFrame =
+    Fixpoint.scoped { blocks =>
+      val tagged = corpus.select(col(idCol), col(textCol))
+        .withColumn("__side", lit(0))
+        .unionByName(batch.select(col(idCol), col(textCol))
+          .withColumn("__side", lit(1)))
+      Fixpoint.materialize(verified(
+        candidates(blocks, tagged, idCol, textCol, threshold,
+          Double.PositiveInfinity, crossSides = true),
+        tagged, idCol, textCol, threshold))
+    }
+
+  /** [[prefixJaccardPairs]] in the caller's scope. */
+  private def prefixPairs(
+      blocks: Fixpoint.Blocks, docs: DataFrame, idCol: String, textCol: String,
+      threshold: Double, groupFloor: Double): DataFrame =
+    verified(candidates(blocks, docs, idCol, textCol, threshold, groupFloor),
+      docs, idCol, textCol, threshold)
+
+  /** The candidate pairs (id_a, id_b) whose token sets in `docs` reach
+    * Jaccard `threshold`, with their Jaccard. */
+  private def verified(
+      cand: DataFrame, docs: DataFrame, idCol: String, textCol: String,
+      threshold: Double): DataFrame = {
     val sets = docs.select(col(idCol),
       graft.functions.tokenSet(TextAnalysis.tokens(col(textCol))).as("__set"))
     cand
@@ -162,72 +220,31 @@ object Dedup {
       .withColumn("jaccard", jaccardSorted(col("__sa"), col("__sb")))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
-    }
+  }
 
-  /** The candidate stage of [[prefixJaccardPairs]], exposed on its own
-    * so candidate volume is AUDITABLE (the stress harness records
-    * candidate counts next to pair counts — the number that says
-    * whether the join, or the irreducible output, is the cost) and
-    * usable as a recall-free blocking stage in its own right.
-    * Returns (id_a, id_b) with id_a < id_b — a superset of the
-    * qualifying pairs by the pigeonhole/PPJoin theorems.
-    *
-    * EAGER/BLOCKING semantics, not lazy composition: calling this
-    * runs Spark jobs at call time — the prefix table is materialized
-    * (scale-adaptive format via [[PrefixBlocks.stageAdaptive]]), and (unless
-    * grouping is disabled, see below) the prefix-signature table is
-    * too, plus one driver-side single-row aggregate for the flood
-    * decision. Storage bound — DETERMINISTIC, not GC-dependent: both
-    * staged tables are doc-count-sized (prefix rows resp. one 16-byte
-    * hash per doc) and are RELEASED at the start of the next
-    * top-level prefix-dedup call ([[PrefixBlocks]]), so a session
-    * issuing N calls holds at most one call's block set; call
-    * [[PrefixBlocks.release]] to free the last set immediately. The
-    * caller's side of the contract: consume a call's result before
-    * issuing the next prefix-dedup call — a plan retained across
-    * calls throws on re-execution once its blocks retire
-    * (localCheckpoint is non-replayable; ShuffleBudgetSpec locks both
-    * sides). Executor loss likewise recomputes nothing — on an
-    * unreliable cluster substitute persist+count upstream.
-    *
-    * `groupFloor = Double.PositiveInfinity` DISABLES the
-    * near-identical-prefix grouping entirely: no signature table is
-    * built and no decision aggregate runs — the candidate join goes
-    * direct. Exactness is unaffected (both strategies emit candidate
-    * supersets); callers that have already collapsed identical-set
-    * floods ([[prefixJaccardPairsCollapsed]]) use this to skip a
-    * doc-count-sized aggregate + checkpoint whose only purpose is
-    * flood detection. */
-  /** Absolute candidate-inflation floor below which the near-identical-
-    * prefix grouping is bypassed (see the decision comment inside
-    * [[prefixJaccardCandidatePairs]]). Tests pass 0 to force the
-    * grouped path on small fixtures. */
-  val DefaultGroupFloor: Double = 5e5
-
-  def prefixJaccardCandidatePairs(
-      docs: DataFrame, idCol: String, textCol: String,
-      threshold: Double, groupFloor: Double = DefaultGroupFloor): DataFrame =
-    PrefixBlocks.scoped(docs.sparkSession) {
+  /** [[prefixJaccardCandidatePairs]] in the caller's scope. With
+    * `crossSides`, `docs` carries `__side` (0 = corpus, 1 = batch), only
+    * corpus × batch pairs are candidates (id_a the corpus id), and the
+    * grouping is off: its within-group pairs ignore sides. */
+  private def candidates(
+      blocks: Fixpoint.Blocks, docs: DataFrame, idCol: String, textCol: String,
+      threshold: Double, groupFloor: Double, crossSides: Boolean = false): DataFrame = {
     require(threshold > 0 && threshold <= 1,
       "prefixJaccardPairs: threshold must be in (0, 1]")
-    val toks = docs.select(col(idCol),
-      explode(array_distinct(TextAnalysis.tokens(col(textCol)))).as("__tok"))
+    val carry = if (crossSides) Seq(col("__side")) else Nil
+    val toks = docs.select((col(idCol) +: carry) :+
+      explode(array_distinct(TextAnalysis.tokens(col(textCol)))).as("__tok"): _*)
     val dfreq = toks.groupBy("__tok").agg(count(lit(1)).as("__df"))
-    // Materialized once (scale-adaptive format, deterministic
-    // next-call release): the prefix table feeds the grouping decision
-    // below AND both sides of the candidate join, each reading a
-    // column subset — pruned compressed columnar scans measured 5×
-    // faster than full-row blocks at the 10× replica corpus (~10⁷
-    // exploded rows), but the columnar write + eager count tax is a
-    // ~1.3× dead loss at sf0.1 (the r13 staircase bisect), so
-    // stageAdaptive picks by the plan-stats size estimate OR'd with
-    // the corpus doc count (lazy — only counted when bytes are below
-    // threshold, i.e. never at real scale; needed because near-dup
-    // corpora compress so well that bytes under-read rows 3-4×).
+    // Staged once: the prefix table feeds the grouping decision below
+    // AND both sides of the candidate join, each reading a column
+    // subset; unstaged, every reader re-runs the token explode, the df
+    // join and the per-doc rank window. The corpus count is lazy: it
+    // runs only when the size estimate alone does not settle the
+    // format ([[stagesColumnar]]).
     lazy val corpusDocs = docs.count()
-    val prefix = PrefixBlocks.stageAdaptive(
+    val prefix = stagePrefixTable(blocks,
       rankedPrefix(toks, idCol, dfreq, threshold, "inner")
-        .select(col(idCol), col("__tok"), col("__r"), col("__sz")),
+        .select(Seq(col(idCol), col("__tok"), col("__r"), col("__sz")) ++ carry: _*),
       corpusDocs)
     // NEAR-IDENTICAL-PREFIX GROUPING — the template-flood guard the
     // exact-dup collapse ([[prefixJaccardPairsCollapsed]]) cannot
@@ -248,20 +265,32 @@ object Dedup {
     // t ≤ 1, so emitting them unconditionally matches the ungrouped
     // join. The group key is the 128-bit md5 of (size, sorted prefix
     // tokens) — same birthday-bound argument as the exact collapse.
-    // (the signature table that implements this grouping is built
-    // below, inside the groupFloor-finite branch — an infinite floor
-    // skips it entirely, see the scaladoc)
     val sa = col("pa.__sz"); val sb = col("pb.__sz")
     val idxFrac = 2.0 * threshold / (1.0 + threshold)
     def idxPrefixOk(r: Column, sz: Column): Column =
       r <= sz - ceil(lit(idxFrac) * sz - lit(1e-9)) + 1
-    // The PPJoin candidate join (length + positional + index-prefix
-    // filters, all theorems) — run on the full prefix table or on
-    // one representative per prefix-group, depending on the bypass
-    // decision below. Output (__ra, __rb) with __ra < __rb.
+    val pairOk =
+      if (crossSides) col("pa.__side") === 0 && col("pb.__side") === 1
+      else col(s"pa.$idCol") < col(s"pb.$idCol")
+    // The PPJoin candidate join, on the full prefix table or on one
+    // representative per prefix-group. Its pruning runs inside the join
+    // condition, BEFORE the distinct shuffle, and every filter is a
+    // THEOREM from Xiao et al. 2008, so exactness holds (on the 10×
+    // replica stress corpus, where every doc sits in a 10-member
+    // near-dup group, they cut wall-clock ~5×, 109 s → 20 s):
+    //   length filter: J(a,b) ≥ t ⇒ min(|a|,|b|) ≥ t·max(|a|,|b|);
+    //   positional filter: a pair sharing prefix token at ranks
+    //   (ra, rb) has overlap ≤ 1 + min(|a|−ra, |b|−rb), and J ≥ t
+    //   needs overlap ≥ t/(1+t)·(|a|+|b|);
+    //   index-prefix filter: any J ≥ t pair shares a token inside the
+    //   SMALLER record's index prefix |s| − ⌈2t/(1+t)·|s|⌉ + 1 (shorter
+    //   than the probing prefix — at t=0.8 it is 11% of the doc vs
+    //   20%), so candidate rows where the smaller side's match sits
+    //   past its index prefix are redundant copies of a pair some
+    //   other token already generates.
+    // Output (__ra, __rb): __ra < __rb, or corpus × batch with sides.
     def candJoin(p: DataFrame): DataFrame = p.as("pa")
-      .join(p.as("pb"), col("pa.__tok") === col("pb.__tok") &&
-        col(s"pa.$idCol") < col(s"pb.$idCol") &&
+      .join(p.as("pb"), col("pa.__tok") === col("pb.__tok") && pairOk &&
         least(sa, sb).cast("double") >= lit(threshold) * greatest(sa, sb) - lit(1e-9) &&
         (lit(1) + least(sa - col("pa.__r"), sb - col("pb.__r"))).cast("double") >=
           lit(threshold / (1.0 + threshold)) * (sa + sb) - lit(1e-9) &&
@@ -287,90 +316,92 @@ object Dedup {
     // flood sit far past it). The relative 3·n term keeps the rule
     // scale-free for corpora whose duplication grows with size. All
     // inputs come from one grouped count over `sig` (doc-count-sized,
-    // derived from the already-checkpointed prefix table); the
-    // decision is deterministic, and both branches produce a candidate
-    // SUPERSET of the qualifying pairs, so the verified output is
-    // identical either way.
+    // derived from the already-staged prefix table); the decision is
+    // deterministic, and both branches produce a candidate SUPERSET of
+    // the qualifying pairs, so the verified output is identical either
+    // way.
     def direct() = candJoin(prefix)
       .select(col("__ra").as("id_a"), col("__rb").as("id_b"))
-    if (groupFloor.isPosInfinity) {
-      // grouping disabled by the caller (e.g. the exact-dup collapse
-      // already folded identical-set floods): no signature table, no
-      // decision aggregate — saves a doc-count-keyed collect_list
-      // shuffle + materialization + driver round-trip per call
-      direct()
-    } else {
-    // doc-count-sized (one 16-byte hash per doc); materialized because
-    // it feeds BOTH the bypass decision aggregate and the grouped
-    // path's membership join — unmaterialized, the collect_list
-    // aggregate over the prefix table would run twice
-    val sig: DataFrame = PrefixBlocks.stageAdaptive(
-      prefix.groupBy(col(idCol), col("__sz"))
-        .agg(sort_array(collect_list(col("__tok"))).as("__pt"))
-        .select(col(idCol), md5(concat_ws(" ",
-          col("__sz").cast("string"), array_join(col("__pt"), " "))
-          .cast("binary")).as("__g")),
-      corpusDocs)
-    val gsz = sig.groupBy(col("__g")).agg(count(lit(1)).as("__m"))
-    val st = gsz.agg(sum(col("__m")),
-      sum(col("__m").cast("double") * (col("__m") - 1))).head
-    // empty corpus → null aggregates → bypass (nothing to group)
-    val nDocs = if (st.isNullAt(0)) 0L else st.getLong(0)
-    val inflation = if (st.isNullAt(1)) 0.0 else st.getDouble(1)
-    if (inflation <= math.max(3.0 * nDocs, groupFloor)) {
-      direct()
-    } else {
-      val memb = sig.join(
-        sig.groupBy(col("__g")).agg(min(col(idCol)).as("__rep")), Seq("__g"))
-        .select(col("__rep"), col(idCol))
-      val repPrefix = prefix.join(
-        memb.filter(col("__rep") === col(idCol)).select(col(idCol)),
-        Seq(idCol), "left_semi")
-      val candRep = candJoin(repPrefix)
-      // rep-pairs → member-pairs (a member belongs to exactly one
-      // group, so the expansion cannot mint duplicates); within-group
-      // pairs are all candidates by the rank-1 shared-token argument
-      val cross = candRep
-        .join(memb.select(col("__rep").as("__ra"), col(idCol).as("__ia")),
-          Seq("__ra"))
-        .join(memb.select(col("__rep").as("__rb"), col(idCol).as("__ib")),
-          Seq("__rb"))
-        .select(least(col("__ia"), col("__ib")).as("id_a"),
-          greatest(col("__ia"), col("__ib")).as("id_b"))
-      val within = memb.as("ma")
-        .join(memb.as("mb"), col("ma.__rep") === col("mb.__rep") &&
-          col(s"ma.$idCol") < col(s"mb.$idCol"))
-        .select(col(s"ma.$idCol").as("id_a"), col(s"mb.$idCol").as("id_b"))
-      cross.unionByName(within)
-    }
+    if (crossSides || groupFloor.isPosInfinity) direct()
+    else {
+      // doc-count-sized (one 16-byte hash per doc); staged because it
+      // feeds BOTH the bypass decision aggregate and the grouped path's
+      // membership join — unstaged, the collect_list aggregate over
+      // the prefix table would run twice
+      val sig = stagePrefixTable(blocks,
+        prefix.groupBy(col(idCol), col("__sz"))
+          .agg(sort_array(collect_list(col("__tok"))).as("__pt"))
+          .select(col(idCol), md5(concat_ws(" ",
+            col("__sz").cast("string"), array_join(col("__pt"), " "))
+            .cast("binary")).as("__g")),
+        corpusDocs)
+      val gsz = sig.groupBy(col("__g")).agg(count(lit(1)).as("__m"))
+      val st = gsz.agg(sum(col("__m")),
+        sum(col("__m").cast("double") * (col("__m") - 1))).head
+      // empty corpus → null aggregates → bypass (nothing to group)
+      val nDocs = if (st.isNullAt(0)) 0L else st.getLong(0)
+      val inflation = if (st.isNullAt(1)) 0.0 else st.getDouble(1)
+      if (inflation <= math.max(3.0 * nDocs, groupFloor)) direct()
+      else {
+        val memb = sig.join(
+          sig.groupBy(col("__g")).agg(min(col(idCol)).as("__rep")), Seq("__g"))
+          .select(col("__rep"), col(idCol))
+        val repPrefix = prefix.join(
+          memb.filter(col("__rep") === col(idCol)).select(col(idCol)),
+          Seq(idCol), "left_semi")
+        val candRep = candJoin(repPrefix)
+        // rep-pairs → member-pairs (a member belongs to exactly one
+        // group, so the expansion cannot mint duplicates); within-group
+        // pairs are all candidates by the rank-1 shared-token argument
+        val cross = candRep
+          .join(memb.select(col("__rep").as("__ra"), col(idCol).as("__ia")),
+            Seq("__ra"))
+          .join(memb.select(col("__rep").as("__rb"), col(idCol).as("__ib")),
+            Seq("__rb"))
+          .select(least(col("__ia"), col("__ib")).as("id_a"),
+            greatest(col("__ia"), col("__ib")).as("id_b"))
+        val within = memb.as("ma")
+          .join(memb.as("mb"), col("ma.__rep") === col("mb.__rep") &&
+            col(s"ma.$idCol") < col(s"mb.$idCol"))
+          .select(col(s"ma.$idCol").as("id_a"), col(s"mb.$idCol").as("id_b"))
+        cross.unionByName(within)
+      }
     }
   }
 
-  /** Incremental (batch-vs-corpus) exact jaccard-threshold join: every
-    * (corpus doc, batch doc) pair with token-set jaccard ≥ `threshold`
-    * — the operational dedup mode at 100 TB, where a daily increment
-    * is checked against the standing corpus WITHOUT re-pairing the
-    * corpus against itself. Same prefix-filter machinery as
-    * [[prefixJaccardPairs]] (token df computed over the union gives
-    * both sides one consistent total order, so the prefix bound stays
-    * a theorem); only cross-side candidates are generated — corpus ×
-    * corpus and batch × batch prefixes never pair. Ids must be unique
-    * across both inputs. EAGER/BLOCKING like
-    * [[prefixJaccardCandidatePairs]] (and with its storage contract):
-    * the shared prefix table materializes at call time. Output:
-    * (id_a = corpus id, id_b = batch id, jaccard). */
-  def incrementalJaccardPairs(
-      corpus: DataFrame, batch: DataFrame, idCol: String, textCol: String,
-      threshold: Double): DataFrame = {
-    val tagged = corpus.select(col(idCol), col(textCol))
-      .withColumn("__side", lit(0))
-      .unionByName(batch.select(col(idCol), col(textCol))
-        .withColumn("__side", lit(1)))
-    prefixPairsImpl(tagged, idCol, textCol, threshold,
-      pairCond = (pa, pb) =>
-        col(s"$pa.__side") === 0 && col(s"$pb.__side") === 1,
-      carryCols = Seq("__side"))
-  }
+  /** Corpus scale from which the prefix family stages its
+    * doc-count-sized tables columnar (see [[stagesColumnar]]). */
+  private[graft] val ColumnarMinBytes: Long = 4L << 20
+  private[graft] val ColumnarMinDocs: Long = 4000L
+
+  /** Whether a prefix-family table stages in the columnar cache rather
+    * than as row blocks: when the optimizer's size estimate reaches
+    * [[ColumnarMinBytes]] OR the corpus holds [[ColumnarMinDocs]] docs.
+    * Both thresholds split A/B-measured regimes: row blocks won at sf0.1 (~0.9 MB estimate, 1,071 docs), where the
+    * columnar write, eager count and read conversion cost ~1.3×;
+    * columnar won 5× on the 10× replica (~9 MB, 10,710 docs), whose
+    * column-subset readers scan pruned, compressed columns instead of
+    * deserializing full rows. The doc count is needed because near-dup
+    * text compresses 3-4×, so source bytes under-read rows; it is
+    * by-name and only counted while the bytes signal is below its
+    * threshold. */
+  private[graft] def stagesColumnar(sizeInBytes: BigInt, docs: => Long): Boolean =
+    sizeInBytes >= ColumnarMinBytes || docs >= ColumnarMinDocs
+
+  // how many stagings each format has taken in this JVM (Stress
+  // records the deltas around its dedup_prefix reps)
+  private[graft] val columnarStagings = new java.util.concurrent.atomic.AtomicLong
+  private[graft] val rowStagings = new java.util.concurrent.atomic.AtomicLong
+
+  private def stagePrefixTable(
+      blocks: Fixpoint.Blocks, df: DataFrame, docs: => Long): DataFrame =
+    if (stagesColumnar(df.queryExecution.optimizedPlan.stats.sizeInBytes, docs)) {
+      columnarStagings.incrementAndGet()
+      blocks.stageColumnar(df)
+    } else {
+      rowStagings.incrementAndGet()
+      blocks.stage(df)._1
+    }
 
   /** Exact containment-threshold join — quote/snippet detection, the
     * ASYMMETRIC cousin of [[prefixJaccardPairs]]: every (probe, corpus)
@@ -414,8 +445,8 @@ object Dedup {
     // table): 5.84 -> 6.89 s, quiet host both sides (preflight 0.996
     // vs 1.006, min-of-3). Two consumers don't amortize the
     // write+eager-count tax the prefix table's five consumers do.
-    // Contrast prefixPairsImpl, where the re-run work is a rank
-    // window, not a scan. (A 10x-replica A/B is uninformative here:
+    // Contrast the Jaccard join's prefix table, where the re-run work
+    // is a rank window, not a scan. (A 10x-replica A/B is uninformative here:
     // replica snippets share prefix tokens whose df grows with the
     // factor, so candidate volume grows ~factor² by fixture
     // construction — the linear ctoks term drowns in verify noise.)
@@ -484,72 +515,6 @@ object Dedup {
         col("__sz") - ceil(lit(threshold) * col("__sz") - lit(1e-9)) + 1)
   }
 
-  private def prefixPairsImpl(
-      docs: DataFrame, idCol: String, textCol: String,
-      threshold: Double,
-      pairCond: (String, String) => Column,
-      carryCols: Seq[String] = Nil): DataFrame =
-    PrefixBlocks.scoped(docs.sparkSession) {
-    require(threshold > 0 && threshold <= 1,
-      "prefixJaccardPairs: threshold must be in (0, 1]")
-    val toks = docs.select(
-      (col(idCol) +: carryCols.map(col)) :+
-        explode(array_distinct(TextAnalysis.tokens(col(textCol)))).as("__tok"): _*)
-    val dfreq = toks.groupBy("__tok").agg(count(lit(1)).as("__df"))
-    // Materialized once, eager/blocking like prefixJaccardCandidate-
-    // Pairs (see its scaladoc for the deterministic storage contract):
-    // the prefix table feeds BOTH sides of the candidate self-join
-    // below, and unmaterialized each side re-runs the token explode +
-    // df join + per-doc rank window — the heaviest upstream stage,
-    // twice.
-    val prefix = PrefixBlocks.stageAdaptive(
-      rankedPrefix(toks, idCol, dfreq, threshold, "inner")
-        .select(col(idCol) +: col("__tok") +: col("__r") +: col("__sz") +:
-          carryCols.map(col): _*),
-      docs.count())
-    // Candidate pruning inside the join condition, BEFORE the distinct
-    // shuffle — both are THEOREMS from Xiao et al. 2008, so exactness
-    // holds (measured on the 10× replica stress corpus, where every
-    // doc sits in a 10-member near-dup group, they cut wall-clock
-    // ~5×, 109 s → 20 s):
-    //   length filter: J(a,b) ≥ t ⇒ min(|a|,|b|) ≥ t·max(|a|,|b|);
-    //   positional filter: a pair sharing prefix token at ranks
-    //   (ra, rb) has overlap ≤ 1 + min(|a|−ra, |b|−rb), and J ≥ t
-    //   needs overlap ≥ t/(1+t)·(|a|+|b|);
-    //   index-prefix filter: any J ≥ t pair shares a token inside the
-    //   SMALLER record's index prefix |s| − ⌈2t/(1+t)·|s|⌉ + 1 (shorter
-    //   than the probing prefix — at t=0.8 it is 11% of the doc vs
-    //   20%), so candidate rows where the smaller side's match sits
-    //   past its index prefix are redundant copies of a pair some
-    //   other token already generates — dropping them cuts the
-    //   near-identical-pair amplification ~2× with zero recall loss.
-    val sa = col("pa.__sz"); val sb = col("pb.__sz")
-    val idxFrac = 2.0 * threshold / (1.0 + threshold)
-    def idxPrefixOk(r: Column, sz: Column): Column =
-      r <= sz - ceil(lit(idxFrac) * sz - lit(1e-9)) + 1
-    val cand = prefix.as("pa")
-      .join(prefix.as("pb"), col("pa.__tok") === col("pb.__tok") &&
-        pairCond("pa", "pb") &&
-        least(sa, sb).cast("double") >= lit(threshold) * greatest(sa, sb) - lit(1e-9) &&
-        (lit(1) + least(sa - col("pa.__r"), sb - col("pb.__r"))).cast("double") >=
-          lit(threshold / (1.0 + threshold)) * (sa + sb) - lit(1e-9) &&
-        when(sa < sb || (sa === sb && col(s"pa.$idCol") < col(s"pb.$idCol")),
-          idxPrefixOk(col("pa.__r"), sa))
-          .otherwise(idxPrefixOk(col("pb.__r"), sb)))
-      .select(col(s"pa.$idCol").as("id_a"), col(s"pb.$idCol").as("id_b"))
-      .distinct()
-    val sets = docs.select(col(idCol),
-      graft.functions.tokenSet(TextAnalysis.tokens(col(textCol))).as("__set"))
-    cand
-      .join(sets.select(col(idCol).as("id_a"), col("__set").as("__sa")),
-        Seq("id_a"))
-      .join(sets.select(col(idCol).as("id_b"), col("__set").as("__sb")),
-        Seq("id_b"))
-      .withColumn("jaccard", jaccardSorted(col("__sa"), col("__sb")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-    }
-
   /** [[prefixJaccardPairs]] behind an exact-duplicate collapse:
     * documents with IDENTICAL distinct-token sets fold into one
     * canonical representative (min id) carrying the group size, the
@@ -585,7 +550,7 @@ object Dedup {
     * survives the collapse by construction; corpora shaped like that
     * should pass a finite `groupFloor` (or call
     * [[prefixJaccardPairs]] directly, whose decision aggregate
-    * detects the flood at runtime).
+    * detects the flood at runtime). Eager like [[prefixJaccardPairs]].
     *
     * @return (id_a, id_b, jaccard, size_a, size_b), id_a < id_b
     */
@@ -593,36 +558,34 @@ object Dedup {
       docs: DataFrame, idCol: String, textCol: String,
       threshold: Double,
       groupFloor: Double = Double.PositiveInfinity): DataFrame =
-    PrefixBlocks.scoped(docs.sparkSession) {
-    val keyed = docs.select(col(idCol), col(textCol),
-      md5(concat_ws(" ",
-        array_sort(array_distinct(TextAnalysis.tokens(col(textCol)))))
-        .cast("binary")).as("__k"))
-    // Eager/blocking like the candidate stage it feeds (see its
-    // scaladoc): `groups` and `reps` are each materialized ONCE — the
-    // collapse output fans out to four consumers (prefix build,
-    // verification token sets, and both size rejoins), and without the
-    // materializations every consumer re-runs the full input scan +
-    // hash aggregate chain (measured ~25 re-scans of the source on the
-    // bench fixture). Storage bound: `groups` is (16-byte hash, id,
-    // count) per DISTINCT token set; `reps` is one text copy of the
-    // representative corpus — at most input-sized with no duplication,
-    // and exactly the corpus the candidate join must hold anyway.
-    // Staged in the SAME PrefixBlocks scope as the inner call's prefix
-    // table (thread-local nesting), so the whole call's blocks retire
-    // together at the next top-level prefix-dedup call.
-    val groups = PrefixBlocks.stageRows(keyed.groupBy(col("__k"))
-      .agg(min(col(idCol)).as(idCol), count(lit(1)).as("__n")))
-    val reps = PrefixBlocks.stageRows(groups.select(col(idCol))
-      .join(keyed.select(col(idCol), col(textCol)), Seq(idCol)))
-    val sizes = groups.select(col(idCol), col("__n"))
-    prefixJaccardPairs(reps, idCol, textCol, threshold, groupFloor)
-      .join(sizes.select(col(idCol).as("id_a"), col("__n").as("size_a")),
-        Seq("id_a"))
-      .join(sizes.select(col(idCol).as("id_b"), col("__n").as("size_b")),
-        Seq("id_b"))
-      .select(col("id_a"), col("id_b"), col("jaccard"),
-        col("size_a"), col("size_b"))
+    Fixpoint.scoped { blocks =>
+      val keyed = docs.select(col(idCol), col(textCol),
+        md5(concat_ws(" ",
+          array_sort(array_distinct(TextAnalysis.tokens(col(textCol)))))
+          .cast("binary")).as("__k"))
+      // `groups` and `reps` are each staged ONCE, as row blocks: the
+      // collapse output fans out to four consumers (prefix build,
+      // verification token sets, and both size rejoins), and unstaged
+      // every consumer re-runs the full input scan + hash aggregate
+      // chain (measured ~25 re-scans of the source on the bench
+      // fixture). Their consumers read full rows, where row blocks
+      // measured faster than the columnar cache (+0.7 s/call at sf0.1).
+      // `groups` is (16-byte hash, id, count) per DISTINCT token set;
+      // `reps` is one text copy of the representative corpus — exactly
+      // the corpus the candidate join must hold anyway.
+      val (groups, _) = blocks.stage(keyed.groupBy(col("__k"))
+        .agg(min(col(idCol)).as(idCol), count(lit(1)).as("__n")))
+      val (reps, _) = blocks.stage(groups.select(col(idCol))
+        .join(keyed.select(col(idCol), col(textCol)), Seq(idCol)))
+      val sizes = groups.select(col(idCol), col("__n"))
+      Fixpoint.materialize(
+        prefixPairs(blocks, reps, idCol, textCol, threshold, groupFloor)
+          .join(sizes.select(col(idCol).as("id_a"), col("__n").as("size_a")),
+            Seq("id_a"))
+          .join(sizes.select(col(idCol).as("id_b"), col("__n").as("size_b")),
+            Seq("id_b"))
+          .select(col("id_a"), col("id_b"), col("jaccard"),
+            col("size_a"), col("size_b")))
     }
 
   // ------------------------------------------------------------- LSH bands

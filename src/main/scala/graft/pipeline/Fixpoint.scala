@@ -4,14 +4,19 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.{broadcast, col}
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
 
 /** The superstep driver of the iterative operators (Pregel over
   * DataFrames; GraphX's `Pregel` is the RDD precedent). It owns the
   * decisions every loop would otherwise make for itself:
-  *  - row-block staging: an eager `localCheckpoint` (deserialized
+  *  - staging: an eager `localCheckpoint` (deserialized
   *    MEMORY_AND_DISK row blocks) plus a handle on its backing RDD —
   *    `Dataset.unpersist` only talks to the CacheManager, so that
-  *    handle is the only way to free the blocks before driver GC;
+  *    handle is the only way to free the blocks before driver GC — or,
+  *    for a table whose consumers each read a column subset, the
+  *    columnar cache;
   *  - lineage-cap cadence: [[LineageCap]] rounds between cuts, or
   *    every round for a step that re-reads its state;
   *  - block release: a superseded cut is released as soon as its
@@ -53,21 +58,18 @@ private[graft] object Fixpoint {
 
   private val leafWarned = new java.util.concurrent.atomic.AtomicBoolean(false)
 
-  private def free(staged: DataFrame): Unit =
-    backing(staged).foreach(_.unpersist(blocking = false))
-
-  /** Eager row-block staging: `df` materialized once, plus the handle
-    * that frees its blocks. */
-  def stageRowBlocks(df: DataFrame): (DataFrame, () => Unit) = {
-    val staged = materialize(df)
-    (staged, () => free(staged))
+  /** One staged table: a row-block cut, or a columnar cache entry. */
+  private final case class Staged(df: DataFrame, columnar: Boolean) {
+    def free(): Unit =
+      if (columnar) df.unpersist(blocking = false)
+      else backing(df).foreach(_.unpersist(blocking = false))
   }
 
   private val observations = new java.util.concurrent.atomic.AtomicLong
 
   /** The blocks staged by one operator call (see [[scoped]]). */
   final class Blocks private[Fixpoint] () {
-    private var owned = List.empty[DataFrame]
+    private var owned = List.empty[Staged]
 
     /** Stage `df` eagerly. `metrics` (aggregates over `df`'s rows) are
       * observed on the staging job itself and returned as one row;
@@ -77,7 +79,7 @@ private[graft] object Fixpoint {
       val run =
         if (metrics.isEmpty) df else df.observe(name, metrics.head, metrics.tail: _*)
       val staged = materialize(run)
-      owned ::= staged
+      owned ::= Staged(staged, columnar = false)
       (staged,
         if (metrics.isEmpty) Row.empty else run.queryExecution.observedMetrics(name))
     }
@@ -86,28 +88,42 @@ private[graft] object Fixpoint {
       * reads the result, so that action can double as a test. */
     def stageLazy(df: DataFrame): DataFrame = {
       val staged = df.localCheckpoint(false)
-      owned ::= staged
+      owned ::= Staged(staged, columnar = false)
+      staged
+    }
+
+    /** Stage `df` eagerly in the columnar cache (persist plus count):
+      * for a table whose consumers each read a column subset, which
+      * pruned, compressed scans serve better than full row blocks. The
+      * ContextCleaner never frees a CacheManager entry, so the call
+      * always releases it when it returns; a plan still reading it then
+      * recomputes it. */
+    def stageColumnar(df: DataFrame): DataFrame = {
+      val staged = df.persist(StorageLevel.MEMORY_AND_DISK)
+      owned ::= Staged(staged, columnar = true)
+      staged.count()
       staged
     }
 
     /** Free the blocks of `staged` if this call staged it (reference
       * identity; any other plan is a no-op). Only safe once everything
       * that reads `staged` has materialized. */
-    def release(staged: DataFrame): Unit = drop(_ eq staged)
+    def release(staged: DataFrame): Unit = drop(_.df eq staged)
 
-    private[Fixpoint] def drop(which: DataFrame => Boolean): Unit = {
+    private[Fixpoint] def drop(which: Staged => Boolean): Unit = {
       val (gone, kept) = owned.partition(which)
       owned = kept
-      gone.foreach(free)
+      gone.foreach(_.free())
     }
   }
 
   /** One operator call: `body` stages through the given [[Blocks]].
     * When it throws, every staged block is released; when it returns,
-    * every staged block the returned plan does not read is released.
-    * A lazily returned plan thus keeps exactly its own blocks (freed
-    * by the ContextCleaner with the plan), and an eager result from
-    * [[materialize]] keeps none of the call's. */
+    * every columnar stage and every row-block cut the returned plan
+    * does not read is released. A lazily returned plan thus keeps
+    * exactly its own cuts (freed by the ContextCleaner with the plan),
+    * and an eager result from [[materialize]] keeps none of the
+    * call's. */
   def scoped(body: Blocks => DataFrame): DataFrame = {
     val blocks = new Blocks
     val out =
@@ -116,7 +132,7 @@ private[graft] object Fixpoint {
         case scala.util.control.NonFatal(e) => blocks.drop(_ => true); throw e
       }
     val read = out.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd }
-    blocks.drop(staged => !backing(staged).exists(r => read.exists(_ eq r)))
+    blocks.drop(s => s.columnar || !backing(s.df).exists(r => read.exists(_ eq r)))
     out
   }
 
@@ -169,28 +185,46 @@ private[graft] object Fixpoint {
     (state, converged)
   }
 
-  /** Whether `rows` rows of `rowBytes` each may be collected to the
-    * driver: while the estimate fits in half of
-    * `spark.driver.maxResultSize` (0 = unlimited). The factor 2 absorbs
-    * estimate slop (row headers, a hashed relation built on top). The
-    * broadcast gate and `QcSession`'s working window share this rule. */
-  def fitsDriver(rows: Long, rowBytes: Long, maxResultSize: Long): Boolean =
-    maxResultSize <= 0 || BigInt(rows) * rowBytes * 2 <= maxResultSize
+  /** Driver heap bytes of one collected row of `schema`. An UnsafeRow
+    * keeps its fields in one byte array: a null bitset (8 bytes per 64
+    * fields), an 8-byte word per field, and each variable-width value
+    * after them, taken at its type's `defaultSize` rounded up to a word.
+    * The row object, the array's header and the reference that holds
+    * the row add [[RowHeaderBytes]]. */
+  def rowBytes(schema: StructType): Long = {
+    val variable = schema.fields.iterator.map(_.dataType)
+      .filterNot(UnsafeRow.isFixedLength).map(t => (t.defaultSize + 7L) / 8 * 8).sum
+    RowHeaderBytes + UnsafeRow.calculateBitSetWidthInBytes(schema.size) +
+      8L * schema.size + variable
+  }
+
+  /** A 40-byte UnsafeRow object, a 16-byte array header and an 8-byte
+    * reference (compressed oops take less). */
+  val RowHeaderBytes = 64L
+
+  /** Whether `rows` rows of `schema` may be collected to the driver:
+    * while their [[rowBytes]] fit in `spark.driver.maxResultSize` (0 =
+    * unlimited). The broadcast gate and `QcSession`'s working window
+    * share this rule. A broadcast's hashed relation holds its rows
+    * without per-row objects, so for the narrow state tables the gate
+    * broadcasts, the headers the estimate counts cover that copy. */
+  def fitsDriver(rows: Long, schema: StructType, maxResultSize: Long): Boolean =
+    maxResultSize <= 0 || BigInt(rows) * rowBytes(schema) <= maxResultSize
 
   /** The session's `spark.driver.maxResultSize` in bytes. */
   def maxResultSize(s: SparkSession): Long =
     s.sparkContext.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
 
-  /** Whether a state table of `rows` rows of `rowBytes` each may be
+  /** Whether a state table of `rows` rows of `schema` may be
     * broadcast: never when the session disabled broadcast joins
     * (`spark.sql.autoBroadcastJoinThreshold` = -1); otherwise only
     * while it [[fitsDriver]]. A BroadcastExchange collects the table to
     * the driver every round under that limit. Above the gate the join
     * falls back to a shuffled one: slower, never a driver failure. */
   def broadcastFits(
-      rows: Long, rowBytes: Long, broadcastEnabled: Boolean,
+      rows: Long, schema: StructType, broadcastEnabled: Boolean,
       maxResultSize: Long): Boolean =
-    broadcastEnabled && fitsDriver(rows, rowBytes, maxResultSize)
+    broadcastEnabled && fitsDriver(rows, schema, maxResultSize)
 
   /** `t` with a broadcast hint when [[broadcastFits]] allows it for
     * `rows` rows of `t`'s schema under `t`'s session configuration.
@@ -199,7 +233,7 @@ private[graft] object Fixpoint {
     * re-exchanges the edge side every round. */
   def broadcastIfFits(t: DataFrame, rows: Long): DataFrame = {
     val s = t.sparkSession
-    if (broadcastFits(rows, t.schema.defaultSize,
+    if (broadcastFits(rows, t.schema,
         !s.conf.get("spark.sql.autoBroadcastJoinThreshold").trim.startsWith("-"),
         maxResultSize(s)))
       broadcast(t)

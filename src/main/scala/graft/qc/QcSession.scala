@@ -21,7 +21,7 @@ import org.apache.spark.storage.StorageLevel
   * actions themselves submit no Spark job.
   *
   * State is `base` (the opened table, or the checkpoint after
-  * [[compact]], or the re-windowed table after [[rewindow]]) plus a
+  * [[compact]], or the re-windowed checkpoint after [[rewindow]]) plus a
   * driver-side `pending` list of actions as data, each tagged with the
   * dense window it was applied in, or global (M8 `resetAll`). [[df]]
   * folds every pending action onto `base`, one `when` projection per
@@ -130,11 +130,16 @@ final case class QcSession(
   /** Restructure path (R/qc_window_app.R:426-439): recompute window ids
     * at a new width / include-filter — narrow recompute, no shuffle.
     * Dense window ids change, so the pending actions fold into the new
-    * base. */
+    * base, which sits on a lazy localCheckpoint of the folded table:
+    * the catalog collect fills it, and the base's plan stays one cut
+    * deep however many rewindows came before. The superseded base's
+    * cache is released as in [[compact]]. */
   def rewindow(newWinHrs: Double, include: Seq[Int] = Nil): QcSession = {
     val stripped = df.drop(QcWindows.WinIdCol, QcWindows.WinDenseCol)
+      .localCheckpoint(eager = false)
     val wdf = QcWindows.withWinId(stripped, t, newWinHrs, Some(t0))
     val (cat, n) = QcWindows.collectCatalog(wdf, t, y, include, suffix)
+    if (base.storageLevel != StorageLevel.NONE) base.unpersist(blocking = false)
     copy(base = QcWindows.withDenseId(wdf, cat), winHrs = newWinHrs,
       catalog = cat, windowCount = n, cursor = 0L, pending = Vector.empty)(working)
   }
@@ -178,7 +183,7 @@ object QcSession {
         // the broadcast gate's rule; `base` holds exactly the kept
         // windows' rows (withDenseId is an inner join with the catalog)
         windows =
-          if (!Fixpoint.fitsDriver(nRows, s.base.schema.defaultSize,
+          if (!Fixpoint.fitsDriver(nRows, s.base.schema,
               byteLimit.getOrElse(driverBudget(s.base.sparkSession)))) None
           else {
             val at = s.base.schema.fieldIndex(QcWindows.WinDenseCol)
@@ -266,8 +271,7 @@ object QcSession {
       winHrs: Double = 168.0,
       include: Seq[Int] = Nil,
       tiebreakers: Seq[String] = Nil,
-      suffix: String = FlagSchema.AutoSuffix,
-      cache: Boolean = true): QcSession = {
+      suffix: String = FlagSchema.AutoSuffix): QcSession = {
     val sfx = FlagSchema.resolveSuffix(data, suffix)
     require(data.schema.fieldNames.contains(t), s"open: no time column $t")
     require(
@@ -282,9 +286,7 @@ object QcSession {
       QcWindows.withWinId(data, t, winHrs, Some(t0)), t, y, include, sfx)
     val withIds = QcWindows.withRowId(data, t +: tiebreakers)
     val wdf = QcWindows.withWinId(withIds, t, winHrs, Some(t0))
-    val full = QcWindows.withDenseId(wdf, cat)
-    val cached =
-      if (cache) full.persist(StorageLevel.MEMORY_AND_DISK) else full
+    val cached = QcWindows.withDenseId(wdf, cat).persist(StorageLevel.MEMORY_AND_DISK)
     QcSession(cached, y, t, winHrs, t0, cat, n, 0L, sfx)()
   }
 }

@@ -26,27 +26,6 @@ object GraftColumnBridge {
     spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "built-in")
 
-  /** Rebuild `df` — whose analyzed plan must be a `LogicalRDD` leaf,
-    * e.g. a `localCheckpoint` result — over `f(backing RDD)`,
-    * preserving the leaf's partitioning/ordering/stats via
-    * `LogicalRDD.fromDataset` (the same constructor
-    * `Dataset.checkpoint` itself uses, so iteration joins keep seeing
-    * the pinned hash layout). No leaf → `df` unchanged. */
-  def mapCheckpointRdd(
-      df: DataFrame,
-      f: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]
-        => org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow])
-      : DataFrame = {
-    val ds = df.asInstanceOf[classic.Dataset[Row]]
-    ds.queryExecution.analyzed
-      .collectFirst { case l: execution.LogicalRDD => l.rdd } match {
-      case Some(r) =>
-        classic.Dataset.ofRows(ds.sparkSession,
-          execution.LogicalRDD.fromDataset(f(r), ds, isStreaming = false))
-      case None => df
-    }
-  }
-
   /** `df`'s rows in Spark's internal format, collected to the driver by
     * one SQL execution (what `collect` runs, minus the conversion to
     * external `Row`s). */

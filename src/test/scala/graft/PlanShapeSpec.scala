@@ -17,6 +17,25 @@ class PlanShapeSpec extends SparkSpec {
     SparkEntry.queries(name)(spark, dir).queryExecution
       .explainString(FormattedMode)
 
+  /** [[plan]] plus the physical plans of the queries the call ran
+    * while building its result: an eager operator's joins run there. */
+  private def plansRun(name: String): String = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val p = plan(name)
+      org.apache.spark.sql.GraftListenerBridge.waitUntilEmpty(spark.sparkContext)
+      (p +: plans.toArray(Array.empty[String]).toSeq).mkString("\n")
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   private def physical(name: String): String =
     SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString
 
@@ -206,7 +225,8 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("prefix jaccard join: candidates from key equi-joins, never a cross join") {
-    val p = plan("dedup_prefix")
+    val p = plansRun("dedup_prefix")
+    assert(p.contains("Join"), s"the call's candidate join must show:\n$p")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"prefix filtering must never go quadratic:\n$p")
   }
@@ -298,7 +318,8 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("prefix join: candidate generation is token/group-keyed, never cartesian") {
-    val p = plan("dedup_prefix")
+    val p = plansRun("dedup_prefix")
+    assert(p.contains("Join"), s"the call's candidate join must show:\n$p")
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"),
       s"prefix candidates must come from equi-joins:\n$p")

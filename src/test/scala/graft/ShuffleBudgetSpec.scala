@@ -98,144 +98,116 @@ class ShuffleBudgetSpec extends SparkSpec {
       s"strip must stay linear in occurrences (~5k), got $rec")
   }
 
-  test("repeated prefix-dedup calls hold at most ONE call's staged block set") {
-    import graft.pipeline.{Dedup, PrefixBlocks}
-    PrefixBlocks.release(spark)
-    def cached(): Int = spark.sparkContext.getPersistentRDDs.size
-    // unpersist(blocking=false) drains asynchronously — poll down to a
-    // target instead of reading one racy snapshot
-    def awaitCachedAtMost(n: Int): Int = {
-      val deadline = System.nanoTime + 15L * 1000 * 1000 * 1000
-      var c = cached()
-      while (c > n && System.nanoTime < deadline) { Thread.sleep(50); c = cached() }
-      c
-    }
-    val base = awaitCachedAtMost(0)
-    val docs = (0 until 300)
-      .map(i => (i.toLong, s"w${i % 7} w${i % 11} w${i % 13} w${i % 5} t${i % 17} tail$i"))
-      .toDF("doc_id", "text")
-    for (_ <- 1 to 3) {
-      // groupFloor=0 forces the grouped path: BOTH doc-count-sized
-      // tables (prefix + signature) stage every call — the worst case
-      Dedup.prefixJaccardCandidatePairs(
-        docs, "doc_id", "text", 0.8, groupFloor = 0).count()
-    }
-    // the registry holds exactly the LAST call's set (prefix + sig)...
-    assert(PrefixBlocks.liveCount(spark) <= 2,
-      s"live=${PrefixBlocks.liveCount(spark)}")
-    // ...and executor storage drains the two earlier calls' sets
-    val afterCalls = awaitCachedAtMost(base + 2)
-    assert(afterCalls <= base + 2,
-      s"staged blocks accumulated across calls: base=$base now=$afterCalls")
-    PrefixBlocks.release(spark)
-    assert(PrefixBlocks.liveCount(spark) == 0)
-    val end = awaitCachedAtMost(base)
-    assert(end <= base, s"release must free the final set: base=$base now=$end")
+  /** `n` short docs in near-dup pairs: doc 2k is six tokens, one of
+    * them unique to the pair, and doc 2k+1 adds a seventh (Jaccard 6/7). */
+  private def prefixDocs(n: Int): DataFrame = (0 until n).map { i =>
+    val k = i / 2
+    (i.toLong, s"w${k % 7} w${k % 11} w${k % 13} w${k % 5} t${k % 17} tail$k" +
+      (if (i % 2 == 1) s" extra${i % 3}" else ""))
+  }.toDF("doc_id", "text")
+
+  /** The four prefix-dedup entry points over `docs` (the incremental
+    * one against a batch of edited copies), grouping forced on where it
+    * is an option, so every doc-count-sized table stages. */
+  private def prefixCalls(docs: DataFrame): Seq[(String, () => DataFrame)] = {
+    import graft.pipeline.Dedup
+    val batch = docs.filter(col("doc_id") % 5 === 0)
+      .select((col("doc_id") + 1000000L).as("doc_id"), concat(col("text"), lit(" v2")).as("text"))
+    Seq(
+      "candidates" -> (() => Dedup.prefixJaccardCandidatePairs(
+        docs, "doc_id", "text", 0.8, groupFloor = 0)),
+      "pairs" -> (() => Dedup.prefixJaccardPairs(docs, "doc_id", "text", 0.8, groupFloor = 0)),
+      "collapsed" -> (() => Dedup.prefixJaccardPairsCollapsed(docs, "doc_id", "text", 0.8)),
+      "incremental" -> (() => Dedup.incrementalJaccardPairs(docs, batch, "doc_id", "text", 0.8)))
   }
 
-  test("a plan retained across prefix-dedup calls is released, not leaked") {
-    import graft.pipeline.{Dedup, PrefixBlocks}
-    val docs = (0 until 200)
-      .map(i => (i.toLong, s"a${i % 5} b${i % 9} c${i % 4} d$i"))
-      .toDF("doc_id", "text")
-    // COLUMNAR-staged tables (the candidate stage's prefix/sig at
-    // SCALE — forced here via the adaptive threshold override, since
-    // a 200-doc corpus sits far below the 4 MiB default): release
-    // goes through the CacheManager, so a retained plan re-executed
-    // after the next call RECOMPUTES - slower, never wrong
-    val key = "graft.prefix.columnarMinBytes"
-    sys.props(key) = "0"
-    try {
-      val cand = Dedup.prefixJaccardCandidatePairs(
-        docs, "doc_id", "text", 0.8, groupFloor = 0)
-      val expected = cand.count()
-      Dedup.prefixJaccardCandidatePairs(
-        docs, "doc_id", "text", 0.8, groupFloor = 0).count()
-      assert(cand.count() == expected)
-    } finally sys.props.remove(key)
-    // ROW-BLOCK-staged tables (the collapse's groups/reps): released
-    // localCheckpoint blocks are non-replayable, so the documented
-    // consume-before-next-call contract applies - the stale plan
-    // throws instead of silently holding executor storage, and the
-    // error NAMES the contract (RetiredStageGuardRDD) instead of
-    // surfacing the block manager's opaque "Checkpoint block not
-    // found" from deep inside Spark
-    val collapsed = Dedup.prefixJaccardPairsCollapsed(
-      docs, "doc_id", "text", 0.8)
-    assert(collapsed.count() >= 0) // consumed within its call window
-    Dedup.prefixJaccardPairsCollapsed(docs, "doc_id", "text", 0.8).count()
-    val ex = intercept[org.apache.spark.SparkException] { collapsed.count() }
-    val chain = Iterator.unfold(ex: Throwable)(t =>
-      Option(t).map(t => (Option(t.getMessage).getOrElse(""), t.getCause)))
-      .mkString("\n")
-    assert(chain.contains(
-      "prefix-dedup result consumed after a subsequent prefix-dedup call"),
-      s"retained-plan failure must name the contract, got:\n$chain")
-    PrefixBlocks.release(spark)
+  // 200 docs stage row blocks, 4,000 tiny docs columnar (the doc signal)
+  private val bothFormats = Seq("rows" -> 200, "columnar" -> 4000)
+
+  test("each prefix-dedup call leaves at most its result's blocks") {
+    import graft.pipeline.Dedup
+    def persisted(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    // unpersist(blocking=false) drains asynchronously — poll down to a
+    // target instead of reading one racy snapshot. Only RDDs the call
+    // itself registered count, so earlier results freed by the
+    // ContextCleaner meanwhile cannot hide a leak.
+    def awaitNewAtMost(before: Set[Int], n: Int): Set[Int] = {
+      val deadline = System.nanoTime + 15L * 1000 * 1000 * 1000
+      var fresh = persisted() -- before
+      while (fresh.size > n && System.nanoTime < deadline) {
+        Thread.sleep(50); fresh = persisted() -- before
+      }
+      fresh
+    }
+    for ((format, n) <- bothFormats; (name, call) <- prefixCalls(prefixDocs(n));
+         round <- 1 to 2) {
+      val columnar0 = Dedup.columnarStagings.get
+      val before = persisted()
+      val out = call()
+      assert(out.count() >= 0)
+      val left = awaitNewAtMost(before, 1)
+      assert(left.size <= 1,
+        s"$name ($format, call $round) left ${left.size} staged RDDs, not only its result")
+      // the collapse stages its groups and reps as row blocks at any
+      // size, and its prefix table columnar: that table's size estimate
+      // comes through the reps join, whose estimate is a product
+      if (name != "collapsed")
+        assert((Dedup.columnarStagings.get > columnar0) == (format == "columnar"),
+          s"$name must stage $format at this size")
+    }
+  }
+
+  test("a prefix-dedup result retained across later calls evaluates") {
+    // the result is a cut of its own: the staged tables it was built
+    // from are gone, and neither later calls nor their releases touch it
+    for ((format, n) <- bothFormats) {
+      val calls = prefixCalls(prefixDocs(n))
+      val retained = calls.map { case (name, call) =>
+        val out = call()
+        val rows = out.collect().toSet
+        assert(rows.nonEmpty, s"$name ($format) found no pairs to retain")
+        (name, out, rows)
+      }
+      calls.foreach { case (_, call) => call().count() }
+      for ((name, out, rows) <- retained)
+        assert(out.collect().toSet == rows, s"$name ($format) changed after later calls")
+    }
   }
 
   test("prefix staging format follows the size estimate: rows at gate " +
       "scale, columnar above the threshold") {
-    import graft.pipeline.{Dedup, PrefixBlocks}
-    val docs = (0 until 200)
-      .map(i => (i.toLong, s"a${i % 5} b${i % 9} c${i % 4} d$i"))
-      .toDF("doc_id", "text")
-    // default threshold (4 MiB): a tiny corpus stages EVERY table as
-    // row blocks — including the sig table, whose estimate flows
-    // through the staged prefix's LogicalRDD leaf (a defaultSizeInBytes
-    // fallback there would silently re-route sig to columnar and
-    // re-open the r13 gate-scale regression this gate closed)
-    val r0 = PrefixBlocks.rowStagings.get; val c0 = PrefixBlocks.columnarStagings.get
-    Dedup.prefixJaccardCandidatePairs(
-      docs, "doc_id", "text", 0.8, groupFloor = 0).count()
-    assert(PrefixBlocks.rowStagings.get - r0 == 2 &&
-      PrefixBlocks.columnarStagings.get - c0 == 0,
-      s"small corpus must stage prefix+sig as row blocks, got " +
-        s"rows=${PrefixBlocks.rowStagings.get - r0} " +
-        s"columnar=${PrefixBlocks.columnarStagings.get - c0}")
-    // bytes threshold forced to 0: the same call stages both columnar
-    // (the 100 TB-side path the 10x replica A/B measured 5x faster)
-    val key = "graft.prefix.columnarMinBytes"
-    sys.props(key) = "0"
-    try {
-      val r1 = PrefixBlocks.rowStagings.get; val c1 = PrefixBlocks.columnarStagings.get
+    import graft.pipeline.Dedup
+    val (minBytes, minDocs) = (BigInt(Dedup.ColumnarMinBytes), Dedup.ColumnarMinDocs)
+    // either signal alone decides: the optimizer's size estimate, or
+    // the corpus doc count (near-dup text compresses 3-4x, so source
+    // bytes under-read rows)
+    assert(!Dedup.stagesColumnar(minBytes - 1, minDocs - 1))
+    assert(Dedup.stagesColumnar(minBytes, 0L))
+    assert(Dedup.stagesColumnar(0, minDocs))
+    var counted = false
+    assert(Dedup.stagesColumnar(minBytes, { counted = true; 0L }) && !counted,
+      "a size estimate over the threshold settles it without counting the corpus")
+    // end to end: a small corpus stages EVERY table as row blocks —
+    // including the sig table, whose estimate flows through the staged
+    // prefix's LogicalRDD leaf (a defaultSizeInBytes fallback there
+    // would silently re-route sig to columnar at gate scale) — and
+    // 4,000 tiny docs, far under the bytes threshold, stage columnar
+    for ((format, n) <- bothFormats) {
+      val r0 = Dedup.rowStagings.get; val c0 = Dedup.columnarStagings.get
       Dedup.prefixJaccardCandidatePairs(
-        docs, "doc_id", "text", 0.8, groupFloor = 0).count()
-      assert(PrefixBlocks.columnarStagings.get - c1 == 2 &&
-        PrefixBlocks.rowStagings.get - r1 == 0,
-        "forced bytes threshold must stage prefix+sig columnar")
-    } finally sys.props.remove(key)
-    // DOC-COUNT signal alone (bytes threshold at default, far above
-    // this corpus): the second signal exists because near-dup corpora
-    // compress 3-4x, so source bytes under-read rows — the r13 stress
-    // rerun caught the bytes-only gate choosing rows on the 10x
-    // replica and re-creating the 12 s row-block penalty
-    val dkey = "graft.prefix.columnarMinDocs"
-    sys.props(dkey) = "100" // corpus has 200 docs
-    try {
-      val r2 = PrefixBlocks.rowStagings.get; val c2 = PrefixBlocks.columnarStagings.get
-      Dedup.prefixJaccardCandidatePairs(
-        docs, "doc_id", "text", 0.8, groupFloor = 0).count()
-      assert(PrefixBlocks.columnarStagings.get - c2 == 2 &&
-        PrefixBlocks.rowStagings.get - r2 == 0,
-        "doc-count signal alone must stage prefix+sig columnar")
-    } finally sys.props.remove(dkey)
-    PrefixBlocks.release(spark)
+        prefixDocs(n), "doc_id", "text", 0.8, groupFloor = 0).count()
+      val (rows, columnar) = (Dedup.rowStagings.get - r0, Dedup.columnarStagings.get - c0)
+      assert(if (format == "rows") rows == 2 && columnar == 0 else rows == 0 && columnar == 2,
+        s"$n docs must stage prefix+sig as $format, got rows=$rows columnar=$columnar")
+    }
   }
 
   test("a prefix-dedup call on another thread never retires this thread's blocks") {
-    import graft.pipeline.{Dedup, PrefixBlocks}
-    PrefixBlocks.release(spark)
-    val docs = (0 until 200)
-      .map(i => (i.toLong, s"a${i % 5} b${i % 9} c${i % 4} d$i"))
-      .toDF("doc_id", "text")
-    // This thread's collapse stages non-replayable ROW blocks
-    // (localCheckpoint): under the old session-only registry a call on
-    // ANY other thread released them and this plan's next count threw
-    // SparkException mid-consumption — the registry is keyed per
-    // (session, thread) exactly so concurrent callers on a shared
-    // session (which Spark supports) each retire only their own
-    // completed calls' blocks.
+    import graft.pipeline.Dedup
+    // Spark supports concurrent actions on a shared session: a call on
+    // another thread releases only what that call staged, so this
+    // thread's result keeps evaluating
+    val docs = prefixDocs(200)
     val mine = Dedup.prefixJaccardPairsCollapsed(docs, "doc_id", "text", 0.8)
     val expected = mine.count()
     var otherFailure: Option[Throwable] = None
@@ -246,12 +218,7 @@ class ShuffleBudgetSpec extends SparkSpec {
     t.start(); t.join()
     assert(otherFailure.isEmpty, s"other thread's call failed: $otherFailure")
     assert(mine.count() == expected,
-      "another thread's call must not invalidate this thread's in-flight result")
-    // both threads' sets are live until their owners' next call...
-    assert(PrefixBlocks.liveCount(spark) > 0)
-    // ...and the all-threads release clears everything
-    PrefixBlocks.release(spark)
-    assert(PrefixBlocks.liveCount(spark) == 0)
+      "another thread's call must not invalidate this thread's result")
   }
 
   test("NB training shuffles bounded by buckets and doc-bucket pairs, not tokens") {

@@ -70,6 +70,23 @@ class SourceLintSpec extends AnyFunSuite {
         offenders.mkString("\n"))
   }
 
+  test("library code reads no system property or environment variable") {
+    // library behaviour comes from its inputs and the session's config,
+    // never from a hidden JVM-wide knob; the harness mains (Bench,
+    // Stress, Explain, SparkEntry) sit outside these packages
+    val knob = """sys\.props|sys\.env|System\.getProperty|System\.getenv""".r
+    val offenders = Seq("pipeline", "qc", "timeseries", "streaming", "functions")
+      .flatMap(d => scalaFiles(new java.io.File(mainRoot, s"graft/$d")))
+      .flatMap { f =>
+        scala.io.Source.fromFile(f, "UTF-8").getLines().zipWithIndex.collect {
+          case (l, i) if knob.findFirstIn(l).isDefined => s"${f.getPath}:${i + 1}"
+        }
+      }
+    assert(offenders.isEmpty,
+      s"library code reads a JVM-wide knob — take it as an input:\n" +
+        offenders.mkString("\n"))
+  }
+
   test("SparkSession.builder() is called only by Bench's shared runner") {
     // one session builder for every main: a harness with its own
     // builder grows its own master, partition and timezone config, and

@@ -9,7 +9,6 @@ class FixpointSpec extends SparkSpec {
   test("broadcast gate: a 10M-node state table broadcasts, 50M does not") {
     // pageRank's (node, r) row; the default 1 GiB spark.driver.maxResultSize
     val row = new StructType().add("node", LongType).add("r", DoubleType)
-      .defaultSize.toLong
     val gib = 1L << 30
     assert(Fixpoint.broadcastFits(10L * 1000 * 1000, row, true, gib))
     assert(!Fixpoint.broadcastFits(50L * 1000 * 1000, row, true, gib),
@@ -18,6 +17,32 @@ class FixpointSpec extends SparkSpec {
       "autoBroadcastJoinThreshold = -1 disables the hint at any size")
     assert(Fixpoint.broadcastFits(50L * 1000 * 1000, row, true, 0L),
       "maxResultSize = 0 is unlimited")
+  }
+
+  test("the driver row estimate covers collected rows as SizeEstimator measures them") {
+    import org.apache.spark.sql.GraftColumnBridge
+    import org.apache.spark.sql.functions._
+    // the qc_review working window: a sensor series at 1-minute cadence
+    // with a few nulls, opened for review
+    val raw = spark.range(0, 5760, 1, 4).select(col("id").as("sample_id"),
+      timestamp_seconds(lit(1700000000L) + col("id") * 60).as("ts"),
+      when(col("id") % 1000 === 7, lit(null).cast("double"))
+        .otherwise(sin(col("id") / 100.0)).as("value"))
+    val opened = graft.qc.QcSession.open(graft.qc.QcFlags.addFlags(raw, Seq("value")),
+      "value", "ts", winHrs = 24, tiebreakers = Seq("sample_id"))
+    // booleans and ints: `defaultSize` counts 1 and 4 bytes, a row 8
+    val narrow = spark.range(0, 5760, 1, 4).select(
+      (0 until 8).map(i => (col("id") % (i + 2) === 0).as(s"b$i")) ++
+        (0 until 8).map(i => (col("id") * i).cast("int").as(s"i$i")): _*)
+    for ((name, df) <- Seq("qc_review" -> opened.base, "boolean/int" -> narrow)) {
+      val rows = GraftColumnBridge.collectInternal(df)
+      val heap = org.apache.spark.util.SizeEstimator.estimate(rows)
+      val estimate = rows.length * Fixpoint.rowBytes(df.schema)
+      assert(estimate >= heap && estimate <= heap * 1.25,
+        s"$name: ${rows.length} rows estimated at $estimate bytes, measured $heap")
+      assert(rows.length * df.schema.defaultSize * 2 < heap,
+        s"$name: the defaultSize rule would undercount it")
+    }
   }
 
   test("iterative operators on an empty edge list and a lone self-loop") {

@@ -289,13 +289,20 @@ class QcSessionSpec extends SparkSpec {
   }
 
   test("the working window is fetched only while the whole table fits the driver budget") {
-    // 8-byte rows, doubled: a table of r rows needs 16·r bytes
+    // one long column: a row header, the null bitset and one word
+    val long = new org.apache.spark.sql.types.StructType()
+      .add("v", org.apache.spark.sql.types.LongType)
+    val row = Fixpoint.RowHeaderBytes + 16
+    assert(Fixpoint.rowBytes(long) == row)
     val rows = Seq(10L, 20L, 30L, 40L).sum
-    assert(Fixpoint.fitsDriver(rows, 8L, 16L * 100), "100 rows fit 1600 bytes")
-    assert(!Fixpoint.fitsDriver(rows + 1, 8L, 16L * 100), "one row more does not")
-    assert(!Fixpoint.fitsDriver(40L, 8L, 16L * 39), "a lone window over budget is not fetched")
-    assert(Fixpoint.fitsDriver(rows, 8L, 0L), "a limit of 0 is unlimited")
-    assert(!Fixpoint.fitsDriver(Long.MaxValue / 4, 1L << 20, 1L << 30),
+    assert(Fixpoint.fitsDriver(rows, long, row * 100), "100 rows fit 100 rows' bytes")
+    assert(!Fixpoint.fitsDriver(rows + 1, long, row * 100), "one row more does not")
+    assert(!Fixpoint.fitsDriver(40L, long, row * 39), "a lone window over budget is not fetched")
+    assert(Fixpoint.fitsDriver(rows, long, 0L), "a limit of 0 is unlimited")
+    val wide = org.apache.spark.sql.types.StructType(
+      (0 until 1000).map(i => org.apache.spark.sql.types.StructField(s"c$i",
+        org.apache.spark.sql.types.LongType)))
+    assert(!Fixpoint.fitsDriver(Long.MaxValue / 4, wide, 1L << 30),
       "the byte estimate must not overflow")
     val gib = 1L << 30
     assert(QcSession.workingBudget(gib, 8 * gib, 0.6) == gib, "a large heap: maxResultSize")
@@ -305,7 +312,7 @@ class QcSessionSpec extends SparkSpec {
       "an unlimited maxResultSize is still capped by the heap")
     val s = QcSession.open(QcFlags.addFlags(mkSeries, Seq("temp")), "temp", "DateTime",
       winHrs = 100.0)
-    val budget = 400L * s.base.schema.defaultSize * 2
+    val budget = 400L * Fixpoint.rowBytes(s.base.schema)
     val (_, fitJobs) = jobsOf("graft_qc_fits_jobcount") {
       val fits = s.withByteLimit(budget)
       (fits.render().collect(), fits.next.render().collect())
@@ -372,6 +379,26 @@ class QcSessionSpec extends SparkSpec {
     assert(fresh > projects(s0), "a window action must show in the render plan")
     assert(acted == fresh,
       s"render after 20 steps and an action: $acted projects, fresh session: $fresh")
+  }
+
+  test("rewindow keeps the base one cut deep and releases its cache") {
+    val flagged = QcFlags.addFlags(mkSeries, Seq("temp"))
+    val s0 = QcSession.open(flagged, "temp", "DateTime", winHrs = 100.0)
+    val before = byRowId(s0.render())
+    def nodes(s: QcSession): Int = s.base.queryExecution.analyzed.collect { case p => p }.size
+    // each round folds two actions into a new base; built on the
+    // previous base's plan, the base would nest every earlier round
+    def round(s: QcSession, width: Double) =
+      s.flagWindow().next.approveUnflagged().rewindow(width)
+    val r1 = round(s0, 50.0)
+    assert(s0.base.storageLevel == StorageLevel.NONE, "opened table still cached after rewindow")
+    assert(byRowId(s0.render()) == before, "an older session recomputes the same rows")
+    val r5 = Seq(72.0, 40.0, 50.0, 72.0).foldLeft(r1)(round)
+    assert(nodes(r5) == nodes(r1),
+      s"base after 5 rewindow rounds: ${nodes(r5)} plan nodes, after 1: ${nodes(r1)}")
+    // the Spark-side render over it shows the working window's rows
+    assert(byRowId(r5.withByteLimit(1L).render(hideBadRows = true)) ==
+      byRowId(r5.render(hideBadRows = true)))
   }
 
   test("compact releases the opened table's cache; older sessions still render") {
