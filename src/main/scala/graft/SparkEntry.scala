@@ -2912,13 +2912,6 @@ object SparkEntry {
       Curation.decontaminate(corpus, bench, "doc_id", "text", n = 5)
         .select(col("doc_id")).orderBy("doc_id")
     }),
-    "cur_decontam_bloom" -> ((s, dir) => {
-      // Bloom pre-prune + exact confirm: output must equal
-      // cur_decontam_keep bit-for-bit (same oracle SQL)
-      val (corpus, bench) = decontamFixture(s, dir)
-      Curation.decontaminateBloom(corpus, bench, "doc_id", "text", n = 5)
-        .select(col("doc_id")).orderBy("doc_id")
-    }),
 
     // --- LLM pipeline: multimodal plumbing ---------------------------
     "embed_centroids" -> ((s, dir) =>
@@ -7771,36 +7764,6 @@ object SparkEntry {
         |    '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IP>', 'g') AS scrubbed
         |FROM step ORDER BY doc_id""".stripMargin,
     "cur_decontam_keep" ->
-      """WITH bench AS (
-        |  SELECT doc_id, text FROM documents WHERE doc_id % 50 = 0),
-        |planted AS (
-        |  SELECT doc_id + 2000000 AS doc_id,
-        |    array_to_string(string_split_regex(trim(text), '\s+')[1:12], ' ') AS text
-        |  FROM bench),
-        |corpus AS (
-        |  SELECT doc_id, text FROM documents WHERE doc_id % 50 <> 0
-        |  UNION ALL SELECT doc_id, text FROM planted),
-        |ctok AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS t
-        |  FROM corpus),
-        |btok AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS t
-        |  FROM bench),
-        |cg AS (
-        |  SELECT DISTINCT doc_id, array_to_string(t[i:i+4], ' ') AS g
-        |  FROM ctok, UNNEST(range(1, len(t) - 3)) AS r(i)),
-        |bg AS (
-        |  SELECT DISTINCT array_to_string(t[i:i+4], ' ') AS g FROM btok,
-        |    UNNEST(range(1, len(t) - 3)) AS r(i)),
-        |bad AS (SELECT DISTINCT doc_id FROM cg JOIN bg USING (g))
-        |SELECT doc_id FROM corpus
-        |WHERE doc_id NOT IN (SELECT doc_id FROM bad)
-        |ORDER BY doc_id""".stripMargin,
-    // Bloom pre-prune changes the PLAN, not the result: same oracle as
-    // the exact path proves the false-positive confirm join works.
-    "cur_decontam_bloom" ->
       """WITH bench AS (
         |  SELECT doc_id, text FROM documents WHERE doc_id % 50 = 0),
         |planted AS (

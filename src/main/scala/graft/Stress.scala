@@ -42,7 +42,7 @@ object Stress {
     "dedup_clusters", "dedup_embed",
     "sim_topk_agg", "sim_ivf", "embed_centroids",
     "text_tfidf", "text_langid_ngram", "text_quality",
-    "cur_decontam_bloom", "cur_pack",
+    "cur_decontam_keep", "cur_pack",
     "auto_mad", "auto_flatline", "ts_rolling", "ts_asof",
     "ts_scd2", "ts_cusum", "ts_ohlc", "text_heavy_hitters",
     "w1_rowid", "m5_approve_unflagged", "a1_progress", "plot_m4", "u1_union",

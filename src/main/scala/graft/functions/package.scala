@@ -72,6 +72,13 @@ package object functions {
   def fnv64(s: Column): Column =
     GraftColumnBridge.column(Fnv64Expr(GraftColumnBridge.expression(s)))
 
+  /** How many of `bounds` (internal values of `key`'s type, ascending
+    * in Spark's order — [[BucketIndexExpr.sorted]]) sort strictly below
+    * `key`; a null key counts 0 (native expression, constant-size
+    * generated code at any bound count — see [[BucketIndexExpr]]). */
+  def bucketIndex(key: Column, bounds: IndexedSeq[Any]): Column =
+    GraftColumnBridge.column(BucketIndexExpr(GraftColumnBridge.expression(key), bounds))
+
   /** Winnowing document fingerprints (MOSS; native expression — see
     * [[WinnowExpr]]): sorted distinct selected k-gram hashes, window
     * size `w`. Pairs with [[sortedIntersectCount]] for set overlap. */

@@ -63,7 +63,9 @@ object Curation {
       minMatches: Int = 1): DataFrame = {
     require(n >= 1, "contaminatedPairs: n must be >= 1")
     require(minMatches >= 1, "contaminatedPairs: minMatches must be >= 1")
-    def grams(df: DataFrame, as: String) = gramHashes(df, idCol, textCol, n, as)
+    def grams(df: DataFrame, as: String) =
+      df.select(col(idCol).as(as), explode(Dedup.wordShingles(col(textCol), n)).as("__g"))
+        .select(col(as), xxhash64(col("__g")).as("__gh"))
     val bg = grams(bench, "bench_id").distinct()
     grams(corpus, idCol)
       .join(broadcast(bg), Seq("__gh"))
@@ -145,82 +147,6 @@ object Curation {
         md5Hex(concat(lit(seed), lit("|"), col(keyCol).cast("string")))),
       Seq("__shuffle_key", keyCol), outCol)
       .drop("__shuffle_key")
-
-  /** (id, xxhash64(n-gram)) pairs — the shared kernel under both
-    * decontamination paths. */
-  private def gramHashes(
-      df: DataFrame, idCol: String, textCol: String, n: Int,
-      as: String): DataFrame =
-    df.select(col(idCol).as(as),
-      explode(Dedup.wordShingles(col(textCol), n)).as("__g"))
-      .select(col(as), xxhash64(col("__g")).as("__gh"))
-
-  /** [[decontaminate]] with a Bloom-filter pre-prune — the 100 TB
-    * shape. The broadcast-join path ships every corpus gram hash into
-    * the join operator; here a Bloom filter over the benchmark's gram
-    * hashes (built distributed via `stat.bloomFilter`, merged on the
-    * driver, broadcast once) discards ~all corpus grams inside the
-    * scan stage, so only the tiny candidate stream reaches the join.
-    * Bloom false positives are killed by the exact confirm join, so
-    * the OUTPUT is bit-identical to [[decontaminate]] at any `fpp` —
-    * the filter only trades a little broadcast memory for a shorter
-    * candidate stream. The benchmark side is counted first to size the
-    * filter (one extra job over the small side; ~9.6 bits/key at the
-    * default 1% fpp).
-    */
-  def decontaminateBloom(
-      corpus: DataFrame,
-      bench: DataFrame,
-      idCol: String,
-      textCol: String,
-      n: Int = 8,
-      minMatches: Int = 1,
-      fpp: Double = 0.01,
-      eager: Boolean = true): DataFrame = {
-    require(n >= 1, "decontaminateBloom: n must be >= 1")
-    require(minMatches >= 1, "decontaminateBloom: minMatches must be >= 1")
-    require(fpp > 0 && fpp < 1, "decontaminateBloom: fpp must be in (0,1)")
-    // persisted: the count job, the bloom build, and the confirm join
-    // would otherwise each re-run the bench explode+distinct. Scoped
-    // (eager path): the bad-id set is materialized below, so both the
-    // cache and the broadcast filter are released before returning
-    // instead of leaking block-manager/broadcast memory on every call.
-    val bg = gramHashes(bench, idCol, textCol, n, "bench_id").distinct()
-      .persist()
-    val bfB =
-      try {
-        val nGrams = math.max(bg.count(), 1L)
-        val bf = bg.stat.bloomFilter("__gh", nGrams, fpp)
-        corpus.sparkSession.sparkContext.broadcast(bf)
-      } catch { case e: Throwable => bg.unpersist(); throw e }
-    val mightContain = udf((h: Long) => bfB.value.mightContainLong(h))
-    val bad = gramHashes(corpus, idCol, textCol, n, idCol)
-      .filter(mightContain(col("__gh"))) // scan-stage prune
-      .join(broadcast(bg), Seq("__gh")) // exact confirm: no FP survives
-      .groupBy(col(idCol), col("bench_id"))
-      .agg(countDistinct(col("__gh")).as("n_matched"))
-      .filter(col("n_matched") >= minMatches)
-      .select(col(idCol)).distinct()
-    if (eager)
-      try
-        // the bad-id set is one id column of contaminated docs — tiny
-        // next to the corpus; materializing it here is what lets the
-        // bloom broadcast and the bench-gram cache be dropped
-        corpus.join(Fixpoint.materialize(bad), Seq(idCol), "left_anti")
-      finally {
-        bg.unpersist()
-        // unpersist (not destroy): frees executor copies now, but keeps
-        // the driver value so a lost localCheckpoint block could still
-        // recompute instead of failing on a destroyed broadcast
-        bfB.unpersist()
-      }
-    else
-      // eager = false keeps the whole plan lazy and inspectable (the
-      // plan-shape spec reads the confirm join out of it) — the CALLER
-      // then owns the lifetime of the bench-gram cache and the bloom
-      // broadcast for the session
-      corpus.join(bad, Seq(idCol), "left_anti")
-  }
 
   // ----------------------------------------------------- split assignment
 

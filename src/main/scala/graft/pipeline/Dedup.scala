@@ -397,7 +397,9 @@ object Dedup {
       blocks: Fixpoint.Blocks, df: DataFrame, docs: => Long): DataFrame =
     if (stagesColumnar(df.queryExecution.optimizedPlan.stats.sizeInBytes, docs)) {
       columnarStagings.incrementAndGet()
-      blocks.stageColumnar(df)
+      val staged = blocks.stageColumnar(df)
+      staged.count()
+      staged
     } else {
       rowStagings.incrementAndGet()
       blocks.stage(df)._1

@@ -14,9 +14,9 @@ import org.apache.spark.storage.StorageLevel
   *  - staging: an eager `localCheckpoint` (deserialized
   *    MEMORY_AND_DISK row blocks) plus a handle on its backing RDD —
   *    `Dataset.unpersist` only talks to the CacheManager, so that
-  *    handle is the only way to free the blocks before driver GC — or,
-  *    for a table whose consumers each read a column subset, the
-  *    columnar cache;
+  *    handle is the only way to free the blocks before driver GC — or
+  *    the columnar cache; every cache under `graft/pipeline`, iterative
+  *    or not, is staged and released here (SourceLintSpec);
   *  - lineage-cap cadence: [[LineageCap]] rounds between cuts, or
   *    every round for a step that re-reads its state;
   *  - block release: a superseded cut is released as soon as its
@@ -92,16 +92,17 @@ private[graft] object Fixpoint {
       staged
     }
 
-    /** Stage `df` eagerly in the columnar cache (persist plus count):
-      * for a table whose consumers each read a column subset, which
-      * pruned, compressed scans serve better than full row blocks. The
-      * ContextCleaner never frees a CacheManager entry, so the call
-      * always releases it when it returns; a plan still reading it then
-      * recomputes it. */
+    /** Stage `df` lazily in the columnar cache: the first action that
+      * reads the result fills it (a caller that needs it full before
+      * its next step counts it). For a table whose consumers each read
+      * a column subset, which pruned, compressed scans serve better
+      * than full row blocks, or that needs the real size statistics an
+      * InMemoryRelation carries. The ContextCleaner never frees a
+      * CacheManager entry, so the call always releases it when it
+      * returns; a plan still reading it then recomputes it. */
     def stageColumnar(df: DataFrame): DataFrame = {
       val staged = df.persist(StorageLevel.MEMORY_AND_DISK)
       owned ::= Staged(staged, columnar = true)
-      staged.count()
       staged
     }
 

@@ -110,14 +110,14 @@ object Graph {
       damping: Double = 0.85, teleport: Double = 0.15,
       roundDp: Int = 6): DataFrame = {
     require(iters >= 1, "personalizedPageRank: iters >= 1")
-    // COLUMNAR persist, unlike pageRank's row blocks: the seed-sparse
-    // workload runs on small projections, where the InMemoryRelation's
-    // real size statistics let the planner pick the join strategy
-    // (LogicalRDD has none). Materialized before the loop, so the
-    // multi-iteration job cannot race its own stages into an
-    // unpopulated cache.
-    val edged = symmetrizedWithDegree(edges, srcCol, dstCol).persist()
-    try Fixpoint.scoped { blocks =>
+    Fixpoint.scoped { blocks =>
+      // COLUMNAR, unlike pageRank's row blocks: the seed-sparse
+      // workload runs on small projections, where the InMemoryRelation's
+      // real size statistics let the planner pick the join strategy
+      // (LogicalRDD has none). Filled before the loop, so the
+      // multi-iteration job cannot race its own stages into an
+      // unpopulated cache.
+      val edged = blocks.stageColumnar(symmetrizedWithDegree(edges, srcCol, dstCol))
       edged.count()
       // one staged seed set backs the count, the teleport rows and the
       // rank init alike
@@ -144,7 +144,7 @@ object Graph {
           .agg(round(sum(col("__t")) +
             lit(damping) * sum(col("__s")), roundDp).as("r"))
       })
-    } finally edged.unpersist()
+    }
   }
 
   /** Per-node triangle counts over an undirected edge list, exact.
@@ -425,13 +425,6 @@ object Graph {
       edges: DataFrame, srcCol: String, dstCol: String,
       maxRounds: Int = 30): DataFrame = {
     require(maxRounds >= 1, "connectedComponentsStar: maxRounds >= 1")
-    // The INPUT is scanned exactly once: `pairs` is persisted, the
-    // node catalog materializes it, round 0 reads the SAME cache
-    // directly (the initial canonical edge set is never separately
-    // materialized: round 0's own `distinct`s already dedup), and the
-    // cache is released as soon as the first contracted round exists.
-    val pairs = edges.select(col(srcCol).cast("long").as("a"),
-      col(dstCol).cast("long").as("b")).persist()
     // e is a min-rooted star forest iff no head repeats and no id is
     // both head and tail: explode(head-row, tail-row) is ONE scan of
     // the round's edges (a union of both orientations would scan the
@@ -446,6 +439,13 @@ object Graph {
         .filter(col("__nh") > 1 || (col("__nh") >= 1 && col("__mn") === 0))
         .isEmpty
     Fixpoint.scoped { blocks =>
+      // The INPUT is scanned exactly once: `pairs` is staged columnar,
+      // the node catalog fills it, round 0 reads the SAME cache
+      // directly (the initial canonical edge set is never separately
+      // materialized: round 0's own `distinct`s already dedup), and the
+      // cache is released as soon as the first contracted round exists.
+      val pairs = blocks.stageColumnar(edges.select(
+        col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b")))
       val nodes = blocks.stageLazy(pairs.select(col("a").as("id"))
         .unionByName(pairs.select(col("b").as("id"))).distinct())
       nodes.count()
@@ -464,7 +464,7 @@ object Graph {
         val lsMin = nb.groupBy(col("u")).agg(min(col("v")).as("mv"))
           .select(col("u"), least(col("mv"), col("u")).as("m"))
         // ls feeds both the small-star min and its re-point join. A
-        // LAZY persist is safe: ssMin's aggregate must complete before
+        // LAZY columnar stage is safe: ssMin's aggregate must complete before
         // the re-point probe stage starts (its result is the join's
         // build side), so the aggregate fills the blocks and the probe
         // reads them cached. Released as soon as the round's edges
@@ -475,13 +475,12 @@ object Graph {
         // keys on the new u, so one explicit exchange here makes the
         // distinct, the small-star min AND the re-point join
         // exchange-free (the cut preserves the layout).
-        val ls = nb.join(lsMin, Seq("u"))
+        val ls = blocks.stageColumnar(nb.join(lsMin, Seq("u"))
           .filter(col("v") > col("u"))
           .select(col("v").as("u"), col("m").as("v"))
           .filter(col("u") =!= col("v"))
           .repartition(col("u"))
-          .distinct()
-          .persist()
+          .distinct())
         // SMALL-STAR on the directed result: m = min of u's smaller
         // neighbors; they and u re-point at m. Outputs stay canonical.
         val ssMin = ls.groupBy(col("u")).agg(min(col("v")).as("m"))
@@ -492,8 +491,8 @@ object Graph {
           .filter(col("u") =!= col("v"))
           .distinct())
         converged = isStarForest(next)
-        ls.unpersist()
-        if (r == 0) pairs.unpersist()
+        blocks.release(ls)
+        if (r == 0) blocks.release(pairs)
         blocks.release(e)
         e = next
         r += 1

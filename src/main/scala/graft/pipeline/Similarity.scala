@@ -305,34 +305,25 @@ object Similarity {
   def ivfProbeIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
       probes: DataFrame, idCol: String, vecCol: String,
-      k: Int, nprobe: Int = 4, eager: Boolean = true): DataFrame = {
+      k: Int, nprobe: Int = 4): DataFrame = {
     val cents = spark.read.parquet(s"$path/centroids")
       // driver-sized by construction: the centroid table has nlist rows
       .collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1)
-    def scored(probeCells: DataFrame): DataFrame = {
+    // staged: the cell collection and the scoring join would otherwise
+    // both evaluate the centroid-distance assignment; the (small,
+    // probe-sized) top-k result is materialized, so the stage is
+    // released before returning
+    Fixpoint.scoped { blocks =>
+      val probeCells = blocks.stageColumnar(ivfProbeCells(probes, vecCol, cents, nprobe))
       val wanted = probeCells.select("cell").distinct()
         // driver-sized by construction: distinct cell ids (<= nlist ints)
         .collect().map(_.getInt(0)).sorted
       val index = spark.read.parquet(s"$path/index")
         .filter(col("cell").isin(wanted.map(Integer.valueOf): _*))
-      ivfScore(probeCells, index, idCol, vecCol, k)
+      Fixpoint.materialize(ivfScore(probeCells, index, idCol, vecCol, k))
     }
-    if (eager) {
-      // persisted: the cell collection and the scoring join would
-      // otherwise both evaluate the centroid-distance assignment.
-      // Scoped: the (small, probe-sized) top-k result is materialized
-      // so the cache is dropped before returning rather than leaking
-      // into the block manager on every probe call.
-      val probeCells = ivfProbeCells(probes, vecCol, cents, nprobe).persist()
-      try Fixpoint.materialize(scored(probeCells))
-      finally probeCells.unpersist()
-    } else
-      // eager = false keeps the plan lazy and inspectable (the spec
-      // asserts the partition IN filter reaches the index scan); the
-      // probe-cell assignment is then evaluated twice on execution
-      scored(ivfProbeCells(probes, vecCol, cents, nprobe))
   }
 
   /** Approximate top-k: LSH-bucketed candidate generation (union of the

@@ -563,48 +563,48 @@ object TextAnalysis {
     require(merges >= 1, "bpeTrain: merges >= 1")
     val spark = docs.sparkSession
     import spark.implicits._
-    val vocab0 = docs
-      .select(explode(tokens(lower(col(textCol)))).as("__w"))
-      .filter(col("__w") =!= "")
-      .groupBy("__w").agg(count(lit(1)).as("n"))
-      .select(
-        // RAW char split (graft.functions.charNgrams, not the
-        // normalizing wrapper above — symbols must never contain
-        // spaces, and digits/punctuation are legitimate BPE symbols)
-        concat(lit("  "),
-          array_join(
-            concat(graft.functions.charNgrams(col("__w"), 1),
-              array(lit("</w>"))), "  "),
-          lit("  ")).as("s"),
-        col("n"))
-      .cache()
-    var vocab = vocab0
-    val out = Iterator.from(1).map { rank =>
-      val syms = split(trim(col("s")), "  ")
-      val top = vocab
-        .select(explode(zip_with(syms,
-          slice(syms, lit(2), greatest(size(syms) - 1, lit(0))),
-          (a, b) => struct(a.as("lft"), b.as("rgt")))).as("__p"), col("n"))
-        // zip_with pads the shorter side with null → drop the
-        // (last-symbol, null) tail element
-        .filter(col("__p.rgt").isNotNull)
-        .groupBy(col("__p.lft").as("lft"), col("__p.rgt").as("rgt"))
-        .agg(sum(col("n")).as("c"))
-        .orderBy(col("c").desc, col("lft"), col("rgt"))
-        .limit(1)
-        .as[(String, String, Long)]
-        // driver-sized by construction: limit(1) best merge pair
-        .collect()
-        .headOption // vocab fully collapsed → no pairs left
-      top.map { case (l, r, c) =>
-        vocab = vocab.withColumn("s",
-          call_function("replace", col("s"),
-            lit(s" $l  $r "), lit(s" $l$r ")))
-        (rank.toLong, l, r, c)
-      }
-    }.take(merges).takeWhile(_.isDefined).flatten.toSeq
-    vocab0.unpersist()
-    out.toDF("merge_rank", "lft", "rgt", "n")
+    Fixpoint.scoped { blocks =>
+      val vocab0 = blocks.stageColumnar(docs
+        .select(explode(tokens(lower(col(textCol)))).as("__w"))
+        .filter(col("__w") =!= "")
+        .groupBy("__w").agg(count(lit(1)).as("n"))
+        .select(
+          // RAW char split (graft.functions.charNgrams, not the
+          // normalizing wrapper above — symbols must never contain
+          // spaces, and digits/punctuation are legitimate BPE symbols)
+          concat(lit("  "),
+            array_join(
+              concat(graft.functions.charNgrams(col("__w"), 1),
+                array(lit("</w>"))), "  "),
+            lit("  ")).as("s"),
+          col("n")))
+      var vocab = vocab0
+      val out = Iterator.from(1).map { rank =>
+        val syms = split(trim(col("s")), "  ")
+        val top = vocab
+          .select(explode(zip_with(syms,
+            slice(syms, lit(2), greatest(size(syms) - 1, lit(0))),
+            (a, b) => struct(a.as("lft"), b.as("rgt")))).as("__p"), col("n"))
+          // zip_with pads the shorter side with null → drop the
+          // (last-symbol, null) tail element
+          .filter(col("__p.rgt").isNotNull)
+          .groupBy(col("__p.lft").as("lft"), col("__p.rgt").as("rgt"))
+          .agg(sum(col("n")).as("c"))
+          .orderBy(col("c").desc, col("lft"), col("rgt"))
+          .limit(1)
+          .as[(String, String, Long)]
+          // driver-sized by construction: limit(1) best merge pair
+          .collect()
+          .headOption // vocab fully collapsed → no pairs left
+        top.map { case (l, r, c) =>
+          vocab = vocab.withColumn("s",
+            call_function("replace", col("s"),
+              lit(s" $l  $r "), lit(s" $l$r ")))
+          (rank.toLong, l, r, c)
+        }
+      }.take(merges).takeWhile(_.isDefined).flatten.toSeq
+      out.toDF("merge_rank", "lft", "rgt", "n")
+    }
   }
 
   /** Inverted-index build: per token, the document frequency and a

@@ -3,6 +3,7 @@ package graft.qc
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.pipeline.Fixpoint
 
 /** Event-sourced flag mutations — SURVEY §7.3, the scale answer to the
   * reference's by-reference table mutation (qc_window_app.R:362 etc.).
@@ -78,24 +79,24 @@ object QcFlagLog {
     * row's applicable events in `seq` order, guards evaluated against
     * the running state. Rows without events pass through untouched.
     *
-    * `broadcastEventLimit` bounds the broadcast hints: point/window
-    * event tables broadcast only while the variable's event count for
-    * that scope stays under it — a year-long interactive history (or a
-    * replayed audit log) can exceed broadcast limits, and an
-    * unconditional hint would OOM the driver instead of degrading to a
-    * shuffle join. Above the limit the join runs un-hinted
-    * (sort-merge/shuffled-hash on rowid/win_id — the scale-safe
-    * shape); results are identical. (Compacting the folded state into
-    * a new base — [[QcSession.compact]] — is the complementary lever
-    * when the log itself gets unwieldy; the fallback makes the fold
-    * correct either way.) */
+    * The point/window event tables broadcast only while
+    * [[graft.pipeline.Fixpoint.broadcastIfFits]] admits the variable's
+    * event count for that scope under the session's broadcast and
+    * driver limits — a year-long interactive history (or a replayed
+    * audit log) can exceed them, and an unconditional hint would OOM
+    * the driver instead of degrading to a shuffle join. Past the gate
+    * the join runs un-hinted (sort-merge/shuffled-hash on
+    * rowid/win_id — the scale-safe shape); results are identical.
+    * (Compacting the folded state into a new base —
+    * [[QcSession.compact]] — is the complementary lever when the log
+    * itself gets unwieldy; the fallback makes the fold correct either
+    * way.) */
   def fold(
       base: DataFrame,
       log: DataFrame,
       idCol: String = QcWindows.RowIdCol,
       winIdCol: String = QcWindows.WinIdCol,
-      suffix: String = AutoSuffix,
-      broadcastEventLimit: Long = 5L * 1000 * 1000): DataFrame = {
+      suffix: String = AutoSuffix): DataFrame = {
     val sfx = resolveSuffix(base, suffix)
     // One tiny aggregate gives the variables to fold (its keys, sorted
     // so the fold order is deterministic) and decides every broadcast
@@ -112,10 +113,9 @@ object QcFlagLog {
       val f = flagCol(v, sfx)
       require(df.schema.fieldNames.contains(f), s"fold: no flag column $f")
       val lv = log.filter(col("variable") === v)
+      // a grouped event table has at most one row per event
       def hinted(t: DataFrame, scope: Int): DataFrame =
-        if (eventCounts.getOrElse((v, scope), 0L) <= broadcastEventLimit)
-          broadcast(t)
-        else t
+        Fixpoint.broadcastIfFits(t, eventCounts.getOrElse((v, scope), 0L))
 
       val ev = struct(col("seq"), col("new_flag"), col("guard"), col("win_id"))
       val pt = lv.filter(col("scope") === ScopePoint)

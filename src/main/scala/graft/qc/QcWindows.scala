@@ -3,8 +3,8 @@ package graft.qc
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.types.{DoubleType, LongType}
+import graft.functions.{BucketIndexExpr, bucketIndex}
 
 /** Tumbling-window partitioning + window catalog — the Spark equivalent
   * of qctimeseries `make_windows` (R/qc_window_app.R:64-79,
@@ -82,8 +82,8 @@ object QcWindows {
     val oc = orderCols.map(qcol)
     val nParts = math.max(1, df.sparkSession.sessionState.conf.numShufflePartitions)
     // 2× the partition count: enough buckets that hashing buckets onto
-    // partitions stays balanced, few enough that the boundary
-    // when-chain stays a cheap codegen'd per-row expression
+    // partitions stays balanced, few enough that the per-row boundary
+    // search stays short and the offsets catalog small
     val nBuckets = 2 * nParts
     val lead = oc.head
     // Boundary literals, computed ONCE on the driver (they become plan
@@ -107,19 +107,20 @@ object QcWindows {
     //    that regime — map-side partial agg). Unlike df.sample/rand,
     //    the residue predicate re-evaluates to the same rows on any
     //    executor or retry.
-    val rangeable = df.select(lead.as("__rid_k")).schema.head.dataType match {
+    val leadType = df.select(lead.as("__rid_k")).schema.head.dataType
+    val rangeable = leadType match {
       case _: org.apache.spark.sql.types.NumericType => true
       case org.apache.spark.sql.types.TimestampType => true
       case _ => false
     }
-    val (keyExpr, bounds): (Column, Seq[Any]) =
+    val (keyExpr, bounds): (Column, IndexedSeq[Any]) =
       if (rangeable) {
         val probs = (1 until nBuckets).map(_.toDouble / nBuckets)
         val q = df.select(percentile_approx(lead.cast("double"),
             lit(probs.toArray), lit(10000)).as("__rid_q"))
           .head.getAs[scala.collection.Seq[Double]]("__rid_q")
         (lead.cast("double"),
-          Option(q).fold(Seq.empty[Any])(_.distinct.sorted(Ordering.Double.TotalOrdering).toSeq))
+          BucketIndexExpr.sorted(Option(q).fold(Seq.empty[Any])(_.toSeq), DoubleType).distinct)
       } else {
         val target = nBuckets * 100L
         val n = df.count()
@@ -148,35 +149,20 @@ object QcWindows {
           if (k > 1 && hashed.length < nBuckets)
             keysOf(df.select(lead.as("__rid_k")))
           else hashed
-        // Spark's own order: strings compare as UTF-8 bytes, which
-        // String.compareTo (UTF-16 units) does not match
-        val sorted = sampleKeys.sortWith {
-          case (a: String, b: String) =>
-            UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0
-          case (a, b) => a.asInstanceOf[Comparable[Any]].compareTo(b) < 0
-        }
+        // Spark's own order (strings compare as UTF-8 bytes, which
+        // String.compareTo's UTF-16 units do not match)
+        val sorted = BucketIndexExpr.sorted(sampleKeys.toSeq, leadType)
         (lead,
-          if (sorted.isEmpty) Nil
+          if (sorted.isEmpty) IndexedSeq.empty
           else (1 until nBuckets)
             .map(j => sorted(((j.toLong * sorted.length) / nBuckets).toInt))
             .distinct)
       }
-    // bucket = how many boundaries sit strictly below the key, found by
-    // binary search over the ascending boundaries: a balanced when()
-    // tree of depth ⌈log2(bounds + 1)⌉ (a flat sum of 2 × partitions
-    // terms overflowed the JVM stack converting the Column at
-    // Spark's default 200 partitions). A null key fails every test and
-    // falls to bucket 0, matching asc nulls-first sort order.
-    val bs = bounds.toIndexedSeq
-    def below(lo: Int, hi: Int): Column =
-      if (lo == hi) lit(lo)
-      else {
-        val mid = (lo + hi) / 2
-        when(keyExpr > lit(bs(mid)), below(mid + 1, hi))
-          .otherwise(below(lo, mid))
-      }
-    val bucket = below(0, bs.size)
-    val bucketed = df.withColumn("__rid_b", bucket)
+    // bucket = how many boundaries sit strictly below the key, by binary
+    // search over the ascending boundaries in one native expression
+    // whose generated code does not grow with the boundary count. A
+    // null key falls to bucket 0, matching asc nulls-first sort order.
+    val bucketed = df.withColumn("__rid_b", bucketIndex(keyExpr, bounds))
     // per-bucket counts and running offsets: catalog-sized (nBuckets
     // rows) — the single-partition window here is over the catalog,
     // never the data. Counts re-execute the scan, but bucket

@@ -17,25 +17,6 @@ class PlanShapeSpec extends SparkSpec {
     SparkEntry.queries(name)(spark, dir).queryExecution
       .explainString(FormattedMode)
 
-  /** [[plan]] plus the physical plans of the queries the call ran
-    * while building its result: an eager operator's joins run there. */
-  private def plansRun(name: String): String = {
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      def onSuccess(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
-        plans.add(qe.executedPlan.toString)
-      def onFailure(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      val p = plan(name)
-      org.apache.spark.sql.GraftListenerBridge.waitUntilEmpty(spark.sparkContext)
-      (p +: plans.toArray(Array.empty[String]).toSeq).mkString("\n")
-    } finally spark.listenerManager.unregister(listener)
-  }
-
   private def physical(name: String): String =
     SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString
 
@@ -193,39 +174,8 @@ class PlanShapeSpec extends SparkSpec {
       s"never a range self-join:\n$phys")
   }
 
-  test("bloom decontamination: confirm join broadcasts, no cross join") {
-    // the final LeftAnti (corpus vs bad ids) deliberately has no
-    // broadcast hint — AQE promotes it at runtime (see decontaminate's
-    // scaladoc) — so only the gram-level joins are constrained here.
-    // eager = false: the managed path checkpoints the bad-id set,
-    // which would hide the confirm join from the visible plan
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-      .select(org.apache.spark.sql.functions.col("doc_id"),
-        org.apache.spark.sql.functions.col("text"))
-    val bench = docs.filter(
-      org.apache.spark.sql.functions.pmod(
-        org.apache.spark.sql.functions.col("doc_id"),
-        org.apache.spark.sql.functions.lit(50)) === 0)
-    val corpus = docs.filter(
-      org.apache.spark.sql.functions.pmod(
-        org.apache.spark.sql.functions.col("doc_id"),
-        org.apache.spark.sql.functions.lit(50)) =!= 0)
-    val p = graft.pipeline.Curation
-      .decontaminateBloom(corpus, bench, "doc_id", "text", n = 5,
-        eager = false)
-      .queryExecution.explainString(FormattedMode)
-    assert(p.contains("BroadcastHashJoin"),
-      s"confirm join must broadcast the bench grams:\n$p")
-    assert(!p.contains("CartesianProduct"),
-      s"never an all-pairs stage:\n$p")
-    val smj = "SortMergeJoin (LeftAnti|Inner|LeftOuter)".r
-      .findAllMatchIn(p).map(_.group(1)).toSeq
-    assert(smj.forall(_ == "LeftAnti"),
-      s"only the AQE-promotable anti-join may sort-merge:\n$p")
-  }
-
   test("prefix jaccard join: candidates from key equi-joins, never a cross join") {
-    val p = plansRun("dedup_prefix")
+    val p = plansRun(SparkEntry.queries("dedup_prefix")(spark, dir))
     assert(p.contains("Join"), s"the call's candidate join must show:\n$p")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"prefix filtering must never go quadratic:\n$p")
@@ -318,7 +268,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("prefix join: candidate generation is token/group-keyed, never cartesian") {
-    val p = plansRun("dedup_prefix")
+    val p = plansRun(SparkEntry.queries("dedup_prefix")(spark, dir))
     assert(p.contains("Join"), s"the call's candidate join must show:\n$p")
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"),

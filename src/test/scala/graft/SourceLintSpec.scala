@@ -54,19 +54,34 @@ class SourceLintSpec extends AnyFunSuite {
       s"persist() without unpersist():\n${offenders.map(_.getPath).mkString("\n")}")
   }
 
+  /** `file:line` of every pipeline line outside Fixpoint.scala that
+    * contains one of `tokens`. */
+  private def pipelineOutsideFixpoint(tokens: String*): Seq[String] =
+    scalaFiles(new java.io.File(mainRoot, "graft/pipeline"))
+      .filter(_.getName != "Fixpoint.scala")
+      .flatMap { f =>
+        scala.io.Source.fromFile(f, "UTF-8").getLines().zipWithIndex.collect {
+          case (l, i) if tokens.exists(l.contains) => s"${f.getPath}:${i + 1}"
+        }
+      }
+
   test("localCheckpoint is called only by the pipeline's Fixpoint module") {
     // row-block staging has one owner, which also owns its release:
     // an eager cut anywhere else in the pipeline package is a block
     // lifecycle nobody releases deterministically
-    val offenders = scalaFiles(new java.io.File(mainRoot, "graft/pipeline"))
-      .filter(_.getName != "Fixpoint.scala")
-      .flatMap { f =>
-        scala.io.Source.fromFile(f, "UTF-8").getLines().zipWithIndex.collect {
-          case (l, i) if l.contains("localCheckpoint(") => s"${f.getPath}:${i + 1}"
-        }
-      }
+    val offenders = pipelineOutsideFixpoint("localCheckpoint(")
     assert(offenders.isEmpty,
       s"localCheckpoint outside Fixpoint — stage through it:\n" +
+        offenders.mkString("\n"))
+  }
+
+  test("the pipeline caches and releases tables only in Fixpoint") {
+    // a hand-rolled persist/unpersist pair leaks its cache entry when
+    // the call throws between them; Fixpoint.scoped releases a
+    // columnar stage on return and on failure alike
+    val offenders = pipelineOutsideFixpoint(".persist(", ".cache()", ".unpersist(")
+    assert(offenders.isEmpty,
+      s"cache outside Fixpoint — stage through Blocks.stageColumnar:\n" +
         offenders.mkString("\n"))
   }
 

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FormattedMode
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM, forked by sbt). */
@@ -15,6 +16,26 @@ trait SparkSpec extends AnyFunSuite {
       val a = body
       (a, spark.sparkContext.statusTracker.getJobIdsForGroup(group).length)
     } finally spark.sparkContext.clearJobGroup()
+  }
+
+  /** The formatted plan of `build`'s result plus the physical plans of
+    * the queries run while building it: an eager operator's joins run
+    * there. */
+  def plansRun(build: => DataFrame): String = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val p = build.queryExecution.explainString(FormattedMode)
+      org.apache.spark.sql.GraftListenerBridge.waitUntilEmpty(spark.sparkContext)
+      (p +: plans.toArray(Array.empty[String]).toSeq).mkString("\n")
+    } finally spark.listenerManager.unregister(listener)
   }
 }
 

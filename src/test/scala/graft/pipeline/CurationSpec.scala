@@ -43,17 +43,6 @@ class CurationSpec extends SparkSpec {
     assert(kept.toSeq == Seq(2L, 4L))
   }
 
-  test("decontaminateBloom equals the exact path at any fpp") {
-    // tight and absurdly loose filters: the exact confirm join must
-    // erase every bloom false positive, so output never varies
-    for (fpp <- Seq(0.01, 0.5)) {
-      val kept = Curation
-        .decontaminateBloom(corpus, bench, "doc_id", "text", n = 5, fpp = fpp)
-        .select("doc_id").as[Long].collect().sorted
-      assert(kept.toSeq == Seq(2L, 4L), s"fpp=$fpp")
-    }
-  }
-
   // ----------------------------------------------------- split assignment
 
   private def keyed = (0L until 400L).toDF("id")

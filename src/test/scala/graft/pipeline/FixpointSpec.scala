@@ -89,4 +89,39 @@ class FixpointSpec extends SparkSpec {
       Graph.personalizedPageRank(loop, "src", "dst", seed.limit(0), "node", 3)
     }
   }
+
+  test("a call that fails mid-way leaves no cache entry or staged RDD behind") {
+    import org.apache.spark.sql.functions._
+    def entries(): Int = org.apache.spark.sql.GraftCacheProbe.entries(spark)
+    def persisted(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    // a column that throws when a job evaluates it: over spark.range,
+    // since the optimizer folds a local relation's projections (and
+    // throws) while planning, before anything is staged
+    def boom(t: String) = raise_error(lit("boom")).cast(t)
+    val edges = spark.range(20).select(col("id").as("src"), boom("long").as("dst"))
+    val path = java.nio.file.Files.createTempDirectory("ivf_leak").toString
+    Similarity.ivfWriteIndex(
+      spark.range(20).select(col("id").as("vec_id"),
+        array(col("id").cast("double"), lit(1.0)).as("embedding")),
+      "vec_id", "embedding", path, nlist = 2)
+    val calls = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "connectedComponentsStar" -> (() => Graph.connectedComponentsStar(edges, "src", "dst")),
+      "bpeTrain" -> (() => TextAnalysis.bpeTrain(
+        spark.range(20).select(boom("string").as("text")), "text", merges = 2)),
+      "personalizedPageRank" -> (() => Graph.personalizedPageRank(
+        edges, "src", "dst", Seq(0L).toDF("node"), "node", iters = 3)),
+      "ivfProbeIndex" -> (() => Similarity.ivfProbeIndex(spark, path,
+        spark.range(3).select(col("id").as("vec_id"), boom("array<double>").as("embedding")),
+        "vec_id", "embedding", k = 2, nprobe = 1)))
+    for ((name, call) <- calls) {
+      val cached = entries()
+      val before = persisted()
+      val e = intercept[Exception](call().collect())
+      assert(e.getMessage.contains("boom"), s"$name failed otherwise: $e")
+      assert(entries() == cached, s"$name left a cache entry")
+      // unpersist(blocking = false) drops the registration at once
+      val left = persisted() -- before
+      assert(left.isEmpty, s"$name left ${left.size} persistent RDDs")
+    }
+  }
 }

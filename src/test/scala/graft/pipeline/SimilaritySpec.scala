@@ -128,14 +128,10 @@ class SimilaritySpec extends SparkSpec {
       .as[(Long, Int, Long)].collect().toSet
     assert(pruned == mem, "the layout changes the plan, not the answer")
     // the scan must actually prune: cell dirs beyond the probed set
-    // exist on disk but are excluded by the partition filter (eager =
-    // false: the managed path truncates its visible plan to the
-    // checkpoint scan)
-    val plan = Similarity
-      .ivfProbeIndex(spark, path, probes, "vec_id", "embedding", 10,
-        nprobe = 4, eager = false)
-      .queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+    // exist on disk but are excluded by the partition filter (read from
+    // the plans the call ran: its result is a checkpoint scan)
+    val plan = plansRun(Similarity
+      .ivfProbeIndex(spark, path, probes, "vec_id", "embedding", 10, nprobe = 4))
     assert(plan.contains("PartitionFilters: [cell#") ||
       plan.linesIterator.exists(l => l.contains("PartitionFilters") &&
         l.contains("cell")),

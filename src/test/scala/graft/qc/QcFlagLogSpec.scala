@@ -75,7 +75,7 @@ class QcFlagLogSpec extends SparkSpec {
 
   test("over-limit point-event history folds through a shuffle join, same result") {
     // a replayed year-long interactive history can exceed broadcast
-    // limits: above broadcastEventLimit the rowid join must run
+    // limits: past the broadcast gate the rowid join must run
     // UN-hinted (no BroadcastHashJoin on the point-event side) and
     // still produce the identical fold
     val n = 60
@@ -87,32 +87,27 @@ class QcFlagLogSpec extends SparkSpec {
           (n + i + 1L, "v", ScopePoint, Some(i.toLong), Option.empty[Long],
             FlagSchema.ManualFlag, GuardNotOrigNA))
     val log = toLog(spark, events)
-    val hintedResult = QcFlagLog.fold(base, log)
-      .orderBy(FlagSchema.qcol(".rowid")).select("v_qcflag").as[Int].collect().toSeq
-    // -1 puts every scope over the limit (even empty ones, count 0)
-    val fallback = QcFlagLog.fold(base, log, broadcastEventLimit = -1L)
-    val fallbackResult = fallback
-      .orderBy(FlagSchema.qcol(".rowid")).select("v_qcflag").as[Int].collect().toSeq
-    assert(hintedResult == fallbackResult,
-      "join strategy must not change the folded flags")
-    // plan shape: with the optimizer's own size-based broadcast choice
-    // disabled, any BroadcastHashJoin left can only come from a HINT —
-    // over the limit the hint must be gone (the planner/AQE may still
-    // broadcast from observed sizes in normal operation, which is the
-    // desired degrade-don't-OOM behavior; the hazard was the
-    // unconditional hint that size stats cannot override)
+    def flags(df: org.apache.spark.sql.DataFrame): Seq[Int] =
+      df.orderBy(FlagSchema.qcol(".rowid")).select("v_qcflag").as[Int].collect().toSeq
+    val hinted = QcFlagLog.fold(base, log)
+    assert(hinted.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"),
+      "the fold under the gate should keep the broadcast hint")
+    val hintedResult = flags(hinted)
+    // with broadcast joins disabled every scope is past the gate, and
+    // any BroadcastHashJoin left could only come from a hint (the
+    // planner/AQE may still broadcast from observed sizes in normal
+    // operation, which is the desired degrade-don't-OOM behavior; the
+    // hazard is an unconditional hint that size stats cannot override)
     val key = "spark.sql.autoBroadcastJoinThreshold"
     val prev = spark.conf.get(key)
     try {
       spark.conf.set(key, "-1")
-      val unhinted = QcFlagLog.fold(base, log, broadcastEventLimit = -1L)
-        .queryExecution.executedPlan.toString
+      val fallback = QcFlagLog.fold(base, log)
+      val unhinted = fallback.queryExecution.executedPlan.toString
       assert(!unhinted.contains("BroadcastHashJoin"),
-        s"over-limit fold must not hint event-table broadcasts:\n$unhinted")
-      val hinted = QcFlagLog.fold(base, log)
-        .queryExecution.executedPlan.toString
-      assert(hinted.contains("BroadcastHashJoin"),
-        "under-limit fold should keep the broadcast hint")
+        s"a fold past the gate must not hint event-table broadcasts:\n$unhinted")
+      assert(flags(fallback) == hintedResult,
+        "join strategy must not change the folded flags")
     } finally spark.conf.set(key, prev)
   }
 

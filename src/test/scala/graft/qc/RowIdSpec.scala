@@ -129,18 +129,25 @@ class RowIdSpec extends SparkSpec {
   test("wide shuffle widths (200 = Spark's default, and 1000): the same " +
       "ids as at 4 partitions") {
     // 2 × partitions buckets: the bucket expression over ~400 and ~2000
-    // boundaries must stay shallow enough to convert and plan
+    // boundaries must convert, plan and compile; without the codegen
+    // fallback a generated method past the JVM's 64 KB limit throws
+    // instead of silently running interpreted
     val ev = spark.range(10000).select(
       pmod(xxhash64(col("id")), lit(1000000L)).as("k"), col("id").as("event_id"))
     def idsAt(parts: Int): Map[Long, Long] = withPartitions(parts) {
       QcWindows.withRowId(ev, Seq("k", "event_id"), idCol = "rid")
         .select(col("event_id"), col("rid")).as[(Long, Long)].collect().toMap
     }
-    val at4 = idsAt(4)
-    assert(at4.values.toSeq.sorted == (0L until at4.size.toLong))
-    Seq(200, 1000).foreach { p =>
-      assert(idsAt(p) == at4, s"ids at $p shuffle partitions differ from 4")
-    }
+    val key = "spark.sql.codegen.fallback"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try {
+      val at4 = idsAt(4)
+      assert(at4.values.toSeq.sorted == (0L until at4.size.toLong))
+      Seq(200, 1000).foreach { p =>
+        assert(idsAt(p) == at4, s"ids at $p shuffle partitions differ from 4")
+      }
+    } finally spark.conf.set(key, prev)
   }
 
   test("QcSession.open at Spark's default 200 shuffle partitions opens " +
