@@ -411,6 +411,38 @@ object Stress {
           pmod(xxhash64(col("id")), lit(1000000000L)).as("k"),
           col("id").as("event_id")), Seq("k", "event_id")))
       }
+      // The QC session's save (QcSession.compact) folds every pending
+      // action in one projection: ten times the actions on one table
+      // should cost far less than ten times the time (a per-decade
+      // ratio well under 1; 0.20 on 4 cores), and ten times the rows
+      // about ten times (near 1; a per-row cost of the interpreted fold
+      // would show above it). The qc_review shape: a 1-minute series in daily windows,
+      // each action brushing one point of its window, flagging it and
+      // approving the rest. Opened tables are reused across reps, so
+      // the timed reps pay the actions and the save only.
+      val sessions = scala.collection.mutable.Map.empty[Long, graft.qc.QcSession]
+      def opened(n: Long): graft.qc.QcSession = sessions.getOrElseUpdate(n, {
+        val series = spark.range(n).select(col("id").as("sample_id"),
+          timestamp_seconds(lit(1700000000L) + col("id") * 60).as("ts"),
+          sin(col("id") / 100.0).as("value"))
+        // compacted once, so the shared base is a checkpoint that a
+        // later save does not release
+        graft.qc.QcSession.open(graft.qc.QcFlags.addFlags(series, Seq("value")),
+          "value", "ts", winHrs = 24, tiebreakers = Seq("sample_id")).compact()
+      })
+      def saved(n: Long, actions: Long): Long = {
+        val s0 = opened(n)
+        val perWindow = 1440L
+        (0L until actions).foldLeft(s0) { (s, i) =>
+          val k = i % s0.windowCount
+          s.goto(k).flagAndNext(Seq(k * perWindow + (i / s0.windowCount) % perWindow))
+        }.compact().windowCount
+      }
+      decade("qc_session_compact_actions", "actions", 100L, 1000L,
+          warm = Seq(100L, 1000L))(a => saved(57600L, a))
+      decade("qc_session_compact_rows", "rows", 1000000L, 10000000L,
+          warm = Seq(1000000L, 10000000L))(n => saved(n, 25L))
+      sessions.clear()
       // 100× CORPUS queries — after the cc drift control: size streaming
       // state partitions to the 100× volume, the way a deployment at
       // that volume would (see drainToTable's doc: the default 4 is a

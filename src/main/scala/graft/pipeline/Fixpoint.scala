@@ -78,8 +78,11 @@ private[graft] object Fixpoint {
       val name = s"graft_fixpoint_${observations.incrementAndGet()}"
       val run =
         if (metrics.isEmpty) df else df.observe(name, metrics.head, metrics.tail: _*)
-      val staged = materialize(run)
-      owned ::= Staged(staged, columnar = false)
+      // registered before it fills, so a failing job still leaves the
+      // cut to the call's release; counting the backing RDD fills it in
+      // the one job an eager checkpoint runs
+      val staged = stageLazy(run)
+      backing(staged).fold(staged.count())(_.count())
       (staged,
         if (metrics.isEmpty) Row.empty else run.queryExecution.observedMetrics(name))
     }
@@ -232,12 +235,13 @@ private[graft] object Fixpoint {
     * Without the hint a state table descending from checkpoint leaves
     * has no usable size statistics, so Spark sort-merge-joins it and
     * re-exchanges the edge side every round. */
-  def broadcastIfFits(t: DataFrame, rows: Long): DataFrame = {
-    val s = t.sparkSession
-    if (broadcastFits(rows, t.schema,
-        !s.conf.get("spark.sql.autoBroadcastJoinThreshold").trim.startsWith("-"),
-        maxResultSize(s)))
-      broadcast(t)
-    else t
-  }
+  def broadcastIfFits(t: DataFrame, rows: Long): DataFrame =
+    if (broadcastAllowed(t.sparkSession, rows, t.schema)) broadcast(t) else t
+
+  /** [[broadcastFits]] for `rows` rows of `schema` under `s`'s
+    * configuration. */
+  def broadcastAllowed(s: SparkSession, rows: Long, schema: StructType): Boolean =
+    broadcastFits(rows, schema,
+      !s.conf.get("spark.sql.autoBroadcastJoinThreshold").trim.startsWith("-"),
+      maxResultSize(s))
 }

@@ -1,6 +1,9 @@
 package graft.qc
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.pipeline.Fixpoint
@@ -144,16 +147,76 @@ object QcFlagLog {
       val missing = QcFlags.isMissing(df, v)
       // without a window column, events tied to a window reach no row
       val rowWin = if (hasWin) qcol(winIdCol) else lit(null).cast(LongType)
-      val folded = aggregate(
-        events,
-        qcol(f),
-        (acc, e) =>
-          when((e("win_id").isNull || e("win_id") === rowWin) &&
-            Guards.map(g => e("guard") === g && admits(g, acc, missing)).reduce(_ || _),
-            e("new_flag")).otherwise(acc))
+      val folded = aggregate(events, qcol(f),
+        step(missing, e => e("win_id").isNull || e("win_id") === rowWin))
       joined
         .withColumn(f, folded.cast(IntegerType))
         .drop("__pe", "__we", "__ge")
     }
   }
+
+  /** The fold's row step, the one place its semantics are written: the
+    * running flag `acc` takes event `e`'s `new_flag` when `e` reaches
+    * the row and `e`'s guard admits `acc`. */
+  private def step(missing: Column, reaches: Column => Column)(acc: Column, e: Column): Column =
+    when(reaches(e) &&
+      Guards.map(g => e("guard") === g && admits(g, acc, missing)).reduce(_ || _),
+      e("new_flag")).otherwise(acc)
+
+  /** A driver-held literal's event: `rowid` null for a window or global
+    * event. The literal is already in `seq` order. */
+  private val LiteralEvent = StructType(Seq(
+    StructField("rowid", LongType, nullable = true),
+    StructField("new_flag", IntegerType, nullable = false),
+    StructField("guard", IntegerType, nullable = false)))
+
+  /** Whether [[foldLiteral]] may carry `events` as literals: they ship
+    * with every task, as a broadcast does, so their elements (each
+    * window's own events plus the global ones, and the global ones once
+    * more) take the broadcast gate. */
+  private[qc] def literalFits(spark: SparkSession, events: Seq[Event]): Boolean = {
+    val (global, own) = events.partition(_._5.isEmpty)
+    val elements = own.groupBy(_._5).values.map(_.size.toLong + global.size).sum + global.size
+    Fixpoint.broadcastAllowed(spark, elements, LiteralEvent)
+  }
+
+  /** [[fold]] for driver-held events of one variable `v`, as ONE
+    * projection whose plan and generated code do not grow with the
+    * number of events. Every event carries its dense window (global
+    * events none), as a session's do: each window's events, merged
+    * with the global ones and sorted by `seq`, sit in one array
+    * literal indexed by the dense window id; windows without events of
+    * their own read the global events from a second literal. A row of
+    * a window with no events, when there are no global ones, keeps its
+    * flag without entering the fold's lambda. Keeps `d`'s column order
+    * and the flag column's metadata; `d` itself when there are no
+    * events. */
+  private[qc] def foldLiteral(
+      d: DataFrame,
+      v: String,
+      events: Seq[Event],
+      suffix: String): DataFrame =
+    if (events.isEmpty) d
+    else {
+      val f = flagCol(v, resolveSuffix(d, suffix))
+      require(d.schema.fieldNames.contains(f), s"foldLiteral: no flag column $f")
+      val elem = ArrayType(LiteralEvent, containsNull = false)
+      def array(es: Seq[Event]): ArrayData = new GenericArrayData(es.sortBy(_._1).map(e =>
+        InternalRow(e._4.map(Long.box).orNull, e._6, e._7)).toArray[Any])
+      val (global, own) = events.partition(_._5.isEmpty)
+      val byWin = own.groupBy(_._5.get)
+      val windows = new Array[Any](if (byWin.isEmpty) 0 else (byWin.keys.max + 1).toInt)
+      byWin.foreach { case (k, es) => windows(k.toInt) = array(es ++ global) }
+      val lookup = try_element_at(
+        GraftColumnBridge.column(Literal(new GenericArrayData(windows),
+          ArrayType(elem, containsNull = true))),
+        qcol(QcWindows.WinDenseCol).cast(IntegerType) + 1)
+      val evs =
+        if (global.isEmpty) lookup
+        else coalesce(lookup, GraftColumnBridge.column(Literal(array(global), elem)))
+      val rowId = qcol(QcWindows.RowIdCol)
+      val folded = when(evs.isNull, qcol(f)).otherwise(aggregate(evs, qcol(f),
+        step(QcFlags.isMissing(d, v), e => e("rowid").isNull || e("rowid") === rowId)))
+      keepMeta(d, d.withColumn(f, folded.cast(IntegerType)), f)
+    }
 }

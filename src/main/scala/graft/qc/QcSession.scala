@@ -5,7 +5,6 @@ import scala.collection.immutable.ArraySeq
 import graft.pipeline.Fixpoint
 import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 /** The qc_window_app server loop minus the pixels
@@ -24,10 +23,15 @@ import org.apache.spark.storage.StorageLevel
   * [[compact]], or the re-windowed checkpoint after [[rewindow]]) plus a
   * driver-side `pending` list of actions as data, each tagged with the
   * dense window it was applied in, or global (M8 `resetAll`). [[df]]
-  * folds every pending action onto `base`, one `when` projection per
-  * action; [[render]] folds onto the current window's rows only that
-  * window's actions and the global ones, so a render costs the same at
-  * every step however long the session runs. The two agree because
+  * folds every pending action onto `base` in ONE projection
+  * ([[QcFlagLog.foldLiteral]]): the actions' events ride as literals
+  * indexed by dense window, so neither its plan nor its generated code
+  * grows with the session, and a save costs rows, not plan depth. Past
+  * the broadcast gate the events fold through the log's joins
+  * ([[QcFlagLog.fold]]) instead. [[render]] folds onto the current
+  * window's rows only that window's events and the global ones, so a
+  * render costs the same at every step however long the session runs.
+  * The two agree because
   * every action is row-local and every non-global action is confined
   * to its window: a brush selects only the plotted points of the
   * current window, as in the reference (`brushed_ids`,
@@ -39,7 +43,7 @@ import org.apache.spark.storage.StorageLevel
   * whole `base` fits the driver budget ([[QcSession.driverBudget]]), the
   * first render collects it once, grouped by dense window, and every
   * render after it folds the actions onto its window's rows as a
-  * driver-local relation, which the optimizer evaluates in place — no
+  * driver-local relation, which the optimizer evaluates in place: no
   * Spark job, wherever the cursor goes. The memo remembers which
   * `base` it holds and fetches again for a session with another one
   * (after [[compact]] or [[rewindow]]). A `base` over the budget
@@ -69,20 +73,29 @@ final case class QcSession(
   import QcActions.{Approve, ApproveUnflagged, Flag, Unflag, Write}
   import QcSession.Action
 
-  private def foldOnto(d: DataFrame, actions: Seq[Action]): DataFrame =
-    actions.foldLeft(d)((acc, a) => a.applyTo(acc, y, suffix))
-
-  /** The whole table with every pending action applied. */
-  lazy val df: DataFrame = foldOnto(base, pending)
+  /** The whole table with every pending action applied: one projection
+    * with the events as literals, or the log's join fold when they are
+    * past the broadcast gate. */
+  lazy val df: DataFrame = {
+    val events = pending.flatMap(_.events(y))
+    if (events.isEmpty || QcFlagLog.literalFits(base.sparkSession, events))
+      QcFlagLog.foldLiteral(base, y, events, suffix)
+    else {
+      val f = FlagSchema.flagCol(y, suffix)
+      val folded = QcFlagLog.fold(base, log, winIdCol = QcWindows.WinDenseCol, suffix = suffix)
+      FlagSchema.keepMeta(base, folded.select(base.columns.toSeq.map(FlagSchema.qcol): _*), f)
+    }
+  }
 
   /** Rows of the current window (navigation slice): exactly
-    * `df.filter(win_dense === cursor)`, folding only the actions that
+    * `df.filter(win_dense === cursor)`, folding only the events that
     * can touch this window onto its rows from the working window (or
     * from `base` when the table is over the driver budget). */
   def render(hideBadRows: Boolean = false): DataFrame = {
     val rows = working.rows(this).fold(QcWindows.slice(base, cursor))(
       GraftColumnBridge.localRelation(base.sparkSession, base.schema, _))
-    val slice = foldOnto(rows, pending.filter(_.window.forall(_ == cursor)))
+    val slice = QcFlagLog.foldLiteral(rows, y,
+      pending.filter(_.window.forall(_ == cursor)).flatMap(_.events(y)), suffix)
     if (hideBadRows) QcPlotFeed.hideBad(slice, y, suffix) else slice
   }
 
@@ -220,14 +233,6 @@ object QcSession {
       write: QcActions.Write, approveRest: Boolean = false) {
 
     def seqs: Int = if (approveRest) 2 else 1
-
-    /** The action as one `when` projection (M7's two writes chained). */
-    def applyTo(d: DataFrame, y: String, suffix: String): DataFrame = {
-      val win = window.fold(lit(true))(k => col(QcWindows.WinDenseCol) === k)
-      val sel = ids.fold(win)(QcPlotFeed.selScope(_) && win)
-      val rest = if (approveRest) Seq(win -> QcActions.ApproveUnflagged) else Nil
-      QcActions.setFlags(d, y, suffix)(((sel, write) +: rest): _*)
-    }
 
     /** The action as [[QcFlagLog]] events. */
     def events(y: String): Seq[QcFlagLog.Event] = {

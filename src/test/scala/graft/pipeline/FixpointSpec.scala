@@ -105,6 +105,8 @@ class FixpointSpec extends SparkSpec {
         array(col("id").cast("double"), lit(1.0)).as("embedding")),
       "vec_id", "embedding", path, nlist = 2)
     val calls = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "Blocks.stage" -> (() => Fixpoint.scoped(_.stage(
+        spark.range(20).select(boom("long").as("x")))._1)),
       "connectedComponentsStar" -> (() => Graph.connectedComponentsStar(edges, "src", "dst")),
       "bpeTrain" -> (() => TextAnalysis.bpeTrain(
         spark.range(20).select(boom("string").as("text")), "text", merges = 2)),

@@ -414,4 +414,64 @@ class QcSessionSpec extends SparkSpec {
     assert(byRowId(c.render()) == before)
     assert(byRowId(c.next.render()) == byRowId(s.next.render()))
   }
+
+  test("a 1,000-step session folds in one projection, as the log replays it") {
+    val flagged = QcFlags.addFlags(mkSeries, Seq("temp"))
+    val s0 = QcSession.open(flagged, "temp", "DateTime", winHrs = 24.0)
+    val n = s0.windowCount
+    val byWin = idsByWindow(s0)
+    // step i brushes one point of window i mod n, a different one on
+    // each visit, and approves the window's rest
+    def brushed(i: Long): Long = {
+      val ids = byWin(i % n)
+      ids((i / n % ids.size).toInt)
+    }
+    val s = (0L until 1000L).foldLeft(s0)((x, i) => x.goto(i % n).flagAndNext(Seq(brushed(i))))
+    def projects(x: QcSession): Int =
+      x.df.queryExecution.optimizedPlan.collect { case p: Project => p }.size
+    assert(projects(s) == projects(s0.flagAndNext(Seq(brushed(0L)))),
+      "the fold's plan must not grow with the number of actions")
+
+    // the same script on the driver: a brush flags its point unless it
+    // is missing, then the window's unchecked, non-missing rest is
+    // approved
+    val missing = s0.df.filter(col("temp").isNull).select(FlagSchema.qcol(QcWindows.RowIdCol))
+      .as[Long].collect().toSet
+    val flags = scala.collection.mutable.Map.empty[Long, Int]
+    byWin.values.flatten.foreach(id =>
+      flags(id) = if (missing(id)) FlagSchema.OrigNA else FlagSchema.Unchecked)
+    for (i <- 0L until 1000L) {
+      val id = brushed(i)
+      if (flags(id) != FlagSchema.OrigNA) flags(id) = FlagSchema.ManualFlag
+      byWin(i % n).filter(flags(_) == FlagSchema.Unchecked)
+        .foreach(flags(_) = FlagSchema.Approved)
+    }
+    def flagsOf(df: DataFrame): Map[Long, Int] =
+      df.select(FlagSchema.qcol(QcWindows.RowIdCol), col("temp_qcflag")).as[(Long, Int)]
+        .collect().toMap
+    assert(flagsOf(s.df) == flags.toMap, "the fold differs from the script run on the driver")
+    val c = s.compact()
+    assert(byRowId(c.df) == byRowId(replay(s.base, s.log, s.df.columns)),
+      "the compacted table differs from the replayed log")
+    val done = s.done()
+    assert(done.columns.toSeq == flagged.columns.toSeq)
+    assert(done.schema("temp_qcflag").metadata == flagged.schema("temp_qcflag").metadata,
+      "the fold must keep the flag column's metadata")
+    assert(done.orderBy("DateTime").select("temp_qcflag").as[Int].collect().toSeq ==
+      byRowId(c.df).map(_.getAs[Int]("temp_qcflag")))
+
+    // past the broadcast gate the fold joins the log: the same rows,
+    // columns and metadata
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    try {
+      spark.conf.set(key, "-1")
+      val joined = s.goto(s.cursor).df
+      assert(joined.queryExecution.analyzed.collectFirst {
+        case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+      }.nonEmpty, "past the gate the fold joins the log")
+      assert(joined.schema == s.df.schema)
+      assert(byRowId(joined) == byRowId(s.df), "the join fold differs from the literal fold")
+    } finally spark.conf.set(key, prev)
+  }
 }
