@@ -360,7 +360,7 @@ object Stress {
       // MinHash-LSH — right after its control (this VM class drifts
       // 1.2–2× with uptime, so the retiming belongs at the front). The
       // banding bucket-join is exactly where a quadratic term would hide
-      // (a hot band bucket joins c² pairs); capBuckets bounds it by
+      // (a hot band bucket joins c² pairs); the flood cap bounds it by
       // construction, and this pins that claim at a decade. Corpus: a
       // constant 1000-word vocab (so the shingle space — and with it
       // bucket occupancy statistics — is scale-invariant) with a 1-in-10
@@ -383,7 +383,7 @@ object Stress {
           extra = { case ((_, pairsS), (_, pairsB)) =>
             // UNTIMED candidate-volume audit at both endpoints: the
             // verified-pair count alone cannot bound the banding join's
-            // work (false-positive candidates and capBuckets drops are
+            // work (false-positive candidates and flood-cap drops are
             // invisible to it)
             def cands(n: Long): Long = volumeSized(n) {
               val c = graft.pipeline.Dedup.minHashCandidatePairs(

@@ -14,7 +14,8 @@ import org.apache.spark.sql.functions._
   *    cross join; the only pairs materialized are same-bucket ones.
   *    Pathological buckets (e.g. millions of identical docs) are the
   *    skew case — AQE skew-join handles the join side, and
-  *    `maxBucket` caps runaway buckets explicitly.
+  *    `maxBucket` caps runaway buckets explicitly, in the one
+  *    candidate self-join every pair operator shares (`keyPairs`).
   */
 object Dedup {
 
@@ -612,30 +613,36 @@ object Dedup {
       .select(col(idCol), col("__bk.band").as("band"), col("__bk.bh").as("bh"))
   }
 
-  /** Drop degenerate (band, bh) buckets: a bucket of m rows yields
-    * m²/2 candidate pairs — at 100 TB a runaway bucket (identical-doc
-    * flood) is a job-killer. Identical rows belong to exact dedup. */
-  private def capBuckets(banded: DataFrame, maxBucket: Int): DataFrame =
-    banded
-      .withColumn("__bn", count(lit(1)).over(Window.partitionBy("band", "bh")))
+  /** The flood-capped key self-join behind every candidate-pair
+    * operator: drop each `keys` bucket held by more than `maxBucket`
+    * rows (a bucket of m rows mints m²/2 pairs — at 100 TB a runaway
+    * bucket, e.g. an identical-doc flood, is a job-killer; identical
+    * rows belong to exact dedup), equi-join the survivors on `keys`
+    * and keep `id_a < id_b`. Output: `keys`, `id_a`/`id_b` from
+    * `idCol`, and each `carry` column as `<c>_a`/`<c>_b` — one row
+    * per (bucket, pair), so a pair sharing several buckets repeats. */
+  private def keyPairs(
+      df: DataFrame, keys: Seq[String], idCol: String, maxBucket: Int,
+      carry: String*): DataFrame = {
+    val capped = df
+      .withColumn("__bn", count(lit(1)).over(Window.partitionBy(keys.map(col): _*)))
       .filter(col("__bn") <= maxBucket).drop("__bn")
+    def side(s: String) = capped.select(keys.map(col) ++
+      (col(idCol).as(s"id_$s") +: carry.map(c => col(c).as(s"${c}_$s"))): _*)
+    side("a").join(side("b"), keys).filter(col("id_a") < col("id_b"))
+  }
 
   /** Candidate pairs (idA < idB) that share at least one LSH band
     * bucket — a self-equi-join on the band key, NOT an all-pairs cross
-    * join; degenerate buckets dropped via [[capBuckets]]. */
+    * join; degenerate buckets dropped by [[keyPairs]]. */
   def lshCandidatePairs(
-      banded: DataFrame, idCol: String, maxBucket: Int = 10000): DataFrame = {
-    val pruned = capBuckets(banded, maxBucket)
-    val a = pruned.select(col("band"), col("bh"), col(idCol).as("id_a"))
-    val b = pruned.select(col("band"), col("bh"), col(idCol).as("id_b"))
-    a.join(b, Seq("band", "bh"))
-      .filter(col("id_a") < col("id_b"))
+      banded: DataFrame, idCol: String, maxBucket: Int = 10000): DataFrame =
+    keyPairs(banded, Seq("band", "bh"), idCol, maxBucket)
       .select("id_a", "id_b").distinct()
-  }
 
   /** LSH candidate pairs of the MinHash pipeline BEFORE exact-Jaccard
     * verification — the banding bucket-join's raw work volume: false
-    * positives and capBuckets survivors included, exactly the rows the
+    * positives and flood-cap survivors included, exactly the rows the
     * verify stage must process. Instrumentation surface for scale
     * audits: a linear candidate count at two corpus sizes pins the
     * banding join's candidate VOLUME, which the verified output count
@@ -759,22 +766,25 @@ object Dedup {
       struct(lit(c).as("band"),
         shiftright(col(hashCol), offsets(c)).bitwiseAND(lit(mask)).as("bh"))
     }
-    val banded = capBuckets(
-      hashed.select(col(idCol), col(hashCol),
-          explode(array(chunks: _*)).as("__bk"))
+    hammingBall(hashed, idCol, hashCol, chunks, maxHamming, maxBucket)(
+      (a, b) => bit_count(a.bitwiseXOR(b)))
+  }
+
+  /** The pigeonhole join both hamming operators share: bucket each row
+    * under its `chunks` (band, bh) keys, pair rows sharing a capped
+    * bucket ([[keyPairs]]), keep pairs whose `distance` between the two
+    * hashes is ≤ `maxHamming`. */
+  private def hammingBall(
+      hashed: DataFrame, idCol: String, hashCol: String, chunks: Seq[Column],
+      maxHamming: Int, maxBucket: Int)(distance: (Column, Column) => Column): DataFrame =
+    keyPairs(
+      hashed.select(col(idCol), col(hashCol), explode(array(chunks: _*)).as("__bk"))
         .select(col(idCol), col(hashCol),
           col("__bk.band").as("band"), col("__bk.bh").as("bh")),
-      maxBucket)
-    val a = banded.select(col("band"), col("bh"),
-      col(idCol).as("id_a"), col(hashCol).as("__ha"))
-    val b = banded.select(col("band"), col("bh"),
-      col(idCol).as("id_b"), col(hashCol).as("__hb"))
-    a.join(b, Seq("band", "bh"))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("hamming", bit_count(col("__ha").bitwiseXOR(col("__hb"))))
+      Seq("band", "bh"), idCol, maxBucket, hashCol)
+      .withColumn("hamming", distance(col(s"${hashCol}_a"), col(s"${hashCol}_b")))
       .filter(col("hamming") <= maxHamming)
       .select("id_a", "id_b", "hamming").distinct()
-  }
 
   /** Wide (multi-word) hamming-ball self-join — the 100 TB scale path
     * for perceptual hashes. `hashCol` is an `array<bigint>` of `words`
@@ -836,66 +846,33 @@ object Dedup {
             lit(s"hammingNearDupPairsWide: $hashCol must hold exactly " +
               s"$words words, got "),
             size(col(hashCol)).cast("string")))))
-    val banded = capBuckets(
-      sized.select(col(idCol), col(hashCol),
-          explode(array(chunks: _*)).as("__bk"))
-        .select(col(idCol), col(hashCol),
-          col("__bk.band").as("band"), col("__bk.bh").as("bh")),
-      maxBucket)
-    val a = banded.select(col("band"), col("bh"),
-      col(idCol).as("id_a"), col(hashCol).as("__ha"))
-    val b = banded.select(col("band"), col("bh"),
-      col(idCol).as("id_b"), col(hashCol).as("__hb"))
-    a.join(b, Seq("band", "bh"))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("hamming",
-        aggregate(
-          zip_with(col("__ha"), col("__hb"),
-            (x, y) => bit_count(x.bitwiseXOR(y))),
-          lit(0), (acc, x) => acc + x))
-      .filter(col("hamming") <= maxHamming)
-      .select("id_a", "id_b", "hamming").distinct()
+    hammingBall(sized, idCol, hashCol, chunks, maxHamming, maxBucket)((a, b) =>
+      aggregate(zip_with(a, b, (x, y) => bit_count(x.bitwiseXOR(y))),
+        lit(0), (acc, x) => acc + x))
   }
 
   // ----------------------------------------------------- embedding cosine
 
   /** Embedding near-dup pairs: cosine ≥ threshold among LSH-bucketed
     * candidates (random hyperplane signatures via [[Similarity]]), with
-    * exact cosine verification. Brute-force all-pairs is available for
-    * tests via `bruteForce = true` — never use it at scale. */
+    * exact cosine verification. */
   def embeddingNearDupPairs(
       df: DataFrame,
       idCol: String,
       vecCol: String,
       threshold: Double = 0.95,
       dim: Int = 64,
-      bruteForce: Boolean = false,
       maxBucket: Int = 10000,
-      seed: Long = 7L): DataFrame = {
-    val pairs =
-      if (bruteForce) {
-        val a = df.select(col(idCol).as("id_a"), col(vecCol).as("__va"))
-        val b = df.select(col(idCol).as("id_b"), col(vecCol).as("__vb"))
-        a.join(b, col("id_a") < col("id_b"))
-      } else {
-        val banded = capBuckets(
-          Similarity.hyperplaneBands(df, idCol, vecCol, dim,
-            tables = 8, bitsPerTable = 12, seed = seed),
-          maxBucket)
-        val a = banded.select(col("band"), col("bh"), col(idCol).as("id_a"))
-        val b = banded.select(col("band"), col("bh"), col(idCol).as("id_b"))
-        // dedup candidate ids BEFORE re-attaching vectors (distinct on two
-        // longs, not on array columns)
-        a.join(b, Seq("band", "bh"))
-          .filter(col("id_a") < col("id_b"))
-          .select("id_a", "id_b").distinct()
-          .join(df.select(col(idCol).as("id_a"), col(vecCol).as("__va")), Seq("id_a"))
-          .join(df.select(col(idCol).as("id_b"), col(vecCol).as("__vb")), Seq("id_b"))
-      }
-    pairs.withColumn("cosine", Vec.cosine(col("__va"), col("__vb")))
+      seed: Long = 7L): DataFrame =
+    // candidate ids are deduped BEFORE the vectors re-attach (distinct
+    // on two longs, not on array columns)
+    lshCandidatePairs(Similarity.hyperplaneBands(df, idCol, vecCol, dim,
+        tables = 8, bitsPerTable = 12, seed = seed), idCol, maxBucket)
+      .join(df.select(col(idCol).as("id_a"), col(vecCol).as("__va")), Seq("id_a"))
+      .join(df.select(col(idCol).as("id_b"), col(vecCol).as("__vb")), Seq("id_b"))
+      .withColumn("cosine", Vec.cosine(col("__va"), col("__vb")))
       .filter(col("cosine") >= threshold)
       .select("id_a", "id_b", "cosine")
-  }
 
   // ------------------------------------------------- shared-span pairs
 
@@ -923,13 +900,7 @@ object Dedup {
     val spans = df.select(col(idCol),
         explode(wordShingles(col(textCol), spanTokens)).as("__s"))
       .select(col(idCol), xxhash64(col("__s")).as("__sh"))
-    val capped = spans
-      .withColumn("__bn", count(lit(1)).over(Window.partitionBy("__sh")))
-      .filter(col("__bn") <= maxBucket).drop("__bn")
-    val a = capped.select(col("__sh"), col(idCol).as("id_a"))
-    val b = capped.select(col("__sh"), col(idCol).as("id_b"))
-    a.join(b, Seq("__sh"))
-      .filter(col("id_a") < col("id_b"))
+    keyPairs(spans, Seq("__sh"), idCol, maxBucket)
       .groupBy(col("id_a"), col("id_b"))
       .agg(countDistinct(col("__sh")).as("n_shared"))
       .filter(col("n_shared") >= minShared)
@@ -953,13 +924,8 @@ object Dedup {
       fps: DataFrame, idCol: String, fpCol: String,
       minShared: Int, maxBucket: Int = 1000): DataFrame = {
     require(minShared >= 1, "sharedFingerprintPairs: minShared >= 1")
-    val capped = fps.select(col(idCol), col(fpCol)).distinct()
-      .withColumn("__bn", count(lit(1)).over(Window.partitionBy(fpCol)))
-      .filter(col("__bn") <= maxBucket).drop("__bn")
-    val a = capped.select(col(fpCol), col(idCol).as("id_a"))
-    val b = capped.select(col(fpCol), col(idCol).as("id_b"))
-    a.join(b, Seq(fpCol))
-      .filter(col("id_a") < col("id_b"))
+    keyPairs(fps.select(col(idCol), col(fpCol)).distinct(), Seq(fpCol),
+        idCol, maxBucket)
       .groupBy(col("id_a"), col("id_b"))
       // count, not countDistinct: both join sides are the SAME deduped
       // (id, fp) table, so each (id_a, id_b, fp) combination yields
@@ -1112,6 +1078,13 @@ object Dedup {
     * round changed something iff some neighborhood min undercut the
     * old label, counted by an observed metric on the staging job.
     *
+    * [[Graph.connectedComponentsStar]] has the same output contract,
+    * but routing [[keepBestPerCluster]] through it made curate_text
+    * slower (perfbench, 4-core host: wall 5.3-6.5 s → 7.1-8.5 s over
+    * four alternating runs, the traced clusters layer 1.25 → 1.67 s).
+    * Both stay because min-label propagation in turn cannot finish
+    * GraphSpec's 400-node path within its round limit.
+    *
     * @return (id, cluster) — one row per node appearing in `pairs`,
     *         cluster = min id of its component (a self-pair's node
     *         labels itself); lazy, its last round stays with it.
@@ -1153,7 +1126,7 @@ object Dedup {
     * suffix, zip, …): only records sharing a block are compared, so
     * the self-join is block-local — never all-pairs — and `maxBlock`
     * drops degenerate blocks (the empty-string / "UNKNOWN" floods)
-    * exactly like [[lshCandidatePairs]]' bucket cap. Returns
+    * with the bucket cap every candidate-pair operator shares. Returns
     * `(id_a, id_b, dist)` for pairs with distance ≤ `maxDist`.
     *
     * Scale shape: one shuffle on the block key, per-block self-join
@@ -1166,19 +1139,10 @@ object Dedup {
       maxDist: Int, maxBlock: Int = 1000): DataFrame = {
     require(maxDist >= 0, "blockedFuzzyPairs: maxDist must be >= 0")
     require(maxBlock >= 2, "blockedFuzzyPairs: maxBlock must be >= 2")
-    val keyed = df
-      .select(col(idCol).as("id"), col(strCol).as("__s"),
-        blockKey.as("__blk"))
-      .withColumn("__bn", count(lit(1)).over(Window.partitionBy("__blk")))
-      .filter(col("__bn") <= maxBlock).drop("__bn")
-    val a = keyed.select(col("__blk"), col("id").as("id_a"),
-      col("__s").as("__sa"))
-    val b = keyed.select(col("__blk"), col("id").as("id_b"),
-      col("__s").as("__sb"))
-    a.join(b, Seq("__blk"))
-      .filter(col("id_a") < col("id_b"))
+    keyPairs(df.select(col(idCol).as("id"), col(strCol).as("__s"),
+        blockKey.as("__blk")), Seq("__blk"), "id", maxBlock, "__s")
       .select(col("id_a"), col("id_b"),
-        levenshtein(col("__sa"), col("__sb")).cast("long").as("dist"))
+        levenshtein(col("__s_a"), col("__s_b")).cast("long").as("dist"))
       .filter(col("dist") <= maxDist)
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Iterative graph analytics over edge LISTS (never adjacency
-  * matrices): the companion to [[Dedup.connectedComponents]]'
+  * matrices): the companion to [[Dedup.nearDupClusters]]'
   * label propagation. Every iteration is keyed joins + keyed
   * aggregates on the edge table — the Pregel-on-DataFrames shape
   * that holds at any scale because nothing is ever collected and

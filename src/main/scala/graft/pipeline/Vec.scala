@@ -27,13 +27,6 @@ object Vec {
     when(den > 0, dot(a, b) / den).otherwise(lit(0.0))
   }
 
-  /** Backed by the native codegen'd [[graft.functions.L2SqExpr]] —
-    * same left-to-right Σ(a_i−b_i)² doubles as the interpreted fold it
-    * replaces (per-element exact widening), so oracle replays are
-    * unchanged. */
-  def l2Distance(a: Column, b: Column): Column =
-    sqrt(graft.functions.l2Sq(a, b))
-
   /** Signed-projection bit against a fixed (driver-side) hyperplane:
     * 1 if v · h > 0 else 0. Used by the random-hyperplane LSH. */
   def signBit(v: Column, h: Array[Double]): Column =

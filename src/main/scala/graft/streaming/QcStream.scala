@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.qc.{FlagSchema, QcFlags}
+import graft.qc.{FlagSchema, QcActions, QcFlags}
 
 /** Structured-Streaming extension (SURVEY §7.5; the reference is batch
   * + human-in-the-loop, §2.10 — this is the beyond-parity continuous
@@ -22,18 +22,19 @@ object QcStream {
   /** Stateless streaming flag init: the P1 projection applied to a
     * streaming df (works unchanged — `when`/`isnull` are
     * streaming-safe). Rule-based auto-flagging composes the same way:
-    * pass `autoFlag` predicates mapping to ManualFlag. */
+    * pass `autoFlag` predicates (keyed by variables in `vars`) mapping
+    * to ManualFlag; they write through [[QcActions.flagSelected]], so
+    * the flag columns keep their metadata. */
   def withFlags(
       stream: DataFrame,
       vars: Seq[String],
       autoFlag: Map[String, org.apache.spark.sql.Column] = Map.empty,
       suffix: String = AutoSuffix): DataFrame = {
+    require(autoFlag.keySet.subsetOf(vars.toSet),
+      s"withFlags: autoFlag names variables outside vars: ${autoFlag.keySet -- vars}")
     val sfx = resolveSuffix(stream, suffix)
-    val flagged = QcFlags.addFlags(stream, vars, sfx)
-    autoFlag.foldLeft(flagged) { case (df, (v, bad)) =>
-      val f = flagCol(v, sfx)
-      df.withColumn(f,
-        when(col(f) === Unchecked && bad, lit(ManualFlag)).otherwise(col(f)))
+    autoFlag.foldLeft(QcFlags.addFlags(stream, vars, sfx)) { case (df, (v, bad)) =>
+      QcActions.flagSelected(df, v, bad, sfx)
     }
   }
 
@@ -214,15 +215,13 @@ object QcStream {
       watermark: String = "2 hours",
       suffix: String = AutoSuffix): DataFrame = {
     val f = col(flagCol(v, resolveSuffix(flagged, suffix)))
+    val classes = Seq(Approved -> "n_approved", Unchecked -> "n_unchecked",
+      OrigNA -> "n_missing", ManualFlag -> "n_flagged")
     flagged
       .withWatermark(t, watermark)
       .groupBy(window(col(t), windowWidth).as("win"))
-      .agg(
-        count(lit(1)).as("n_rows"),
-        sum(when(f === Approved, 1L).otherwise(0L)).as("n_approved"),
-        sum(when(f === Unchecked, 1L).otherwise(0L)).as("n_unchecked"),
-        sum(when(f === OrigNA, 1L).otherwise(0L)).as("n_missing"),
-        sum(when(f === ManualFlag, 1L).otherwise(0L)).as("n_flagged"))
+      .agg(count(lit(1)).as("n_rows"), classes.map { case (flag, name) =>
+        sum(when(f === flag, 1L).otherwise(0L)).as(name) }: _*)
       .select(col("win.start").as("win_start"), col("win.end").as("win_end"),
         col("n_rows"), col("n_approved"), col("n_unchecked"),
         col("n_missing"), col("n_flagged"))

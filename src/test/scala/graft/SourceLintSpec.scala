@@ -123,25 +123,43 @@ class SourceLintSpec extends AnyFunSuite {
     // a new action picks its write from QcActions' M-operation table;
     // it never grows its own guard predicate or (flag, guard) pair
     def lines(name: String) =
-      scala.io.Source.fromFile(new java.io.File(mainRoot, s"graft/qc/$name.scala"), "UTF-8")
+      scala.io.Source.fromFile(new java.io.File(mainRoot, s"graft/$name.scala"), "UTF-8")
         .getLines().toVector
-    val files = Seq("QcActions", "QcFlagLog", "QcSession").map(n => n -> lines(n))
-    val actions = lines("QcActions")
+    val files = Seq("qc/QcActions", "qc/QcFlagLog", "qc/QcSession", "streaming/QcStream")
+      .map(n => n -> lines(n))
+    val actions = lines("qc/QcActions")
     val at = actions.indexWhere(_.contains("def admits("))
     val admits = at until actions.indexWhere(_.trim == "}", at)
     for (guard <- Seq("""=!=\s*[\w.(]*OrigNA""".r, """===\s*[\w.(]*Unchecked""".r)) {
       val hits = for {
         (name, ls) <- files; (l, i) <- ls.zipWithIndex if guard.findFirstIn(l).isDefined
       } yield (name, i)
-      assert(hits.size == 1 && hits.forall { case (n, i) => n == "QcActions" && admits.contains(i) },
+      assert(hits.size == 1 && hits.forall { case (n, i) => n == "qc/QcActions" && admits.contains(i) },
         s"guard `$guard` outside QcActions.admits: $hits")
     }
     val table = """(?<!class )\bWrite\(([^)]*)\)""".r
     val writes = for {
       (name, ls) <- files; l <- ls; m <- table.findFirstMatchIn(l)
     } yield (name, m.group(1))
-    assert(writes.size >= 5 && writes.forall(_._1 == "QcActions"),
+    assert(writes.size >= 5 && writes.forall(_._1 == "qc/QcActions"),
       s"flag writes outside QcActions' table: $writes")
     assert(writes.map(_._2).distinct.size == writes.size, s"a write is in the table twice: $writes")
+  }
+
+  test("Dedup's flood cap and pair self-join are written once, in keyPairs") {
+    // every candidate-pair operator pairs through Dedup.keyPairs; a
+    // hand-rolled bucket cap or `id_a < id_b` self-join is one more
+    // copy a capped-bucket report would have to reach
+    val lines = scala.io.Source.fromFile(
+      new java.io.File(mainRoot, "graft/pipeline/Dedup.scala"), "UTF-8").getLines().toVector
+    val at = lines.indexWhere(_.contains("def keyPairs("))
+    assert(at >= 0, "Dedup.keyPairs is gone")
+    val body = at until lines.indexWhere(_ == "  }", at)
+    for (rule <- Seq("""col\("id_a"\)\s*<\s*col\("id_b"\)""".r,
+        """count\(lit\(1\)\)\.over\(Window\.partitionBy""".r)) {
+      val hits = lines.indices.filter(i => rule.findFirstIn(lines(i)).isDefined)
+      assert(hits.size == 1 && hits.forall(body.contains),
+        s"`$rule` outside Dedup.keyPairs, at lines ${hits.map(_ + 1)}")
+    }
   }
 }

@@ -104,8 +104,10 @@ class DedupSpec extends SparkSpec {
     val dups = (0 until 5).map(i => ((i + 100).toLong,
       base(i)._2.map(x => x + 0.001f * rnd.nextGaussian().toFloat)))
     val df = (base ++ dups).toDF("vec_id", "embedding")
-    val brute = Dedup.embeddingNearDupPairs(df, "vec_id", "embedding",
-        threshold = 0.99, dim = 16, bruteForce = true)
+    // all-pairs reference: every pair's exact cosine
+    val brute = df.select(col("vec_id").as("id_a"), col("embedding").as("va"))
+      .crossJoin(df.select(col("vec_id").as("id_b"), col("embedding").as("vb")))
+      .filter(col("id_a") < col("id_b") && Vec.cosine(col("va"), col("vb")) >= 0.99)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     val lsh = Dedup.embeddingNearDupPairs(df, "vec_id", "embedding",
         threshold = 0.99, dim = 16)
@@ -116,6 +118,36 @@ class DedupSpec extends SparkSpec {
 
   test("degenerate buckets are capped: an identical-doc flood yields no simhash pairs") {
     import spark.implicits._
+    // m ids share every key: at maxBucket = m each candidate-pair
+    // operator pairs all of them, at maxBucket = m - 1 the flooded
+    // keys mint no pair
+    val m = 4
+    val same = (0L until m).map(i => (i, "same exact text repeated")).toDF("id", "text")
+    val vec = Array.tabulate(16)(i => (i + 1).toFloat)
+    val ops: Seq[(String, Int => org.apache.spark.sql.DataFrame)] = Seq(
+      "lshCandidatePairs" -> (cap =>
+        Dedup.minHashCandidatePairs(same, "id", "text", maxBucket = cap)),
+      "hammingNearDupPairs" -> (cap =>
+        Dedup.simHashNearDupPairs(same, "id", "text", maxBucket = cap)),
+      "hammingNearDupPairsWide" -> (cap => Dedup.hammingNearDupPairsWide(
+        (0L until m).map(i => (i, Seq(1L, 2L, 3L, 4L))).toDF("id", "h"),
+        "id", "h", maxHamming = 1, maxBucket = cap)),
+      "embeddingNearDupPairs" -> (cap => Dedup.embeddingNearDupPairs(
+        (0L until m).map(i => (i, vec)).toDF("id", "v"), "id", "v",
+        dim = 16, maxBucket = cap)),
+      "sharedSpanPairs" -> (cap =>
+        Dedup.sharedSpanPairs(same, "id", "text", spanTokens = 2, maxBucket = cap)),
+      "sharedFingerprintPairs" -> (cap => Dedup.sharedFingerprintPairs(
+        (0L until m).map(i => (i, 7L)).toDF("id", "fp"), "id", "fp",
+        minShared = 1, maxBucket = cap)),
+      "blockedFuzzyPairs" -> (cap => Dedup.blockedFuzzyPairs(same, "id", "text",
+        lit("blk"), maxDist = 0, maxBlock = cap)))
+    val all = (for (a <- 0L until m; b <- a + 1 until m) yield (a, b)).toSet
+    for ((name, op) <- ops) {
+      def pairs(cap: Int) = op(cap).select("id_a", "id_b").as[(Long, Long)].collect().toSet
+      assert(pairs(m) == all, s"$name: a key held by exactly maxBucket ids pairs")
+      assert(pairs(m - 1).isEmpty, s"$name: a key held by maxBucket + 1 ids mints none")
+    }
     val flood = (0L until 40L).map(i => (i, "same exact text repeated"))
       .toDF("id", "text")
     val capped = Dedup.simHashNearDupPairs(flood, "id", "text", maxBucket = 10)

@@ -39,6 +39,24 @@ class QcStreamSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("withFlags: auto-flags keep the flag metadata under a custom suffix") {
+    import spark.implicits._
+    val df = Seq((1L, Some(5.0)), (2L, Some(500.0)), (3L, None)).toDF("id", "temp")
+    val out = QcStream.withFlags(df, Seq("temp"),
+      autoFlag = Map("temp" -> (col("temp") > 100)), suffix = "_f")
+    assert(FlagSchema.resolveSuffix(out) == "_f",
+      "an AutoSuffix reader must find the custom-suffixed flag column")
+    assert(out.orderBy("id").select("temp_f").as[Int].collect().toSeq ==
+      Seq(FlagSchema.Unchecked, FlagSchema.ManualFlag, FlagSchema.OrigNA))
+    val progress = graft.qc.QcProgress.summary(out)
+      .select("variable", "pct_missing", "pct_flagged").as[(String, Double, Double)]
+      .collect().toSeq
+    assert(progress == Seq(("temp", 33.33, 33.33)), s"got $progress")
+    intercept[IllegalArgumentException] {
+      QcStream.withFlags(df, Seq("temp"), autoFlag = Map("id" -> (col("id") > 1)))
+    }
+  }
+
   test("streaming fingerprint dedup: whitespace variants collapse") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
