@@ -338,12 +338,18 @@ object Bench {
   }
 
   /** Work done by one rep: Spark jobs, stages and tasks, shuffle bytes
-    * written and bytes spilled to disk. Deterministic per plan, so they
-    * are the host-independent half of a timing. */
+    * written and read, bytes spilled to disk and input bytes read —
+    * deterministic per plan, the host-independent half of a timing —
+    * plus the executors' summed task run time and CPU time, which say
+    * where the wall time went but vary with the host. */
   final case class Counters(jobs: Long, stages: Long, tasks: Long,
-      shuffleWriteBytes: Long, spillBytes: Long) {
+      shuffleWriteBytes: Long, spillBytes: Long,
+      inputBytes: Long, shuffleReadBytes: Long,
+      executorRunMs: Long, executorCpuMs: Long) {
     def json: String = s"""{"jobs":$jobs,"stages":$stages,"tasks":$tasks,""" +
-      s""""shuffle_write_bytes":$shuffleWriteBytes,"spill_bytes":$spillBytes}"""
+      s""""shuffle_write_bytes":$shuffleWriteBytes,"spill_bytes":$spillBytes,""" +
+      s""""input_bytes":$inputBytes,"shuffle_read_bytes":$shuffleReadBytes,""" +
+      s""""executor_run_ms":$executorRunMs,"executor_cpu_ms":$executorCpuMs}"""
   }
 
   /** Per-rep seconds (a failed rep is its time to failure, negated),
@@ -357,18 +363,26 @@ object Bench {
   }
 
   private final class Counting extends SparkListener {
-    private val jobs, stages, tasks, shuffle, spill = new AtomicLong
+    private val jobs, stages, tasks, shuffle, spill, input, shuffleRead, runMs, cpuNs =
+      new AtomicLong
     override def onJobStart(j: SparkListenerJobStart): Unit =
       jobs.incrementAndGet()
     override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
+      val m = s.stageInfo.taskMetrics
       stages.incrementAndGet()
       tasks.addAndGet(s.stageInfo.numTasks)
-      shuffle.addAndGet(s.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-      spill.addAndGet(s.stageInfo.taskMetrics.diskBytesSpilled)
+      shuffle.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+      spill.addAndGet(m.diskBytesSpilled)
+      input.addAndGet(m.inputMetrics.bytesRead)
+      shuffleRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
+      runMs.addAndGet(m.executorRunTime)
+      cpuNs.addAndGet(m.executorCpuTime)
     }
-    def reset(): Unit = Seq(jobs, stages, tasks, shuffle, spill).foreach(_.set(0L))
-    def read: Counters =
-      Counters(jobs.get, stages.get, tasks.get, shuffle.get, spill.get)
+    def reset(): Unit =
+      Seq(jobs, stages, tasks, shuffle, spill, input, shuffleRead, runMs, cpuNs)
+        .foreach(_.set(0L))
+    def read: Counters = Counters(jobs.get, stages.get, tasks.get, shuffle.get,
+      spill.get, input.get, shuffleRead.get, runMs.get, cpuNs.get / 1000000L)
   }
 
   // one counting listener per SparkContext, attached on first use

@@ -45,6 +45,18 @@ package object functions {
   def charNgrams(text: Column, n: Int): Column =
     GraftColumnBridge.column(CharNgramsExpr(GraftColumnBridge.expression(text), n))
 
+  /** One-pass token, stop-word, character and punctuation counts of a
+    * string column, as a struct (native expression — see
+    * [[TextStatsExpr]]): the counts under the text-quality features. */
+  def textStats(text: Column, stops: Seq[String]): Column =
+    GraftColumnBridge.column(TextStatsExpr(GraftColumnBridge.expression(text), stops))
+
+  /** The `bands` LSH band keys of a signature column, `rows` elements
+    * each, as md5 hex strings (native expression — see
+    * [[BandKeysExpr]]). */
+  def bandKeys(sig: Column, bands: Int, rows: Int): Column =
+    GraftColumnBridge.column(BandKeysExpr(GraftColumnBridge.expression(sig), bands, rows))
+
   /** All sliding word n-grams of a string column, whitespace-tokenized
     * and space-joined (native expression — see [[WordNgramsExpr]]).
     * `distinct = true` → first-occurrence-ordered shingle set. */

@@ -595,22 +595,20 @@ object Dedup {
 
   /** Explode a signature into `bands` (bandIdx, bandHash) keys: docs
     * sharing ANY band key are candidates. Output: idCol, band, bh.
-    * The band key is the md5 of the slice's comma-joined rendering —
-    * any injective-enough digest works for bucketing, and md5 is the
-    * one an external SQL engine can replay (the `xxhash64` it
-    * replaces kept `dedup_minhash` rows-only). */
+    * The band key is the md5 hex of the slice's comma-joined decimal
+    * rendering — any injective-enough digest works for bucketing, and
+    * md5 is the one an external SQL engine can replay (the `xxhash64`
+    * it replaces kept `dedup_minhash` rows-only). All keys of a row
+    * come from one native expression ([[graft.functions.BandKeysExpr]]);
+    * the key bytes are unchanged from the `md5(concat_ws(',',
+    * transform(slice(..), cast string)))` composition it replaces. A
+    * null signature has no band rows. */
   def bandsOf(df: DataFrame, idCol: String, sigCol: String,
       bands: Int, sigLen: Int): DataFrame = {
     require(sigLen % bands == 0, "bandsOf: bands must divide signature length")
-    val r = sigLen / bands
-    val keys = (0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        md5(concat_ws(",",
-          transform(slice(col(sigCol), b * r + 1, r), _.cast("string")))
-          .cast("binary")).as("bh"))
-    }
-    df.select(col(idCol), explode(array(keys: _*)).as("__bk"))
-      .select(col(idCol), col("__bk.band").as("band"), col("__bk.bh").as("bh"))
+    df.select(col(idCol),
+      posexplode(graft.functions.bandKeys(col(sigCol), bands, sigLen / bands))
+        .as(Seq("band", "bh")))
   }
 
   /** The flood-capped key self-join behind every candidate-pair

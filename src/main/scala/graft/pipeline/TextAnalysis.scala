@@ -5,9 +5,10 @@ import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for a large-scale training-data pipeline:
   * tokenization, quality scoring, n-gram language ID, and document
-  * fingerprinting. All per-row, narrow, built from codegen-friendly
-  * built-ins and higher-order functions — at 100 TB these are
-  * scan-bound maps with zero shuffle.
+  * fingerprinting. All per-row and narrow — at 100 TB these are
+  * scan-bound maps with zero shuffle. The quality features are
+  * Catalyst arithmetic over one native one-pass count of the text
+  * ([[graft.functions.TextStatsExpr]]).
   */
 object TextAnalysis {
 
@@ -17,45 +18,62 @@ object TextAnalysis {
     when(length(trim(text)) === 0, array().cast("array<string>"))
       .otherwise(split(trim(text), "\\s+"))
 
-  def nTokens(text: Column): Column = size(tokens(text))
+  // The features below are Catalyst arithmetic over one native
+  // one-pass count struct, `graft.functions.textStats`, whose tokens
+  // are exactly `tokens`': a projection holding several features scans
+  // the text once (common-subexpression elimination).
+
+  // `size` of the token array: a null text gives what `size(null)`
+  // gives — null under ANSI, −1 without it
+  private def nTok(st: Column): Column =
+    coalesce(st("n_tokens"), size(lit(null).cast("array<string>")))
+
+  private def avgLen(st: Column): Column = {
+    val nt = nTok(st)
+    when(nt > 0, st("token_chars").cast("double") / nt)
+  }
+
+  private def stopRatio(st: Column): Column = {
+    val nt = nTok(st)
+    when(nt > 0, st("stop_hits").cast("double") / nt)
+  }
+
+  private def punct(st: Column): Column = {
+    val n = st("n_chars")
+    when(n > 0, st("n_punct").cast("double") / n).otherwise(lit(0.0))
+  }
+
+  def nTokens(text: Column): Column = nTok(graft.functions.textStats(text, Nil))
 
   /** Mean token length in characters (null for empty docs). */
-  def avgTokenLen(text: Column): Column = {
-    val t = tokens(text)
-    val total = aggregate(transform(t, length(_).cast("long")), lit(0L), _ + _)
-    when(size(t) > 0, total.cast("double") / size(t))
-  }
+  def avgTokenLen(text: Column): Column =
+    avgLen(graft.functions.textStats(text, Nil))
 
   /** Share of tokens found in `stops` (null for empty docs). */
-  def stopwordRatio(text: Column, stops: Seq[String]): Column = {
-    val t = tokens(text)
-    when(size(t) > 0,
-      size(filter(t, _.isInCollection(stops))).cast("double") / size(t))
-  }
+  def stopwordRatio(text: Column, stops: Seq[String]): Column =
+    stopRatio(graft.functions.textStats(text, stops))
 
-  /** Punctuation-character ratio over all characters (0 for empty). */
-  def punctRatio(text: Column): Column = {
-    val n = length(text)
-    when(n > 0,
-      (n - length(regexp_replace(text, "[\\p{Punct}]", ""))).cast("double") / n)
-      .otherwise(lit(0.0))
-  }
+  /** ASCII `\p{Punct}`-character ratio over all characters (0 for
+    * empty or null text). */
+  def punctRatio(text: Column): Column =
+    punct(graft.functions.textStats(text, Nil))
 
   /** Composite quality score in [0,1]: length in a sane band, average
     * word length in a natural-language band, some stopwords, little
     * punctuation — the usual cheap pre-training heuristics. */
   def qualityScore(text: Column, stops: Seq[String]): Column = {
-    val nt = nTokens(text).cast("double")
+    val st = graft.functions.textStats(text, stops)
+    val nt = nTok(st).cast("double")
     // both band edges are real: short docs ramp up from 0, oversized
     // docs ramp DOWN (100000/nt), instead of silently passing
     val lenOk = when(nt >= 10 && nt <= 100000, 1.0)
       .when(nt < 10, nt / 10.0)
       .otherwise(lit(100000.0) / nt)
-    val awl = coalesce(avgTokenLen(text), lit(0.0))
+    val awl = coalesce(avgLen(st), lit(0.0))
     val awlOk = when(awl >= 2 && awl <= 12, 1.0).otherwise(0.25)
-    val stopOk = when(coalesce(stopwordRatio(text, stops), lit(0.0)) > 0.01, 1.0)
+    val stopOk = when(coalesce(stopRatio(st), lit(0.0)) > 0.01, 1.0)
       .otherwise(0.5)
-    val punctOk = lit(1.0) - least(punctRatio(text) * 4, lit(1.0))
+    val punctOk = lit(1.0) - least(punct(st) * 4, lit(1.0))
     least(lenOk, lit(1.0)) * 0.25 + awlOk * 0.2 + stopOk * 0.15 + punctOk * 0.4
   }
 
@@ -799,11 +817,12 @@ object TextAnalysis {
   def qualityZ(text: Column, stops: Seq[String],
       w: Seq[Double] = Seq(-1.0, 0.35, 2.0, -4.0, 0.5)): Column = {
     require(w.length == 5, "qualityZ: 5 weights (bias + 4 features)")
+    val st = graft.functions.textStats(text, stops)
     lit(w(0)) +
-      lit(w(1)) * log(lit(1.0) + nTokens(text)) +
-      lit(w(2)) * coalesce(stopwordRatio(text, stops), lit(0.0)) +
-      lit(w(3)) * punctRatio(text) +
-      lit(w(4)) * coalesce(avgTokenLen(text), lit(0.0)) / 10.0
+      lit(w(1)) * log(lit(1.0) + nTok(st)) +
+      lit(w(2)) * coalesce(stopRatio(st), lit(0.0)) +
+      lit(w(3)) * punct(st) +
+      lit(w(4)) * coalesce(avgLen(st), lit(0.0)) / 10.0
   }
 
   /** TRAIN a multinomial Naive Bayes token classifier on the corpus

@@ -291,6 +291,15 @@ class BenchDeltaSpec extends AnyFunSuite {
     assert(BenchDelta.counterDrift(Map.empty, after).isEmpty)
   }
 
+  test("counter drift ignores input, shuffle-read and executor time counters") {
+    def rec(input: Long, read: Long, run: Long, cpu: Long) = BenchDelta.parseCounters(
+      s"""{"counters":{"a":{"jobs":3,"stages":4,"tasks":16,"shuffle_write_bytes":100,""" +
+        s""""spill_bytes":0,"input_bytes":$input,"shuffle_read_bytes":$read,""" +
+        s""""executor_run_ms":$run,"executor_cpu_ms":$cpu}}}""")
+    assert(rec(10, 100, 900, 700)("a")("executor_cpu_ms") == 700L)
+    assert(BenchDelta.counterDrift(rec(10, 100, 900, 700), rec(12, 90, 450, 300)).isEmpty)
+  }
+
   test("parseRunsObject reads per-rep arrays") {
     val txt = """{"runs":{"q1":[1.5,0.9],"q2":[0.3]}}"""
     assert(BenchDelta.parseRunsObject(txt, "runs") ==

@@ -45,21 +45,51 @@ class BenchSpec extends SparkSpec {
     assert(got.shuffleWriteBytes > 0, got)
   }
 
+  // the counters a plan fixes; executor run and CPU time vary per run
+  private def work(c: Bench.Counters) = c.copy(executorRunMs = 0, executorCpuMs = 0)
+
   test("counters are the last rep's, and do not carry over to the next " +
       "query") {
-    val one = Bench.time(1)(spark.range(10).collect()).counters
+    val one = work(Bench.time(1)(spark.range(10).collect()).counters)
     assert(one.jobs == 1, one)
     // reps before the last run extra actions: not counted
     var rep = 0
-    val last = Bench.time(3) {
+    val last = work(Bench.time(3) {
       rep += 1
       if (rep < 3) (1 to 4).foreach(_ => twoActions())
       spark.range(10).collect()
-    }.counters
+    }.counters)
     assert(last == one, s"last rep $last vs a lone run $one")
     // a heavy query, then a light one: the light one counts only itself
     Bench.time(2)(twoActions())
-    val after = Bench.time(1)(spark.range(10).collect()).counters
+    val after = work(Bench.time(1)(spark.range(10).collect()).counters)
     assert(after == one, s"after a heavy query $after vs $one")
+  }
+
+  test("input, shuffle-read, executor run and CPU counters come from the " +
+      "same stages; the record carries them") {
+    val dir = java.nio.file.Files.createTempDirectory("bench-counters").toString
+    try {
+      spark.range(0, 20000, 1, 4).selectExpr("id", "id % 7 AS k")
+        .write.mode("overwrite").parquet(dir)
+      val c = Bench.time(1) {
+        spark.read.parquet(dir).groupBy("k").agg(count(lit(1)), sum("id"))
+          .orderBy("k").collect()
+      }.counters
+      assert(c.inputBytes > 0, c)
+      assert(c.shuffleReadBytes > 0 && c.shuffleWriteBytes > 0, c)
+      assert(c.executorRunMs >= 0 && c.executorCpuMs >= 0, c)
+      val idle = Bench.time(1)(spark.range(10).collect()).counters
+      assert(idle.inputBytes == 0 && idle.shuffleReadBytes == 0, idle)
+      val heavy = Bench.time(1) {
+        spark.range(0, 3000000, 1, 4).selectExpr("sum(hash(id, id * 3))").collect()
+      }.counters
+      assert(heavy.executorRunMs > 0 && heavy.executorCpuMs > 0, heavy)
+      val parsed = BenchDelta.parseCounters(s"""{"counters":{"q":${c.json}}}""")("q")
+      assert(parsed == Map("jobs" -> c.jobs, "stages" -> c.stages, "tasks" -> c.tasks,
+        "shuffle_write_bytes" -> c.shuffleWriteBytes, "spill_bytes" -> c.spillBytes,
+        "input_bytes" -> c.inputBytes, "shuffle_read_bytes" -> c.shuffleReadBytes,
+        "executor_run_ms" -> c.executorRunMs, "executor_cpu_ms" -> c.executorCpuMs))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 }

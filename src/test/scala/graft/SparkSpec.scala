@@ -18,6 +18,32 @@ trait SparkSpec extends AnyFunSuite {
     } finally spark.sparkContext.clearJobGroup()
   }
 
+  /** `body` with each SQL conf of `kv` set, the previous values
+    * restored after. */
+  def withConf[A](kv: (String, String)*)(body: => A): A = {
+    val prev = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  /** `body` run once compiled — whole-stage codegen on, generated code
+    * mandatory (`CODEGEN_ONLY`, no fallback to interpreted) — and once
+    * interpreted (`NO_CODEGEN`, whole-stage off), each result paired
+    * with its mode. A `Seq.toDF` input stays a scan (no
+    * ConvertToLocalRelation), so its projections really run in each
+    * mode; build the DataFrame inside `body`. */
+  def inCodegenModes[A](body: => A): Seq[(String, A)] = Seq(
+    "codegen" -> Seq("spark.sql.codegen.wholeStage" -> "true",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+      "spark.sql.codegen.fallback" -> "false"),
+    "interpreted" -> Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+  ).map { case (mode, kv) =>
+    mode -> withConf(kv :+ ("spark.sql.optimizer.excludedRules" ->
+      "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation"): _*)(body)
+  }
+
   /** The formatted plan of `build`'s result plus the physical plans of
     * the queries run while building it: an eager operator's joins run
     * there. */
