@@ -58,70 +58,24 @@ object SparkEntry {
     p.toString
   }
 
-  /** The file-stream source wants a DIRECTORY of files. The driver
-    * fixture ships a single parquet FILE (exposed through a stable,
-    * re-pointed symlink dir); a Spark-written table (the stress
-    * replicas) is already a directory — symlinking the directory
-    * itself would list zero files (the source does not follow nested
-    * dirs), the bug that silently zeroed every streaming query on
-    * replica corpora.
-    *
-    * The link dir is keyed by the SOURCE path (md5), and an existing
-    * link already pointing at the right target is left untouched:
-    * the earlier fixed per-table path was re-pointed by every caller,
-    * so two CONCURRENT JVMs on different sf dirs silently corrupted
-    * each other's stream source — an sf0.01 verify raced by an
-    * sf0.001 explain drained 88 of 871 stream_join rows (r15,
-    * reproduced then fixed). Same-dir first-creation races fall
-    * through to the FileAlreadyExists check. */
-  private def streamPath(dir: String, table: String): String = {
-    val src = java.nio.file.Paths.get(s"$dir/$table.parquet")
-    if (java.nio.file.Files.isDirectory(src)) src.toString
-    else {
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(src.toAbsolutePath.toString
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .map("%02x".format(_)).mkString.take(12)
-      val tmp = java.nio.file.Paths.get(scratch(s"stream_${table}_$key"))
-      val link = tmp.resolve(s"$table.parquet")
-      val target = src.toAbsolutePath
-      def pointsRight: Boolean =
-        try java.nio.file.Files.isSymbolicLink(link) &&
-          java.nio.file.Files.readSymbolicLink(link) == target
-        catch { case _: java.io.IOException => false }
-      if (!pointsRight) {
-        // Create under a temp name and ATOMIC_MOVE into place (rename(2)
-        // replaces atomically): the previous delete-then-create left a
-        // window where a concurrent JVM's file-stream source listing
-        // the dir saw a transiently ABSENT link — worse, a JVM whose
-        // pointsRight check raced another's create could delete a VALID
-        // link just installed (r15 ADVICE TOCTOU). With rename, a
-        // correct link is never transiently missing and the last writer
-        // installs an identical target anyway (the dir is keyed by
-        // source-path md5, so every writer here wants the same target).
-        val tmpLink = tmp.resolve(
-          s".${table}.parquet.tmp.${java.util.UUID.randomUUID.toString.take(8)}")
-        java.nio.file.Files.createSymbolicLink(tmpLink, target)
-        try java.nio.file.Files.move(tmpLink, link,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        catch { case e: Throwable =>
-          java.nio.file.Files.deleteIfExists(tmpLink)
-          // a concurrent same-dir creator may have won with the same
-          // target; only a still-wrong link is a real failure
-          if (!pointsRight) throw e
-        }
-      }
-      tmp.toString
-    }
+  /** `table` of `dir` as a file-source stream (schema from a batch
+    * peek). The source lists a DIRECTORY: a Spark-written table (the
+    * stress replicas) is one and is read as it is; the driver
+    * fixture's single parquet file is read from its parent directory
+    * through a glob filter on its own name, since a file path is
+    * refused as the source's base path. */
+  private def readTableStream(s: SparkSession, dir: String, table: String): DataFrame = {
+    val path = s"$dir/$table.parquet"
+    val r = s.readStream.schema(s.read.parquet(path).schema)
+    if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get(path))) r.parquet(path)
+    else r.option("pathGlobFilter", s"$table.parquet").parquet(dir)
   }
 
   /** Streaming twin of [[events]]: the same table as a file-source
-    * stream (schema from a batch peek; nanos→micros conversion
-    * identical). */
-  private def eventsStream(s: SparkSession, dir: String): DataFrame = {
+    * stream (nanos→micros conversion identical). */
+  private[graft] def eventsStream(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
-    adaptTs(s.readStream.schema(schema).parquet(streamPath(dir, "events")))
+    adaptTs(readTableStream(s, dir, "events"))
   }
 
   private def documents(s: SparkSession, dir: String): DataFrame =
@@ -130,11 +84,10 @@ object SparkEntry {
   /** Streaming twin of [[documents]] with a synthetic event time (the
     * table has none; any time inside one watermark works for the
     * drain-everything AvailableNow checks). */
-  private def documentsStream(s: SparkSession, dir: String): DataFrame = {
-    val schema = s.read.parquet(s"$dir/documents.parquet").schema
+  private[graft] def documentsStream(s: SparkSession, dir: String): DataFrame = {
     // +1 day: a row AT epoch 0 sits exactly on the stream's initial
     // watermark and dropDuplicatesWithinWatermark expires it as late
-    s.readStream.schema(schema).parquet(streamPath(dir, "documents"))
+    readTableStream(s, dir, "documents")
       .withColumn("ts",
         timestamp_seconds(pmod(col("doc_id"), lit(3600)) + 86400L))
   }
@@ -3159,7 +3112,7 @@ object SparkEntry {
                 (id % 100 + 1).toInt)
           (id, b)
         }
-      Multimodal.decodeBatched(payloads)(Multimodal.jdkBatchDecoder)
+      Multimodal.decodeBatched(payloads)(_.map(Multimodal.jdkDecode))
         .map { case (id, m) =>
           (id, m.format, m.width.toLong, m.height.toLong,
             m.nFrames.toLong, m.sampleRateHz.toLong)
@@ -3173,17 +3126,12 @@ object SparkEntry {
       // with ImageIO; per-channel pixel means equal the fill exactly,
       // so the oracle checks real raster decode, not just headers.
       import s.implicits._
-      documents(s, dir).select(col("doc_id")).as[Long]
+      val payloads = documents(s, dir).select(col("doc_id")).as[Long]
         .map { id =>
           (id, Multimodal.makePng((id % 32 + 1).toInt, (id % 24 + 1).toInt,
             (id % 256).toInt, (id * 7 % 256).toInt, (id * 13 % 256).toInt))
         }
-        .mapPartitions { it =>
-          it.grouped(64).flatMap { batch =>
-            val ps = Multimodal.pixelStatsBatch(batch.map(_._2))
-            batch.map(_._1).zip(ps)
-          }
-        }
+      Multimodal.decodeBatched(payloads)(_.map(Multimodal.pixelStats))
         .map { case (id, p) =>
           (id, p.width.toLong, p.height.toLong, math.round(p.meanR),
             math.round(p.meanG), math.round(p.meanB))
@@ -3239,18 +3187,14 @@ object SparkEntry {
       // hamming equi-join. Exact planted recovery: the oracle
       // recomputes the within-group pairs from id arithmetic alone.
       import s.implicits._
-      val hashed = documents(s, dir).select(col("doc_id")).as[Long]
+      val payloads = documents(s, dir).select(col("doc_id")).as[Long]
         .map { id =>
           (id, Multimodal.makeNoisePng(
             id / 5, (id % 5).toInt * 8, (id % 5).toInt))
         }
-        .mapPartitions { it =>
-          it.grouped(64).flatMap { batch =>
-            batch.map(_._1).zip(Multimodal.pHashBatch(batch.map(_._2)))
-              // undecodable payloads hash to null — skip, don't NPE
-              .collect { case (id, h) if h != null => (id, h.longValue) }
-          }
-        }
+      // undecodable payloads hash to null and drop out of decodeBatched
+      val hashed = Multimodal.decodeBatched(payloads)(_.map(Multimodal.pHash64))
+        .map { case (id, h) => (id, h.longValue) }
         .toDF("doc_id", "phash")
       // maxHamming 6: planted variants differ by ≤ ~4 bits (brightness
       // is DC-only; two one-pixel edits); iid cross-group hashes have
@@ -3276,17 +3220,12 @@ object SparkEntry {
       // 15 with 16-bit chunks: the planted ball with margin, still
       // astronomically below the iid cross-group distance.
       import s.implicits._
-      val hashed = documents(s, dir).select(col("doc_id")).as[Long]
+      val payloads = documents(s, dir).select(col("doc_id")).as[Long]
         .map { id =>
           (id, Multimodal.makeNoisePng(
             id / 5, (id % 5).toInt * 8, (id % 5).toInt))
         }
-        .mapPartitions { it =>
-          it.grouped(64).flatMap { batch =>
-            batch.map(_._1).zip(Multimodal.pHashWideBatch(batch.map(_._2)))
-              .collect { case (id, h) if h != null => (id, h) }
-          }
-        }
+      val hashed = Multimodal.decodeBatched(payloads)(_.map(Multimodal.pHashWide))
         .toDF("doc_id", "phash")
       Dedup.hammingNearDupPairsWide(hashed, "doc_id", "phash",
           maxHamming = 15, words = 4, chunkBits = 16)
@@ -3302,7 +3241,7 @@ object SparkEntry {
       // videos pair on >= 6 shared exact frame hashes. The oracle
       // recomputes the planted pairs from id arithmetic alone.
       import s.implicits._
-      val frames = documents(s, dir).select(col("doc_id"))
+      val payloads = documents(s, dir).select(col("doc_id"))
         .filter(col("doc_id") < 200).as[Long]
         .flatMap { vid =>
           (0 until 10).map { f =>
@@ -3311,12 +3250,8 @@ object SparkEntry {
             (vid, Multimodal.makeNoisePng(seed, 0, 0))
           }
         }
-        .mapPartitions { it =>
-          it.grouped(64).flatMap { batch =>
-            batch.map(_._1).zip(Multimodal.pHashBatch(batch.map(_._2)))
-              .collect { case (id, h) if h != null => (id, h.longValue) }
-          }
-        }
+      val frames = Multimodal.decodeBatched(payloads)(_.map(Multimodal.pHash64))
+        .map { case (vid, h) => (vid, h.longValue) }
         .toDF("video_id", "fhash")
       Dedup.sharedFingerprintPairs(frames, "video_id", "fhash",
           minShared = 6, maxBucket = 100)

@@ -524,17 +524,12 @@ object Stress {
       // mm_phash: groups of 5 jittered variants → true pairs ≈ 2n.
       def rasterHashes(n: Long) = {
         import spark.implicits._
-        spark.range(n).as[Long].map { id =>
+        val payloads = spark.range(n).as[Long].map { id =>
           (id, graft.pipeline.Multimodal.makeNoisePng(
             id / 5, (id % 5).toInt * 8, (id % 5).toInt))
         }
-          .mapPartitions { it =>
-            it.grouped(64).flatMap { batch =>
-              batch.map(_._1)
-                .zip(graft.pipeline.Multimodal.pHashWideBatch(batch.map(_._2)))
-                .collect { case (id, h) if h != null => (id, h) }
-            }
-          }
+        graft.pipeline.Multimodal.decodeBatched(payloads)(
+            _.map(graft.pipeline.Multimodal.pHashWide))
           .toDF("doc_id", "phash")
       }
       def wideJoin(hashed: org.apache.spark.sql.DataFrame) =

@@ -16,12 +16,14 @@ import org.apache.spark.sql.types._
   * relational data. The decode path is REAL and pure-JDK:
   * [[jdkDecode]] reads PNG/JPEG/GIF dimensions via `javax.imageio` and
   * WAV format/sample-rate via `javax.sound.sampled`, and
-  * [[pixelStatsBatch]] extracts real per-channel pixel statistics —
-  * no external media library needed. [[decodeBatched]] is the batched
-  * per-partition seam a heavier decoder (FFmpeg/Pillow bridge, a
-  * CLIP/wav2vec encoder) would plug into; [[hashFeatures]] is the
-  * model-free deterministic pseudo-embedding used where no model is
-  * shipped.
+  * [[pixelStats]] extracts real per-channel pixel statistics — no
+  * external media library needed. Every image goes through one read
+  * (`readImage`) and both perceptual hashes through one DCT kernel
+  * (`dctHash`). [[decodeBatched]] is the one batched per-partition
+  * seam: the per-payload functions here run through it, and a heavier
+  * decoder (FFmpeg/Pillow bridge, a CLIP/wav2vec encoder) would plug
+  * into it; [[hashFeatures]] is the model-free deterministic
+  * pseudo-embedding used where no model is shipped.
   */
 object Multimodal {
 
@@ -81,55 +83,51 @@ object Multimodal {
     * payloads degrade to zeroed metadata rather than failing the task —
     * at 100 TB some payloads WILL be broken and one bad row must not
     * kill a 1000-executor stage. */
-  def jdkDecode(b: Array[Byte]): MediaMeta = {
-    val fmt = sniffBytes(b)
-    try {
-      fmt match {
-        case "png" | "jpeg" | "gif" =>
-          val img = ImageIO.read(new ByteArrayInputStream(b))
-          if (img == null) MediaMeta(fmt, 0, 0, 0, 0)
-          else MediaMeta(fmt, img.getWidth, img.getHeight, 1, 0)
-        case "wav" =>
-          val aff = AudioSystem.getAudioFileFormat(new ByteArrayInputStream(b))
-          MediaMeta("wav", 0, 0, aff.getFrameLength,
-            math.round(aff.getFormat.getSampleRate))
-        case other => MediaMeta(other, 0, 0, 0, 0)
-      }
-    } catch { case NonFatal(_) => MediaMeta(fmt, 0, 0, 0, 0) }
+  def jdkDecode(b: Array[Byte]): MediaMeta = sniffBytes(b) match {
+    case "wav" =>
+      try {
+        val aff = AudioSystem.getAudioFileFormat(new ByteArrayInputStream(b))
+        MediaMeta("wav", 0, 0, aff.getFrameLength,
+          math.round(aff.getFormat.getSampleRate))
+      } catch { case NonFatal(_) => MediaMeta("wav", 0, 0, 0, 0) }
+    case fmt =>
+      val img = readImage(b)
+      if (img == null) MediaMeta(fmt, 0, 0, 0, 0)
+      else MediaMeta(fmt, img.getWidth, img.getHeight, 1, 0)
   }
 
-  /** Batch form of [[jdkDecode]] for [[decodeBatched]]. */
-  def jdkBatchDecoder(payloads: Seq[Array[Byte]]): Seq[MediaMeta] =
-    payloads.map(jdkDecode)
+  /** The one image read: a PNG/JPEG/GIF payload decoded by ImageIO;
+    * null for any other format and for a payload ImageIO cannot read. */
+  private def readImage(b: Array[Byte]): BufferedImage = sniffBytes(b) match {
+    case "png" | "jpeg" | "gif" =>
+      try ImageIO.read(new ByteArrayInputStream(b)) catch { case NonFatal(_) => null }
+    case _ => null
+  }
 
   /** REAL feature extraction: decode the image and compute per-channel
-    * mean pixel values — the pure-JDK stand-in for a learned encoder,
-    * with the same batch shape. Non-images yield null stats. */
-  def pixelStatsBatch(payloads: Seq[Array[Byte]]): Seq[PixelStats] =
-    payloads.map { b =>
-      val fmt = sniffBytes(b)
-      val img =
-        if (fmt == "png" || fmt == "jpeg" || fmt == "gif")
-          try ImageIO.read(new ByteArrayInputStream(b)) catch { case NonFatal(_) => null }
-        else null
-      if (img == null) PixelStats(fmt, 0, 0, 0.0, 0.0, 0.0)
-      else {
-        val (w, h) = (img.getWidth, img.getHeight)
-        var (sr, sg, sb) = (0L, 0L, 0L)
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            val p = img.getRGB(x, y)
-            sr += (p >> 16) & 0xFF; sg += (p >> 8) & 0xFF; sb += p & 0xFF
-            x += 1
-          }
-          y += 1
+    * mean pixel values — the pure-JDK stand-in for a learned encoder.
+    * Non-images yield zeroed stats. */
+  def pixelStats(b: Array[Byte]): PixelStats = {
+    val fmt = sniffBytes(b)
+    val img = readImage(b)
+    if (img == null) PixelStats(fmt, 0, 0, 0.0, 0.0, 0.0)
+    else {
+      val (w, h) = (img.getWidth, img.getHeight)
+      var (sr, sg, sb) = (0L, 0L, 0L)
+      var y = 0
+      while (y < h) {
+        var x = 0
+        while (x < w) {
+          val p = img.getRGB(x, y)
+          sr += (p >> 16) & 0xFF; sg += (p >> 8) & 0xFF; sb += p & 0xFF
+          x += 1
         }
-        val n = w.toDouble * h
-        PixelStats(fmt, w, h, sr / n, sg / n, sb / n)
+        y += 1
       }
+      val n = w.toDouble * h
+      PixelStats(fmt, w, h, sr / n, sg / n, sb / n)
     }
+  }
 
   /** Column-level decode convenience: wraps [[jdkDecode]] as a UDF.
     * Media decode is inherently JVM-object work (ImageIO readers) —
@@ -149,24 +147,26 @@ object Multimodal {
     * Pandas-UDF-over-mapInPandas pipeline: rows stream through each
     * partition in `batchSize` groups, the user's `decodeBatch` sees a
     * whole batch at once (amortizing decoder/model setup, exactly like
-    * an Arrow batch), and results are re-flattened 1:1. The decoder
-    * runs on executors; nothing is collected.
+    * an Arrow batch), and results are re-flattened 1:1 with their keys.
+    * A null result marks an undecodable payload and drops its row. The
+    * decoder runs on executors; nothing is collected. Every batched
+    * decode in the engine runs through here.
     *
-    * @param decodeBatch batch decoder: payload batch → metadata batch
-    *                    (must be 1:1). [[jdkBatchDecoder]] is the
-    *                    shipped real implementation.
+    * @param decodeBatch batch decoder: payload batch → result batch
+    *                    (must be 1:1); a per-payload function `f` of
+    *                    this object batches as `_.map(f)`.
     */
-  def decodeBatched[K](
+  def decodeBatched[K, R](
       ds: Dataset[(K, Array[Byte])],
       batchSize: Int = 64)(
-      decodeBatch: Seq[Array[Byte]] => Seq[MediaMeta])(
-      implicit ke: Encoder[(K, MediaMeta)]): Dataset[(K, MediaMeta)] =
+      decodeBatch: Seq[Array[Byte]] => Seq[R])(
+      implicit enc: Encoder[(K, R)]): Dataset[(K, R)] =
     ds.mapPartitions { it =>
       it.grouped(batchSize).flatMap { batch =>
-        val metas = decodeBatch(batch.map(_._2))
-        require(metas.length == batch.length,
+        val rs = decodeBatch(batch.map(_._2))
+        require(rs.length == batch.length,
           "decodeBatch must return one result per input")
-        batch.map(_._1).zip(metas)
+        batch.map(_._1).zip(rs).filter(_._2 != null)
       }
     }
 
@@ -271,6 +271,37 @@ object Multimodal {
     out
   }
 
+  /** The DCT hash kernel: 2-D DCT of the 32×32 luma grid, the
+    * `side`×`side` lowest-frequency block minus DC (`side² − 1` AC
+    * coefficients, v-then-u order) thresholded against its own median
+    * (an odd count, so `sorted((n − 1) / 2)` is the exact middle order
+    * statistic), bit i in word i/64. */
+  private def dctHash(img: BufferedImage, side: Int): Array[Long] = {
+    val coefs = dct32(grayPool32(img))
+    val n = side * side - 1
+    val ac = new Array[Double](n)
+    var i = 0
+    var v = 0
+    while (v < side) {
+      var u = 0
+      while (u < side) {
+        if (u != 0 || v != 0) { ac(i) = coefs(v * 32 + u); i += 1 }
+        u += 1
+      }
+      v += 1
+    }
+    val sorted = ac.clone()
+    java.util.Arrays.sort(sorted)
+    val median = sorted((n - 1) / 2)
+    val words = new Array[Long]((n + 63) >>> 6)
+    i = 0
+    while (i < n) {
+      if (ac(i) > median) words(i >>> 6) |= (1L << (i & 63))
+      i += 1
+    }
+    words
+  }
+
   /** 64-bit perceptual image hash (classic DCT pHash): decode →
     * 32×32 area-average luma → 2-D DCT → the 63 lowest-frequency AC
     * coefficients (8×8 block minus DC) thresholded against their own
@@ -280,46 +311,15 @@ object Multimodal {
     * [[Dedup.hammingNearDupPairs]] (pigeonhole equi-join, never
     * all-pairs). Returns null for undecodable payloads. */
   def pHash64(b: Array[Byte]): java.lang.Long = {
-    val fmt = sniffBytes(b)
-    val img =
-      if (fmt == "png" || fmt == "jpeg" || fmt == "gif")
-        try ImageIO.read(new ByteArrayInputStream(b)) catch { case NonFatal(_) => null }
-      else null
-    if (img == null) return null
-    val coefs = dct32(grayPool32(img))
-    val ac = new Array[Double](63)
-    var i = 0
-    var v = 0
-    while (v < 8) {
-      var u = 0
-      while (u < 8) {
-        if (u != 0 || v != 0) { ac(i) = coefs(v * 32 + u); i += 1 }
-        u += 1
-      }
-      v += 1
-    }
-    val sorted = ac.clone()
-    java.util.Arrays.sort(sorted)
-    val median = sorted(31) // 63 values → exact middle order statistic
-    var bits = 0L
-    i = 0
-    while (i < 63) {
-      if (ac(i) > median) bits |= (1L << i)
-      i += 1
-    }
-    bits
+    val img = readImage(b)
+    if (img == null) null else java.lang.Long.valueOf(dctHash(img, 8)(0))
   }
 
-  /** Batch form of [[pHash64]] for the [[decodeBatched]]-style
-    * per-partition seam. */
-  def pHashBatch(payloads: Seq[Array[Byte]]): Seq[java.lang.Long] =
-    payloads.map(pHash64)
-
   /** 256-bit perceptual hash — the SCALE path for image dedup. Same
-    * decode → 32×32 luma → 2-D DCT front end as [[pHash64]], but
-    * keeping the 255 lowest-frequency AC coefficients (16×16 block
-    * minus DC) thresholded against their own median, packed into 4
-    * longs (bit i → word i/64; bit 255 is always 0 padding).
+    * decode → 32×32 luma → 2-D DCT kernel as [[pHash64]], but keeping
+    * the 255 lowest-frequency AC coefficients (16×16 block minus DC)
+    * thresholded against their own median, packed into 4 longs (bit
+    * i → word i/64; bit 255 is always 0 padding).
     *
     * Why the width matters at 100 TB: a pigeonhole hamming join over
     * b-bit hashes with h allowed errors buckets on h+1 chunks of
@@ -331,39 +331,9 @@ object Multimodal {
     * is the true near-dup pairs plus vanishing collision noise.
     * Returns null for undecodable payloads. */
   def pHashWide(b: Array[Byte]): Array[Long] = {
-    val fmt = sniffBytes(b)
-    val img =
-      if (fmt == "png" || fmt == "jpeg" || fmt == "gif")
-        try ImageIO.read(new ByteArrayInputStream(b)) catch { case NonFatal(_) => null }
-      else null
-    if (img == null) return null
-    val coefs = dct32(grayPool32(img))
-    val ac = new Array[Double](255)
-    var i = 0
-    var v = 0
-    while (v < 16) {
-      var u = 0
-      while (u < 16) {
-        if (u != 0 || v != 0) { ac(i) = coefs(v * 32 + u); i += 1 }
-        u += 1
-      }
-      v += 1
-    }
-    val sorted = ac.clone()
-    java.util.Arrays.sort(sorted)
-    val median = sorted(127) // 255 values → exact middle order statistic
-    val words = new Array[Long](4)
-    i = 0
-    while (i < 255) {
-      if (ac(i) > median) words(i >>> 6) |= (1L << (i & 63))
-      i += 1
-    }
-    words
+    val img = readImage(b)
+    if (img == null) null else dctHash(img, 16)
   }
-
-  /** Batch form of [[pHashWide]] for the per-partition seam. */
-  def pHashWideBatch(payloads: Seq[Array[Byte]]): Seq[Array[Long]] =
-    payloads.map(pHashWide)
 
   /** splitmix64 finalizer — the deterministic pixel-noise generator
     * behind [[makeNoisePng]]. */
@@ -428,7 +398,7 @@ object Multimodal {
     * and return the 16-bit PCM samples (endianness taken from the
     * decoded `AudioFormat`, not assumed). The content-analysis twin of
     * [[jdkDecode]]'s header read — windowed energy/peak stats over
-    * these samples are the audio analogue of [[pixelStatsBatch]]. */
+    * these samples are the audio analogue of [[pixelStats]]. */
   def decodePcm16(b: Array[Byte]): Array[Short] = {
     val ais = AudioSystem.getAudioInputStream(new ByteArrayInputStream(b))
     try {

@@ -11,9 +11,10 @@ import org.apache.spark.sql.types.IntegerType
   * a pure `DataFrame => DataFrame` that rewrites ONE flag column with a
   * `when`-guarded projection — narrow, shuffle-free, whole-stage
   * codegen'd. Scopes are arbitrary `Column` predicates; a brushed
-  * id-selection is either an `isin` literal list (small sets → Catalyst
-  * InSet) or a broadcast-joined id table (large sets, [[withIdScope]] /
-  * [[withIds]]), per SURVEY §4.2.
+  * id-selection is an `isin` literal list (small sets → Catalyst
+  * InSet). A large id selection is a table of point events folded by
+  * [[QcFlagLog.fold]], whose point-event join broadcasts while it
+  * fits, per SURVEY §4.2.
   *
   * Every action is a [[Write]] from the one table below: the flag it
   * sets and the guard it sets it under. [[admits]] is the one place the
@@ -79,33 +80,6 @@ object QcActions {
   def setFlag(df: DataFrame, v: String, scope: Column, write: Write,
       suffix: String = AutoSuffix): DataFrame =
     setFlags(df, v, suffix)(scope -> write)
-
-  /** Scope from an id table (large brushed selections): broadcast
-    * left-join membership test on `idCol`. Returns (augmented df,
-    * membership column); the `__sel` helper column remains on the
-    * augmented df — prefer [[withIds]], which drops it after the
-    * action runs. */
-  def withIdScope(
-      df: DataFrame,
-      ids: DataFrame,
-      idCol: String = QcWindows.RowIdCol): (DataFrame, Column) = {
-    val marked = df.join(
-      broadcast(ids.select(qcol(idCol)).distinct.withColumn("__sel", lit(true))),
-      Seq(idCol), "left")
-    (marked, coalesce(col("__sel"), lit(false)))
-  }
-
-  /** Run one action against an id-table scope and clean up the helper
-    * column — the composable form of [[withIdScope]]:
-    * {{{ QcActions.withIds(df, idsDf)(QcActions.flagSelected(_, "v", _)) }}} */
-  def withIds(
-      df: DataFrame,
-      ids: DataFrame,
-      idCol: String = QcWindows.RowIdCol)(
-      action: (DataFrame, Column) => DataFrame): DataFrame = {
-    val (marked, scope) = withIdScope(df, ids, idCol)
-    action(marked, scope).drop("__sel")
-  }
 
   /** M1 Flag Selected (R/qc_window_app.R:384): brushed set → ManualFlag. */
   def flagSelected(df: DataFrame, v: String, scope: Column,

@@ -73,8 +73,8 @@ object QcPlotFeed {
       idCol: String = QcWindows.RowIdCol): DataFrame =
     df.filter(selScope(ids, idCol))
 
-  /** Brushed-selection scope predicate (small sets → Catalyst InSet; for
-    * large selections use [[QcActions.withIdScope]]'s broadcast join). */
+  /** Brushed-selection scope predicate (small sets → Catalyst InSet; a
+    * large selection is a table of point events for [[QcFlagLog.fold]]). */
   def selScope(ids: Seq[Long], idCol: String = QcWindows.RowIdCol): Column =
     qcol(idCol).isin(ids.map(java.lang.Long.valueOf): _*)
 

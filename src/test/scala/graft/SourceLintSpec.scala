@@ -162,4 +162,28 @@ class SourceLintSpec extends AnyFunSuite {
         s"`$rule` outside Dedup.keyPairs, at lines ${hits.map(_ + 1)}")
     }
   }
+
+  test("media is read only in readImage and batched only in decodeBatched") {
+    // one image read and one batching loop: a second copy is one more
+    // place an ImageIO failure or a miscounted batch can slip through
+    val file = "src/main/scala/graft/pipeline/Multimodal.scala"
+    val lines = scala.io.Source.fromFile(file, "UTF-8").getLines().toVector
+    def member(name: String): Range = {
+      val at = lines.indexWhere(_.contains(s"def $name"))
+      assert(at >= 0, s"Multimodal.$name is gone")
+      val next = lines.indexWhere(l =>
+        l.startsWith("  /**") || l.startsWith("  def ") || l.startsWith("  private "), at + 1)
+      at until (if (next < 0) lines.size else next)
+    }
+    for ((token, owner) <- Seq("ImageIO.read(" -> "readImage(", ".grouped(" -> "decodeBatched[")) {
+      val body = member(owner)
+      val hits = scalaFiles(mainRoot).flatMap { f =>
+        scala.io.Source.fromFile(f, "UTF-8").getLines().zipWithIndex.collect {
+          case (l, i) if l.contains(token) => (f.getPath, i)
+        }
+      }
+      assert(hits.nonEmpty && hits.forall { case (p, i) => p == file && body.contains(i) },
+        s"`$token` outside Multimodal.$owner: ${hits.map { case (p, i) => s"$p:${i + 1}" }}")
+    }
+  }
 }

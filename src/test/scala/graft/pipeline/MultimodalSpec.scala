@@ -44,8 +44,8 @@ class MultimodalSpec extends SparkSpec {
     assert(Multimodal.jdkDecode(null) == Multimodal.MediaMeta("unknown", 0, 0, 0, 0))
   }
 
-  test("pixelStatsBatch: solid-fill PNG decodes to exact per-channel means") {
-    val Seq(p) = Multimodal.pixelStatsBatch(Seq(Multimodal.makePng(5, 4, 200, 100, 7)))
+  test("pixelStats: solid-fill PNG decodes to exact means") {
+    val p = Multimodal.pixelStats(Multimodal.makePng(5, 4, 200, 100, 7))
     assert(p.format == "png" && p.width == 5 && p.height == 4)
     assert(p.meanR == 200.0 && p.meanG == 100.0 && p.meanB == 7.0)
   }
@@ -73,6 +73,27 @@ class MultimodalSpec extends SparkSpec {
     assert(out.forall { case (k, m) => m.width == (k.toInt & 0xff) },
       "row↔result alignment preserved")
     assert(out.forall(_._2.format.drop(1).toInt <= 64), "no batch exceeds batchSize")
+  }
+
+  test("decodeBatched: a decoder's wrong count is rejected") {
+    // zip would silently drop the unmatched keys; the 1:1 check fails
+    // the task instead
+    val ds = spark.createDataset((0 until 10).map(i => (i.toLong, Array(i.toByte))))
+    val e = intercept[Exception] {
+      Multimodal.decodeBatched(ds, batchSize = 4)(_.drop(1).map(_.length)).collect()
+    }
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Seq.empty else Option(t.getMessage).toSeq ++ messages(t.getCause)
+    assert(messages(e).exists(_.contains("one result per input")),
+      s"expected the 1:1 check, got: $e")
+  }
+
+  test("decodeBatched: a null result drops its row") {
+    val ds = spark.createDataset(Seq(
+      (1L, Multimodal.makeNoisePng(1L, 0, 0)), (2L, "not an image".getBytes)))
+    val out = Multimodal.decodeBatched(ds)(_.map(Multimodal.pHashWide)).collect()
+    assert(out.map(_._1).toSeq == Seq(1L), "the undecodable payload drops")
+    assert(out.head._2.toSeq == Multimodal.pHashWide(Multimodal.makeNoisePng(1L, 0, 0)).toSeq)
   }
 
   test("sampleFrames explodes every stride-th frame index; frameless rows vanish") {
@@ -251,10 +272,13 @@ class MultimodalSpec extends SparkSpec {
     // justification promises.
     val png = resource("/golden.png")
     assert(Multimodal.jdkDecode(png) == Multimodal.MediaMeta("png", 24, 16, 1, 0))
-    val Seq(ps) = Multimodal.pixelStatsBatch(Seq(png))
+    val ps = Multimodal.pixelStats(png)
     assert(ps.meanR == 103.0 && math.abs(ps.meanG - 107.0 - 1.0 / 6) < 1e-9 &&
       ps.meanB == 87.5, s"pixel means drifted: $ps")
     assert(Multimodal.pHash64(png) == 2647875509291000868L, "pHash drifted")
+    assert(Multimodal.pHashWide(png).toSeq == Seq(8477088067761763748L,
+      8477088047713004203L, 8477088047713004202L, 8477088047713004202L),
+      "wide pHash drifted")
     val v = Seq(Tuple1(png)).toDF("payload")
       .select(Multimodal.hashFeatures(col("payload"), 8))
       .as[Seq[Double]].head

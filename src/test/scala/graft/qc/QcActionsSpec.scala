@@ -82,14 +82,21 @@ class QcActionsSpec extends SparkSpec {
     assert(flagsOf(once8) == flagsOf(twice8))
   }
 
-  test("withIds: broadcast id-table membership matches isin scope, helper column cleaned up") {
-    val ids = Seq(0L, 2L).toDF(".rowid")
-    val viaJoin = QcActions.withIds(
-        all.withColumnRenamed("id", ".rowid"), ids)(
-        QcActions.flagSelected(_, "v", _))
-      .withColumnRenamed(".rowid", "id")
-    assert(!viaJoin.columns.contains("__sel"), "helper column must not leak")
-    val viaIsin = QcActions.flagSelected(all, "v", col("id").isin(0L, 2L))
-    assert(flagsOf(viaJoin) == flagsOf(viaIsin))
+  test("fold of an id table's point events matches isin") {
+    // a large brushed selection is an id TABLE turned into point-event
+    // log rows; the fold's point-event join must flag exactly the rows
+    // the small-set isin scope does, broadcast or past the gate
+    val ids = Seq(0L, 2L).toDF("id")
+    val log = ids.select(lit(1L).as("seq"), lit("v").as("variable"),
+      lit(QcFlagLog.ScopePoint).as("scope"), col("id").as("rowid"),
+      lit(null).cast("long").as("win_id"),
+      lit(QcActions.Flag.newFlag).as("new_flag"), lit(QcActions.Flag.guard).as("guard"))
+    val base = all.withColumnRenamed("id", ".rowid")
+    def viaFold() = flagsOf(QcFlagLog.fold(base, log).withColumnRenamed(".rowid", "id"))
+    val viaIsin = flagsOf(QcActions.flagSelected(all, "v", col("id").isin(0L, 2L)))
+    assert(viaFold() == viaIsin)
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      assert(viaFold() == viaIsin, "past the broadcast gate")
+    }
   }
 }
