@@ -47,7 +47,8 @@ object Bench {
       } catch { case e: Exception =>
         System.err.println(s"[bench] could not write $path: ${e.getMessage}")
       }
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/BENCH_local.json")
+    val benchOut = sys.env.get("SPARK_GRAFT_BENCH_OUT")
+    val outPath = artifactPath(benchOut, None)
     // BENCH_DELTA.json — mechanized noise protocol, logic in
     // [[BenchDelta]] (pure, replayed in BenchDeltaSpec against the
     // recorded round-8 contended-host record). The flag BASELINE is
@@ -283,7 +284,7 @@ object Bench {
     // working-tree truth; rule pure in BenchDelta.recordWritable) —
     // either only writes when the caller named an explicit
     // SPARK_GRAFT_BENCH_OUT target.
-    val explicitOut = sys.env.contains("SPARK_GRAFT_BENCH_OUT")
+    val explicitOut = benchOut.isDefined
     // recordWritable is the ONE source of truth for the host-verdict
     // policy (explicitOut OR floorSafe); the caller only adds the
     // orthogonal filter rule: a filtered run never overwrites the
@@ -295,8 +296,8 @@ object Bench {
       s"[bench] ${if (nameFilter.nonEmpty) "filter active"
         else "slow-suspect host"} and no SPARK_GRAFT_BENCH_OUT: not overwriting $outPath")
     if (nameFilter.isEmpty) {
-      writeFile("/root/repo/BENCH_DELTA.json", deltaJson)
-      writeFile("/root/repo/BENCH_SUMMARY.json", summary)
+      writeFile(artifactPath(benchOut, Some("BENCH_DELTA.json")), deltaJson)
+      writeFile(artifactPath(benchOut, Some("BENCH_SUMMARY.json")), summary)
     } else System.err.println(
       "[bench] filter active: BENCH_DELTA.json/BENCH_SUMMARY.json not written; delta was: " + deltaJson)
     spark.stop()
@@ -306,6 +307,17 @@ object Bench {
     // ~1.3 KB and still got sliced mid-JSON by the driver's capture,
     // which is why BENCH_r06.json landed with parsed:null.
     println(summary)
+  }
+
+  /** Where a main's files go. `benchOut` (`SPARK_GRAFT_BENCH_OUT`)
+    * names the bench record, else it is the committed
+    * `BENCH_local.json` in the working directory (the repo root: sbt
+    * forks the mains there). Every other file a main writes or reads
+    * (`artifact`: the delta, the summary, the stress records) sits in
+    * the record's directory; `None` is the record itself. */
+  def artifactPath(benchOut: Option[String], artifact: Option[String]): String = {
+    val record = benchOut.getOrElse("BENCH_local.json")
+    artifact.fold(record)(java.nio.file.Paths.get(record).resolveSibling(_).toString)
   }
 
   /** Local task slots of every main: `SPARK_GRAFT_CPUS`, else the

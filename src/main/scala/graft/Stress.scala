@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.pipeline.Dedup
+import graft.qc.{QcAuto, QcFlags, QcProgress}
 
 /** sf1.0-shaped stress check: synthesize a `factor`× (default 10×)
   * replica of the scale-bearing tables from an existing sf dir, run
@@ -20,7 +21,8 @@ import graft.pipeline.Dedup
   * (timed through [[Bench.time]]; Bench's SPARK_GRAFT_BENCH_FILTER and
   * SPARK_GRAFT_BENCH_REPS pick the queries and reps, and
   * SPARK_GRAFT_STRESS_100X adds the 100× decade points)
-  * Output: /root/repo/STRESS_local.json
+  * Output: STRESS_local.json beside the bench record
+  * ([[Bench.artifactPath]]), whose timings it reads
   */
 object Stress {
 
@@ -142,7 +144,8 @@ object Stress {
     }
 
     // scaling ratio vs the recorded sf0.1 bench: stress / (bench × factor)
-    val bench = readBench("/root/repo/BENCH_local.json")
+    val benchOut = sys.env.get("SPARK_GRAFT_BENCH_OUT")
+    val bench = readBench(Bench.artifactPath(benchOut, None))
     // base-scale OUTPUT rows: several exact-threshold operators are
     // output-sensitive (near-dup pair joins emit every qualifying pair,
     // and the replica corpus grows dup groups, so output grows ~factor²
@@ -202,10 +205,9 @@ object Stress {
     val points100 = sys.env.get("SPARK_GRAFT_STRESS_100X_POINTS").map(_.r)
     def pointWanted(name: String): Boolean =
       points100.forall(_.findFirstIn(name).isDefined)
-    val artifactPath =
-      if (points100.isDefined || Bench.nameFilter.isDefined)
-        "/root/repo/STRESS_partial.json"
-      else "/root/repo/STRESS_local.json"
+    val artifactPath = Bench.artifactPath(benchOut, Some(
+      if (points100.isDefined || Bench.nameFilter.isDefined) "STRESS_partial.json"
+      else "STRESS_local.json"))
     // Checkpoint the artifact BEFORE the env-gated 100× block: a 100×
     // failure mode is a wedged JVM (e.g. an OOM killing a dispatcher
     // thread — jobs then hang rather than throw), and without this
@@ -443,6 +445,40 @@ object Stress {
       decade("qc_session_compact_rows", "rows", 1000000L, 10000000L,
           warm = Seq(1000000L, 10000000L))(n => saved(n, 25L))
       sessions.clear()
+      // The bulk QC detector chain (range, spikes, flatlines, MAD,
+      // steps) and its progress summary on a 1-minute series in 8
+      // sensor buckets. Every detector is a window over the sensor, so
+      // the chain is one exchange and one sort per bucket: about 1 per
+      // decade. A run returns the Spark jobs of its one action.
+      var chainRuns = 0
+      def chainJobs(n: Long): Long = {
+        val perSensor = n / 8
+        val series = spark.range(n).select(
+          concat(lit("S"), (col("id") / perSensor).cast("string")).as("sensor"),
+          timestamp_seconds(lit(1700000000L) + col("id") % perSensor * 60).as("ts"),
+          (sin(col("id") / 100.0) * 10 + 20).as("temp"))
+        val bucket = col("sensor")
+        val order = Seq("ts")
+        val init = QcAuto.flagRange(QcFlags.addFlags(series, Seq("temp")), "temp", -50.0, 150.0)
+        val flagged = QcAuto.flagSteps(
+          QcAuto.flagMadOutliers(
+            QcAuto.flagFlatlines(QcAuto.flagSpikes(init, "temp", order, bucket),
+              "temp", order, bucket),
+            "temp", bucket),
+          "temp", order, bucket, minShift = 30.0)
+        chainRuns += 1
+        val group = s"qc_auto_chain_$chainRuns"
+        val sc = spark.sparkContext
+        sc.setJobGroup(group, "qc_auto_chain_rows")
+        try {
+          QcProgress.summary(flagged).collect() // driver-sized: one row per variable
+          sc.statusTracker.getJobIdsForGroup(group).length.toLong
+        } finally sc.clearJobGroup()
+      }
+      decade("qc_auto_chain_rows", "rows", 1000000L, 10000000L,
+          warm = Seq(1000000L, 10000000L),
+          extra = { case ((_, jobsS), (_, jobsB)) =>
+            s""","jobs_small":$jobsS,"jobs_big":$jobsB""" })(chainJobs)
       // 100× CORPUS queries — after the cc drift control: size streaming
       // state partitions to the 100× volume, the way a deployment at
       // that volume would (see drainToTable's doc: the default 4 is a

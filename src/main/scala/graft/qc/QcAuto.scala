@@ -53,29 +53,27 @@ object QcAuto {
     * mean/std this survives the very outliers it hunts. Groups with
     * MAD = 0 flag nothing (degenerate distribution, not evidence).
     *
-    * Two grouped aggregates over the bucket (median pass, then MAD of
-    * residuals vs the broadcast medians) + a guarded flag projection —
-    * exact percentiles buffer per-group values, the right trade for
-    * telemetry-sized groups; swap approx_percentile at full scale. */
+    * The scores are two window aggregates over `partitionBy(bucket)`:
+    * the median, then the median of the residuals from it. Each
+    * bucket's values are buffered in one task, as they already are
+    * for the rolling detectors' frames and for a grouped percentile's
+    * final merge. `percentile` sorts what it buffered, so the scores do
+    * not depend on row order; and since every rolling detector
+    * partitions by the same bucket, a detector chain plans one
+    * exchange. A null bucket scores nothing: its rows stay present
+    * and unflagged (a detector never deletes rows). */
   def flagMadOutliers(
       df: DataFrame, v: String, bucket: Column,
       z: Double = 3.5, suffix: String = AutoSuffix): DataFrame = {
-    // LEFT joins: a null bucket matches no group and must leave the
-    // row present-but-unflagged (a detector never deletes rows)
-    val med = df.groupBy(bucket.as("__b"))
-      .agg(expr(s"percentile(${qname(v)}, 0.5)").as("__med"))
-    val withMed = df.withColumn("__b", bucket)
-      .join(broadcast(med), Seq("__b"), "left")
-    val mad = withMed
-      .withColumn("__res", abs(qcol(v) - col("__med")))
-      .groupBy(col("__b"))
-      .agg(expr("percentile(__res, 0.5)").as("__mad"))
-    val scored = withMed.join(broadcast(mad), Seq("__b"), "left")
+    val w = Window.partitionBy(bucket)
+    def median(c: Column) = when(bucket.isNotNull, percentile(c, lit(0.5)).over(w))
+    val scored = df.withColumn("__med", median(qcol(v)))
+      .withColumn("__mad", median(abs(qcol(v) - col("__med"))))
       .withColumn("__mz",
         when(col("__mad") > 0,
           lit(0.6745) * abs(qcol(v) - col("__med")) / col("__mad")))
     QcActions.flagSelected(scored, v, col("__mz") > z, suffix)
-      .drop("__b", "__med", "__mad", "__mz")
+      .drop("__med", "__mad", "__mz")
   }
 
   /** Diurnal-profile residual detector: the expected value of a row is
@@ -89,7 +87,10 @@ object QcAuto {
     * from one map-side-combined aggregate; the residual spread is a
     * second bucket-keyed aggregate; scoring is a broadcast-join
     * projection. Null buckets/hours match no profile and stay
-    * unflagged (LEFT joins — a detector never deletes rows). */
+    * unflagged (LEFT joins — a detector never deletes rows). It stays
+    * a join, unlike [[flagMadOutliers]]: its `avg` and `stddev_samp`
+    * are doubles summed in row order, so a window form would not give
+    * bit-identical scores. */
   def flagSeasonalResiduals(
       df: DataFrame, v: String, t: String, bucket: Column,
       z: Double = 3.0, suffix: String = AutoSuffix): DataFrame = {
@@ -106,9 +107,6 @@ object QcAuto {
     QcActions.flagSelected(scored, v, col("__z") > z, suffix)
       .drop("__b", "__h", "__mu", "__sd", "__z")
   }
-
-  /** Backtick-quoted name for raw-SQL expr() contexts. */
-  private def qname(n: String): String = s"`$n`"
 
   /** Flatline detector: `minRun`+ consecutive identical non-missing
     * values ⇒ ManualFlag for every row of the run. Run ids via the

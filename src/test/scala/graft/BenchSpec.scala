@@ -92,4 +92,19 @@ class BenchSpec extends SparkSpec {
         "executor_run_ms" -> c.executorRunMs, "executor_cpu_ms" -> c.executorCpuMs))
     } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
+
+  test("every artifact sits beside the bench record; unset, beside the " +
+      "committed record in the working directory") {
+    val names = Seq("BENCH_DELTA.json", "BENCH_SUMMARY.json", "STRESS_local.json",
+      "STRESS_partial.json")
+    val out = Some("/data/run1/bench.json")
+    assert(Bench.artifactPath(out, None) == "/data/run1/bench.json")
+    names.foreach(n => assert(Bench.artifactPath(out, Some(n)) == s"/data/run1/$n"))
+    assert(Bench.artifactPath(Some("bench.json"), Some("BENCH_DELTA.json")) ==
+      "BENCH_DELTA.json")
+    assert(Bench.artifactPath(Some("runs/b.json"), Some("STRESS_local.json")) ==
+      "runs/STRESS_local.json")
+    assert(Bench.artifactPath(None, None) == "BENCH_local.json")
+    names.foreach(n => assert(Bench.artifactPath(None, Some(n)) == n))
+  }
 }

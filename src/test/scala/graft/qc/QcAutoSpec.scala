@@ -1,10 +1,15 @@
 package graft.qc
 
-import graft.SparkSpec
+import graft.{Bench, SparkSpec}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.rng.Seed
 import java.sql.Timestamp
 
-class QcAutoSpec extends SparkSpec {
+class QcAutoSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
   import FlagSchema._
 
@@ -71,6 +76,110 @@ class QcAutoSpec extends SparkSpec {
     assert(out2.count() == vals.length, "a detector never deletes rows")
     assert(out2.filter(col("id") === 5L)
       .select("v_qcflag").as[Int].head() == Unchecked)
+  }
+
+  /** The grouped form `flagMadOutliers` had before it scored with
+    * window aggregates: median and MAD from two bucket-keyed
+    * aggregates, each broadcast and LEFT-joined back. */
+  private def groupedMad(
+      df: DataFrame, v: String, bucket: Column,
+      z: Double = 3.5, suffix: String = AutoSuffix): DataFrame = {
+    // LEFT joins: a null bucket matches no group and must leave the
+    // row present-but-unflagged (a detector never deletes rows)
+    val med = df.groupBy(bucket.as("__b"))
+      .agg(expr(s"percentile(`$v`, 0.5)").as("__med"))
+    val withMed = df.withColumn("__b", bucket)
+      .join(broadcast(med), Seq("__b"), "left")
+    val mad = withMed
+      .withColumn("__res", abs(qcol(v) - col("__med")))
+      .groupBy(col("__b"))
+      .agg(expr("percentile(__res, 0.5)").as("__mad"))
+    val scored = withMed.join(broadcast(mad), Seq("__b"), "left")
+      .withColumn("__mz",
+        when(col("__mad") > 0,
+          lit(0.6745) * abs(qcol(v) - col("__med")) / col("__mad")))
+    QcActions.flagSelected(scored, v, col("__mz") > z, suffix)
+      .drop("__b", "__med", "__mad", "__mz")
+  }
+
+  /** A table with every shape the MAD scores must agree on: random
+    * rows in buckets 0-3 with tied values, nulls and null buckets, a
+    * gross outlier among spread values in bucket 0, a constant bucket
+    * 5 (MAD = 0) and a one-row bucket 6. */
+  private val madTable: Gen[Seq[(Option[Int], Option[Double])]] = {
+    val value = Gen.frequency(
+      1 -> Gen.const(None),
+      6 -> Gen.choose(0, 24).map(i => Some(i * 0.5)),
+      2 -> Gen.choose(-50.0, 50.0).map(Some(_)))
+    val bucket = Gen.frequency(1 -> Gen.const(None), 8 -> Gen.choose(0, 3).map(Some(_)))
+    for {
+      n <- Gen.choose(10, 300)
+      rows <- Gen.listOfN(n, Gen.zip(bucket, value))
+      const <- Gen.choose(2, 6)
+    } yield rows ++ Seq(1.0, 2.0, 4.0, 1e6).map(v => Some(0) -> Some(v)) ++
+      Seq.fill(const)(Some(5) -> Some(7.0)) :+ (Some(6) -> Some(3.0))
+  }
+
+  test("flagMadOutliers equals the grouped broadcast-join form, row for row " +
+      "(codegen and interpreted)") {
+    val prop = Prop.forAllNoShrink(madTable) { rows =>
+      val bad = inCodegenModes {
+        val df = QcFlags.addFlags(rows.zipWithIndex
+          .map { case ((b, v), i) => (i.toLong, b, v) }.toDF("id", "site", "v"), Seq("v"))
+        Seq("site" -> col("site"), "lit(0)" -> lit(0)).flatMap { case (name, bucket) =>
+          val got = QcAuto.flagMadOutliers(df, "v", bucket)
+          val want = groupedMad(df, "v", bucket)
+          val extra = got.exceptAll(want).count()
+          val missing = want.exceptAll(got).count()
+          val flagged = got.filter(col("v_qcflag") === ManualFlag).count()
+          Seq(
+            Option.when(got.columns.toSeq != want.columns.toSeq)(
+              s"bucket $name: columns ${got.columns.toSeq} vs ${want.columns.toSeq}"),
+            Option.when(extra + missing > 0)(
+              s"bucket $name: $extra rows only in the window form, $missing only in the grouped"),
+            Option.when(flagged == 0)(s"bucket $name: the outlier is not flagged")
+          ).flatten
+        }
+      }.flatMap { case (mode, m) => m.map(s"$mode: " + _) }
+      Prop(bad.isEmpty) :| bad.mkString("\n")
+    }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(6)
+      .withInitialSeed(Seed(20261020L)).withWorkers(1), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+  }
+
+  test("the five-detector chain over a sensor bucket plans one shuffle and " +
+      "no broadcast; a full-plan count of it runs at most 2 jobs") {
+    val dir = java.nio.file.Files.createTempDirectory("qc-chain").toString
+    try {
+      val n = 8 * 1440L
+      spark.range(0, n, 1, 4).select(
+          concat(lit("S"), (col("id") / 1440).cast("string")).as("sensor"),
+          timestamp_seconds(lit(1700000000L) + col("id") % 1440 * 60).as("ts"),
+          (sin(col("id") / 100.0) * 10 + 20).as("temp"))
+        .write.parquet(s"$dir/sensors")
+      val raw = spark.read.parquet(s"$dir/sensors")
+      assert(raw.inputFiles.length == 4, raw.inputFiles.toSeq)
+      val bucket = col("sensor")
+      val order = Seq("ts")
+      val init = QcAuto.flagRange(QcFlags.addFlags(raw, Seq("temp")), "temp", -50.0, 150.0)
+      val chain = QcAuto.flagSteps(
+        QcAuto.flagMadOutliers(
+          QcAuto.flagFlatlines(QcAuto.flagSpikes(init, "temp", order, bucket),
+            "temp", order, bucket),
+          "temp", bucket),
+        "temp", order, bucket, minShift = 30.0)
+      // the bench's timing action: `Dataset.count` would prune every
+      // detector column, and with it every window and join
+      val run = Bench.time(1)(Bench.exec(chain))
+      assert(run.result.contains(n), run)
+      val plan = chain.queryExecution.executedPlan
+      val shuffles = collect(plan) { case e: ShuffleExchangeExec => e }
+      val broadcasts = collect(plan) { case e: BroadcastExchangeExec => e }
+      assert(shuffles.size == 1 && broadcasts.isEmpty,
+        s"${shuffles.size} shuffles, ${broadcasts.size} broadcasts:\n$plan")
+      assert(run.counters.jobs <= 2, s"a count of the chain ran ${run.counters.jobs} jobs")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
   test("flagRange flags outside [lo, hi] only") {
